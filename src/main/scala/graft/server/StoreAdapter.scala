@@ -3,7 +3,8 @@ package graft.server
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.store.{FileLog, MultiTableStore, QuantIndex, VectorStore}
+import graft.store.{IndexTable, MultiTableStore, QuantIndex, RecallCurves,
+  VectorStore}
 
 /** What [[HttpFacade]] needs from an index, so one REST surface hosts
   * all three persisted layouts (r11 verdict task #7: the facade served
@@ -23,20 +24,28 @@ import graft.store.{FileLog, MultiTableStore, QuantIndex, VectorStore}
   *    measured curve → exact, never under-deliver).
   *
   * Shared reference semantics live in the facade (k-clamp, 1-D
-  * reshape, auto-ids, empty-index warning); the adapter only answers
-  * layout-specific questions.
+  * reshape, auto-ids, empty-index warning); what every layout answers
+  * the same way lives here over its [[IndexTable]], and each adapter
+  * answers only the layout-specific questions.
   */
 sealed trait StoreAdapter {
+  /** The hosted index. */
+  protected def table: IndexTable
+
   /** Layout tag reported by `/stats` (`sharding_strategy`). */
   def strategy: String
 
-  /** Distinct stored vectors (a ×L layout counts each row once). */
-  def totalVectors(): Long
+  /** One row per stored vector (a ×L layout reads one copy). */
+  protected def vectors: DataFrame = table.indexDf
+
+  /** Distinct stored vectors. */
+  def totalVectors(): Long = vectors.count()
 
   /** Current max id, −1 when empty (for sequential auto-ids). */
-  def maxId(): Long
+  def maxId(): Long =
+    vectors.agg(coalesce(max("id"), lit(-1L))).head.getLong(0)
 
-  def add(df: DataFrame): Unit
+  def add(df: DataFrame): Unit = table.add(df)
 
   /** The probe budget meaning "exact" for this layout. */
   def maxProbes: Int
@@ -47,7 +56,9 @@ sealed trait StoreAdapter {
     * bounds neither recall@50 nor recall@5 at a fixed depth, r14
     * ADVICE #1).
     */
-  def probesFor(minRecall: Double, k: Int): Int
+  def probesFor(minRecall: Double, k: Int): Int =
+    RecallCurves.certifiedDepth(table.recallCurve(), k, minRecall)
+      .getOrElse(maxProbes)
 
   /** (id, dist) top-k frame at the given probe depth. */
   def search(q: Array[Double], k: Int, probes: Int): DataFrame
@@ -69,23 +80,16 @@ sealed trait StoreAdapter {
   def totalNodes: Int
 
   /** Typed vacuum-race classification for eager actions. */
-  def classified[T](body: => T): T
+  def classified[T](body: => T): T = table.classified(body)
 }
 
 object StoreAdapter {
 
   final class Lsh(spark: SparkSession, val store: VectorStore)
       extends StoreAdapter {
+    protected def table: IndexTable = store
     def strategy = "lsh"
-    def totalVectors(): Long = store.indexDf.count()
-    def maxId(): Long = store.indexDf
-      .agg(coalesce(max("id"), lit(-1L))).head.getLong(0)
-    def add(df: DataFrame): Unit = store.add(df)
     def maxProbes: Int = store.model.numBuckets
-    def probesFor(minRecall: Double, k: Int): Int =
-      graft.store.RecallCurves
-        .certifiedDepth(store.recallCurve(), k, minRecall)
-        .getOrElse(maxProbes)
     def search(q: Array[Double], k: Int, probes: Int): DataFrame =
       store.search(q, k, probes)
     def nodes(): Map[String, Any] = store.stats().collect().map { r =>
@@ -97,21 +101,13 @@ object StoreAdapter {
         "imbalance" -> r.getAs[Double]("imbalance"))
     }.toMap
     def totalNodes: Int = store.model.numBuckets
-    def classified[T](body: => T): T = store.classified(body)
   }
 
   final class Quant(spark: SparkSession, val idx: QuantIndex)
       extends StoreAdapter {
+    protected def table: IndexTable = idx
     def strategy = "ivf"
-    def totalVectors(): Long = idx.indexDf.count()
-    def maxId(): Long = idx.indexDf
-      .agg(coalesce(max("id"), lit(-1L))).head.getLong(0)
-    def add(df: DataFrame): Unit = idx.add(df)
     def maxProbes: Int = idx.model.cfg.ivfCells
-    def probesFor(minRecall: Double, k: Int): Int =
-      graft.store.RecallCurves
-        .certifiedDepth(idx.recallCurve(), k, minRecall)
-        .getOrElse(maxProbes)
     def search(q: Array[Double], k: Int, probes: Int): DataFrame =
       idx.searchIvf(q, k, nprobe = probes)
     override def searchTier(q: Array[Double], k: Int, minRecall: Double,
@@ -128,24 +124,17 @@ object StoreAdapter {
         }.toMap
     }
     def totalNodes: Int = idx.model.cfg.ivfCells
-    def classified[T](body: => T): T = idx.classified(body)
   }
 
   final class Multi(spark: SparkSession, val store: MultiTableStore)
       extends StoreAdapter {
+    protected def table: IndexTable = store
     def strategy = "lsh_multitable"
-    // each vector is stored once per table: count one copy
-    def totalVectors(): Long =
-      store.indexDf.where(col("table") === 0).count()
-    def maxId(): Long = store.indexDf.where(col("table") === 0)
-      .agg(coalesce(max("id"), lit(-1L))).head.getLong(0)
-    def add(df: DataFrame): Unit = store.add(df)
+    // each vector is stored once per table: table 0 is one copy
+    override protected def vectors: DataFrame =
+      store.indexDf.where(col("table") === 0)
     def maxProbes: Int =
       store.model.cfg.numHashTables * store.model.bucketsPerTable
-    def probesFor(minRecall: Double, k: Int): Int =
-      graft.store.RecallCurves
-        .certifiedDepth(store.recallCurve(), k, minRecall)
-        .getOrElse(maxProbes)
     def search(q: Array[Double], k: Int, probes: Int): DataFrame =
       if (probes >= maxProbes) store.exact(q, k)
       else store.search(q, k, probes)
@@ -162,6 +151,5 @@ object StoreAdapter {
         }.toMap
     }
     def totalNodes: Int = maxProbes
-    def classified[T](body: => T): T = store.classified(body)
   }
 }

@@ -17,9 +17,11 @@ import org.apache.spark.sql.functions._
   * replaying a wider or overlapping window re-derives the same net
   * actions, and upsert/delete are state-convergent.
   *
-  * Sync is NOT atomic across commits: an upsert commit and a delete
-  * commit land separately, so a concurrent reader can observe the
-  * intermediate snapshot (standard CDC-consumer semantics; each
+  * A window's net inserts apply as ONE upsert commit and its net
+  * deletes as ONE delete commit, on every layout. A window holding
+  * only one kind is therefore atomic; a window holding both is NOT —
+  * the two commits land separately, so a concurrent reader can observe
+  * the intermediate snapshot (standard CDC-consumer semantics; each
   * snapshot is itself consistent).
   */
 object FeedSync {

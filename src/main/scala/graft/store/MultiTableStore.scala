@@ -38,62 +38,15 @@ import graft.lsh.{LshConfig, LshModel}
 final class MultiTableStore(
     spark: SparkSession,
     val path: String,
-    val model: LshModel) {
+    val model: LshModel) extends IndexTable(spark, path) {
 
-  /** The live ×L index, read through the [[FileLog]] — same
-    * snapshot-isolation contract as [[VectorStore.indexDf]]: readers
-    * resolve a committed file list, never a directory listing that a
-    * concurrent rewrite can tear.
-    */
-  def indexDf: DataFrame =
-    if (!FileLog.exists(path)) spark.read.parquet(path)
-    else dfOf(FileLog.read(path))
+  /** `table=<t>/bucket=<b>` partitions, each vector stored once per table. */
+  protected val layout: Layout =
+    Layout(Seq("table" -> model.cfg.numHashTables,
+      "bucket" -> model.bucketsPerTable), copies = model.cfg.numHashTables)
 
-  // Relation memo — see VectorStore.relMemo: one file-stat job +
-  // analysis per immutable snapshot instead of per read; metadata
-  // only, no rows cached.
-  private val relMemo =
-    new java.util.LinkedHashMap[(String, Seq[String]), DataFrame](
-      8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Seq[String]), DataFrame]) =
-        size > 8
-    }
-
-  private def dfOf(st: FileLog.State): DataFrame =
-    if (st.files.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(st.schemaDdl))
-    // The log already knows the schema (captured from the writing
-    // frame at commit time) — passing it skips the per-read parquet
-    // schema-inference pass, one of the two fixed jobs every store
-    // read paid (r16; the pre-log fallback below still infers).
-    else if (st.schemaDdl.isEmpty)
-      spark.read.option("basePath", path).parquet(st.files: _*)
-    else relMemo.synchronized {
-      relMemo.computeIfAbsent((st.schemaDdl, st.files), _ =>
-        spark.read
-          .schema(org.apache.spark.sql.types.StructType.fromDDL(st.schemaDdl))
-          .option("basePath", path).parquet(st.files: _*))
-    }
-
-  /** Pinned snapshot + frame for read-modify-write mutations; adopts
-    * unlogged directories (see [[VectorStore]]'s twin).
-    */
-  private def pinned(): (FileLog.State, DataFrame) =
-    if (FileLog.exists(path)) {
-      val st = FileLog.read(path)
-      (st, dfOf(st))
-    } else {
-      val phys = FileLog.listDataFiles(spark, path)
-      val df = spark.read.option("basePath", path).parquet(path)
-      (FileLog.State(phys, df.schema.toDDL, version = 0), df)
-    }
-
-  private def partOfFile(f: String): Option[(Int, Int)] =
-    MultiTableStore.PartRe.findFirstMatchIn(f)
-      .map(m => (m.group(1).toInt, m.group(2).toInt))
+  protected def encode(df: DataFrame, idCol: String, embCol: String): DataFrame =
+    MultiTableStore.encode(df, model, idCol, embCol)
 
   /** Predicate selecting the probed (table, bucket) partitions —
     * OR-of-ANDs over the two partition columns, so the scan prunes to
@@ -105,11 +58,6 @@ final class MultiTableStore(
       .reduce(_ || _)
 
   /** Pruned kNN: probed partitions → id-dedup → exact top-k. */
-  /** Eager-action wrapper delivering the typed vacuum-race error
-    * ([[FileLog.classified]]) — see [[VectorStore.classified]].
-    */
-  def classified[T](body: => T): T = FileLog.classified(path)(body)
-
   def search(q: Array[Double], k: Int, probes: Int): DataFrame =
     searchIn(indexDf.where(pruneFilter(q, probes)), q, k)
 
@@ -120,45 +68,6 @@ final class MultiTableStore(
   private def searchIn(df: DataFrame, q: Array[Double], k: Int): DataFrame =
     VectorStore.searchIn(df.select("id", "embedding").dropDuplicates("id"), q, k)
 
-  /** Append vectors: one stored row per (table, row), like the build.
-    * Mutation parity with [[VectorStore.add]] — a user on the
-    * multi-table layout keeps the same ingest surface.
-    */
-  def add(df: DataFrame, idCol: String = "id",
-          embCol: String = "embedding",
-          batchId: Option[Long] = None): Unit = {
-    val bid = batchId.getOrElse(-1L)
-    if (bid >= 0 && FileLog.exists(path) && FileLog.read(path).batchId >= bid)
-      return // replayed streaming batch: already committed (exactly-once)
-    val encoded = MultiTableStore.encode(df, model, idCol, embCol)
-    // staged write + read-merge-CAS append: concurrent adds can't share
-    // scratch dirs and both land; unlogged dirs are adopted (r10
-    // ADVICE). Pre-write exchange to the table×bucket grid,
-    // unconditionally (r15): bounds a wide append at ≤ grid files AND
-    // gives narrow micro-batches grid-way write parallelism — without
-    // it a 1-partition batch writes all ~64 touched partitions'
-    // files sequentially in one task (measured 1.6 → 1.2 s per
-    // scatter); the batch-sized exchange is noise next to either.
-    val grid = model.cfg.numHashTables * model.bucketsPerTable
-    val out = GridPart.exactRange(encoded, grid,
-      col("table").cast("int") * lit(model.bucketsPerTable) +
-        col("bucket").cast("int"))
-    val created = FileLog.stagedWrite(spark, path, stage =>
-      out.write.mode("overwrite").partitionBy("table", "bucket").parquet(stage))
-    FileLog.transact(spark, path) { cur =>
-      val curBid = cur.map(_.batchId).getOrElse(-1L)
-      if (bid >= 0 && curBid >= bid) None
-      else Some(FileLog.Commit(
-        cur.map(_.files).getOrElse(
-          FileLog.listDataFiles(spark, path).filterNot(created.toSet))
-          ++ created,
-        out.schema.toDDL, math.max(bid, curBid),
-        cur.map(_.zones).getOrElse(Map.empty),
-        cur.map(_.rows).getOrElse(Map.empty)))
-    }
-    invalidateRecallCurve()
-  }
-
   // ------------------------------------------- recall-targeted search
 
   /** Measure the recall-vs-probes curve for [[search]] over a query
@@ -168,10 +77,11 @@ final class MultiTableStore(
     * ONE corpus scan: the panel broadcasts into the scan with each
     * query's full ordered candidate list (prefix-closed by
     * construction — [[graft.lsh.LshModel.tableCandidates]] fills an
-    * insertion-ordered set), the exact arm is a table-0-restricted
-    * FILTERed TopKAgg, and depth-p membership is one array_position
-    * test on the t·2^k+b pair code. Unlike the single-table layout,
-    * informed candidates need not cover every partition, so the curve
+    * insertion-ordered set), rows are deduped per id (MIN position
+    * over its copies) before the top-k aggregates, and depth-p
+    * membership is one array_position test on the t·2^k+b pair code.
+    * Unlike the single-table layout, informed candidates need not
+    * cover every partition, so the curve
     * may top out below 1.0 — [[searchAtRecall]] then degenerates to
     * [[exact]] for targets above it (never under-deliver).
     */
@@ -181,9 +91,7 @@ final class MultiTableStore(
              else model.cfg.numHashTables * model.cfg.numHashFunctions
     val row = auditFrame(panel, math.max(1, k), mp).head
     val curve = (0 until mp).map(row.getDouble)
-    val json = s"""{"k":${math.max(1, k)},"panel":${panel.size},""" +
-      s""""recall":${curve.map(d => f"$d%.17e").mkString("[", ",", "]")}}"""
-    graft.util.FsIo.writeStringAtomic(s"$path/_recall_curve.json", json)
+    writeRecallCurve(math.max(1, k), panel.size, curve)
     curve
   }
 
@@ -195,57 +103,9 @@ final class MultiTableStore(
     */
   private[graft] def auditFrame(panel: Seq[Array[Double]], kk: Int,
                                 mp: Int): DataFrame = {
-    require(panel.nonEmpty, "empty audit panel")
     val b = model.bucketsPerTable
-    val sess = spark
-    import sess.implicits._
-    val pdf = panel.zipWithIndex.map { case (q, i) =>
-      (i.toLong, q.toSeq,
-        model.tableCandidates(q, mp).map { case (t, bk) => t * b + bk }.toArray)
-    }.toDF("qid", "qe", "cands")
-    // A row is stored once per table, and search() dedups candidates
-    // by id — so an id's membership at depth p is "ANY copy's
-    // (table, bucket) sits within the first p candidates" = the MIN
-    // candidate position over its copies. Deduping BEFORE the top-k
-    // aggregates is required for correctness, not just economy:
-    // duplicate copies of a near neighbor would eat top-k slots and
-    // make measured recall non-monotone in probes. (array_position
-    // returns 0 when absent; the when() maps that to null, which the
-    // BETWEEN filter rejects.)
-    val scored = indexDf.crossJoin(broadcast(pdf))
-      .select(col("qid"), col("id"),
-        (col("table").cast("int") * b + col("bucket").cast("int")).as("pc"),
-        array_position(col("cands"),
-          col("table").cast("int") * b + col("bucket").cast("int")).as("pos"),
-        graft.functions.VectorFunctions.l2sq(col("embedding"),
-          col("qe")).as("dd"))
-    val perId = scored.groupBy("qid", "id").agg(
-      min(col("dd")).as("dd"), // identical across copies
-      min(when(col("pos") > 0, col("pos"))).as("minpos"))
-    val aggs =
-      graft.functions.TopKAgg(col("id"), col("dd"), kk).as("ex") +:
-        (1 to mp).map(p => graft.functions.TopKAgg.filtered(spark, "id", "dd",
-          kk, s"minpos BETWEEN 1 AND $p").as(s"pr_$p"))
-    val perQuery = perId.groupBy("qid").agg(aggs.head, aggs.tail: _*)
-      .select((1 to mp).map { p =>
-        (size(array_intersect(
-          expr("transform(ex, x -> x._1)"),
-          expr(s"transform(pr_$p, x -> x._1)"))).cast("double") /
-          size(col("ex"))).as(s"r_$p")
-      }: _*)
-    perQuery.agg(
-      avg(col("r_1")), (2 to mp).map(p => avg(col(s"r_$p"))): _*)
-  }
-
-  /** The persisted measured curve, if [[auditRecallCurve]] has run. */
-  def recallCurve(): Option[(Int, Seq[Double])] = {
-    val fp = s"$path/_recall_curve.json"
-    if (!graft.util.FsIo.exists(fp)) return None
-    val s = graft.util.FsIo.readString(fp)
-    val k = s.substring(s.indexOf("\"k\":") + 4,
-      s.indexWhere(c => c == ',' || c == '}', s.indexOf("\"k\":") + 4)).trim.toInt
-    val body = s.substring(s.indexOf("\"recall\":[") + 10, s.lastIndexOf("]"))
-    Some((k, body.split(",").map(_.trim.toDouble).toSeq))
+    probeAudit(panel, kk, 1 to mp,
+      model.tableCandidates(_, mp).map { case (t, bk) => t * b + bk })
   }
 
   /** Smallest probe count whose MEASURED recall meets the target, or
@@ -272,151 +132,17 @@ final class MultiTableStore(
       case None => exact(q, kk)
     }
   }
-
-  /** Drop the persisted recall curve on corpus mutation — a stale
-    * measured curve would make [[probesForRecall]] silently optimistic.
-    */
-  private def invalidateRecallCurve(): Unit =
-    graft.util.FsIo.delete(s"$path/_recall_curve.json")
-
-  /** Delete ids, rewriting ONLY the (table, bucket) partitions that
-    * hold them — each id lives in exactly L partitions, so a delete
-    * touches ≤ L·|ids| directories regardless of corpus size (the
-    * [[VectorStore.delete]] contract, ×L). Returns rows removed
-    * (counted across copies) / L.
-    */
-  /** Apply a relational table's CHANGE FEED to this index — net
-    * per-id actions (see [[FeedSync]]); this layout has no native
-    * upsert, so a net insert applies as delete-then-[[add]] (replace
-    * semantics, two commits — each snapshot stays consistent, see
-    * FeedSync's non-atomicity note). Idempotent under replayed
-    * windows. Returns (idsUpserted, idsDeleted).
-    */
-  def applyChanges(feed: DataFrame, idCol: String = "id",
-      embCol: String = "embedding"): (Long, Long) = {
-    // one aggregate yields both counts (was ups.count + dels.isEmpty,
-    // two jobs per window — see FeedSync.netWithCounts)
-    val (ups, dels, nUp, nDelIds) = FeedSync.netWithCounts(feed, idCol, embCol)
-    // replace = delete-then-add; both sides stay distributed (the
-    // upsert ids previously transited the driver too)
-    if (nUp > 0) {
-      deleteUnique(ups.select(col(idCol)), idCol) // net ids are distinct
-      add(ups, idCol, embCol)
-    }
-    // zero-delete windows skip the delete machinery entirely (r13
-    // ADVICE #5)
-    val nDel = if (nDelIds == 0L) 0L
-      else deleteUnique(dels, idCol) // distributed, already distinct
-    (nUp, nDel)
-  }
-
-  def delete(ids: Seq[Long]): Long = {
-    if (ids.isEmpty) return 0L
-    import spark.implicits._
-    delete(spark.createDataset(ids).toDF("id"), "id")
-  }
-
-  /** Distributed delete — ids as a DataFrame column, never through
-    * the driver (see [[VectorStore.delete]]); only the affected
-    * (table, bucket) PAIRS — bounded by L·numBuckets — are collected.
-    * The Seq overload is sugar over this.
-    */
-  def delete(delDf: DataFrame, idCol: String): Long =
-    deleteUnique(delDf.select(col(idCol).cast("long").as("id")).distinct()
-      .localCheckpoint(true), "id") // scanned twice: semi-join, anti-join
-
-  /** [[delete]] for an id frame the caller guarantees DISTINCT and
-    * cheap to rescan ([[applyChanges]]'s net frames) — skips the
-    * distinct exchange + checkpoint job (see VectorStore.deleteUnique).
-    */
-  private[store] def deleteUnique(delDf: DataFrame, idCol: String): Long = {
-    val ids = delDf.select(col(idCol).cast("long").as("id"))
-    val (log, cur) = pinned()
-    val affected = cur.join(ids, Seq("id"), "left_semi")
-      .select(col("table").cast("int"), col("bucket").cast("int"))
-      .distinct().collect().map(r => (r.getInt(0), r.getInt(1))).toSet
-    if (affected.isEmpty) return 0L
-    val hit = affected.map { case (t, b) =>
-      col("table") === t && col("bucket") === b
-    }.reduce(_ || _)
-    val inParts = cur.where(hit)
-    val remaining = inParts.join(ids, Seq("id"), "left_anti")
-    // replacement files append; one atomic log commit retires the
-    // affected partitions' old files (fully-emptied partitions simply
-    // publish nothing) — readers see pre- or post-state, never torn
-    val created = FileLog.stagedWrite(spark, path, stage =>
-      GridPart.exact(remaining,
-          affected.toSeq.sorted.map { case (t, b) =>
-            t * model.bucketsPerTable + b },
-          col("table").cast("int") * lit(model.bucketsPerTable) +
-            col("bucket").cast("int"))
-        .write.mode("overwrite")
-        .partitionBy("table", "bucket").parquet(stage))
-    val retired = log.files.filter(f => partOfFile(f).exists(affected))
-    // optimistic rewrite: append-only interlopers merge, both land
-    // (the delete applies to the snapshot it read); conflicting
-    // rewrites fail loudly (see VectorStore.delete)
-    FileLog.commitRewrite(spark, path, log, retired.toSet, created,
-      log.schemaDdl)
-    invalidateRecallCurve()
-    // removed-row count from footer metadata (see VectorStore.delete):
-    // two driver-side metadata reads replace two count() jobs
-    (FileLog.footerRows(spark, retired) -
-      FileLog.footerRows(spark, created)) / cfgTables
-  }
-
-  private def cfgTables: Long = model.cfg.numHashTables.toLong
-
-  /** Compact each (table, bucket) partition's small files (every add
-    * appends ≥1 file per touched partition) — [[VectorStore.compact]]
-    * over the two-level layout.
-    */
-  def compact(targetRowsPerFile: Long = 1 << 20,
-              vacuumGraceMs: Long = FileLog.DefaultVacuumGraceMs): (Long, Long) = {
-    val (log, df) = pinned()
-    val before = log.files.size.toLong
-    // per-(table,bucket) row counts from parquet FOOTER metadata
-    // (driver-side, no Spark job) instead of a full count scan of the
-    // corpus the rewrite reads anyway; unparsable layouts fall back
-    val maxPartRows = FileLog.maxGroupRows(spark, log.files, partOfFile)
-      .getOrElse {
-        val maxRow =
-          df.groupBy("table", "bucket").count().agg(max("count")).head
-        if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
-      }
-    if (maxPartRows == 0L) return (before, before)
-    val filesPerPart = math.max(1L,
-      (maxPartRows + targetRowsPerFile - 1) / targetRowsPerFile)
-    val numParts = math.min(
-      model.cfg.numHashTables.toLong * model.bucketsPerTable * filesPerPart,
-      Int.MaxValue.toLong)
-    // exact (table, bucket, slice)→task mapping ([[GridPart]]): the
-    // composite key enumerates 0 until numParts
-    val created = FileLog.stagedWrite(spark, path, stage =>
-      GridPart.exactRange(df, numParts.toInt,
-          (col("table").cast("long") * lit(model.bucketsPerTable) +
-            col("bucket").cast("long")) * lit(filesPerPart) +
-            pmod(hash(col("id")), lit(filesPerPart)).cast("long"))
-        .sortWithinPartitions("table", "bucket", "id")
-        .write.mode("overwrite").partitionBy("table", "bucket").parquet(stage))
-    // optimistic rewrite: an add() racing this compaction merges —
-    // both land with zero row loss; only rewrite/rewrite races fail
-    FileLog.commitRewrite(spark, path, log, log.files.toSet, created,
-      log.schemaDdl, dataChange = false) // same rows, new files
-    FileLog.vacuum(spark, path, retainLast = 1, graceMs = vacuumGraceMs)
-    (before, created.size.toLong)
-  }
 }
 
 object MultiTableStore {
 
-  /** One stored row per (table, input row) with its per-table 2^k
-    * bucket code — the ×L scatter, shared by build and add.
-    */
   /** Dev-probe hook for [[encode]]. */
   private[graft] def testEncode(df: DataFrame, model: LshModel): DataFrame =
     encode(df, model, "id", "embedding")
 
+  /** One stored row per (table, input row) with its per-table 2^k
+    * bucket code — the ×L scatter, shared by build, add and upsert.
+    */
   private def encode(df: DataFrame, model: LshModel,
                      idCol: String, embCol: String): DataFrame =
     df.select(col(idCol).cast("long").as("id"), col(embCol).as("embedding"))
@@ -425,27 +151,20 @@ object MultiTableStore {
       .withColumnRenamed("pos", "table")
       .withColumnRenamed("col", "bucket")
 
-  private[store] val PartRe = """/table=(\d+)/bucket=(-?\d+)/""".r
-
   /** Build: per-table bucket codes (one fused-kernel pass per table),
-    * one stored row per (table, row), partitioned write. The
-    * repartition concentrates each (table, bucket) into one writer
-    * task, like [[VectorStore.build]].
+    * one stored row per (table, row), one writer task per
+    * (table, bucket) partition, like [[VectorStore.build]].
     */
   def build(spark: SparkSession, df: DataFrame, path: String,
             cfg: LshConfig, idCol: String = "id",
             embCol: String = "embedding"): MultiTableStore = {
     require(cfg.multiTable, "MultiTableStore requires LshConfig(multiTable = true)")
     val model = LshModel(cfg)
-    val out = encode(df, model, idCol, embCol)
-    GridPart.exactRange(out, cfg.numHashTables * model.bucketsPerTable,
-        col("table").cast("int") * lit(model.bucketsPerTable) +
-          col("bucket").cast("int"))
-      .write.mode("overwrite").partitionBy("table", "bucket").parquet(path)
-    FileLog.commit(spark, path,
-      FileLog.listDataFiles(spark, path), out.schema.toDDL)
+    val store = new MultiTableStore(spark, path, model)
+    IndexTable.create(spark, path, encode(df, model, idCol, embCol),
+      store.layout)
     model.save(s"$path/_lsh_model.json")
-    new MultiTableStore(spark, path, model)
+    store
   }
 
   def open(spark: SparkSession, path: String): MultiTableStore = {

@@ -26,7 +26,8 @@ import graft.functions.{VectorFunctions => VF}
 final class QuantIndex(
     spark: SparkSession,
     val path: String,
-    val model: QuantModel) {
+    val model: QuantModel)
+    extends IndexTable(spark, QuantIndex.currentDataDir(spark, path)) {
 
   /** Data directory of the snapshot this instance serves, resolved
     * ONCE at construction: either the flat legacy layout (`cell=` dirs
@@ -36,65 +37,28 @@ final class QuantIndex(
     * consistent snapshot; after a retrain, reopen (or use the returned
     * instance) to see the new version.
     */
-  val dataDir: String = QuantIndex.currentDataDir(spark, path)
+  val dataDir: String = tableDir
+
+  protected val layout: Layout = QuantIndex.layoutOf(model)
+
+  protected def encode(df: DataFrame, idCol: String, embCol: String): DataFrame =
+    QuantIndex.encode(df, model, idCol, embCol)
+
+  /** After a commit: drop the resident cache, and on a data change the
+    * per-tier coarseN curves too (the kernel drops the nprobe curve) —
+    * a stale curve would make [[coarseNForRecall]] silently optimistic.
+    */
+  override protected def afterCommit(dataChange: Boolean): Unit = {
+    if (dataChange) AdcTiers.foreach(t => graft.util.FsIo.delete(adcCurvePath(t)))
+    dropResident()
+  }
 
   @transient private var resident: Option[DataFrame] = None
 
-  /** The snapshot's live files, resolved through its [[FileLog]]: a
-    * committed file list per scan, so concurrent in-snapshot rewrites
-    * (delete/upsert/compact) flip readers pre->post atomically — the
-    * same torn-listing fix as [[VectorStore.indexDf]]. Pre-log
-    * snapshots (none in practice) fall back to the directory scan.
+  /** The snapshot's live rows: the resident copy after [[cacheIndex]],
+    * else the committed file list ([[IndexTable.indexDf]]).
     */
-  private def logDf: DataFrame =
-    if (!FileLog.exists(dataDir)) spark.read.parquet(dataDir)
-    else dfOf(FileLog.read(dataDir))
-
-  // Relation memo — see VectorStore.relMemo: one file-stat job +
-  // analysis per immutable snapshot instead of per read; metadata
-  // only, no rows cached. The zone-pruned reads key on their kept
-  // subset, so repeated searches at a frozen version hit too.
-  private val relMemo =
-    new java.util.LinkedHashMap[(String, Seq[String]), DataFrame](
-      8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Seq[String]), DataFrame]) =
-        size > 8
-    }
-
-  private def dfOf(st: FileLog.State): DataFrame =
-    if (st.files.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(st.schemaDdl))
-    // Known schema from the log — skips the per-read parquet
-    // schema-inference pass (see MultiTableStore.dfOf).
-    else if (st.schemaDdl.isEmpty)
-      spark.read.option("basePath", dataDir).parquet(st.files: _*)
-    else relMemo.synchronized {
-      relMemo.computeIfAbsent((st.schemaDdl, st.files), _ =>
-        spark.read
-          .schema(org.apache.spark.sql.types.StructType.fromDDL(st.schemaDdl))
-          .option("basePath", dataDir).parquet(st.files: _*))
-    }
-
-  /** Pinned snapshot + frame for read-modify-write mutations; adopts
-    * unlogged directories (see [[VectorStore]]'s twin).
-    */
-  private def pinned(): (FileLog.State, DataFrame) =
-    if (FileLog.exists(dataDir)) {
-      val st = FileLog.read(dataDir)
-      (st, dfOf(st))
-    } else {
-      val phys = FileLog.listDataFiles(spark, dataDir)
-      val df = spark.read.option("basePath", dataDir).parquet(dataDir)
-      (FileLog.State(phys, df.schema.toDDL, version = 0), df)
-    }
-
-  private def cellOfFile(f: String): Option[Int] =
-    QuantIndex.CellRe.findFirstMatchIn(f).map(_.group(1).toInt)
-
-  def indexDf: DataFrame = resident.getOrElse(logDf)
+  override def indexDf: DataFrame = resident.getOrElse(logDf)
 
   /** Friendly refusal for searches over an unselected tier: the code
     * column is simply absent from the index schema.
@@ -232,7 +196,7 @@ final class QuantIndex(
       i < sorted.length && sorted(i) <= hi
     }
     val kept = st.files.filter { f =>
-      cellOfFile(f) match {
+      layout.cellOf(f) match {
         case None => true // not a cell file: conservative
         case Some(c) => byCell.get(c) match {
           case None => false // no candidate lives in this cell
@@ -253,16 +217,6 @@ final class QuantIndex(
     */
   def candidateIds(coarse: DataFrame): Seq[Long] =
     classified { coarse.select("id").collect().map(_.getLong(0)).toSeq }
-
-  /** Run an eager action over this index's frames with vacuum-race
-    * classification ([[FileLog.classified]]): a FileNotFound whose
-    * snapshot was vacuumed mid-scan surfaces as the typed
-    * [[SnapshotVacuumedException]] instead of the raw error. All
-    * internal materialization points (coarse collects, re-rank inputs)
-    * run through it; wrap your own actions on returned DataFrames the
-    * same way.
-    */
-  def classified[T](body: => T): T = FileLog.classified(dataDir)(body)
 
   /** Exact re-rank of the coarse survivors, scanning ONLY the cell
     * partitions they live in (derived from the coarse result's `cell`
@@ -377,233 +331,6 @@ final class QuantIndex(
       .orderBy(col("dist"), col("id")).limit(math.max(1, k))
   }
 
-  /** Append new vectors: encode against the TRAINED model (codes and
-    * cell assignment are functions of the persisted codebooks, so no
-    * retraining — exactly FAISS `add` after `train`) and append into
-    * the cell partitions. Quantizer drift from a shifting corpus is
-    * the operator's standard trade-off; rebuild to retrain.
-    */
-  def add(df: DataFrame, idCol: String = "id",
-          embCol: String = "embedding",
-          batchId: Option[Long] = None): Unit = {
-    val bid = batchId.getOrElse(-1L)
-    if (bid >= 0 && FileLog.exists(dataDir) &&
-        FileLog.read(dataDir).batchId >= bid)
-      return // replayed streaming batch: already committed (exactly-once)
-    val encoded = QuantIndex.encode(df, model, idCol, embCol)
-    // staged write + read-merge-CAS append: concurrent adds can't share
-    // scratch dirs and both land; unlogged dirs are adopted (r10 ADVICE).
-    // Pre-write exchange to the CELL grid, unconditionally (r15): it
-    // bounds an add at ≤ cells files for wide inputs (32-partition
-    // 1k-row adds measured ~6.5 s each without it, almost all per-file
-    // cost) AND gives narrow micro-batches cells-way WRITE parallelism
-    // — without it a 1-partition batch writes every touched cell's
-    // file sequentially in one task (sort-based dynamic-partition
-    // writer), measured 1.6 → 1.2 s per scatter on the ×L twin. The
-    // batch-sized exchange is noise next to either. (The old
-    // conditional also paid `.rdd.getNumPartitions` — a full physical
-    // planning of the batch — just to decide.) Exact 1:1 cell→task
-    // mapping, not hash (which stacks 2-3 cells per task and leaves
-    // ~1/e of them empty — [[GridPart]]).
-    val out = GridPart.exactRange(encoded, model.cfg.ivfCells, col("cell"))
-    val created = FileLog.stagedWrite(spark, dataDir, stage =>
-      out.write.mode("overwrite").partitionBy("cell").parquet(stage))
-    val createdZones = FileLog.collectZones(spark, created, QuantIndex.ZoneCols)
-    FileLog.transact(spark, dataDir) { cur =>
-      val curBid = cur.map(_.batchId).getOrElse(-1L)
-      if (bid >= 0 && curBid >= bid) None
-      else Some(FileLog.Commit(
-        cur.map(_.files).getOrElse(
-          FileLog.listDataFiles(spark, dataDir).filterNot(created.toSet))
-          ++ created,
-        out.schema.toDDL, math.max(bid, curBid),
-        cur.map(_.zones).getOrElse(Map.empty) ++ createdZones,
-        cur.map(_.rows).getOrElse(Map.empty)))
-    }
-    invalidateRecallCurve()
-    invalidateResident()
-  }
-
-  /** Delete vectors by id, rewriting ONLY the cells that contain them
-    * (dynamic partition overwrite — a few partition directories, never
-    * the whole table). Returns the number of rows removed.
-    */
-  def delete(ids: Seq[Long]): Long = {
-    if (ids.isEmpty) return 0L
-    import spark.implicits._
-    delete(spark.createDataset(ids).toDF("id"), "id")
-  }
-
-  /** Distributed delete — ids as a DataFrame column, never through
-    * the driver (see [[VectorStore.delete]]: semi-join finds the
-    * cells, anti-join rewrites them; only CELL ids, bounded by
-    * ivfCells, are collected). The Seq overload is sugar over this.
-    */
-  def delete(delDf: DataFrame, idCol: String): Long =
-    deleteUnique(delDf.select(col(idCol).cast("long").as("id")).distinct()
-      .localCheckpoint(true), "id") // scanned twice: semi-join, anti-join
-
-  /** [[delete]] for an id frame the caller guarantees DISTINCT and
-    * cheap to rescan ([[applyChanges]]'s net deletes) — skips the
-    * distinct exchange + checkpoint job (see VectorStore.deleteUnique).
-    */
-  private[store] def deleteUnique(delDf: DataFrame, idCol: String): Long = {
-    val ids = delDf.select(col(idCol).cast("long").as("id"))
-    val (log, cur) = pinned()
-    val affected = cur.join(ids, Seq("id"), "left_semi")
-      .select(col("cell").cast("int")).distinct()
-      .collect().map(_.getInt(0))
-    if (affected.isEmpty) return 0L
-    val afSet = affected.toSet
-    val inCells = cur.where(col("cell").isin(affected.map(Int.box).toSeq: _*))
-    // replacement files APPEND; one atomic log commit retires the
-    // affected cells' old files (readers see pre- or post-state)
-    val remaining = inCells.join(ids, Seq("id"), "left_anti")
-    val created = FileLog.stagedWrite(spark, dataDir, stage =>
-      GridPart.exact(remaining, affected.toSeq, col("cell"))
-        .sortWithinPartitions("cell", "id")
-        .write.mode("overwrite").partitionBy("cell").parquet(stage))
-    val retired = log.files.filter(f => cellOfFile(f).exists(afSet))
-    // the created files' footers are opened ONCE: zones for the commit
-    // and the post-state row count (see VectorStore.delete — footer
-    // metadata replaces the before/remaining count() jobs)
-    val entries = graft.sources.ManifestScan.statsOf(spark,
-      created.map(new org.apache.hadoop.fs.Path(_)), QuantIndex.ZoneCols)
-    // optimistic rewrite (see VectorStore.delete): appends merge
-    FileLog.commitRewrite(spark, dataDir, log, retired.toSet, created,
-      log.schemaDdl,
-      addedZones = entries.map(e => e.path -> e.zones).toMap)
-    invalidateRecallCurve()
-    invalidateResident()
-    FileLog.footerRows(spark, retired) - entries.map(_.rows).sum
-  }
-
-  /** Upsert (id, embedding) rows: replaces existing ids, inserts new
-    * ones — same fully-distributed shape as `VectorStore.upsert` (ids
-    * never transit the driver): rewrite set = cells receiving a new
-    * row ∪ cells holding a prior row of an incoming id; one dynamic
-    * overwrite.
-    */
-  def upsert(df: DataFrame, idCol: String = "id",
-             embCol: String = "embedding",
-             seqCol: Option[String] = None): Unit = {
-    // shared in-batch dedup: `seqCol` highest-wins (deterministic for
-    // any partition layout), else positional last-wins
-    upsertUnique(Dedup.lastWins(df, idCol, seqCol).localCheckpoint(true),
-      idCol, embCol)
-  }
-
-  /** [[upsert]] for a batch the caller guarantees id-unique AND cheap
-    * to rescan (the net feed of [[applyChanges]], a projection of
-    * FeedSync's checkpointed reduction) — skips the in-batch last-wins
-    * window and the encoded-batch checkpoint (the two jobs that scan
-    * `incoming` recompute the encode projection instead of paying a
-    * materialization job). See `VectorStore.upsertUnique`.
-    */
-  private[store] def upsertUnique(df: DataFrame, idCol: String,
-             embCol: String): Unit = {
-    val incoming = QuantIndex.encode(df, model, idCol, embCol)
-    val (log, cur) = pinned()
-    val priorCells = cur.select(col("id"), col("cell"))
-      .join(incoming.select("id"), Seq("id"), "left_semi")
-      .select(col("cell"))
-    val af = incoming.select(col("cell")).union(priorCells)
-      .distinct().collect()
-      .map(r => Int.box(r.getAs[Number](0).intValue())).toSeq
-    val existing = cur.where(col("cell").isin(af: _*))
-      .join(incoming.select("id"), Seq("id"), "left_anti")
-    val merged = existing.unionByName(incoming)
-    val afSet = af.map(_.intValue()).toSet
-    val created = FileLog.stagedWrite(spark, dataDir, stage =>
-      GridPart.exact(merged, af.map(_.intValue()), col("cell"))
-        .sortWithinPartitions("cell", "id")
-        .write.mode("overwrite").partitionBy("cell").parquet(stage))
-    val retired = log.files.filter(f => cellOfFile(f).exists(afSet))
-    // optimistic rewrite (see VectorStore.upsert): appends merge
-    FileLog.commitRewrite(spark, dataDir, log, retired.toSet, created,
-      log.schemaDdl,
-      addedZones = FileLog.collectZones(spark, created, QuantIndex.ZoneCols))
-    invalidateRecallCurve()
-    invalidateResident()
-  }
-
-  /** Apply a relational table's CHANGE FEED to this index — net
-    * per-id actions (see [[FeedSync]]), inserts as [[upsert]],
-    * deletes as [[delete]]; idempotent under replayed windows.
-    * Returns (idsUpserted, idsDeleted). Same contract as
-    * `VectorStore.applyChanges` — all three layouts can track an
-    * upstream table incrementally.
-    */
-  def applyChanges(feed: DataFrame, idCol: String = "id",
-      embCol: String = "embedding"): (Long, Long) = {
-    // one aggregate yields both counts; net inserts are id-unique by
-    // construction so the upsert skips its dedup window. Zero-delete
-    // windows (the common streaming case) still skip the full
-    // distributed-delete machinery (r13 ADVICE #5).
-    val (ups, dels, nUp, nDelIds) = FeedSync.netWithCounts(feed, idCol, embCol)
-    if (nUp > 0) upsertUnique(ups, idCol, embCol)
-    val nDel = if (nDelIds == 0L) 0L
-      else deleteUnique(dels, idCol) // distributed, already distinct
-    (nUp, nDel)
-  }
-
-  /** Compact the index's data files (every add/upsert appends at least
-    * one file per touched cell — see [[VectorStore.compact]]).
-    * Preserves the build's within-cell id ordering so the re-rank's id
-    * pushdown keeps row-group-skipping. Returns (filesBefore,
-    * filesAfter).
-    */
-  def compact(targetRowsPerFile: Long = 1 << 20,
-              vacuumGraceMs: Long = FileLog.DefaultVacuumGraceMs): (Long, Long) = {
-    val (log, df) = pinned()
-    val before = log.files.size.toLong
-    // per-cell row counts from parquet FOOTER metadata (driver-side,
-    // no Spark job) instead of a full groupBy(cell).count() scan of
-    // the corpus the rewrite is about to read anyway — exact by
-    // construction; an adopted layout whose paths don't parse a cell
-    // directory falls back to the scan (guide §6: metadata over
-    // recompute).
-    val maxCellRows = FileLog.maxGroupRows(spark, log.files, cellOfFile)
-      .getOrElse {
-        val maxRow = df.groupBy("cell").count().agg(max("count")).head
-        if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
-      }
-    // zero rows (incl. an empty log) — nothing to compact
-    if (maxCellRows == 0L) return (before, before)
-    val filesPerCell =
-      math.max(1L, (maxCellRows + targetRowsPerFile - 1) / targetRowsPerFile)
-    val numParts = // bounded Long math: Int overflow would go negative
-      math.min(model.cfg.ivfCells.toLong * filesPerCell, Int.MaxValue.toLong)
-    // range split, not hash split: each output file owns a CONTIGUOUS
-    // (cell, id) range, so the commit's id zones are tight and the
-    // re-rank's bounded-id scan can skip whole files at planning time
-    // (a hash split spreads every file across the full id range and
-    // makes zones vacuous). Within-cell id order is preserved. When a
-    // single file per cell suffices, partition on the cell alone — a
-    // range partition can straddle a cell boundary and would write a
-    // second file into ~half the cells — through [[GridPart]]'s exact
-    // cell→task mapping (a plain hash stacks 2-3 cells per task, and
-    // the stacked tasks' sequential file writes gated the whole
-    // compaction: 16 cells hash into 10 tasks).
-    val shaped =
-      if (filesPerCell == 1L)
-        GridPart.exactRange(df, model.cfg.ivfCells, col("cell"))
-      else df.repartitionByRange(numParts.toInt, col("cell"), col("id"))
-    val created = FileLog.stagedWrite(spark, dataDir, stage =>
-      shaped.sortWithinPartitions("cell", "id")
-        .write.mode("overwrite")
-        .partitionBy("cell").parquet(stage))
-    // optimistic rewrite: an add() racing this compaction merges —
-    // both land with zero row loss; only rewrite/rewrite races fail
-    FileLog.commitRewrite(spark, dataDir, log, log.files.toSet, created,
-      log.schemaDdl,
-      addedZones = FileLog.collectZones(spark, created, QuantIndex.ZoneCols),
-      dataChange = false) // same rows, new files (compaction)
-    FileLog.vacuum(spark, dataDir, retainLast = 1, graceMs = vacuumGraceMs)
-    invalidateResident()
-    (before, created.size.toLong)
-  }
-
   /** Re-train every quantizer on the CURRENT corpus and re-encode —
     * FAISS's retrain path, closing the audit→action loop: `add` after
     * a distribution shift encodes against stale codebooks (by design —
@@ -642,19 +369,14 @@ final class QuantIndex(
     // would bake those phantom rows into the new snapshot forever
     val data = logDf.select(col("id"), col("embedding"))
     val newModel = QuantModel.train(data, model.cfg)
-    val encoded = QuantIndex.encode(data, newModel, "id", "embedding")
-    GridPart.exactRange(encoded, newModel.cfg.ivfCells, col("cell"))
-      .sortWithinPartitions("cell", "id")
-      .write.mode("overwrite").partitionBy("cell").parquet(next)
-    val files = FileLog.listDataFiles(spark, next)
-    FileLog.commit(spark, next, files, encoded.schema.toDDL,
-      zones = FileLog.collectZones(spark, files, QuantIndex.ZoneCols))
+    IndexTable.create(spark, next,
+      QuantIndex.encode(data, newModel, "id", "embedding"), layout)
     newModel.save(s"$next/_quant_model.json") // atomic commit point
     // post-commit, grace-guarded cleanup of superseded snapshots: the
     // just-replaced one is younger than the grace and survives for
     // in-flight readers; older leftovers (prior retrains) get reclaimed
     QuantIndex.sweepSupersededSnapshots(spark, path, next, vacuumGraceMs)
-    invalidateResident()
+    dropResident()
     new QuantIndex(spark, path, newModel)
   }
 
@@ -684,39 +406,16 @@ final class QuantIndex(
     val (log, df) = pinned()
     val before = log.files.size.toLong
     val byCell: Map[Int, Seq[String]] = log.files
-      .flatMap(f => cellOfFile(f).map(_ -> f))
+      .flatMap(f => layout.cellOf(f).map(_ -> f))
       .groupBy(_._1).map { case (c, fs) => c -> fs.map(_._2) }
     val hot = byCell.collect {
       case (c, fs) if fs.size > policy.maxFilesPerCell => c
     }.toSeq.sorted
-    if (hot.nonEmpty) {
-      val replaced = hot.flatMap(byCell).toSet
-      val rows = df.where(col("cell").isin(hot.map(Int.box): _*))
-      // size like compact(): enough files that the LARGEST hot cell
-      // meets targetRowsPerFile; the common case is one file per cell
-      val maxRow = rows.groupBy("cell").count().agg(max("count")).head
-      val maxCellRows = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
-      val filesPerCell = math.max(1L,
-        (maxCellRows + policy.targetRowsPerFile - 1) / policy.targetRowsPerFile)
-      val numParts =
-        math.min(hot.size.toLong * filesPerCell, Int.MaxValue.toLong).toInt
-      val shaped =
-        if (filesPerCell == 1L)
-          GridPart.exact(rows, hot.toSeq.sorted, col("cell"))
-        else rows.repartitionByRange(numParts, col("cell"), col("id"))
-      val created = FileLog.stagedWrite(spark, dataDir, stage =>
-        shaped.sortWithinPartitions("cell", "id")
-          .write.mode("overwrite")
-          .partitionBy("cell").parquet(stage))
-      FileLog.commitRewrite(spark, dataDir, log, replaced, created,
-        log.schemaDdl,
-        addedZones = FileLog.collectZones(spark, created, QuantIndex.ZoneCols),
-        dataChange = false,     // same rows, new files (compaction)
-        readSet = Some(replaced)) // region-scoped: cold cells mergeable
-      FileLog.vacuum(spark, dataDir, retainLast = 1,
-        graceMs = policy.vacuumGraceMs)
-      invalidateResident()
-    }
+    // footer-sized, region-scoped compaction of just the hot cells:
+    // its read set is their files, so cold-cell rewrites still merge
+    if (hot.nonEmpty)
+      compactCells(log, df.where(layout.filter(hot)), hot.flatMap(byCell),
+        Some(hot), policy.targetRowsPerFile, policy.vacuumGraceMs)
     val afterCompact =
       if (hot.isEmpty) before else FileLog.read(dataDir).files.size.toLong
     val curveStale = recallCurve().isEmpty
@@ -749,43 +448,16 @@ final class QuantIndex(
                 nprobe: Int = 1): Double =
     recallByDepth(panel, k, Seq(nprobe)).head
 
-  /** Mean recall@k per probe depth over a panel, in ONE corpus scan:
-    * the panel broadcasts into the scan; for each query the exact
-    * top-k and every requested depth's probed top-k are FILTERed
-    * [[graft.functions.TopKAgg]]s over the same pass (the e18 shape).
-    * A row's membership at depth p is one array_position test against
-    * the query's full centroid-distance cell ranking, of which every
-    * depth-p probe list is a prefix by construction
-    * ([[QuantModel.ivfNearestCells]] sorts once and takes).
+  /** Mean recall@k per nprobe depth over a panel, in ONE corpus scan
+    * ([[IndexTable.probeAudit]]); the probe ranking is the query's
+    * full centroid-distance cell order, of which every depth-p probe
+    * list is a prefix ([[QuantModel.ivfNearestCells]] sorts once and
+    * takes).
     */
   private def recallByDepth(panel: Seq[Array[Double]], k: Int,
                             depths: Seq[Int]): Seq[Double] = {
-    require(panel.nonEmpty, "empty audit panel")
-    val kk = math.max(1, k)
-    val sess = spark
-    import sess.implicits._
-    val pdf = panel.zipWithIndex.map { case (q, i) =>
-      (i.toLong, q.toSeq,
-        model.ivfNearestCells(q, model.cfg.ivfCells).toArray)
-    }.toDF("qid", "qe", "cells")
-    val scored = indexDf.crossJoin(broadcast(pdf))
-      .select(col("qid"), col("cells"), col("id"),
-        col("cell").cast("int").as("cell"),
-        VF.l2sq(col("embedding"), col("qe")).as("dd"))
-    val aggs =
-      graft.functions.TopKAgg(col("id"), col("dd"), kk).as("ex") +:
-        depths.map(p => graft.functions.TopKAgg.filtered(spark, "id", "dd",
-          kk, s"array_position(cells, cell) BETWEEN 1 AND $p").as(s"pr_$p"))
-    val perQuery = scored.groupBy("qid").agg(aggs.head, aggs.tail: _*)
-      .select(depths.map { p =>
-        (size(array_intersect(
-          expr("transform(ex, x -> x._1)"),
-          expr(s"transform(pr_$p, x -> x._1)"))).cast("double") /
-          size(col("ex"))).as(s"r_$p")
-      }: _*)
-    val row = perQuery.agg(
-      avg(col(s"r_${depths.head}")),
-      depths.tail.map(p => avg(col(s"r_$p"))): _*).head
+    val row = probeAudit(panel, k, depths,
+      model.ivfNearestCells(_, model.cfg.ivfCells)).head
     depths.indices.map(row.getDouble)
   }
 
@@ -801,25 +473,8 @@ final class QuantIndex(
     val kk = math.max(1, k)
     val nb = model.cfg.ivfCells
     val curve = recallByDepth(panel, kk, 1 to nb)
-    val json = s"""{"k":$kk,"panel":${panel.size},""" +
-      s""""recall":${curve.map(d => f"$d%.17e").mkString("[", ",", "]")}}"""
-    // atomic: a facade search polling the curve mid-audit must read
-    // the old curve or the new one, never a torn JSON (r14 verdict #3)
-    graft.util.FsIo.writeStringAtomic(s"$dataDir/_recall_curve.json", json)
+    writeRecallCurve(kk, panel.size, curve)
     curve
-  }
-
-  /** The persisted measured curve (k, recall-per-nprobe), if
-    * [[auditRecallCurve]] has run for this snapshot.
-    */
-  def recallCurve(): Option[(Int, Seq[Double])] = {
-    val fp = s"$dataDir/_recall_curve.json"
-    if (!graft.util.FsIo.exists(fp)) return None
-    val s = graft.util.FsIo.readString(fp)
-    val k = s.substring(s.indexOf("\"k\":") + 4,
-      s.indexWhere(c => c == ',' || c == '}', s.indexOf("\"k\":") + 4)).trim.toInt
-    val body = s.substring(s.indexOf("\"recall\":[") + 10, s.lastIndexOf("]"))
-    Some((k, body.split(",").map(_.trim.toDouble).toSeq))
   }
 
   // ----------------- recall vs coarseN (the ADC tiers' other knob)
@@ -948,14 +603,10 @@ final class QuantIndex(
       depths: Seq[Int] = AdcDepths): Seq[(Int, Double)] = {
     val kk = math.max(1, k)
     val ds = depths.distinct.sorted
-    val curve = ds.zip(adcRecallByDepth(panel, kk, tier, ds))
-    val json = s"""{"k":$kk,"panel":${panel.size},""" +
-      s""""depths":${ds.mkString("[", ",", "]")},""" +
-      s""""recall":${curve.map(c => f"${c._2}%.17e").mkString("[", ",", "]")}}"""
-    // atomic for the same reason as auditRecallCurve: concurrent
-    // searchAdcAtRecall readers see old-curve or new-curve, never torn
-    graft.util.FsIo.writeStringAtomic(adcCurvePath(tier), json)
-    curve
+    val recall = adcRecallByDepth(panel, kk, tier, ds)
+    RecallCurves.write(adcCurvePath(tier),
+      RecallCurves.Curve(kk, panel.size, ds, recall))
+    ds.zip(recall)
   }
 
   private def adcCurvePath(tier: String): String =
@@ -965,18 +616,8 @@ final class QuantIndex(
     * (k, depth → recall), if [[auditAdcRecallCurve]] has run for this
     * snapshot.
     */
-  def adcRecallCurve(tier: String): Option[(Int, Seq[(Int, Double)])] = {
-    val fp = adcCurvePath(tier)
-    if (!graft.util.FsIo.exists(fp)) return None
-    val s = graft.util.FsIo.readString(fp)
-    def arr(key: String): Seq[String] = {
-      val i = s.indexOf("\"" + key + "\":[") + key.length + 4
-      s.substring(i, s.indexOf(']', i)).split(",").map(_.trim).toSeq
-    }
-    val k = s.substring(s.indexOf("\"k\":") + 4,
-      s.indexWhere(c => c == ',' || c == '}', s.indexOf("\"k\":") + 4)).trim.toInt
-    Some((k, arr("depths").map(_.toInt).zip(arr("recall").map(_.toDouble))))
-  }
+  def adcRecallCurve(tier: String): Option[(Int, Seq[(Int, Double)])] =
+    RecallCurves.read(adcCurvePath(tier)).map(c => (c.k, c.depths.zip(c.recall)))
 
   /** Smallest MEASURED re-rank budget whose recall meets the target,
     * for one ADC tier, AT THE CURVE'S OWN k; None when no persisted
@@ -1064,26 +705,17 @@ final class QuantIndex(
     searchIvf(q, kk, nprobe)
   }
 
-  /** Drop the persisted recall curves (nprobe AND the per-tier
-    * coarseN curves): they were measured against a specific corpus,
-    * so any mutation makes them stale (a stale curve would make
-    * [[nprobeForRecall]]/[[coarseNForRecall]] silently optimistic).
-    */
-  private def invalidateRecallCurve(): Unit = {
-    graft.util.FsIo.delete(s"$dataDir/_recall_curve.json")
-    (QuantTier.All - QuantTier.Pqr)
-      .foreach(t => graft.util.FsIo.delete(adcCurvePath(t)))
-  }
-
-  private def invalidateResident(): Unit = resident.foreach { df =>
-    df.unpersist()
+  private def dropResident(): Unit = {
+    resident.foreach(_.unpersist())
     resident = None
   }
 }
 
 object QuantIndex {
 
-  private[store] val CellRe = """/cell=(\d+)/""".r
+  /** Dev-probe hook for [[encode]] (build-phase decomposition). */
+  private[graft] def testEncode(df: DataFrame, model: QuantModel): DataFrame =
+    encode(df, model, "id", "embedding")
 
   /** (id, embedding, sq8, i4, pq, sig, pqr, cell) from raw
     * (id, embedding) rows. `sig` is the 1-bit sign signature (binary
@@ -1093,10 +725,6 @@ object QuantIndex {
     * `pqr` is the residual-PQ code against the row's coarse cell (the
     * FAISS IVFPQ encoding).
     */
-  /** Dev-probe hook for [[encode]] (build-phase decomposition). */
-  private[graft] def testEncode(df: DataFrame, model: QuantModel): DataFrame =
-    encode(df, model, "id", "embedding")
-
   private def encode(df: DataFrame, model: QuantModel,
                      idCol: String, embCol: String): DataFrame = {
     import QuantTier._
@@ -1136,15 +764,10 @@ object QuantIndex {
     val t0 = System.nanoTime()
     val model = QuantModel.train(df, cfg, idCol, embCol)
     val t1 = System.nanoTime()
-    val out = encode(df, model, idCol, embCol)
-    GridPart.exactRange(out, cfg.ivfCells, col("cell"))
-      .sortWithinPartitions("cell", "id")
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
+    IndexTable.create(spark, path, encode(df, model, idCol, embCol),
+      layoutOf(model))
     val t2 = System.nanoTime()
     lastBuild = Seq("train" -> (t1 - t0) / 1e9, "encode" -> (t2 - t1) / 1e9)
-    val files = FileLog.listDataFiles(spark, path)
-    FileLog.commit(spark, path, files, out.schema.toDDL,
-      zones = FileLog.collectZones(spark, files, ZoneCols))
     model.save(s"$path/_quant_model.json")
     new QuantIndex(spark, path, model)
   }
@@ -1154,8 +777,9 @@ object QuantIndex {
   /** Phase decomposition of the most recent [[build]] in this JVM
     * (bench telemetry): `train` = the driver-side model fit (stats
     * pass + k-means/OPQ over the bounded sample), `encode` = the
-    * distributed encode + partitioned write. Attributes a build-cost
-    * move to the phase that caused it (r13 verdict task #1).
+    * distributed encode + partitioned write + first log commit.
+    * Attributes a build-cost move to the phase that caused it (r13
+    * verdict task #1).
     */
   def lastBuildPhases: Seq[(String, Double)] = lastBuild
 
@@ -1190,13 +814,15 @@ object QuantIndex {
     }.groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2).sum / 1e6 }
   }
 
-  /** Zone-mapped columns recorded in every index commit: per-file id
-    * min/max lets [[QuantIndex.exactDist]]'s bounded-id re-rank skip
-    * files at PLANNING time (cell pruning is already structural — the
-    * partition directory). Meaningful skipping needs id-RANGE-
-    * clustered files, which [[QuantIndex.compact]] produces.
+  /** `cell` partitions with an `id` zone recorded in every commit:
+    * per-file id min/max lets [[QuantIndex.exactDistPaired]]'s
+    * bounded-id re-rank skip files at PLANNING time (cell pruning is
+    * already structural — the partition directory). Meaningful
+    * skipping needs id-RANGE-clustered files, which
+    * [[QuantIndex.compact]] produces.
     */
-  private[store] val ZoneCols = Seq("id")
+  private def layoutOf(model: QuantModel): Layout =
+    Layout(Seq("cell" -> model.cfg.ivfCells), zoneCols = Seq("id"))
 
   def open(spark: SparkSession, path: String): QuantIndex =
     new QuantIndex(spark, path,

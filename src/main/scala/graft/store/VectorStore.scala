@@ -28,143 +28,12 @@ import graft.lsh.{LshConfig, LshModel}
 final class VectorStore(
     spark: SparkSession,
     val path: String,
-    val model: LshModel) {
+    val model: LshModel) extends IndexTable(spark, path) {
 
-  /** The live index, read through the [[FileLog]]: the file list is
-    * resolved from `_files.json` once per call, so every scan sees a
-    * COMMITTED snapshot — a concurrent mutation flips readers from the
-    * pre-state to the post-state atomically, never a half-replaced
-    * bucket (the torn-read gap the round-12 battery documented on
-    * directory-listing reads). An empty index reads back as an empty
-    * frame with its recorded schema. Stores created with
-    * `new VectorStore` on a bare path (streaming sinks before their
-    * first batch) have no log yet and fall back to the directory scan.
-    */
-  def indexDf: DataFrame =
-    if (!FileLog.exists(path)) spark.read.parquet(path)
-    else dfOf(FileLog.read(path))
+  protected val layout: Layout = Layout(Seq("bucket" -> model.numBuckets))
 
-  // Relation memo: resolving a snapshot's frame costs a fixed
-  // file-stat pass (a Spark job once the snapshot holds >32 files)
-  // plus analysis, paid per READ even at a frozen version. Keyed on
-  // (schema, exact file list), so any commit misses and a re-read of
-  // the same immutable snapshot hits. Metadata-only — no rows are
-  // cached, every action still scans parquet (the log-backed twin of
-  // a catalog table's FileIndex cache).
-  private val relMemo =
-    new java.util.LinkedHashMap[(String, Seq[String]), DataFrame](
-      8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Seq[String]), DataFrame]) =
-        size > 8
-    }
-
-  private def dfOf(st: FileLog.State): DataFrame =
-    if (st.files.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(st.schemaDdl))
-    // Known schema from the log — skips the per-read parquet
-    // schema-inference pass (see MultiTableStore.dfOf).
-    else if (st.schemaDdl.isEmpty)
-      spark.read.option("basePath", path).parquet(st.files: _*)
-    else relMemo.synchronized {
-      relMemo.computeIfAbsent((st.schemaDdl, st.files), _ =>
-        spark.read
-          .schema(org.apache.spark.sql.types.StructType.fromDDL(st.schemaDdl))
-          .option("basePath", path).parquet(st.files: _*))
-    }
-
-  /** Pinned snapshot for a read-modify-write mutation: (state, frame
-    * over exactly that state's files). A directory with data but no
-    * log (built by pre-FileLog code) is ADOPTED — its physical listing
-    * becomes the base file set at version 0, so the mutation's commit
-    * carries the pre-existing rows forward instead of silently
-    * dropping them (the r10 ADVICE unlogged-`add` bug).
-    */
-  private def pinned(): (FileLog.State, DataFrame) =
-    if (FileLog.exists(path)) {
-      val st = FileLog.read(path)
-      (st, dfOf(st))
-    } else {
-      val phys = FileLog.listDataFiles(spark, path)
-      val df = spark.read.option("basePath", path).parquet(path)
-      (FileLog.State(phys, df.schema.toDDL, version = 0), df)
-    }
-
-  private def bucketOfFile(f: String): Option[Int] =
-    VectorStore.BucketRe.findFirstMatchIn(f).map(_.group(1).toInt)
-
-  /** Append vectors (id, embedding) into the bucketed index table:
-    * new data files land first, then one atomic log commit publishes
-    * them — readers see none or all of the batch.
-    *
-    * `batchId` is the exactly-once handle for streaming sinks: pass
-    * the foreachBatch batch id and a REPLAYED batch (crash between
-    * `add` and the stream's checkpoint commit) is a no-op instead of a
-    * duplicate append — the committed log carries the highest folded
-    * batch id, and `add` declines any batch at or below it. A crash
-    * between the data write and the log commit leaves orphan files
-    * outside the log (never read, reclaimed by vacuum); the replay's
-    * own files commit cleanly because `created` is diffed against the
-    * physical listing, which already contains the orphans.
-    *
-    * Concurrent `add`s are safe: the commit is a read-merge-CAS loop
-    * ([[FileLog.transact]]), so two appends both land — the loser of
-    * the version race re-reads and merges, never erases the winner.
-    *
-    * A directory with data but no log (pre-FileLog index) is adopted:
-    * the first `add` seeds the log with the physical listing, so
-    * pre-existing rows stay live (r10 ADVICE fix).
-    */
-  def add(df: DataFrame, idCol: String = "id", embCol: String = "embedding",
-          batchId: Option[Long] = None): Unit = {
-    val bid = batchId.getOrElse(-1L)
-    if (bid >= 0 && FileLog.exists(path) && FileLog.read(path).batchId >= bid)
-      return // replayed batch: already committed
-    val bucketed = VectorStore.bucketize(df, model, idCol, embCol)
-    // staged write: writer-private scratch (concurrent adds can't share
-    // a _temporary dir) and an exact `created` list — O(batch), never
-    // an O(table) directory diff.
-    // Pre-write exchange to the bucket grid, unconditionally (r15): it
-    // bounds a wide append at ≤ numBuckets files (the ~6.5 s/add
-    // per-file overhead measured on the quant twin) AND gives a narrow
-    // micro-batch bucket-way write parallelism — without it one task
-    // writes every touched bucket's file sequentially (sort-based
-    // dynamic-partition writer; measured 1.6 → 1.2 s per scatter on
-    // the ×L twin). The batch-sized exchange is noise next to either,
-    // and the decision no longer pays `.rdd.getNumPartitions` (a full
-    // physical planning of the batch). delete/upsert concentrate
-    // already: their input is a wide bucket scan and their output
-    // REPLACES files in the log.
-    val out = GridPart.exactRange(bucketed, model.numBuckets, col("bucket"))
-    val created = FileLog.stagedWrite(spark, path, stage =>
-      out.write.mode("overwrite").partitionBy("bucket").parquet(stage))
-    FileLog.transact(spark, path) { cur =>
-      val curBid = cur.map(_.batchId).getOrElse(-1L)
-      if (bid >= 0 && curBid >= bid) None // replay raced in: decline
-      else Some(FileLog.Commit(
-        // unlogged non-empty dir: adopt its physical listing (the
-        // staged files are outside it by construction)
-        cur.map(_.files).getOrElse(
-          FileLog.listDataFiles(spark, path).filterNot(created.toSet))
-          ++ created,
-        out.schema.toDDL, math.max(bid, curBid),
-        cur.map(_.zones).getOrElse(Map.empty),
-        cur.map(_.rows).getOrElse(Map.empty)))
-    }
-    invalidateRecallCurve()
-  }
-
-  /** Drop the persisted recall curve: it was MEASURED against a
-    * specific corpus, so any mutation (add/delete/upsert) makes it
-    * stale — a stale curve would turn [[probesForRecall]]'s
-    * "conservative by construction" contract optimistic. With no
-    * curve, recall-targeted search degenerates to exact (all-bucket)
-    * probing until the audit is re-run: never under-deliver.
-    */
-  private def invalidateRecallCurve(): Unit =
-    graft.util.FsIo.delete(s"$path/_recall_curve.json")
+  protected def encode(df: DataFrame, idCol: String, embCol: String): DataFrame =
+    VectorStore.bucketize(df, model, idCol, embCol)
 
   /** kNN over the persisted index. `probes >= numBuckets` = exact.
     * `filter` restricts the search to matching rows (metadata-filtered
@@ -177,14 +46,6 @@ final class VectorStore(
              filter: Column = lit(true)): DataFrame =
     VectorStore.searchIn(
       indexDf.where(pruneFilter(q, probes)).where(filter), q, k)
-
-  /** Run an eager action over this store's frames with vacuum-race
-    * classification ([[FileLog.classified]]): a FileNotFound whose
-    * snapshot was vacuumed mid-scan surfaces as the typed
-    * [[SnapshotVacuumedException]] instead of the raw error — wrap
-    * collects/counts over [[search]]/[[indexDf]] results in it.
-    */
-  def classified[T](body: => T): T = FileLog.classified(path)(body)
 
   def pruneFilter(q: Array[Double], probes: Int): Column =
     if (probes >= model.numBuckets) lit(true)
@@ -212,52 +73,12 @@ final class VectorStore(
     * you schedule, not the search path.
     */
   def auditRecallCurve(panel: Seq[Array[Double]], k: Int = 10): Seq[Double] = {
-    require(panel.nonEmpty, "empty audit panel")
     val kk = math.max(1, k)
     val nb = model.numBuckets
-    val sess = spark
-    import sess.implicits._
-    val pdf = panel.zipWithIndex.map { case (q, i) =>
-      (i.toLong, q.toSeq, model.candidates(q, nb).toArray)
-    }.toDF("qid", "qe", "cands")
-    val scored = indexDf.crossJoin(broadcast(pdf))
-      .select(col("qid"), col("cands"), col("id"),
-        col("bucket").cast("int").as("bucket"),
-        VF.l2sq(col("embedding"), col("qe")).as("dd"))
-    val aggs =
-      graft.functions.TopKAgg(col("id"), col("dd"), kk).as("ex") +:
-        (1 to nb).map(p => graft.functions.TopKAgg.filtered(spark, "id", "dd",
-          kk, s"array_position(cands, bucket) BETWEEN 1 AND $p").as(s"pr_$p"))
-    val perQuery = scored.groupBy("qid").agg(aggs.head, aggs.tail: _*)
-      .select((1 to nb).map { p =>
-        (size(array_intersect(
-          expr("transform(ex, x -> x._1)"),
-          expr(s"transform(pr_$p, x -> x._1)"))).cast("double") /
-          size(col("ex"))).as(s"r_$p")
-      }: _*)
-    val row = perQuery.agg(
-      avg(col("r_1")), (2 to nb).map(p => avg(col(s"r_$p"))): _*).head
+    val row = probeAudit(panel, kk, 1 to nb, model.candidates(_, nb)).head
     val curve = (0 until nb).map(row.getDouble)
-    val json = s"""{"k":$kk,"panel":${panel.size},""" +
-      s""""recall":${curve.map(d => f"$d%.17e").mkString("[", ",", "]")}}"""
-    // Hadoop FS, not java.nio: this sidecar drives search behavior, so
-    // it must live on the index's filesystem (hdfs://, s3a://, ...);
-    // atomic so a concurrent searchAtRecall reads old-or-new, not torn.
-    graft.util.FsIo.writeStringAtomic(s"$path/_recall_curve.json", json)
+    writeRecallCurve(kk, panel.size, curve)
     curve
-  }
-
-  /** The persisted measured curve (k, recall-per-probe), if
-    * [[auditRecallCurve]] has run for this index.
-    */
-  def recallCurve(): Option[(Int, Seq[Double])] = {
-    val fp = s"$path/_recall_curve.json"
-    if (!graft.util.FsIo.exists(fp)) return None
-    val s = graft.util.FsIo.readString(fp)
-    val k = s.substring(s.indexOf("\"k\":") + 4,
-      s.indexWhere(c => c == ',' || c == '}', s.indexOf("\"k\":") + 4)).trim.toInt
-    val body = s.substring(s.indexOf("\"recall\":[") + 10, s.lastIndexOf("]"))
-    Some((k, body.split(",").map(_.trim.toDouble).toSeq))
   }
 
   /** Smallest probe count whose MEASURED recall meets the target —
@@ -287,210 +108,6 @@ final class VectorStore(
     search(q, kk, probes, filter)
   }
 
-  /** Delete vectors by id, rewriting ONLY the buckets that contain
-    * them — at scale this touches a few partitions, never the whole
-    * table. The rewrite APPENDS replacement files and retires the
-    * affected buckets' old files in one atomic log commit: readers
-    * see the pre- or post-delete index, never a bucket mid-replacement
-    * (old files stay on disk for in-flight readers until [[compact]]'s
-    * vacuum). Returns the number of rows removed. Vector delete is
-    * declared future work in the reference (`generate_report.py:298`).
-    */
-  def delete(ids: Seq[Long]): Long = {
-    if (ids.isEmpty) return 0L
-    import spark.implicits._
-    delete(spark.createDataset(ids).toDF("id"), "id")
-  }
-
-  /** Distributed delete: the ids arrive as a DataFrame COLUMN and
-    * never transit the driver — the upsert path's pattern (r12
-    * verdict What's-wrong #3: the Seq overload routes every id
-    * through the driver, so a GDPR-scale purge of 10⁸ ids OOMs it;
-    * here the id set stays executor-side through a semi-join for
-    * bucket discovery and an anti-join for the rewrite, and only
-    * BUCKET ids — bounded by numBuckets — are ever collected). The
-    * Seq overload is sugar over this.
-    */
-  def delete(delDf: DataFrame, idCol: String): Long =
-    deleteUnique(delDf.select(col(idCol).cast("long").as("id")).distinct()
-      .localCheckpoint(true), "id") // scanned twice: semi-join, anti-join
-
-  /** [[delete]] for an id frame the caller guarantees DISTINCT and
-    * cheap to rescan (a projection of an already-checkpointed frame,
-    * e.g. [[applyChanges]]'s net deletes) — skips the distinct
-    * exchange + checkpoint job the general path pays per sync.
-    */
-  private[store] def deleteUnique(delDf: DataFrame, idCol: String): Long = {
-    val ids = delDf.select(col(idCol).cast("long").as("id"))
-    val (log, cur) = pinned()
-    val affected = cur.join(ids, Seq("id"), "left_semi")
-      .select(col("bucket").cast("int")).distinct()
-      .collect().map(_.getInt(0)).toSet
-    if (affected.isEmpty) return 0L
-    val af = affected.map(Int.box).toSeq
-    val inBuckets = cur.where(col("bucket").isin(af: _*))
-    val remaining = inBuckets.join(ids, Seq("id"), "left_anti")
-    val created = FileLog.stagedWrite(spark, path, stage =>
-      GridPart.exact(remaining, af.map(Int.unbox), col("bucket")) // 1 writer/bucket
-        .write.mode("overwrite").partitionBy("bucket").parquet(stage))
-    val retired = log.files.filter(f => bucketOfFile(f).exists(affected))
-    // optimistic rewrite: an append racing this delete MERGES (both
-    // land; the delete applies to the snapshot it read, so a
-    // concurrently appended row with a deleted id survives — insert
-    // happened-after delete); a conflicting rewrite fails loudly
-    FileLog.commitRewrite(spark, path, log, retired.toSet, created,
-      log.schemaDdl)
-    invalidateRecallCurve()
-    // Removed-row count from FOOTER metadata, not count() jobs: the
-    // affected buckets' pre-state is exactly the retired files and the
-    // post-state exactly the created ones — two driver-side metadata
-    // reads replace two Spark jobs (before-count + remaining-count),
-    // which at micro-batch volumes were pure job-floor (FeedProbe r16).
-    FileLog.footerRows(spark, retired) - FileLog.footerRows(spark, created)
-  }
-
-  /** Upsert (id, embedding [, metadata…]) rows: replaces existing ids,
-    * inserts new ones. Fully distributed — ids never leave the cluster:
-    * the rewrite set is every bucket receiving a new row PLUS every
-    * bucket holding a prior row of an incoming id (found with a
-    * left-semi join, covering ids whose new embedding changes bucket);
-    * existing rows of those buckets are anti-joined against the batch
-    * and unioned with it, then dynamically overwritten in one pass.
-    * Only BUCKET ids are collected (bounded by numBuckets — partition
-    * lists are inherently driver-side), so a bulk re-embed where every
-    * id moves shuffles ids executor-to-executor, not through the
-    * driver.
-    */
-  def upsert(df: DataFrame, idCol: String = "id",
-             embCol: String = "embedding",
-             seqCol: Option[String] = None): Unit = {
-    // Dedup ids WITHIN the batch — otherwise a batch containing an id
-    // twice writes both rows, breaking the replaces-existing-ids
-    // invariant. With `seqCol` the highest sequence value wins
-    // (deterministic for any partition layout); without it, last
-    // occurrence in positional order (see [[Dedup.lastWins]]).
-    upsertUnique(Dedup.lastWins(df, idCol, seqCol).localCheckpoint(true),
-      idCol, embCol)
-  }
-
-  /** [[upsert]] for a batch the CALLER guarantees id-unique (e.g. the
-    * net-action frame of [[applyChanges]], one row per id by
-    * construction) — skips the in-batch last-wins window, which on an
-    * already-unique frame is an identity that still costs a full
-    * window exchange per sync.
-    */
-  private[store] def upsertUnique(df: DataFrame, idCol: String,
-             embCol: String): Unit = {
-    // No checkpoint: the net frame is a cheap deterministic projection
-    // of FeedSync's already-checkpointed reduction, so the two jobs
-    // that scan `incoming` (bucket discovery, rewrite) recompute a
-    // projection instead of paying a third materialization job.
-    val incoming = VectorStore.bucketize(df, model, idCol, embCol)
-    val (log, cur) = pinned()
-    val priorBuckets = cur.select(col("id"), col("bucket"))
-      .join(incoming.select("id"), Seq("id"), "left_semi")
-      .select(col("bucket"))
-    val af = incoming.select(col("bucket")).union(priorBuckets)
-      .distinct().collect()
-      .map(r => Int.box(r.getAs[Number](0).intValue())).toSeq
-    val afSet = af.map(_.intValue()).toSet
-    val existing = cur.where(col("bucket").isin(af: _*))
-      .join(incoming.select("id"), Seq("id"), "left_anti")
-    // replacement files APPEND next to the old ones; the log commit
-    // retires the affected buckets' old files atomically (a bucket
-    // fully emptied by moved-away ids simply publishes no files)
-    val merged = existing.unionByName(incoming)
-    val created = FileLog.stagedWrite(spark, path, stage =>
-      GridPart.exact(merged, af.map(_.intValue()), col("bucket")) // 1 writer/bucket
-        .write.mode("overwrite").partitionBy("bucket").parquet(stage))
-    val retired = log.files.filter(f => bucketOfFile(f).exists(afSet))
-    // optimistic rewrite (see delete): append-only interlopers merge
-    FileLog.commitRewrite(spark, path, log, retired.toSet, created,
-      log.schemaDdl)
-    invalidateRecallCurve()
-  }
-
-  /** Apply a relational table's CHANGE FEED
-    * ([[graft.sources.ManifestScan.changes]]) to this index — the
-    * incremental replacement for the reference's rebuild-everything
-    * ingest (`generate_report.py` re-ingests per run): a downstream
-    * search index tracks an upstream 100 TB embedding table by
-    * consuming the delta, never rescanning.
-    *
-    * The feed is first reduced to each id's NET action (its newest
-    * `_commit_version` wins; within one version an upsert's
-    * delete+insert pair resolves to the insert — the new image), so
-    * an id inserted at v3 and deleted at v5 nets to a delete and
-    * replaying a longer feed window is idempotent. Net inserts apply
-    * as [[upsert]] (replace-or-insert), net deletes as [[delete]].
-    * Returns (idsUpserted, idsDeleted).
-    */
-  def applyChanges(feed: DataFrame, idCol: String = "id",
-      embCol: String = "embedding"): (Long, Long) = {
-    // ONE aggregate yields both counts (was: ups.count + dels.isEmpty,
-    // two jobs per window); net inserts are id-unique by construction,
-    // so the upsert skips its in-batch dedup window (upsertUnique).
-    // Zero-delete windows (the common streaming case) still skip the
-    // full distributed-delete machinery (r13 ADVICE #5).
-    val (ups, dels, nUp, nDelIds) = FeedSync.netWithCounts(feed, idCol, embCol)
-    if (nUp > 0) upsertUnique(ups, idCol, embCol)
-    val nDel = if (nDelIds == 0L) 0L
-      else deleteUnique(dels, idCol) // distributed, already distinct
-    (nUp, nDel)
-  }
-
-  /** Compact the index's data files. Every `add`/streaming ingest
-    * appends at least one file per touched bucket, so a long-lived
-    * index accumulates small files and scan setup (footer reads, task
-    * scheduling) starts to dominate — the classic small-file problem
-    * at scale. Rewrites each bucket into ceil(bucketRows /
-    * targetRowsPerFile) files: rows are shuffled once on (bucket,
-    * hash(id) % filesPerBucket), so oversized buckets still split
-    * while small ones collapse to one file. Results are unchanged;
-    * returns (dataFilesBefore, dataFilesAfter).
-    */
-  def compact(targetRowsPerFile: Long = 1 << 20,
-              vacuumGraceMs: Long = FileLog.DefaultVacuumGraceMs): (Long, Long) = {
-    val (log, df) = pinned()
-    val before = log.files.size.toLong
-    // per-bucket row counts from parquet FOOTER metadata (driver-side,
-    // no Spark job) instead of a full count scan of the corpus the
-    // rewrite reads anyway; unparsable adopted layouts fall back
-    val maxBucketRows = FileLog.maxGroupRows(spark, log.files, bucketOfFile)
-      .getOrElse {
-        val maxRow = df.groupBy("bucket").count().agg(max("count")).head
-        if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
-      }
-    // zero rows (incl. an empty log) — nothing to compact, and writing
-    // would replace the index with an empty layout
-    if (maxBucketRows == 0L) return (before, before)
-    val filesPerBucket =
-      math.max(1L, (maxBucketRows + targetRowsPerFile - 1) / targetRowsPerFile)
-    val numParts = // bounded Long math: Int overflow would go negative
-      math.min(model.numBuckets.toLong * filesPerBucket, Int.MaxValue.toLong)
-    // exact (bucket, slice)→task mapping — the composite key enumerates
-    // 0 until numParts, so each output file gets its own writer task
-    // instead of murmur3-stacked 2-3 per task ([[GridPart]])
-    val created = FileLog.stagedWrite(spark, path, stage =>
-      GridPart.exactRange(df, numParts.toInt,
-          col("bucket").cast("long") * lit(filesPerBucket) +
-            pmod(hash(col("id")), lit(filesPerBucket)).cast("long"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(stage))
-    // optimistic rewrite: an add() racing this compaction merges —
-    // both land with zero row loss (the r11 verdict's Delta-style
-    // conflict-detection task); only a true rewrite/rewrite race fails
-    FileLog.commitRewrite(spark, path, log, log.files.toSet, created,
-      log.schemaDdl, dataChange = false) // same rows, new files
-    // compaction is the maintenance point: reclaim retired files — but
-    // only past the grace window, so an in-flight reader holding a
-    // recent snapshot finishes cleanly (default 10 min; pass 0 to
-    // reclaim immediately, e.g. in tests). A reader older than the
-    // grace loses the race as a typed SnapshotVacuumedException, never
-    // as silent row loss.
-    FileLog.vacuum(spark, path, retainLast = 1, graceMs = vacuumGraceMs)
-    (before, created.size.toLong)
-  }
-
   /** Reshard into a NEW bucket layout at `newPath` (e.g. more hash
     * tables once the corpus outgrows the old partition count) — the
     * index-migration move: one re-bucketing shuffle + partitioned
@@ -503,25 +120,6 @@ final class VectorStore(
 }
 
 object VectorStore {
-
-  private[store] val BucketRe = """/bucket=(-?\d+)/""".r
-
-  /** Remove `<path>/<column>=<v>` partition directories (dynamic
-    * overwrite only rewrites partitions present in the output, so a
-    * fully-emptied partition keeps stale files unless dropped). Still
-    * used by [[QuantIndex]]'s in-snapshot rewrites; the LSH store
-    * layouts replaced this pattern with [[FileLog]] commits.
-    */
-  private[store] def dropPartitionDirs(spark: SparkSession, path: String,
-                                       column: String, values: Seq[Int]): Unit = {
-    if (values.isEmpty) return
-    val conf = spark.sparkContext.hadoopConfiguration
-    values.foreach { v =>
-      val p = new org.apache.hadoop.fs.Path(s"$path/$column=$v")
-      val fs = p.getFileSystem(conf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-  }
 
   /** Count parquet data files under the index path (compaction metric). */
   private[graft] def countDataFiles(spark: SparkSession, path: String): Long = {
@@ -562,27 +160,18 @@ object VectorStore {
       .limit(kk)
   }
 
-  /** Build a store: write bucketed parquet + persist the model. */
+  /** Build a store: write the bucketed table, one writer task per
+    * bucket, and persist the model.
+    */
   def build(spark: SparkSession, df: DataFrame, path: String,
             cfg: LshConfig, idCol: String = "id",
             embCol: String = "embedding"): VectorStore = {
     val model = LshModel(cfg)
-    // One shuffle partition per bucket: hash-partitioning on the bucket
-    // key concentrates each bucket into a single task regardless of the
-    // partition count, so the default only adds empty tasks. (At sizes
-    // where one writer per bucket is a bottleneck, add a salt column to
-    // spread each bucket over N writers — the partitionBy layout is
-    // unchanged by that.)
-    val out = bucketize(df, model, idCol, embCol)
-    GridPart.exactRange(out, cfg.numHashTables, col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(path)
-    // overwrite cleared the directory, so the physical listing IS the
-    // new live set; v1 of the file log publishes it (and the schema,
-    // which is what lets an EMPTY build read back correctly)
-    FileLog.commit(spark, path,
-      FileLog.listDataFiles(spark, path), out.schema.toDDL)
+    val store = new VectorStore(spark, path, model)
+    IndexTable.create(spark, path, bucketize(df, model, idCol, embCol),
+      store.layout)
     model.save(s"$path/_lsh_model.json")
-    new VectorStore(spark, path, model)
+    store
   }
 
   def open(spark: SparkSession, path: String): VectorStore =
