@@ -520,13 +520,16 @@ object Bench {
             val ts = (1 to 3).flatMap(_ => queries.map(q => timed(f(q)))).sorted
             knn += label -> ts(ts.size / 2)
           }
-          medQ("knn_sq8_k10")(q => qidx.searchSq8(q, 10).collect())
-          medQ("knn_int4_k10")(q => qidx.searchInt4(q, 10).collect())
-          medQ("knn_pq_k10")(q => qidx.searchPq(q, 10).collect())
-          medQ("knn_opq_k10")(q => qidx.searchOpq(q, 10).collect())
-          medQ("knn_ivfpq_k10")(q => qidx.searchIvfPq(q, 10).collect())
+          import graft.store.QuantTier._
+          def tierQ(label: String, tier: String, nprobe: Int = qidx.maxDepth): Unit =
+            medQ(label)(q => qidx.searchTwoStage(tier, q, 10, nprobe = nprobe).collect())
+          tierQ("knn_sq8_k10", Sq8)
+          tierQ("knn_int4_k10", Int4)
+          tierQ("knn_pq_k10", Pq)
+          tierQ("knn_opq_k10", Opq)
+          tierQ("knn_ivfpq_k10", Pq, nprobe = 2)
           medQ("knn_ivfpqr_k10")(q => qidx.searchIvfPqResidual(q, 10).collect())
-          medQ("knn_bitq_k10")(q => qidx.searchBitq(q, 10).collect())
+          tierQ("knn_bitq_k10", Bitq)
           // recall@10 of the PQ vs OPQ coarse pass at the same
           // coarseN budget (gauges): what the trained rotation buys
           // at identical bytes read — the r12 verdict's weak axis,
@@ -544,9 +547,9 @@ object Bench {
             rs.sum / rs.size
           }
           gauges += "knn_pruned_recall_at10_pq" ->
-            recallQ((q, k) => qidx.searchPq(q, k))
+            recallQ((q, k) => qidx.searchTwoStage(Pq, q, k))
           gauges += "knn_pruned_recall_at10_opq" ->
-            recallQ((q, k) => qidx.searchOpq(q, k))
+            recallQ((q, k) => qidx.searchTwoStage(Opq, q, k))
           // measured recall-vs-coarseN curve per ADC tier (gauges,
           // one corpus scan per tier over the resident index): the
           // re-rank budget's other knob as a per-round number, so a

@@ -61,10 +61,7 @@ object AuditProbe {
       val panel = (0L until 8L).map(VectorQueries.qvec(spark, sfDir, _))
       t("  mt auditRecallCurve")(mt.auditRecallCurve(panel, k = 10))
       val q = VectorQueries.qvec(spark, sfDir, 0)
-      t("  mt probesForRecall+search")(mt.probesForRecall(0.5) match {
-        case Some(p) => mt.search(q, 10, p).collect()
-        case None => mt.exact(q, 10).collect()
-      })
+      t("  mt searchAtRecall")(mt.searchAtRecall(q, 10, 0.5).collect())
     }
 
     // ---- audit-plan dumps (r15 verdict task #4 evidence): the final
@@ -85,7 +82,7 @@ object AuditProbe {
         LshConfig(numHashFunctions = 4, numHashTables = 4,
           dim = 64, seed = 42L, multiTable = true))
       val panel = (0L until 8L).map(VectorQueries.qvec(spark, sfDir, _))
-      dumpPlan(mt.auditFrame(panel, 10, 16),
+      dumpPlan(mt.auditFrame(panel, 10),
         "plans/r16/v22_audit_executed.txt")
     }
 

@@ -161,7 +161,7 @@ object ScaleBench {
     rows += "scale_knn_ivf2_10m" -> med3(
       idx.searchIvf(q, 10, nprobe = 2).collect())
     rows += "scale_knn_ivfpq2_10m" -> med3(
-      idx.searchIvfPq(q, 10, nprobe = 2).collect())
+      idx.searchTwoStage(graft.store.QuantTier.Pq, q, 10, nprobe = 2).collect())
     (0 until 10).foreach(i =>
       idx.add(gen(nVec + i * 1000, nVec + (i + 1) * 1000)))
     rows += "scale_compact_10m" -> timed(

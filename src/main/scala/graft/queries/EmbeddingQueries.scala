@@ -35,7 +35,7 @@ object EmbeddingQueries {
       (s, d) => {
         val idx = QuantCache.forDir(s, d)
         val q = VectorQueries.qvec(s, d, 0)
-        val cand = idx.candidateIds(idx.coarseSq8(q, 100))
+        val cand = idx.candidateIds(idx.coarse(graft.store.QuantTier.Sq8, q, 100))
         idx.exactDist(cand, q)
           .select(col("id").as("vec_id"), round(col("dist"), 6).as("dist"))
           .orderBy(col("dist"), col("vec_id")).limit(10)
@@ -216,7 +216,7 @@ object EmbeddingQueries {
       (s, d) => {
         val idx = QuantCache.forDir(s, d)
         val q = VectorQueries.qvec(s, d, 0L)
-        val cand = idx.candidateIds(idx.coarsePq(q, 100))
+        val cand = idx.candidateIds(idx.coarse(graft.store.QuantTier.Pq, q, 100))
         idx.exactDist(cand, q)
           .select(col("id").as("vec_id"), round(col("dist"), 6).as("dist"))
           .orderBy(col("dist"), col("vec_id")).limit(10)
@@ -235,7 +235,7 @@ object EmbeddingQueries {
       (s, d) => {
         val idx = QuantCache.forDir(s, d)
         val q = VectorQueries.qvec(s, d, 0L)
-        val cand = idx.candidateIds(idx.coarseIvfPq(q, nprobe = 2, n = 100))
+        val cand = idx.candidateIds(idx.coarse(graft.store.QuantTier.Pq, q, 100, nprobe = 2))
         idx.exactDist(cand, q)
           .select(col("id").as("vec_id"), round(col("dist"), 6).as("dist"))
           .orderBy(col("dist"), col("vec_id")).limit(10)

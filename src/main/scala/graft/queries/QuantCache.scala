@@ -256,8 +256,9 @@ object QuantCache {
       s"list_sum(list_transform(range(1, ${dim + 1}), i -> " +
       s"r[rr][i] * CAST(($e)[i] AS DOUBLE))))"
 
-  /** DuckDB twin of [[graft.store.QuantIndex.searchOpq]] at an
-    * arbitrary measured re-rank budget, the chosen coarseN echoed as
+  /** DuckDB twin of the opq tier's
+    * [[graft.store.QuantIndex.searchTwoStage]] at an arbitrary measured
+    * re-rank budget, the chosen coarseN echoed as
     * a column — e25's recall-targeted replay (the e19/v21 pattern on
     * the coarseN axis): injected LATE, after the measured curve picks
     * the budget, so the curve-driven choice itself is hash-checked (a

@@ -47,14 +47,14 @@ object Round11Queries {
         val panel = (0L until 10L).map(VectorQueries.qvec(s, d, _))
         store.auditRecallCurve(panel, k = 10)
         val q = VectorQueries.qvec(s, d, 0)
-        val probes = store.probesForRecall(V21Target)
+        val probes = store.depthForRecall(V21Target, 10).getOrElse(store.maxDepth)
         val cands = store.model.candidates(q, probes)
         v21Oracle = Some(
           s"""SELECT vec_id, dist, CAST($probes AS INT) AS probes FROM (
              |${VectorQueries.knnOracle(10, where =
                 s"${store.model.bucketSql("e.embedding")} IN (${cands.mkString(", ")})")}
              |) ORDER BY dist, vec_id""".stripMargin)
-        store.searchAtRecall(q, 10, V21Target)
+        store.search(q, 10, probes)
           .select(col("id").as("vec_id"),
             round(col("dist"), 6).as("dist"),
             lit(probes).cast("int").as("probes"))

@@ -35,9 +35,9 @@ object Round12Queries {
         val panel = (0L until 10L).map(VectorQueries.qvec(s, d, _))
         idx.auditRecallCurve(panel, k = 10)
         val q = VectorQueries.qvec(s, d, 0)
-        val nprobe = idx.nprobeForRecall(E19Target)
+        val nprobe = idx.depthForRecall(E19Target, 10).getOrElse(idx.maxDepth)
         e19Oracle = Some(QuantCache.ivfSqlAtNprobe(idx.model, nprobe))
-        idx.searchAtRecall(q, 10, E19Target)
+        idx.search(q, 10, nprobe)
           .select(col("id").as("vec_id"),
             round(col("dist"), 6).as("dist"),
             lit(nprobe).cast("int").as("nprobe"))
@@ -67,14 +67,14 @@ object Round12Queries {
         mt.auditRecallCurve(panel, k = 10)
         val q = VectorQueries.qvec(s, d, 0)
         val target = V22Target
-        val (df, probes, whereSql) = mt.probesForRecall(target) match {
+        val (df, probes, whereSql) = mt.depthForRecall(target, 10) match {
           case Some(p) =>
             val cands = mt.model.tableCandidates(q, p)
             (mt.search(q, 10, p), p,
               cands.map { case (t, b) =>
                 s"${mt.model.tableBucketSql("e.embedding", t)} = $b"
               }.mkString("(", " OR ", ")"))
-          case None => (mt.exact(q, 10), 0, "TRUE")
+          case None => (mt.search(q, 10, mt.maxDepth), 0, "TRUE")
         }
         v22Oracle = Some(
           s"""SELECT vec_id, dist, CAST($probes AS INT) AS probes FROM (

@@ -94,7 +94,7 @@ object Round19Queries {
       (s, d) => {
         val idx = QuantCache.forDir(s, d)
         val q = VectorQueries.qvec(s, d, 0L)
-        val cand = idx.candidateIds(idx.coarseOpq(q, 100))
+        val cand = idx.candidateIds(idx.coarse(graft.store.QuantTier.Opq, q, 100))
         idx.exactDist(cand, q)
           .select(col("id").as("vec_id"), round(col("dist"), 6).as("dist"))
           .orderBy(col("dist"), col("vec_id")).limit(10)

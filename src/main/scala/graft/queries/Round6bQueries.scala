@@ -348,7 +348,7 @@ object Round6bQueries {
       (s, d) => {
         val idx = QuantCache.forDir(s, d)
         val q = VectorQueries.qvec(s, d, 0L)
-        val cand = idx.candidateIds(idx.coarseBitq(q, 50))
+        val cand = idx.candidateIds(idx.coarse(graft.store.QuantTier.Bitq, q, 50))
         idx.exactDist(cand, q)
           .select(col("id").as("vec_id"), round(col("dist"), 6).as("dist"))
           .orderBy(col("dist"), col("vec_id")).limit(10)

@@ -106,7 +106,7 @@ object Round8Queries {
       (s, d) => {
         val idx = QuantCache.forDir(s, d)
         val q = VectorQueries.qvec(s, d, 0)
-        idx.searchInt4(q, 10)
+        idx.searchTwoStage(graft.store.QuantTier.Int4, q, 10)
           .select(col("id").as("vec_id"), round(col("dist"), 6).as("dist"))
           .orderBy(col("dist"), col("vec_id"))
       },

@@ -3,8 +3,7 @@ package graft.server
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.store.{IndexTable, MultiTableStore, QuantIndex, RecallCurves,
-  VectorStore}
+import graft.store.{IndexTable, MultiTableStore, QuantIndex, VectorStore}
 
 /** What [[HttpFacade]] needs from an index, so one REST surface hosts
   * all three persisted layouts (r11 verdict task #7: the facade served
@@ -12,21 +11,19 @@ import graft.store.{IndexTable, MultiTableStore, QuantIndex, RecallCurves,
   * knob or v22's multi-table knob over HTTP):
   *
   *  - [[StoreAdapter.Lsh]] — the mod-bucket [[VectorStore]]; `probes`
-  *    = LSH buckets scanned, `min_recall` via the persisted measured
-  *    curve ([[VectorStore.probesForRecall]]);
+  *    = LSH buckets scanned;
   *  - [[StoreAdapter.Quant]] — the IVF-quantized [[QuantIndex]];
   *    `probes` = IVF cells scanned (exact distance within probed
-  *    cells, FAISS nprobe), `min_recall` via
-  *    [[QuantIndex.nprobeForRecall]];
+  *    cells, FAISS nprobe), plus the named ADC tiers;
   *  - [[StoreAdapter.Multi]] — the ×L OR-probing [[MultiTableStore]];
-  *    `probes` = (table, bucket) pairs unioned, `min_recall` via
-  *    [[MultiTableStore.probesForRecall]] (None = target above the
-  *    measured curve → exact, never under-deliver).
+  *    `probes` = (table, bucket) pairs unioned.
   *
   * Shared reference semantics live in the facade (k-clamp, 1-D
-  * reshape, auto-ids, empty-index warning); what every layout answers
-  * the same way lives here over its [[IndexTable]], and each adapter
-  * answers only the layout-specific questions.
+  * reshape, auto-ids, empty-index warning); search, the probe budget
+  * and `min_recall` (the table's measured curve,
+  * [[IndexTable.depthForRecall]]) are answered here over the hosted
+  * [[IndexTable]], and each adapter answers only `/stats` and its
+  * ADC tiers.
   */
 sealed trait StoreAdapter {
   /** The hosted index. */
@@ -48,20 +45,18 @@ sealed trait StoreAdapter {
   def add(df: DataFrame): Unit = table.add(df)
 
   /** The probe budget meaning "exact" for this layout. */
-  def maxProbes: Int
+  def maxProbes: Int = table.maxDepth
 
   /** Smallest probe depth whose MEASURED recall curve meets the
-    * target FOR result size `k`; conservative (no curve, unreachable
-    * target, or a curve audited at a different k → exact — recall@10
-    * bounds neither recall@50 nor recall@5 at a fixed depth, r14
-    * ADVICE #1).
+    * target FOR result size `k`; exact when nothing is certified
+    * ([[IndexTable.depthForRecall]]).
     */
   def probesFor(minRecall: Double, k: Int): Int =
-    RecallCurves.certifiedDepth(table.recallCurve(), k, minRecall)
-      .getOrElse(maxProbes)
+    table.depthForRecall(minRecall, k).getOrElse(maxProbes)
 
   /** (id, dist) top-k frame at the given probe depth. */
-  def search(q: Array[Double], k: Int, probes: Int): DataFrame
+  def search(q: Array[Double], k: Int, probes: Int): DataFrame =
+    table.search(q, k, probes)
 
   /** Recall-targeted ADC search over a named quant tier, when this
     * layout has one: (result frame, coarseN used — −1 for the exact
@@ -89,9 +84,6 @@ object StoreAdapter {
       extends StoreAdapter {
     protected def table: IndexTable = store
     def strategy = "lsh"
-    def maxProbes: Int = store.model.numBuckets
-    def search(q: Array[Double], k: Int, probes: Int): DataFrame =
-      store.search(q, k, probes)
     def nodes(): Map[String, Any] = store.stats().collect().map { r =>
       val b = r.getAs[Number]("bucket").intValue()
       s"bucket=$b" -> Map(
@@ -107,9 +99,6 @@ object StoreAdapter {
       extends StoreAdapter {
     protected def table: IndexTable = idx
     def strategy = "ivf"
-    def maxProbes: Int = idx.model.cfg.ivfCells
-    def search(q: Array[Double], k: Int, probes: Int): DataFrame =
-      idx.searchIvf(q, k, nprobe = probes)
     override def searchTier(q: Array[Double], k: Int, minRecall: Double,
         tier: String): Option[(DataFrame, Int)] =
       Some(idx.searchAdcAtRecall(q, k, minRecall, tier))
@@ -133,11 +122,6 @@ object StoreAdapter {
     // each vector is stored once per table: table 0 is one copy
     override protected def vectors: DataFrame =
       store.indexDf.where(col("table") === 0)
-    def maxProbes: Int =
-      store.model.cfg.numHashTables * store.model.bucketsPerTable
-    def search(q: Array[Double], k: Int, probes: Int): DataFrame =
-      if (probes >= maxProbes) store.exact(q, k)
-      else store.search(q, k, probes)
     def nodes(): Map[String, Any] = {
       val dim = store.model.cfg.dim
       store.indexDf

@@ -51,9 +51,10 @@ private[store] final case class Layout(parts: Seq[(String, Int)],
 
 /** The versioned index table under every store layout ([[VectorStore]],
   * [[MultiTableStore]], [[QuantIndex]]): snapshot reads through the
-  * [[FileLog]], every read-modify-write mutation, compaction and the
-  * measured recall-curve sidecar. A store declares its [[Layout]] and
-  * its `encode` and keeps only its search tiers and audits.
+  * [[FileLog]], every read-modify-write mutation, compaction, and the
+  * measured recall knob: the probe-depth audit, the depth certification
+  * and the recall-targeted search. A store declares its [[Layout]], its
+  * `encode`, its probe ranking and its depth-probed `search`.
   *
   * One write policy holds for every layout: appends do not sort;
   * builds and rewrites sort each file by (partition columns, id), so
@@ -413,23 +414,82 @@ abstract class IndexTable(spark: SparkSession,
   def recallCurve(): Option[(Int, Seq[Double])] =
     RecallCurves.read(recallCurvePath).map(c => (c.k, c.recall))
 
-  protected def writeRecallCurve(k: Int, panel: Int, curve: Seq[Double]): Unit =
-    RecallCurves.write(recallCurvePath, RecallCurves.Curve(k, panel, Nil, curve))
+  // ------------------------------------------ recall-targeted search
 
-  /** Mean recall@k of partition-probed search per probe depth over a
-    * query panel, in ONE corpus scan: the panel broadcasts into the
-    * scan with each query's full probe ranking `order(q)` (grid codes,
+  /** Probe depth that makes [[search]] exact: every partition. */
+  def maxDepth: Int
+
+  /** The query's full probe ranking (grid codes, best first): the
+    * depth-p search probes exactly its first p codes.
+    */
+  protected def probeOrder(q: Array[Double]): Seq[Int]
+
+  /** Depths the recall audit measures, 1..auditDepth. A layout whose
+    * informed ranking never reaches every partition audits a prefix.
+    */
+  protected def auditDepth: Int = maxDepth
+
+  /** kNN probing the first `depth` codes of [[probeOrder]]; exact at
+    * `depth >= maxDepth`.
+    */
+  def search(q: Array[Double], k: Int, depth: Int): DataFrame
+
+  /** Measure the recall-vs-depth curve over a query panel and persist
+    * it next to the snapshot (`_recall_curve.json`): curve(p) = mean
+    * recall@k of depth-p [[search]] vs exact, p = 1..auditDepth. This
+    * is the reference's claimed-but-never-implemented "latency vs
+    * recall tradeoffs" knob (`Readme.md:19`) made real, stored where
+    * [[searchAtRecall]] can act on it. ONE corpus scan whatever the
+    * depth count ([[auditFrame]]); any data change drops the curve.
+    */
+  def auditRecallCurve(panel: Seq[Array[Double]], k: Int = 10): Seq[Double] = {
+    val kk = math.max(1, k)
+    val curve = recallAt(panel, kk, 1 to auditDepth)
+    RecallCurves.write(recallCurvePath,
+      RecallCurves.Curve(kk, panel.size, Nil, curve))
+    curve
+  }
+
+  /** Smallest depth whose MEASURED recall@k meets the target, by the
+    * one certification rule ([[RecallCurves.certifiedDepth]]): None
+    * when no curve is persisted, the curve was audited at another k,
+    * or no measured point reaches the target.
+    */
+  def depthForRecall(minRecall: Double, k: Int): Option[Int] =
+    RecallCurves.certifiedDepth(RecallCurves.read(recallCurvePath),
+      math.max(1, k), minRecall)
+
+  /** Recall-targeted kNN: the depth comes from [[depthForRecall]];
+    * with no certified depth the search runs exact (never
+    * under-deliver).
+    */
+  def searchAtRecall(q: Array[Double], k: Int, minRecall: Double): DataFrame = {
+    val kk = math.max(1, k)
+    search(q, kk, depthForRecall(minRecall, kk).getOrElse(maxDepth))
+  }
+
+  /** Mean recall@k of [[search]] at each of `depths` over a panel. */
+  protected def recallAt(panel: Seq[Array[Double]], k: Int,
+      depths: Seq[Int]): Seq[Double] = {
+    val row = auditFrame(panel, k, depths).head
+    depths.indices.map(row.getDouble)
+  }
+
+  /** Mean recall@k of depth-probed search per depth over a query
+    * panel, in ONE corpus scan, as a frame (one row, one average per
+    * depth) whose plan can be dumped and checked: the panel broadcasts
+    * into the scan with each query's full [[probeOrder]] (grid codes,
     * of which every depth-p probe list is a prefix), and
     * [[RecallCurves.recallByDepth]] aggregates every depth over the
-    * same pass. One row, one average per depth.
+    * same pass.
     */
-  protected def probeAudit(panel: Seq[Array[Double]], k: Int, depths: Seq[Int],
-      order: Array[Double] => Seq[Int]): DataFrame = {
+  private[graft] def auditFrame(panel: Seq[Array[Double]], k: Int,
+      depths: Seq[Int] = 1 to auditDepth): DataFrame = {
     require(panel.nonEmpty, "empty audit panel")
     val sess = spark
     import sess.implicits._
     val pdf = panel.zipWithIndex.map { case (q, i) =>
-      (i.toLong, q.toSeq, order(q).toArray)
+      (i.toLong, q.toSeq, probeOrder(q).toArray)
     }.toDF("qid", "qe", "order")
     val scored = indexDf.crossJoin(broadcast(pdf))
       .select(col("qid"), col("id"),

@@ -48,6 +48,20 @@ final class MultiTableStore(
   protected def encode(df: DataFrame, idCol: String, embCol: String): DataFrame =
     MultiTableStore.encode(df, model, idCol, embCol)
 
+  /** Every (table, bucket) pair: the depth at which [[search]] is exact. */
+  def maxDepth: Int = model.cfg.numHashTables * model.bucketsPerTable
+
+  protected def probeOrder(q: Array[Double]): Seq[Int] =
+    model.tableCandidates(q, auditDepth)
+      .map { case (t, b) => t * model.bucketsPerTable + b }
+
+  /** Informed probing never reaches every pair, so the recall audit
+    * measures L·k depths and its curve may top out below 1.0 — a
+    * target above it then certifies nothing and runs [[exact]].
+    */
+  override protected def auditDepth: Int =
+    model.cfg.numHashTables * model.cfg.numHashFunctions
+
   /** Predicate selecting the probed (table, bucket) partitions —
     * OR-of-ANDs over the two partition columns, so the scan prunes to
     * exactly the probed directories.
@@ -57,9 +71,12 @@ final class MultiTableStore(
       .map { case (t, b) => col("table") === t && col("bucket") === b }
       .reduce(_ || _)
 
-  /** Pruned kNN: probed partitions → id-dedup → exact top-k. */
+  /** Pruned kNN: probed partitions → id-dedup → exact top-k; [[exact]]
+    * at `probes >= maxDepth`.
+    */
   def search(q: Array[Double], k: Int, probes: Int): DataFrame =
-    searchIn(indexDf.where(pruneFilter(q, probes)), q, k)
+    if (probes >= maxDepth) exact(q, k)
+    else searchIn(indexDf.where(pruneFilter(q, probes)), q, k)
 
   /** Exact kNN over one full copy of the corpus (table 0). */
   def exact(q: Array[Double], k: Int): DataFrame =
@@ -67,71 +84,6 @@ final class MultiTableStore(
 
   private def searchIn(df: DataFrame, q: Array[Double], k: Int): DataFrame =
     VectorStore.searchIn(df.select("id", "embedding").dropDuplicates("id"), q, k)
-
-  // ------------------------------------------- recall-targeted search
-
-  /** Measure the recall-vs-probes curve for [[search]] over a query
-    * panel and persist it next to the index — [[VectorStore
-    * .auditRecallCurve]] on the multi-table layout, where a "probe"
-    * is one (table, bucket) pair reading ~2^-k of one corpus copy.
-    * ONE corpus scan: the panel broadcasts into the scan with each
-    * query's full ordered candidate list (prefix-closed by
-    * construction — [[graft.lsh.LshModel.tableCandidates]] fills an
-    * insertion-ordered set), rows are deduped per id (MIN position
-    * over its copies) before the top-k aggregates, and depth-p
-    * membership is one array_position test on the t·2^k+b pair code.
-    * Unlike the single-table layout, informed candidates need not
-    * cover every partition, so the curve
-    * may top out below 1.0 — [[searchAtRecall]] then degenerates to
-    * [[exact]] for targets above it (never under-deliver).
-    */
-  def auditRecallCurve(panel: Seq[Array[Double]], k: Int = 10,
-                       maxProbes: Int = 0): Seq[Double] = {
-    val mp = if (maxProbes > 0) maxProbes
-             else model.cfg.numHashTables * model.cfg.numHashFunctions
-    val row = auditFrame(panel, math.max(1, k), mp).head
-    val curve = (0 until mp).map(row.getDouble)
-    writeRecallCurve(math.max(1, k), panel.size, curve)
-    curve
-  }
-
-  /** The audit's ONE-scan aggregate as a frame (1 row, one avg column
-    * per depth) — split out so the plan itself is dumpable evidence of
-    * the single corpus pass with per-id dedup BEFORE the top-k
-    * aggregates (r15 verdict task #4). [[auditRecallCurve]] is `.head`
-    * over this plus the sidecar persist.
-    */
-  private[graft] def auditFrame(panel: Seq[Array[Double]], kk: Int,
-                                mp: Int): DataFrame = {
-    val b = model.bucketsPerTable
-    probeAudit(panel, kk, 1 to mp,
-      model.tableCandidates(_, mp).map { case (t, bk) => t * b + bk })
-  }
-
-  /** Smallest probe count whose MEASURED recall meets the target, or
-    * None when no curve is persisted / no measured point reaches it —
-    * the caller ([[searchAtRecall]]) then uses [[exact]], because on
-    * this layout informed probing cannot promise full coverage.
-    */
-  def probesForRecall(minRecall: Double): Option[Int] =
-    recallCurve().flatMap { case (_, curve) =>
-      val i = curve.indexWhere(_ >= minRecall)
-      if (i < 0) None else Some(i + 1)
-    }
-
-  /** Recall-targeted kNN: probe depth from the persisted measured
-    * curve; exact search when the curve is missing, the target is
-    * above every measured point, or the requested k differs from the
-    * audited k (recall@10 bounds neither recall@50 nor recall@5 at a
-    * fixed probe count — r14 ADVICE #1).
-    */
-  def searchAtRecall(q: Array[Double], k: Int, minRecall: Double): DataFrame = {
-    val kk = math.max(1, k)
-    RecallCurves.certifiedDepth(recallCurve(), kk, minRecall) match {
-      case Some(p) => search(q, kk, p)
-      case None => exact(q, kk)
-    }
-  }
 }
 
 object MultiTableStore {

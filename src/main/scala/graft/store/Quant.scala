@@ -1,6 +1,8 @@
 package graft.store
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{VectorFunctions => VF}
 
@@ -109,9 +111,13 @@ final class QuantModel(
   /** Whether the residual-PQ books were trained. */
   def pqrEnabled: Boolean = pqrBooks.nonEmpty
 
-  private def requireTier(on: Boolean, tier: String): Unit =
-    require(on, s"the '$tier' tier was not trained (unselected in " +
-      "QuantConfig.tiers) — rebuild the index with the tier selected")
+  /** The one refusal for a tier the index was built without: it has
+    * neither the trained model nor the `column` codes.
+    */
+  private def requireTier(on: Boolean, tier: String, column: String): Unit =
+    require(on, s"the '$tier' tier (column '$column') was not selected " +
+      "in QuantConfig.tiers at build time — rebuild the index with the " +
+      "tier selected")
 
   // ------------------------------------------------- encode (build time)
 
@@ -129,7 +135,7 @@ final class QuantModel(
     * its wall interpreting per-element lambdas).
     */
   def sq8Col(emb: Column): Column = {
-    requireTier(sq8Enabled, "sq8/i4")
+    requireTier(sq8Enabled, "sq8/i4", "sq8/i4")
     colOf(graft.expressions.VecSq8Encode(expOf(emb), mins, scales))
   }
 
@@ -168,7 +174,7 @@ final class QuantModel(
     * Compiled kernel — all subspace argmins fused into one loop.
     */
   def pqCol(emb: Column): Column = {
-    requireTier(pqEnabled, "pq")
+    requireTier(pqEnabled, "pq", "pq")
     colOf(graft.expressions.VecPqEncode(expOf(emb), pqBooks, sub))
   }
 
@@ -181,7 +187,7 @@ final class QuantModel(
     * distance loop, no intermediate array.
     */
   def pqrCol(emb: Column, cell: Column): Column = {
-    requireTier(pqrEnabled, "pqr")
+    requireTier(pqrEnabled, "pqr", "pqr")
     colOf(graft.expressions.VecPqrEncode(expOf(emb),
       expOf(cell.cast("int")), pqrBooks, sub, ivfCentroids))
   }
@@ -192,7 +198,7 @@ final class QuantModel(
     * same metric as the plain tiers.
     */
   def opqRotateCol(emb: Column): Column = {
-    requireTier(opqEnabled, "opq")
+    requireTier(opqEnabled, "opq", "opq")
     colOf(graft.expressions.VecMatVec(expOf(emb), opqRot))
   }
 
@@ -202,7 +208,7 @@ final class QuantModel(
     * than [[pqCol]] — the e15 audit prices exactly that gap.
     */
   def opqCol(emb: Column): Column = {
-    requireTier(opqEnabled, "opq")
+    requireTier(opqEnabled, "opq", "opq")
     colOf(graft.expressions.VecPqEncode(
       expOf(opqRotateCol(emb)), opqBooks, sub))
   }
@@ -234,16 +240,6 @@ final class QuantModel(
     */
   def opqLut(q: Array[Double]): Array[Array[Double]] =
     lutFor(opqRotate(q), opqBooks)
-
-  /** OPQ asymmetric distance over stored `opq` codes — [[pqAdcCol]]
-    * with the rotated-query LUT.
-    */
-  def opqAdcCol(codes: Column, q: Array[Double]): Column = {
-    val lut = opqLut(q)
-    (0 until cfg.pqSubspaces).map(j =>
-      element_at(typedLit(lut(j).toSeq), element_at(codes, j + 1)))
-      .reduce(_ + _)
-  }
 
   /** Interpreted-HOF twins of [[pqCol]]/[[pqrCol]], kept for the pin. */
   private[graft] def pqColHof(emb: Column): Column =
@@ -321,13 +317,13 @@ final class QuantModel(
 
   /** SQ8-encode a query vector (same formula as [[sq8Col]]). */
   def sq8Encode(q: Array[Double]): Array[Long] = {
-    requireTier(sq8Enabled, "sq8/i4")
+    requireTier(sq8Enabled, "sq8/i4", "sq8/i4")
     Array.tabulate(dim)(i => Math.round((q(i) - mins(i)) * scales(i)))
   }
 
   /** Asymmetric-distance lookup table: lut(j)(c) = ||q_j − centroid_jc||². */
   def pqLut(q: Array[Double]): Array[Array[Double]] = {
-    requireTier(pqEnabled, "pq")
+    requireTier(pqEnabled, "pq", "pq")
     lutFor(q, pqBooks)
   }
 
@@ -336,7 +332,7 @@ final class QuantModel(
     * One nprobe-sized family of LUTs per query — still driver math.
     */
   def pqrLut(q: Array[Double], cell: Int): Array[Array[Double]] = {
-    requireTier(pqrEnabled, "pqr")
+    requireTier(pqrEnabled, "pqr", "pqr")
     lutFor(Array.tabulate(dim)(i => q(i) - ivfCentroids(cell)(i)), pqrBooks)
   }
 
@@ -358,29 +354,45 @@ final class QuantModel(
 
   // ------------------------------------------------- ADC (search time)
 
-  /** Integer code distance of a stored SQ8 code array to the encoded
-    * query — the coarse candidate metric. Scans codes only.
+  /** The ADC tier table — the one definition of each tier's coarse
+    * distance, which the two-stage search and the coarseN audit both
+    * run ([[AdcTier]]). Integer tiers (sq8, i4: code distance; bitq:
+    * Hamming over sign signatures) are engine-exact; the LUT tiers
+    * (pq, opq: M lookups + adds per row into the query's M×K table)
+    * read only the nibble-sized codes.
     */
-  def sq8AdcCol(codes: Column, q: Array[Double]): Column =
-    sq8AdcCol(codes, typedlit(sq8Encode(q).toSeq))
+  private[store] lazy val adcTiers: Map[String, AdcTier[_]] = {
+    val lutSum = (codes: Column, lut: Column) =>
+      (0 until cfg.pqSubspaces).map(j =>
+        element_at(element_at(lut, j + 1), element_at(codes, j + 1)))
+        .reduce(_ + _)
+    def rows(lut: Array[Array[Double]]): Seq[Seq[Double]] =
+      lut.map(_.toSeq).toSeq
+    Seq(
+      new AdcTier(QuantTier.Sq8, "sq8", q => sq8Encode(q).toSeq,
+        (codes, qc) => aggregate(zip_with(codes, qc,
+          (a, b) => (a - b) * (a - b)), lit(0L), (acc, x) => acc + x)),
+      new AdcTier(QuantTier.Int4, "i4",
+        q => VF.nibblePackS(sq8Encode(q)).toSeq, VF.nibbleL2),
+      new AdcTier(QuantTier.Pq, "pq", q => rows(pqLut(q)), lutSum),
+      new AdcTier(QuantTier.Opq, "opq", q => rows(opqLut(q)), lutSum),
+      new AdcTier(QuantTier.Bitq, "sig", q => VF.signPackS(q).toSeq,
+        VF.hamming64)
+    ).map(t => t.name -> t).toMap
+  }
 
-  /** Column-vs-column form of [[sq8AdcCol]] (the query codes arrive
-    * as a column — e.g. broadcast with an audit panel). The literal
-    * form delegates here, so the audit's distance and the search's
-    * distance are DEFINITIONALLY the same expression.
+  /** The ADC tier `name`. Refuses pqr (its knob is the joint
+    * (nprobe, coarseN) pair, and its LUT depends on the row's cell —
+    * [[QuantIndex.coarseIvfPqResidual]]) and a tier this index was
+    * built without.
     */
-  def sq8AdcCol(codes: Column, qCodes: Column): Column =
-    aggregate(zip_with(codes, qCodes,
-      (a, b) => (a - b) * (a - b)), lit(0L), (acc, x) => acc + x)
-
-  /** PQ asymmetric distance: 8 LUT lookups + adds per row, no vector
-    * math — the scan touches only the nibble-sized code column.
-    */
-  def pqAdcCol(codes: Column, q: Array[Double]): Column = {
-    val lut = pqLut(q)
-    (0 until cfg.pqSubspaces).map(j =>
-      element_at(typedLit(lut(j).toSeq), element_at(codes, j + 1)))
-      .reduce(_ + _)
+  private[graft] def adcTier(name: String): AdcTier[_] = {
+    val t = adcTiers.getOrElse(name, throw new IllegalArgumentException(
+      s"no ADC tier '$name' (ADC tiers: sq8, i4, pq, opq, bitq; pqr's " +
+        "knob is the joint (nprobe, coarseN) pair — audit nprobe via " +
+        "auditRecallCurve)"))
+    requireTier(cfg.tiers(name), name, t.column)
+    t
   }
 
   // ------------------------------------------------------- persistence
@@ -781,4 +793,32 @@ object QuantModel {
 
   def exists(path: String): Boolean =
     java.nio.file.Files.exists(java.nio.file.Paths.get(path))
+}
+
+/** One ADC tier of a [[QuantIndex]]: its stored code column, the
+  * query's `payload` (driver math over the trained model: encoded
+  * codes, a sign signature, or an M×K lookup table) and the per-row
+  * coarse `distance` of the codes to that payload. The two-stage search
+  * folds the payload in as a literal ([[distanceTo]]); the coarseN
+  * audit broadcasts one payload per panel query as a column
+  * ([[panelFrame]]). Both call the one `distance`, so the audit prices
+  * exactly the candidate sets the search computes.
+  */
+private[graft] final class AdcTier[P: TypeTag](val name: String,
+    val column: String, payload: Array[Double] => P,
+    distance: (Column, Column) => Column) {
+
+  /** The coarse distance of each row's codes to `q`. */
+  def distanceTo(q: Array[Double]): Column =
+    distance(col(column), typedLit(payload(q)))
+
+  /** One (qid, qe, payload) row per panel query, with the coarse
+    * distance of each row's codes to its query's payload column.
+    */
+  def panelFrame(spark: SparkSession,
+      panel: Seq[Array[Double]]): (DataFrame, Column) = {
+    import spark.implicits._
+    (panel.zipWithIndex.map { case (q, i) => (i.toLong, q.toSeq, payload(q)) }
+      .toDF("qid", "qe", "payload"), distance(col(column), col("payload")))
+  }
 }

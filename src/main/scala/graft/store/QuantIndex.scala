@@ -49,7 +49,8 @@ final class QuantIndex(
     * a stale curve would make [[coarseNForRecall]] silently optimistic.
     */
   override protected def afterCommit(dataChange: Boolean): Unit = {
-    if (dataChange) AdcTiers.foreach(t => graft.util.FsIo.delete(adcCurvePath(t)))
+    if (dataChange)
+      model.adcTiers.keys.foreach(t => graft.util.FsIo.delete(adcCurvePath(t)))
     dropResident()
   }
 
@@ -59,15 +60,6 @@ final class QuantIndex(
     * else the committed file list ([[IndexTable.indexDf]]).
     */
   override def indexDf: DataFrame = resident.getOrElse(logDf)
-
-  /** Friendly refusal for searches over an unselected tier: the code
-    * column is simply absent from the index schema.
-    */
-  private def requireCol(c: String, tier: String): Unit =
-    require(indexDf.columns.contains(c),
-      s"$path lacks the '$c' column — the '$tier' tier was not " +
-        "selected at build time; rebuild with the tier in " +
-        "QuantConfig.tiers")
 
   /** Pin the index in executor memory for interactive serving (the
     * analogue of the reference's always-resident FAISS index): all
@@ -82,57 +74,26 @@ final class QuantIndex(
     this
   }
 
-  /** (id, cell, adc) coarse candidates by integer SQ8 code distance —
-    * the scan reads (id, sq8) only (`cell` is the partition column:
-    * it comes from the directory name, zero data bytes); top-N plans
-    * as TakeOrderedAndProject (per-partition heap, no full sort).
+  /** (id, cell, adc) coarse candidates of one ADC tier
+    * ([[QuantModel.adcTier]]) within the `nprobe` IVF cells nearest the
+    * query (default: every cell, no partition filter). The scan reads
+    * (id, tier codes) only — `cell` is the partition column, it comes
+    * from the directory name — and the top-N plans as
+    * TakeOrderedAndProject (per-partition heap, no full sort). With a
+    * probe budget this is the FAISS IVF+ADC layout: partition pruning
+    * cuts the rows to nprobe/nCells, the codes cut the bytes per row.
     * Carrying `cell` lets the re-rank prune to the partitions the
     * survivors actually live in.
     */
-  def coarseSq8(q: Array[Double], n: Int): DataFrame = {
-    requireCol("sq8", graft.store.QuantTier.Sq8)
-    indexDf.select(col("id"), col("cell"),
-        model.sq8AdcCol(col("sq8"), q).as("adc"))
+  def coarse(tier: String, q: Array[Double], n: Int,
+      nprobe: Int = model.cfg.ivfCells): DataFrame = {
+    val t = model.adcTier(tier)
+    val probed =
+      if (nprobe >= model.cfg.ivfCells) indexDf
+      else indexDf.where(
+        col("cell").isin(model.ivfNearestCells(q, nprobe).map(Int.box): _*))
+    probed.select(col("id"), col("cell"), t.distanceTo(q).as("adc"))
       .orderBy(col("adc"), col("id")).limit(n)
-  }
-
-  /** (id, cell, adc) coarse candidates by PQ asymmetric distance: the query's
-    * M×K lookup table is computed once on the driver and folded into a
-    * codegen'd projection — per row, M `element_at`s + adds. The scan
-    * reads (id, pq) only.
-    */
-  def coarsePq(q: Array[Double], n: Int): DataFrame = {
-    requireCol("pq", graft.store.QuantTier.Pq)
-    indexDf.select(col("id"), col("cell"),
-        model.pqAdcCol(col("pq"), q).as("adc"))
-      .orderBy(col("adc"), col("id")).limit(n)
-  }
-
-  /** (id, cell, adc) coarse candidates by integer INT4 code distance —
-    * the 8×-compression tier between SQ8 (4×) and BQ (32×): the scan
-    * reads (id, i4), 4 bits/dim, and the distance is shift/mask
-    * integer math over top-nibble codes — still engine-exact.
-    */
-  def coarseInt4(q: Array[Double], n: Int): DataFrame = {
-    requireCol("i4", QuantTier.Int4)
-    indexDf.select(col("id"), col("cell"),
-        VF.nibbleL2(col("i4"),
-          typedLit(VF.nibblePackS(model.sq8Encode(q)))).as("adc"))
-      .orderBy(col("adc"), col("id")).limit(n)
-  }
-
-  /** (id, cell, ham) coarse candidates by Hamming distance over the stored
-    * 1-bit sign signatures — the cheapest tier: the scan reads
-    * (id, sig), 1/32 of the vector bytes, and the distance is one
-    * popcount-of-xor per 64 dims.
-    */
-  def coarseBitq(q: Array[Double], n: Int): DataFrame = {
-    requireCol("sig", graft.store.QuantTier.Bitq)
-    indexDf.select(col("id"), col("cell"),
-      VF.hamming64(col("sig"),
-        org.apache.spark.sql.functions.typedLit(VF.signPackS(q)))
-        .as("ham"))
-      .orderBy(col("ham"), col("id")).limit(n)
   }
 
   /** Exact squared-L2 for a bounded id set (the coarse survivors): the
@@ -230,76 +191,24 @@ final class QuantIndex(
       .orderBy(col("dist"), col("id")).limit(math.max(1, k))
   }
 
-  /** SQ8 two-stage search: coarse by stored int codes, exact re-rank. */
-  def searchSq8(q: Array[Double], k: Int, coarseN: Int = 100): DataFrame =
-    rerank(coarseSq8(q, coarseN), q, k)
-
-  /** PQ two-stage search: ADC over stored codes, exact re-rank. */
-  def searchPq(q: Array[Double], k: Int, coarseN: Int = 100): DataFrame =
-    rerank(coarsePq(q, coarseN), q, k)
-
-  /** (id, cell, adc) coarse candidates by OPQ asymmetric distance:
-    * LUT from the ROTATED query against the OPQ books, over the
-    * stored `opq` codes — same scan bytes as [[coarsePq]] (the codes
-    * are the same width), tighter distances because the trained
-    * rotation decorrelates the subspaces before coding.
+  /** Two-stage search over one ADC tier: the [[coarse]] top-`coarseN`
+    * within `nprobe` cells, then the exact re-rank restricted to the
+    * candidates' cells.
     */
-  def coarseOpq(q: Array[Double], n: Int): DataFrame = {
-    requireCol("opq", QuantTier.Opq)
-    indexDf.select(col("id"), col("cell"),
-        model.opqAdcCol(col("opq"), q).as("adc"))
-      .orderBy(col("adc"), col("id")).limit(n)
-  }
-
-  /** OPQ two-stage search (Ge et al. 2013 / FAISS OPQMatrix+PQ):
-    * rotated-ADC coarse pass, exact re-rank.
-    */
-  def searchOpq(q: Array[Double], k: Int, coarseN: Int = 100): DataFrame =
-    rerank(coarseOpq(q, coarseN), q, k)
-
-  /** BQ two-stage search: Hamming over stored sign signatures, exact
-    * re-rank.
-    */
-  def searchBitq(q: Array[Double], k: Int, coarseN: Int = 100): DataFrame =
-    rerank(coarseBitq(q, coarseN), q, k)
-
-  /** INT4 two-stage search: coarse by stored nibble codes, exact
-    * re-rank.
-    */
-  def searchInt4(q: Array[Double], k: Int, coarseN: Int = 100): DataFrame =
-    rerank(coarseInt4(q, coarseN), q, k)
-
-  /** (id, adc) coarse candidates by PQ asymmetric distance WITHIN the
-    * `nprobe` IVF cells nearest the query — the FAISS IVFPQ layout:
-    * partition pruning cuts the scan to nprobe/nCells of the corpus,
-    * then the pruned scan reads only (id, pq). The compounding is the
-    * point at 100 TB: 2/16 of the rows × ~1/16 of the bytes per row.
-    */
-  def coarseIvfPq(q: Array[Double], nprobe: Int, n: Int): DataFrame = {
-    requireCol("pq", graft.store.QuantTier.Pq)
-    val cells = model.ivfNearestCells(q, nprobe).map(Int.box)
-    indexDf.where(col("cell").isin(cells: _*))
-      .select(col("id"), col("cell"), model.pqAdcCol(col("pq"), q).as("adc"))
-      .orderBy(col("adc"), col("id")).limit(n)
-  }
-
-  /** IVF+PQ two-stage search: pruned ADC coarse pass, exact re-rank
-    * restricted to the candidates' cells.
-    */
-  def searchIvfPq(q: Array[Double], k: Int, nprobe: Int = 2,
-                  coarseN: Int = 100): DataFrame =
-    rerank(coarseIvfPq(q, nprobe, coarseN), q, k)
+  def searchTwoStage(tier: String, q: Array[Double], k: Int,
+      coarseN: Int = 100, nprobe: Int = model.cfg.ivfCells): DataFrame =
+    rerank(coarse(tier, q, coarseN, nprobe), q, k)
 
   /** (id, adc) coarse candidates by RESIDUAL PQ distance within the
     * probed cells — the full FAISS IVFPQ scheme: each probed cell gets
     * its own LUT (query residual vs that cell's centroid, against the
     * residual books), and a row looks its LUT up by the position of its
-    * cell in the probe list. Same pruned scan and byte footprint as
-    * [[coarseIvfPq]]; the codes just carry more signal per bit because
-    * each codebook only spans a cell-sized neighborhood.
+    * cell in the probe list. Same pruned scan and byte footprint as the
+    * pq tier's [[coarse]] at that nprobe; the codes just carry more
+    * signal per bit because each codebook only spans a cell-sized
+    * neighborhood.
     */
   def coarseIvfPqResidual(q: Array[Double], nprobe: Int, n: Int): DataFrame = {
-    requireCol("pqr", graft.store.QuantTier.Pqr)
     val cells = model.ivfNearestCells(q, nprobe)
     val luts: Seq[Seq[Seq[Double]]] =
       cells.map(c => model.pqrLut(q, c).map(_.toSeq).toSeq)
@@ -330,6 +239,18 @@ final class QuantIndex(
       .select(col("id"), VF.l2sqLit(col("embedding"), q).as("dist"))
       .orderBy(col("dist"), col("id")).limit(math.max(1, k))
   }
+
+  def maxDepth: Int = model.cfg.ivfCells
+
+  /** The query's cells by centroid distance; every nprobe list is a
+    * prefix ([[QuantModel.ivfNearestCells]] sorts once and takes).
+    */
+  protected def probeOrder(q: Array[Double]): Seq[Int] =
+    model.ivfNearestCells(q, model.cfg.ivfCells)
+
+  /** [[searchIvf]]: the recall knob's depth is nprobe. */
+  def search(q: Array[Double], k: Int, depth: Int): DataFrame =
+    searchIvf(q, k, depth)
 
   /** Re-train every quantizer on the CURRENT corpus and re-encode —
     * FAISS's retrain path, closing the audit→action loop: `add` after
@@ -442,132 +363,38 @@ final class QuantIndex(
     * tested) against the same number the audit reports: for each
     * query, |exact top-k ∩ top-k within the probed cells| / k,
     * averaged over the panel. ONE corpus scan for the whole panel
-    * (shares [[recallByDepth]] with the curve audit).
+    * (the kernel's probe-depth audit).
     */
   def recallAtK(panel: Seq[Array[Double]], k: Int = 10,
                 nprobe: Int = 1): Double =
-    recallByDepth(panel, k, Seq(nprobe)).head
-
-  /** Mean recall@k per nprobe depth over a panel, in ONE corpus scan
-    * ([[IndexTable.probeAudit]]); the probe ranking is the query's
-    * full centroid-distance cell order, of which every depth-p probe
-    * list is a prefix ([[QuantModel.ivfNearestCells]] sorts once and
-    * takes).
-    */
-  private def recallByDepth(panel: Seq[Array[Double]], k: Int,
-                            depths: Seq[Int]): Seq[Double] = {
-    val row = probeAudit(panel, k, depths,
-      model.ivfNearestCells(_, model.cfg.ivfCells)).head
-    depths.indices.map(row.getDouble)
-  }
-
-  /** Measure the recall-vs-nprobe curve for [[searchIvf]] over a query
-    * panel and persist it INSIDE the current snapshot's data directory
-    * (`_recall_curve.json`) — so a retrain, whose new snapshot has no
-    * curve yet, naturally invalidates it, and add/delete/upsert drop
-    * it explicitly. The quant-tier twin of
-    * [[VectorStore.auditRecallCurve]]: curve(p) = mean recall@k of
-    * p-probe IVF search vs exact, p = 1..ivfCells, ONE corpus scan.
-    */
-  def auditRecallCurve(panel: Seq[Array[Double]], k: Int = 10): Seq[Double] = {
-    val kk = math.max(1, k)
-    val nb = model.cfg.ivfCells
-    val curve = recallByDepth(panel, kk, 1 to nb)
-    writeRecallCurve(kk, panel.size, curve)
-    curve
-  }
+    recallAt(panel, k, Seq(nprobe)).head
 
   // ----------------- recall vs coarseN (the ADC tiers' other knob)
 
   /** Mean recall@k of the TWO-STAGE search per re-rank budget
-    * `coarseN`, for one ADC tier (sq8, i4, pq, opq, bitq), over a query panel —
-    * ONE corpus scan (the e18/recallByDepth shape). The re-rank is
-    * exact, so a two-stage search's only loss is a true neighbor
-    * missing from the coarse top-coarseN: recall(coarseN) = |exact
-    * top-k ∩ ADC top-coarseN| / k. Each panel query's M×K LUT is
-    * driver math broadcast into the scan (exactly what the real
-    * search does), every requested depth is a prefix-slice of ONE
-    * top-max(depths) aggregate.
-    */
-  private def adcRecallByDepth(panel: Seq[Array[Double]], k: Int,
-      tier: String, depths: Seq[Int]): Seq[Double] = {
-    val row = adcAuditFrame(panel, k, tier, depths).head
-    // avg over ZERO per-query rows is NULL: surface the diagnosis, not
-    // an unboxing NPE
-    require(!row.isNullAt(0),
-      s"cannot audit recall on an empty index ($path)")
-    depths.indices.map(row.getDouble)
-  }
-
-  /** The audit's ONE-scan aggregate as a frame (1 row, one avg column
-    * per depth) — split out so the plan itself is dumpable evidence
-    * that every depth is a prefix slice of a single top-max(depths)
-    * aggregate over a single corpus pass (r15 verdict task #4).
-    * [[adcRecallByDepth]] is `.head` over this.
+    * `coarseN`, for one ADC tier, over a query panel, as a ONE-scan
+    * frame (1 row, one avg column per depth). The re-rank is exact, so
+    * a two-stage search's only loss is a true neighbor missing from
+    * the coarse top-coarseN: recall(coarseN) = |exact top-k ∩ ADC
+    * top-coarseN| / k. Each panel query's payload is broadcast into
+    * the scan and scored by the tier's one distance ([[AdcTier]]);
+    * integer distances cast to double for the shared top-k aggregate
+    * (order-preserving: all values << 2^53). Every depth is a prefix
+    * slice of ONE top-max(depths) aggregate.
     */
   private[graft] def adcAuditFrame(panel: Seq[Array[Double]], k: Int,
       tier: String, depths: Seq[Int]): DataFrame = {
     require(panel.nonEmpty, "empty audit panel")
     require(depths.nonEmpty && depths.forall(_ >= 1), "bad depth list")
-    val sess = spark
-    import sess.implicits._
-    // Per tier: the query-side payload broadcast with the panel, and
-    // the per-row coarse distance against it — EXACTLY the distance
-    // the tier's real coarse pass computes (LUT ADC for pq/opq,
-    // integer code distance for sq8/i4, Hamming for bitq), so the
-    // curve prices the true candidate sets. Integer distances cast to
-    // double for the shared top-k aggregate — order-preserving (all
-    // values << 2^53). pqr is excluded: its knob is the JOINT
-    // (nprobe, coarseN) pair — the nprobe axis already has e19's
-    // measured curve.
-    def lutPdf(lutOf: Array[Double] => Array[Array[Double]]) =
-      panel.zipWithIndex.map { case (q, i) =>
-        (i.toLong, q.toSeq, lutOf(q).map(_.toSeq).toSeq)
-      }.toDF("qid", "qe", "lut")
-    def lutAdc(codeCol: String): org.apache.spark.sql.Column =
-      (0 until model.cfg.pqSubspaces).map(j =>
-        element_at(element_at(col("lut"), j + 1),
-          element_at(col(codeCol), j + 1))).reduce(_ + _)
-    val (pdf, adc) = tier match {
-      case QuantTier.Pq =>
-        requireCol("pq", QuantTier.Pq)
-        (lutPdf(model.pqLut), lutAdc("pq"))
-      case QuantTier.Opq =>
-        requireCol("opq", QuantTier.Opq)
-        (lutPdf(model.opqLut), lutAdc("opq"))
-      case QuantTier.Sq8 =>
-        requireCol("sq8", QuantTier.Sq8)
-        (panel.zipWithIndex.map { case (q, i) =>
-          (i.toLong, q.toSeq, model.sq8Encode(q).toSeq)
-        }.toDF("qid", "qe", "qc"),
-          model.sq8AdcCol(col("sq8"), col("qc")).cast("double"))
-      case QuantTier.Int4 =>
-        requireCol("i4", QuantTier.Int4)
-        (panel.zipWithIndex.map { case (q, i) =>
-          (i.toLong, q.toSeq,
-            VF.nibblePackS(model.sq8Encode(q)).toSeq)
-        }.toDF("qid", "qe", "qn"),
-          VF.nibbleL2(col("i4"), col("qn")).cast("double"))
-      case QuantTier.Bitq =>
-        requireCol("sig", QuantTier.Bitq)
-        (panel.zipWithIndex.map { case (q, i) =>
-          (i.toLong, q.toSeq, VF.signPackS(q).toSeq)
-        }.toDF("qid", "qe", "qs"),
-          VF.hamming64(col("sig"), col("qs")).cast("double"))
-      case t => throw new IllegalArgumentException(
-        s"no ADC coarseN curve for tier '$t' " +
-          "(supported: sq8, i4, pq, opq, bitq; pqr's knob is the " +
-          "joint (nprobe, coarseN) pair — audit nprobe via " +
-          "auditRecallCurve)")
-    }
+    val (pdf, adc) = model.adcTier(tier).panelFrame(spark, panel)
     val kk = math.max(1, k)
-    val maxDepth = depths.max
     val scored = indexDf.crossJoin(broadcast(pdf))
       .select(col("qid"), col("id"),
-        VF.l2sq(col("embedding"), col("qe")).as("dd"), adc.as("adc"))
+        VF.l2sq(col("embedding"), col("qe")).as("dd"),
+        adc.cast("double").as("adc"))
     val perQuery = scored.groupBy("qid").agg(
       graft.functions.TopKAgg(col("id"), col("dd"), kk).as("ex"),
-      graft.functions.TopKAgg(col("id"), col("adc"), maxDepth).as("cand"))
+      graft.functions.TopKAgg(col("id"), col("adc"), depths.max).as("cand"))
       .select(depths.map { p =>
         (size(array_intersect(
           expr("transform(ex, x -> x._1)"),
@@ -584,26 +411,24 @@ final class QuantIndex(
     */
   private val AdcDepths = Seq(10, 25, 50, 100, 200, 400)
 
-  /** The tiers the coarseN curve can certify (pqr's knob is the joint
-    * (nprobe, coarseN) pair — e19's measured curve owns the nprobe
-    * axis).
-    */
-  private val AdcTiers: Set[String] = QuantTier.All - QuantTier.Pqr
-
   /** Measure the recall-vs-coarseN curve for one ADC tier and persist
     * it INSIDE the current snapshot's data directory
-    * (`_adc_recall_curve_<tier>.json`) — the coarseN twin of
-    * [[auditRecallCurve]]'s nprobe curve (r13 verdict task #6): a
-    * retrain's fresh snapshot has no curve, and add/delete/upsert
-    * drop it explicitly, so [[coarseNForRecall]] can never serve a
-    * stale measurement. Returns depth → mean recall@k.
+    * (`_adc_recall_curve_<tier>.json`) — the coarseN twin of the
+    * nprobe curve ([[auditRecallCurve]]): a retrain's fresh snapshot
+    * has no curve, and add/delete/upsert drop it explicitly, so
+    * [[coarseNForRecall]] can never serve a stale measurement. Returns
+    * depth → mean recall@k.
     */
   def auditAdcRecallCurve(panel: Seq[Array[Double]], k: Int = 10,
       tier: String = QuantTier.Pq,
       depths: Seq[Int] = AdcDepths): Seq[(Int, Double)] = {
     val kk = math.max(1, k)
     val ds = depths.distinct.sorted
-    val recall = adcRecallByDepth(panel, kk, tier, ds)
+    val row = adcAuditFrame(panel, kk, tier, ds).head
+    // avg over ZERO per-query rows is NULL: surface the diagnosis, not
+    // an unboxing NPE
+    require(!row.isNullAt(0), s"cannot audit recall on an empty index ($path)")
+    val recall = ds.indices.map(row.getDouble)
     RecallCurves.write(adcCurvePath(tier),
       RecallCurves.Curve(kk, panel.size, ds, recall))
     ds.zip(recall)
@@ -619,90 +444,37 @@ final class QuantIndex(
   def adcRecallCurve(tier: String): Option[(Int, Seq[(Int, Double)])] =
     RecallCurves.read(adcCurvePath(tier)).map(c => (c.k, c.depths.zip(c.recall)))
 
-  /** Smallest MEASURED re-rank budget whose recall meets the target,
-    * for one ADC tier, AT THE CURVE'S OWN k; None when no persisted
-    * point reaches it (fresh build, post-mutation, post-retrain, or
-    * target above the curve) — the caller should fall back to exact
-    * search rather than under-deliver (the [[nprobeForRecall]]
-    * convention, where the degenerate answer is likewise "probe
-    * everything"). Raw curve picker: [[searchAdcAtRecall]] adds the
-    * requested-k guards.
+  /** Smallest MEASURED re-rank budget whose recall@k meets the target
+    * for one ADC tier, by the one certification rule
+    * ([[RecallCurves.certifiedDepth]]): None with no persisted curve
+    * (fresh build, post-mutation, post-retrain), a curve audited at
+    * another k, or a target above the curve.
     */
-  def coarseNForRecall(minRecall: Double,
+  def coarseNForRecall(minRecall: Double, k: Int,
       tier: String = QuantTier.Pq): Option[Int] =
-    adcRecallCurve(tier).flatMap { case (_, curve) =>
-      curve.find(_._2 >= minRecall).map(_._1)
-    }
+    RecallCurves.certifiedDepth(RecallCurves.read(adcCurvePath(tier)),
+      math.max(1, k), minRecall)
 
   /** Recall-targeted two-stage ADC search: the re-rank budget comes
-    * from the persisted measured curve instead of the hand-tuned 100
-    * (r13 verdict task #6). Never under-delivers: the curve certifies
-    * ONLY the k it was audited at — recall@10 says nothing about
-    * recall@50, and not about recall@5 either (at a fixed budget the
-    * misses can concentrate in the top 5, r14 ADVICE #1) — so any
-    * request at k ≠ the persisted k falls back to exact; and the
-    * chosen budget is clamped to ≥ k so the re-rank can always fill k
-    * rows (recall is non-decreasing in depth, so clamping UP never
-    * drops below the measured point). No measured point meets the
-    * target ⇒ exact scan. Returns (result, the coarseN used — −1 for
-    * the exact fallback).
+    * from [[coarseNForRecall]] instead of the hand-tuned 100, clamped
+    * to ≥ k so the re-rank can always fill k rows (recall is
+    * non-decreasing in depth, so clamping UP never drops below the
+    * measured point). Nothing certified ⇒ exact scan. A tier without a
+    * coarseN curve (pqr, a typo, a tier the index lacks) refuses
+    * loudly instead of silently degrading every query to an exact
+    * scan. Returns (result, the coarseN used — −1 for the exact
+    * fallback).
     */
   def searchAdcAtRecall(q: Array[Double], k: Int, minRecall: Double,
       tier: String = QuantTier.Pq): (DataFrame, Int) = {
-    // uncertifiable tiers fail loudly like the audit does — otherwise
-    // a pqr/typo'd tier silently degrades EVERY query to a full exact
-    // scan, indistinguishable from "curve not yet measured"
-    require(AdcTiers(tier),
-      s"no ADC coarseN curve for tier '$tier' " +
-        "(supported: sq8, i4, pq, opq, bitq; pqr's knob is the joint " +
-        "(nprobe, coarseN) pair — audit nprobe via auditRecallCurve)")
+    model.adcTier(tier)
     val kk = math.max(1, k)
-    val choice = adcRecallCurve(tier) match {
-      case Some((auditedK, curve)) if kk == auditedK =>
-        curve.find(_._2 >= minRecall).map(c => math.max(c._1, kk))
-      case _ => None // no curve, or audited at a different k than asked
-    }
-    choice match {
-      case Some(n) =>
-        val df = tier match {
-          case QuantTier.Opq => searchOpq(q, kk, coarseN = n)
-          case QuantTier.Sq8 => searchSq8(q, kk, coarseN = n)
-          case QuantTier.Int4 => searchInt4(q, kk, coarseN = n)
-          case QuantTier.Bitq => searchBitq(q, kk, coarseN = n)
-          case _ => searchPq(q, kk, coarseN = n)
-        }
-        (df, n)
+    coarseNForRecall(minRecall, kk, tier).map(math.max(_, kk)) match {
+      case Some(n) => (searchTwoStage(tier, q, kk, coarseN = n), n)
       case None =>
         (indexDf.select(col("id"), VF.l2sqLit(col("embedding"), q).as("dist"))
           .orderBy(col("dist"), col("id")).limit(kk), -1)
     }
-  }
-
-  /** Smallest nprobe whose MEASURED recall meets the target —
-    * conservative by construction: with no persisted audit (fresh
-    * build, post-mutation, post-retrain), or a target above every
-    * measured point, it degenerates to probing every cell (exact
-    * search) rather than under-deliver.
-    */
-  def nprobeForRecall(minRecall: Double): Int = recallCurve() match {
-    case Some((_, curve)) =>
-      val i = curve.indexWhere(_ >= minRecall)
-      if (i < 0) model.cfg.ivfCells else i + 1
-    case None => model.cfg.ivfCells
-  }
-
-  /** Recall-targeted IVF kNN: nprobe chosen from the persisted
-    * measured curve instead of a hand-tuned constant — the same
-    * latency/recall knob [[VectorStore.searchAtRecall]] exposes, on
-    * the quantized layout. The curve certifies only its audited k
-    * (recall@10 bounds neither recall@50 nor recall@5 at a fixed
-    * nprobe — r14 ADVICE #1): any other k probes every cell.
-    */
-  def searchAtRecall(q: Array[Double], k: Int, minRecall: Double): DataFrame = {
-    val kk = math.max(1, k)
-    val nprobe = RecallCurves.certifiedDepth(recallCurve(), kk, minRecall)
-      .getOrElse(model.cfg.ivfCells)
-    searchIvf(q, kk, nprobe)
   }
 
   private def dropResident(): Unit = {

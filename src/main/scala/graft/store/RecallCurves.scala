@@ -6,10 +6,12 @@ import org.apache.spark.sql.functions._
 import graft.server.Json
 import graft.util.FsIo
 
-/** Measured recall curves: the one certification rule every store's
-  * `searchAtRecall` and every facade adapter's `probesFor` applies,
-  * the one sidecar format they are persisted in, and the one audit
-  * aggregate that measures them.
+/** Measured recall curves: the one certification rule, the one
+  * sidecar format they are persisted in, and the one audit aggregate
+  * that measures them. Every depth picker applies the rule:
+  * [[IndexTable.depthForRecall]] (and through it every store's
+  * `searchAtRecall` and every facade adapter's `probesFor`) and
+  * [[QuantIndex.coarseNForRecall]] (and through it `searchAdcAtRecall`).
   *
   * Certification: a persisted curve certifies ONLY the k it was
   * audited at — recall@10 at a fixed depth bounds neither recall@50
@@ -20,18 +22,16 @@ import graft.util.FsIo
   */
 object RecallCurves {
 
-  /** Smallest 1-based depth whose measured recall meets `minRecall`,
-    * ONLY when `curve` (as `(auditedK, recallPerDepth)`) was audited
-    * at exactly `k`. None = not certifiable: no curve, a different
-    * audited k, or a target above every measured point.
+  /** Smallest measured depth whose recall meets `minRecall`, ONLY when
+    * `curve` was audited at exactly `k`. None = not certifiable: no
+    * curve, a different audited k, or a target above every measured
+    * point.
     */
-  def certifiedDepth(curve: Option[(Int, Seq[Double])], k: Int,
+  private[graft] def certifiedDepth(curve: Option[Curve], k: Int,
       minRecall: Double): Option[Int] =
-    curve match {
-      case Some((auditedK, c)) if auditedK == k =>
-        val i = c.indexWhere(_ >= minRecall)
-        if (i < 0) None else Some(i + 1)
-      case _ => None
+    curve.filter(_.k == k).flatMap { c =>
+      val i = c.recall.indexWhere(_ >= minRecall)
+      if (i < 0) None else Some(c.depth(i))
     }
 
   /** A persisted curve: recall@`k` over a `panel`-query audit, one
@@ -39,7 +39,10 @@ object RecallCurves {
     * (depth i+1 for point i) and explicit for the coarseN curves.
     */
   private[graft] final case class Curve(k: Int, panel: Int, depths: Seq[Int],
-      recall: Seq[Double])
+      recall: Seq[Double]) {
+    /** The depth of point `i`. */
+    def depth(i: Int): Int = if (depths.isEmpty) i + 1 else depths(i)
+  }
 
   /** Persist `c` at `path` (on the index's filesystem, which may be
     * hdfs:// or s3a://), atomically: a concurrent recall-targeted

@@ -35,6 +35,14 @@ final class VectorStore(
   protected def encode(df: DataFrame, idCol: String, embCol: String): DataFrame =
     VectorStore.bucketize(df, model, idCol, embCol)
 
+  def maxDepth: Int = model.numBuckets
+
+  protected def probeOrder(q: Array[Double]): Seq[Int] =
+    model.candidates(q, model.numBuckets)
+
+  def search(q: Array[Double], k: Int, depth: Int): DataFrame =
+    search(q, k, depth, lit(true))
+
   /** kNN over the persisted index. `probes >= numBuckets` = exact.
     * `filter` restricts the search to matching rows (metadata-filtered
     * vector search — the reference lists this as future work,
@@ -55,58 +63,6 @@ final class VectorStore(
     * analysis, SURVEY §2.6 A3–A5).
     */
   def stats(): DataFrame = VectorStore.statsOf(indexDf, model.cfg.dim)
-
-  /** Measure the recall-vs-probes curve over a query panel and persist
-    * it next to the index (`_recall_curve.json`): curve(p) = mean
-    * recall@k of p-probe pruned search vs exact, p = 1..numBuckets.
-    * This is the reference's claimed-but-never-implemented
-    * "latency vs recall tradeoffs" knob (`Readme.md:19`) made real:
-    * the m8/e18 audit number, per probe depth, stored where
-    * [[searchAtRecall]] can act on it.
-    *
-    * Cost: ONE corpus scan regardless of numBuckets — the panel
-    * broadcasts into the scan and every probe depth is a FILTERed
-    * [[graft.functions.TopKAgg]] over the same pass (the e18 shape;
-    * `candidates(q, p)` is a prefix of `candidates(q, p+1)` by
-    * construction, so depth-p membership is one array_position test).
-    * Cheap enough to re-run per-ingest; at 100 TB this is the audit
-    * you schedule, not the search path.
-    */
-  def auditRecallCurve(panel: Seq[Array[Double]], k: Int = 10): Seq[Double] = {
-    val kk = math.max(1, k)
-    val nb = model.numBuckets
-    val row = probeAudit(panel, kk, 1 to nb, model.candidates(_, nb)).head
-    val curve = (0 until nb).map(row.getDouble)
-    writeRecallCurve(kk, panel.size, curve)
-    curve
-  }
-
-  /** Smallest probe count whose MEASURED recall meets the target —
-    * conservative by construction: with no persisted audit, or a
-    * target above every measured point, it degenerates to exact
-    * search (all buckets) rather than under-deliver.
-    */
-  def probesForRecall(minRecall: Double): Int = recallCurve() match {
-    case Some((_, curve)) =>
-      val i = curve.indexWhere(_ >= minRecall)
-      if (i < 0) model.numBuckets else i + 1
-    case None => model.numBuckets
-  }
-
-  /** Recall-targeted kNN: probe depth chosen from the persisted
-    * measured curve instead of a hand-tuned constant. The latency/
-    * recall knob exposed in the unit a user actually wants. The curve
-    * certifies only its audited k (recall@10 bounds neither recall@50
-    * nor recall@5 at a fixed probe count — r14 ADVICE #1): any other
-    * k probes every bucket.
-    */
-  def searchAtRecall(q: Array[Double], k: Int, minRecall: Double,
-                     filter: Column = lit(true)): DataFrame = {
-    val kk = math.max(1, k)
-    val probes = RecallCurves.certifiedDepth(recallCurve(), kk, minRecall)
-      .getOrElse(model.numBuckets)
-    search(q, kk, probes, filter)
-  }
 
   /** Reshard into a NEW bucket layout at `newPath` (e.g. more hash
     * tables once the corpus outgrows the old partition count) — the

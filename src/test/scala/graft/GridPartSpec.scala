@@ -76,7 +76,7 @@ class GridPartSpec extends AnyFunSuite {
       s"a cell wrote >1 file: ${cells.sorted.mkString(",")}")
     val q = emb.where(col("id") === 0).head.getSeq[Float](1)
       .map(_.toDouble).toArray
-    val got = idx.searchPq(q, 5).collect().map(_.getLong(0)).toSeq
+    val got = idx.searchTwoStage(QuantTier.Pq, q, 5).collect().map(_.getLong(0)).toSeq
     assert(got.nonEmpty)
   }
 }

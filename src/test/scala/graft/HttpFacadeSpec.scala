@@ -83,7 +83,7 @@ class HttpFacadeSpec extends AnyFunSuite {
     val panel = (0L until 5L)
       .map(graft.queries.VectorQueries.qvec(spark, TestSpark.sf, _))
     fstore.auditRecallCurve(panel, k = 3)
-    val p = fstore.probesForRecall(0.5)
+    val p = fstore.depthForRecall(0.5, 3).getOrElse(fstore.maxDepth)
     val (c1, b1) = post("/search",
       s"""{"query_vector": $qj, "k": 3, "min_recall": 0.5}""")
     assert(c1 == 200 && Json.asLong(obj(b1)("probes")).toInt == p)

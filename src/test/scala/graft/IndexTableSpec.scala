@@ -6,11 +6,14 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.lsh.LshConfig
-import graft.store.{FileLog, MultiTableStore, RecallCurves}
+import graft.server.StoreAdapter
+import graft.store.{FileLog, IndexTable, MultiTableStore, QuantConfig,
+  QuantIndex, QuantTier, RecallCurves, VectorStore}
 
 /** The shared index-table kernel seen through the multi-table layout
-  * (the one that gained `upsert` from it), plus the one recall-curve
-  * sidecar format every layout persists.
+  * (the one that gained `upsert` from it), the one recall-curve sidecar
+  * format every layout persists, and the one certification rule every
+  * depth picker applies.
   */
 class IndexTableSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -101,14 +104,41 @@ class IndexTableSpec extends AnyFunSuite {
     val st = multi("it_mt_audit")
     val panel = (0L until 4L).map(i =>
       rows(i, i + 1).head.getSeq[Float](1).map(_.toDouble).toArray)
-    val frame = st.auditFrame(panel, 5, 6)
+    val frame = st.auditFrame(panel, 5)
     val scans = frame.queryExecution.optimizedPlan.collectLeaves()
       .count(_.isInstanceOf[LogicalRelation])
     assert(scans == 1, frame.queryExecution.optimizedPlan.treeString)
-    val curve = st.auditRecallCurve(panel, k = 5, maxProbes = 6)
-    assert(curve.size == 6 && curve.zip(curve.tail).forall(p => p._1 <= p._2))
+    val curve = st.auditRecallCurve(panel, k = 5)
+    assert(curve.size == L * 3 && curve.zip(curve.tail).forall(p => p._1 <= p._2))
     assert(st.recallCurve().contains((5, curve)))
     st.delete(Seq(0L))
     assert(st.recallCurve().isEmpty, "a data change drops the curve")
+  }
+
+  private def vec(i: Long): Array[Double] =
+    rows(i, i + 1).head.getSeq[Float](1).map(_.toDouble).toArray
+
+  private def hits(df: DataFrame): Seq[(Long, Double)] =
+    df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+
+  test("a curve audited at k=10 certifies no depth at k=5, on every layout") {
+    val dir = graft.util.TempDirs.create("it_kaware").toString
+    val lsh = VectorStore.build(spark, rows(0, 500), s"$dir/lsh",
+      LshConfig(dim = Dim, seed = 11L))
+    val qi = QuantIndex.build(spark, rows(0, 500), s"$dir/quant",
+      QuantConfig(ivfCells = 4, tiers = Set(QuantTier.Pq)))
+    val panel = (0L until 4L).map(vec)
+    val q = panel.head
+    Seq[IndexTable](lsh, multi("it_kaware_mt"), qi).foreach { t =>
+      t.auditRecallCurve(panel, 10)
+      assert(t.depthForRecall(0.0, 10).contains(1))
+      assert(t.depthForRecall(0.0, 5).isEmpty, t.getClass.getSimpleName)
+      assert(hits(t.searchAtRecall(q, 5, 0.0)) == hits(t.search(q, 5, t.maxDepth)))
+    }
+    assert(new StoreAdapter.Lsh(spark, lsh).probesFor(0.0, 5) == lsh.maxDepth)
+    qi.auditAdcRecallCurve(panel, 10, QuantTier.Pq, Seq(10, 50))
+    assert(qi.coarseNForRecall(0.0, 10, QuantTier.Pq).contains(10))
+    assert(qi.coarseNForRecall(0.0, 5, QuantTier.Pq).isEmpty)
+    assert(qi.searchAdcAtRecall(q, 5, 0.0, QuantTier.Pq)._2 == -1)
   }
 }

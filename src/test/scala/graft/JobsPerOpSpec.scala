@@ -8,15 +8,15 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.lsh.LshConfig
-import graft.store.{MaintenancePolicy, MultiTableStore, QuantConfig,
-  QuantIndex, VectorStore}
+import graft.store.{IndexTable, MaintenancePolicy, MultiTableStore,
+  QuantConfig, QuantIndex, QuantTier, VectorStore}
 
-/** Spark jobs per store mutation, on all three index layouts. At
+/** Spark jobs per store operation, on all three index layouts. At
   * micro-batch volumes every job costs its scheduling floor, so the
-  * job count is the noise-free cost model of the write paths; this
-  * spec pins each (layout, operation) count at or below its recorded
-  * ceiling, so a refactor of the shared mutation code cannot add a job
-  * unnoticed. Lower a ceiling when a change removes a job.
+  * job count is the noise-free cost model of the write and read paths;
+  * this spec pins each (layout, operation) count at or below its
+  * recorded ceiling, so a refactor of the shared kernel cannot add a
+  * job unnoticed. Lower a ceiling when a change removes a job.
   */
 class JobsPerOpSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -86,7 +86,21 @@ class JobsPerOpSpec extends AnyFunSuite {
     ("quant", "applyChanges upsert") -> 10L,
     ("quant", "applyChanges delete") -> 10L,
     ("quant", "compact") -> 2L,
-    ("quant", "maintain") -> 2L)
+    ("quant", "maintain") -> 2L,
+    ("lsh", "search probed") -> 1L,
+    ("lsh", "search exact") -> 1L,
+    ("lsh", "auditRecallCurve") -> 4L,
+    ("lsh", "searchAtRecall") -> 1L,
+    ("multi", "search probed") -> 2L,
+    ("multi", "search exact") -> 1L,
+    ("multi", "auditRecallCurve") -> 5L,
+    ("multi", "searchAtRecall") -> 2L,
+    ("quant", "search probed") -> 1L,
+    ("quant", "search exact") -> 1L,
+    ("quant", "auditRecallCurve") -> 4L,
+    ("quant", "searchAtRecall") -> 1L,
+    ("quant", "auditAdcRecallCurve") -> 4L,
+    ("quant", "searchAdcAtRecall") -> 2L)
 
   /** The shared mutation script: every operation on one store, each
     * counted in isolation. `upsert` is None for a layout without it.
@@ -153,5 +167,48 @@ class JobsPerOpSpec extends AnyFunSuite {
     }
     info(f"quant  maintain               $n%2d jobs")
     check(Seq(("quant", "maintain") -> n))
+  }
+
+  /** Query vector of stored id `i`, read before any counting. */
+  private def vec(i: Long): Array[Double] =
+    rows(i, i + 1).head.getSeq[Float](1).map(_.toDouble).toArray
+
+  /** The shared read script on a freshly built table: a probed and an
+    * exact search, the probe-depth audit and the recall-targeted search
+    * it certifies (k = 10 on both), each counted in isolation.
+    */
+  private def readScript(layout: String, t: IndexTable,
+      extra: Seq[(String, () => Any)] = Nil): Seq[((String, String), Long)] = {
+    val q = vec(7L)
+    val panel = (0L until 4L).map(vec)
+    (Seq[(String, () => Any)](
+      "search probed" -> (() => t.search(q, 10, 2).collect()),
+      "search exact" -> (() => t.search(q, 10, t.maxDepth).collect()),
+      "auditRecallCurve" -> (() => t.auditRecallCurve(panel, 10)),
+      "searchAtRecall" -> (() => t.searchAtRecall(q, 10, 0.5).collect())) ++
+      extra.map { case (op, f) => op -> f }).map { case (op, body) =>
+        val n = counted(body())
+        info(f"$layout%-6s $op%-22s $n%2d jobs")
+        (layout, op) -> n
+      }
+  }
+
+  test("jobs per read: all three layouts") {
+    val dir = graft.util.TempDirs.create("jobs_read").toString
+    val lsh = VectorStore.build(spark, rows(0, 2000), s"$dir/lsh",
+      LshConfig(dim = Dim, seed = 7L))
+    val mt = MultiTableStore.build(spark, rows(0, 2000), s"$dir/multi",
+      LshConfig(numHashFunctions = 2, numHashTables = 3, dim = Dim,
+        seed = 7L, multiTable = true))
+    val qi = QuantIndex.build(spark, rows(0, 2000), s"$dir/quant",
+      QuantConfig(ivfCells = 8))
+    val q = vec(7L)
+    val panel = (0L until 4L).map(vec)
+    check(readScript("lsh", lsh) ++ readScript("multi", mt) ++
+      readScript("quant", qi, Seq(
+        "auditAdcRecallCurve" -> (() =>
+          qi.auditAdcRecallCurve(panel, 10, QuantTier.Pq)),
+        "searchAdcAtRecall" -> (() =>
+          qi.searchAdcAtRecall(q, 10, 0.5, QuantTier.Pq)._1.collect()))))
   }
 }

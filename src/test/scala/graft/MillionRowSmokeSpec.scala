@@ -119,9 +119,9 @@ class MillionRowSmokeSpec extends AnyFunSuite {
         .orderBy(col("d"), col("id")).limit(10)
         .collect().map(_.getLong(0)).toSeq
     def sq8(): Seq[Long] =
-      idx.searchSq8(q, 10).collect().map(_.getLong(0)).toSeq
+      idx.searchTwoStage(graft.store.QuantTier.Sq8, q, 10).collect().map(_.getLong(0)).toSeq
     def ivfpq(): Seq[Long] =
-      idx.searchIvfPq(q, 10, nprobe = 2).collect().map(_.getLong(0)).toSeq
+      idx.searchTwoStage(graft.store.QuantTier.Pq, q, 10, nprobe = 2).collect().map(_.getLong(0)).toSeq
 
     // correctness anchors: the query's own vector leads every tier,
     // and the re-ranked sq8 top-10 equals exact top-10 at this scale
@@ -227,7 +227,7 @@ class MillionRowSmokeSpec extends AnyFunSuite {
       "every compacted file must carry an id zone")
 
     val q = gen(777, 778).head.getSeq[Float](1).map(_.toDouble).toArray
-    val coarse = idx.coarseSq8(q, 100).select(col("id"), col("cell"))
+    val coarse = idx.coarse(graft.store.QuantTier.Sq8, q, 100).select(col("id"), col("cell"))
       .collect()
     val idCells = coarse.map(r =>
       (r.getLong(0), r.getAs[Number](1).intValue())).toSeq

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.FileSourceScanExec
-import graft.store.{QuantConfig, QuantIndex, QuantModel, VectorStore}
+import graft.store.{QuantConfig, QuantIndex, QuantModel, QuantTier, VectorStore}
 import graft.queries.VectorQueries
 import graft.lsh.LshConfig
 
@@ -65,20 +65,20 @@ class QuantIndexSpec extends AnyFunSuite {
       Tables.embeddings(spark, TestSpark.sf)
         .select(col("vec_id").as("id"), col("embedding")), q, 10)
       .collect().map(_.getLong(0)).toSet
-    val plain = idx.searchIvfPq(q, 10).collect().map(_.getLong(0)).toSet
+    val plain = idx.searchTwoStage(QuantTier.Pq, q, 10, nprobe = 2).collect().map(_.getLong(0)).toSet
     assert((got.toSet intersect exact).size >= (plain intersect exact).size,
       s"residual recall ${(got.toSet intersect exact).size} < " +
         s"plain ${(plain intersect exact).size}")
   }
 
   test("coarse scans read ONLY the code columns, never the embeddings") {
-    assert(readFields(idx.coarseSq8(q, 100)) == Set("id", "sq8"))
-    assert(readFields(idx.coarseInt4(q, 100)) == Set("id", "i4"))
-    assert(readFields(idx.coarsePq(q, 100)) == Set("id", "pq"))
+    assert(readFields(idx.coarse(QuantTier.Sq8, q, 100)) == Set("id", "sq8"))
+    assert(readFields(idx.coarse(QuantTier.Int4, q, 100)) == Set("id", "i4"))
+    assert(readFields(idx.coarse(QuantTier.Pq, q, 100)) == Set("id", "pq"))
   }
 
   test("re-rank reads embeddings under a pushed id filter") {
-    val cand = idx.candidateIds(idx.coarsePq(q, 100))
+    val cand = idx.candidateIds(idx.coarse(QuantTier.Pq, q, 100))
     assert(cand.size == 100)
     val rr = idx.exactDist(cand, q)
     assert(readFields(rr) == Set("id", "embedding"))
@@ -98,7 +98,7 @@ class QuantIndexSpec extends AnyFunSuite {
   }
 
   test("ivfpq coarse pass prunes partitions AND reads only code columns") {
-    val c = idx.coarseIvfPq(q, nprobe = 2, n = 100)
+    val c = idx.coarse(QuantTier.Pq, q, 100, nprobe = 2)
     assert(readFields(c) == Set("id", "pq"))
     val plan = c.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("cell"), plan)
@@ -107,7 +107,7 @@ class QuantIndexSpec extends AnyFunSuite {
         f.relation.location.listFiles(f.partitionFilters, f.dataFilters).size }
       .sum
     assert(scannedParts == 2, s"expected 2 probed cells, scanned $scannedParts")
-    val got = idx.searchIvfPq(q, 10).collect().map(_.getLong(0))
+    val got = idx.searchTwoStage(QuantTier.Pq, q, 10, nprobe = 2).collect().map(_.getLong(0))
     assert(got.length == 10 && got.head == 0L)
   }
 
@@ -126,8 +126,8 @@ class QuantIndexSpec extends AnyFunSuite {
     val probe = emb.where(col("id") === 0)
       .select(lit(99999L).as("id"), col("embedding"))
     q2.add(probe)
-    for ((name, df) <- Seq("sq8" -> q2.searchSq8(q, 2),
-                           "pq" -> q2.searchPq(q, 2),
+    for ((name, df) <- Seq("sq8" -> q2.searchTwoStage(QuantTier.Sq8, q, 2),
+                           "pq" -> q2.searchTwoStage(QuantTier.Pq, q, 2),
                            "ivf" -> q2.searchIvf(q, 2))) {
       val got = df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(got.map(_._1).toSet == Set(0L, 99999L) &&
@@ -145,10 +145,10 @@ class QuantIndexSpec extends AnyFunSuite {
     assert(qd.delete(Seq(0L, 1L, 2L)) == 3L)
     assert(qd.indexDf.count() == 497)
     assert(qd.delete(Seq(0L)) == 0L, "idempotent")
-    for ((name, df) <- Seq("sq8" -> qd.searchSq8(q, 10),
-                           "pq" -> qd.searchPq(q, 10),
+    for ((name, df) <- Seq("sq8" -> qd.searchTwoStage(QuantTier.Sq8, q, 10),
+                           "pq" -> qd.searchTwoStage(QuantTier.Pq, q, 10),
                            "ivf" -> qd.searchIvf(q, 10),
-                           "ivfpq" -> qd.searchIvfPq(q, 10))) {
+                           "ivfpq" -> qd.searchTwoStage(QuantTier.Pq, q, 10, nprobe = 2))) {
       val got = df.collect().map(_.getLong(0)).toSet
       assert(!got.exists(Set(0L, 1L, 2L)), s"$name returned a deleted id: $got")
     }
@@ -169,7 +169,7 @@ class QuantIndexSpec extends AnyFunSuite {
     assert(qu.indexDf.groupBy("id").count()
       .where(col("count") > 1).count() == 0, "no duplicate ids")
     // all 50 replacements + vec 0 itself are at distance 0 from q
-    val top = qu.searchSq8(q, 51, coarseN = 200).collect()
+    val top = qu.searchTwoStage(QuantTier.Sq8, q, 51, coarseN = 200).collect()
     assert(top.length == 51 && top.forall(_.getDouble(1) == 0.0),
       s"expected 51 zero-distance rows, got ${top.count(_.getDouble(1) == 0.0)}")
   }
@@ -179,17 +179,17 @@ class QuantIndexSpec extends AnyFunSuite {
       Tables.embeddings(spark, TestSpark.sf)
         .select(col("vec_id").as("id"), col("embedding")), q, 10)
       .collect().map(_.getLong(0)).toSet
-    for ((name, df) <- Seq("sq8" -> idx.searchSq8(q, 10),
-                           "int4" -> idx.searchInt4(q, 10),
-                           "pq" -> idx.searchPq(q, 10))) {
+    for ((name, df) <- Seq("sq8" -> idx.searchTwoStage(QuantTier.Sq8, q, 10),
+                           "int4" -> idx.searchTwoStage(QuantTier.Int4, q, 10),
+                           "pq" -> idx.searchTwoStage(QuantTier.Pq, q, 10))) {
       val got = df.collect().map(_.getLong(0))
       assert(got.length == 10)
       assert((got.toSet intersect exact).size >= 6,
         s"$name recall too low: ${(got.toSet intersect exact).size}/10")
       assert(got.head == 0L, s"$name should return the query vector first")
     }
-    val a = idx.searchPq(q, 10).collect().map(r => (r.getLong(0), r.getDouble(1)))
-    val b = idx.searchPq(q, 10).collect().map(r => (r.getLong(0), r.getDouble(1)))
+    val a = idx.searchTwoStage(QuantTier.Pq, q, 10).collect().map(r => (r.getLong(0), r.getDouble(1)))
+    val b = idx.searchTwoStage(QuantTier.Pq, q, 10).collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(a.toSeq == b.toSeq)
   }
 
@@ -211,7 +211,7 @@ class QuantIndexSpec extends AnyFunSuite {
     val q512 = QuantIndex.build(spark, df, s"$qdir/index",
       QuantConfig(pqSubspaces = 8, ivfCells = 8, sampleCap = 64))
     assert(q512.model.dim == dim && q512.model.sub == 64)
-    val hits = q512.searchPq(qv, 5, coarseN = 32).collect().map(_.getLong(0))
+    val hits = q512.searchTwoStage(QuantTier.Pq, qv, 5, coarseN = 32).collect().map(_.getLong(0))
     assert(hits.head == 0L, s"512-D PQ search should find the query first: ${hits.toSeq}")
     assert(q512.searchIvf(qv, 5, nprobe = 2).collect().map(_.getLong(0)).head == 0L)
 
@@ -240,14 +240,26 @@ class QuantIndexSpec extends AnyFunSuite {
     (1 to 3).foreach { b =>
       i2.add(emb.where(col("id") >= b * 100 + 100 && col("id") < b * 100 + 200))
     }
-    val before10 = i2.searchSq8(q, 10).collect()
+    val before10 = i2.searchTwoStage(QuantTier.Sq8, q, 10).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val (fBefore, fAfter) = i2.compact()
     assert(fAfter < fBefore, s"compaction did not reduce files: $fBefore -> $fAfter")
-    val after10 = i2.searchSq8(q, 10).collect()
+    val after10 = i2.searchTwoStage(QuantTier.Sq8, q, 10).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(after10 == before10)
     assert(i2.indexDf.count() == 500)
   }
 
+  test("the coarseN audit and the coarse search agree on every ADC tier") {
+    val (k, n) = (10, 15)
+    val exact = VectorStore.searchIn(idx.indexDf, q, k)
+      .collect().map(_.getLong(0)).toSet
+    Seq(QuantTier.Sq8, QuantTier.Int4, QuantTier.Pq, QuantTier.Opq,
+        QuantTier.Bitq).foreach { tier =>
+      val found = idx.candidateIds(idx.coarse(tier, q, n)).toSet
+      val recall = (found intersect exact).size.toDouble / k
+      assert(idx.auditAdcRecallCurve(Seq(q), k, tier, Seq(n)) == Seq(n -> recall),
+        s"tier $tier")
+    }
+  }
 }

@@ -97,7 +97,7 @@ class Round11Spec extends AnyFunSuite {
     assert(post > pre,
       f"retrain must improve drifted recall: pre=$pre%.3f post=$post%.3f")
     // the retrained index still serves every search tier
-    assert(retrained.searchSq8(panel.head, 10).count() == 10)
+    assert(retrained.searchTwoStage(graft.store.QuantTier.Sq8, panel.head, 10).count() == 10)
     assert(retrained.searchIvfPqResidual(panel.head, 10).count() == 10)
     // and reopens from disk with the NEW model
     val reopened = QuantIndex.open(spark, dir)
@@ -133,14 +133,14 @@ class Round11Spec extends AnyFunSuite {
     loaded.zip(curve).foreach { case (l, c) => assert(math.abs(l - c) < 1e-12) }
     // probe choice: smallest p whose MEASURED recall meets the target
     Seq(0.2, 0.5, 0.9).foreach { target =>
-      val p = reopened.probesForRecall(target)
+      val p = reopened.depthForRecall(target, 10).getOrElse(reopened.maxDepth)
       assert(curve(p - 1) >= target, s"chosen p=$p misses $target")
       assert(p == 1 || curve(p - 2) < target,
         s"p=$p not minimal for $target on $curve")
     }
     // an unachievable target degenerates to exact search, and a store
     // with no persisted audit does too (never under-deliver)
-    assert(reopened.probesForRecall(1.1) == 16)
+    assert(reopened.depthForRecall(1.1, 10).getOrElse(reopened.maxDepth) == 16)
     val q0 = panel.head
     val exact = store.search(q0, 10, probes = 16)
       .collect().map(_.getLong(0)).toSeq
@@ -151,7 +151,7 @@ class Round11Spec extends AnyFunSuite {
         .select(col("vec_id").as("id"), col("embedding")),
       graft.util.TempDirs.create("graft_sar2").toString + "/index",
       LshConfig(numHashTables = 16, dim = 64, seed = 42L))
-    assert(unaudited.probesForRecall(0.5) == 16)
+    assert(unaudited.depthForRecall(0.5, 10).getOrElse(unaudited.maxDepth) == 16)
   }
 
   test("avrograft PERMISSIVE on clean files matches default mode exactly") {

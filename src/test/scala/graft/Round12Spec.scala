@@ -44,7 +44,7 @@ class Round12Spec extends AnyFunSuite {
     val reopened = QuantIndex.open(spark, dir)
     assert(reopened.dataDir == dir)
     assert(reopened.indexDf.count() == rows)
-    assert(reopened.searchSq8(
+    assert(reopened.searchTwoStage(graft.store.QuantTier.Sq8, 
       graft.queries.VectorQueries.qvec(spark, TestSpark.sf, 0), 10).count() == 10)
 
     // A subsequent retrain skips the orphan's version number (never
@@ -84,7 +84,7 @@ class Round12Spec extends AnyFunSuite {
     val q = graft.queries.VectorQueries.qvec(spark, TestSpark.sf, 3)
     def ids(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.getLong(0)).toSeq
-    assert(ids(retrained.searchSq8(q, 10)) == ids(fresh.searchSq8(q, 10)))
+    assert(ids(retrained.searchTwoStage(graft.store.QuantTier.Sq8, q, 10)) == ids(fresh.searchTwoStage(graft.store.QuantTier.Sq8, q, 10)))
     assert(ids(retrained.searchIvf(q, 10)) == ids(fresh.searchIvf(q, 10)))
     assert(ids(retrained.searchIvfPqResidual(q, 10)) ==
       ids(fresh.searchIvfPqResidual(q, 10)))
@@ -110,7 +110,7 @@ class Round12Spec extends AnyFunSuite {
     }
     // minimal choice wherever a target is reachable
     val mid = curve.last * 0.6
-    store.probesForRecall(mid) match {
+    store.depthForRecall(mid, 10) match {
       case Some(p) =>
         assert(curve(p - 1) >= mid && (p == 1 || curve(p - 2) < mid))
         val q = panel.head
@@ -130,7 +130,7 @@ class Round12Spec extends AnyFunSuite {
     // mutation invalidates the persisted curve
     store.add(Seq((9999L, Seq.fill(64)(0.25))).toDF("id", "embedding"))
     assert(store.recallCurve().isEmpty)
-    assert(store.probesForRecall(0.1).isEmpty)
+    assert(store.depthForRecall(0.1, 10).isEmpty)
     store.delete(Seq(9999L))
   }
 
@@ -288,7 +288,7 @@ class Round12Spec extends AnyFunSuite {
         val base = idx.indexDf.where(col("id") < 200).count()
         if (base != 200) Some(s"base rows lost: $base != 200")
         else {
-          val ids = idx.searchSq8(qv, 5).collect().map(_.getLong(0)).toSeq
+          val ids = idx.searchTwoStage(graft.store.QuantTier.Sq8, qv, 5).collect().map(_.getLong(0)).toSeq
           if (ids.distinct.size != ids.size) Some(s"dup ids in search: $ids")
           else None
         }

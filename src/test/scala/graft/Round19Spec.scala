@@ -194,7 +194,7 @@ class Round19Spec extends AnyFunSuite {
     // searchOpq returns the exact metric on the re-ranked rows: top-1
     // for a stored vector's own embedding is itself at distance 0
     val q = graft.queries.VectorQueries.qvec(spark, TestSpark.sf, 7L)
-    val top = idx.searchOpq(q, 3).collect()
+    val top = idx.searchTwoStage(graft.store.QuantTier.Opq, q, 3).collect()
     assert(top.head.getLong(0) == 7L && top.head.getDouble(1) == 0.0)
   }
 

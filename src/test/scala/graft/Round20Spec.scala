@@ -63,14 +63,14 @@ class Round20Spec extends AnyFunSuite {
 
     // identical results where the tier exists: same codebooks (same
     // seed, same sample), same search
-    val a = all.searchPq(q, 10).collect().map(r => (r.getLong(0), r.getDouble(1)))
-    val b = pqOnly.searchPq(q, 10).collect().map(r => (r.getLong(0), r.getDouble(1)))
+    val a = all.searchTwoStage(QuantTier.Pq, q, 10).collect().map(r => (r.getLong(0), r.getDouble(1)))
+    val b = pqOnly.searchTwoStage(QuantTier.Pq, q, 10).collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(a.toSeq == b.toSeq)
 
     // an unselected tier refuses with a rebuild hint, not a plan error
-    val e1 = intercept[IllegalArgumentException](pqOnly.searchSq8(q, 10))
+    val e1 = intercept[IllegalArgumentException](pqOnly.searchTwoStage(QuantTier.Sq8, q, 10))
     assert(e1.getMessage.contains("sq8"))
-    val e2 = intercept[IllegalArgumentException](pqOnly.searchBitq(q, 10))
+    val e2 = intercept[IllegalArgumentException](pqOnly.searchTwoStage(QuantTier.Bitq, q, 10))
     assert(e2.getMessage.contains("sig"))
     val e3 = intercept[IllegalArgumentException](
       pqOnly.searchIvfPqResidual(q, 10))
@@ -92,15 +92,15 @@ class Round20Spec extends AnyFunSuite {
 
     val all = QuantIndex.build(spark, embRows(256),
       fresh("tiers_i4_all") + "/index", QuantConfig())
-    val a = all.searchInt4(q, 10).collect().map(r => (r.getLong(0), r.getDouble(1)))
-    val b = i4Only.searchInt4(q, 10).collect().map(r => (r.getLong(0), r.getDouble(1)))
+    val a = all.searchTwoStage(QuantTier.Int4, q, 10).collect().map(r => (r.getLong(0), r.getDouble(1)))
+    val b = i4Only.searchTwoStage(QuantTier.Int4, q, 10).collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(a.toSeq == b.toSeq)
 
     // reopen from disk: the selection survives the model JSON
     val reopened = QuantIndex.open(spark, dir)
     assert(reopened.model.cfg.tiers == Set(QuantTier.Int4))
     assert(reopened.model.sq8Enabled && !reopened.model.pqEnabled)
-    val c = reopened.searchInt4(q, 10).collect().map(r => (r.getLong(0), r.getDouble(1)))
+    val c = reopened.searchTwoStage(QuantTier.Int4, q, 10).collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(c.toSeq == a.toSeq)
   }
 
@@ -219,9 +219,9 @@ class Round20Spec extends AnyFunSuite {
 
     // the picker returns the smallest measured depth meeting the
     // target, and None above the curve's reach only if nothing does
-    val pick = idx.coarseNForRecall(curve.head._2, QuantTier.Opq)
+    val pick = idx.coarseNForRecall(curve.head._2, 10, QuantTier.Opq)
     assert(pick.contains(depths.head))
-    assert(idx.coarseNForRecall(1.0, QuantTier.Opq).contains(
+    assert(idx.coarseNForRecall(1.0, 10, QuantTier.Opq).contains(
       curve.find(_._2 >= 1.0).get._1))
 
     // the targeted search replays the picked budget; at target 1.0
@@ -251,7 +251,7 @@ class Round20Spec extends AnyFunSuite {
     // (the caller's exact fallback) instead of serving a stale curve
     idx.delete(Seq(299L))
     assert(idx.adcRecallCurve(QuantTier.Opq).isEmpty)
-    assert(idx.coarseNForRecall(0.1, QuantTier.Opq).isEmpty)
+    assert(idx.coarseNForRecall(0.1, 10, QuantTier.Opq).isEmpty)
     val (df2, n2) = idx.searchAdcAtRecall(q, 10, 0.1, QuantTier.Opq)
     assert(n2 == -1 && df2.count() == 10) // exact fallback
   }

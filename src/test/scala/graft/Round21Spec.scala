@@ -326,7 +326,7 @@ class Round21Spec extends AnyFunSuite {
         idx.adcRecallCurve(QuantTier.Pq).foreach { case (k, c) =>
           assert(k == 10 && c.nonEmpty)
         }
-        idx.coarseNForRecall(0.5, QuantTier.Pq)
+        idx.coarseNForRecall(0.5, 10, QuantTier.Pq)
         val (_, n) = idx.searchAdcAtRecall(q, 10, 0.0, QuantTier.Pq)
         assert(n == -1 || n >= 10)
       } catch { case t: Throwable => failure.compareAndSet(null, t) })

@@ -182,7 +182,7 @@ class Round6Spec extends AnyFunSuite {
   test("e13 coarse BQ pass scans only (id, sig) from the index") {
     val idx = graft.queries.QuantCache.forDir(spark, sf)
     val q = graft.queries.VectorQueries.qvec(spark, sf, 0L)
-    val p = idx.coarseBitq(q, 50).queryExecution.executedPlan.toString
+    val p = idx.coarse(graft.store.QuantTier.Bitq, q, 50).queryExecution.executedPlan.toString
     assert(p.contains("TakeOrderedAndProject"), s"top-k not pushed:\n$p")
     val read = "ReadSchema: [^\n]*".r.findFirstIn(p).getOrElse("")
     assert(read.contains("sig"), s"sig column not in scan: $read")
@@ -201,7 +201,7 @@ class Round6Spec extends AnyFunSuite {
   test("searchBitq returns k rows with the stored query vector first") {
     val idx = graft.queries.QuantCache.forDir(spark, sf)
     val q = graft.queries.VectorQueries.qvec(spark, sf, 0L)
-    val rows = idx.searchBitq(q, 10).collect()
+    val rows = idx.searchTwoStage(graft.store.QuantTier.Bitq, q, 10).collect()
     assert(rows.length == 10)
     // vec 0 has Hamming 0 to itself, so it always survives the coarse
     // cut, and the exact re-rank must put it first at distance 0

@@ -82,7 +82,7 @@ class TenMillionSmokeSpec extends AnyFunSuite {
         .orderBy(col("dist"), col("id")).limit(10).collect()
     }
     val tIvf = med3(idx.searchIvf(q, 10, nprobe = 2).collect())
-    val tIvfpq = med3(idx.searchIvfPq(q, 10, nprobe = 2).collect())
+    val tIvfpq = med3(idx.searchTwoStage(graft.store.QuantTier.Pq, q, 10, nprobe = 2).collect())
     info(f"wall: exact=$tExact%.2fs ivf(2/16)=$tIvf%.2fs ivfpq=$tIvfpq%.2fs")
     assert(tIvf < tExact,
       f"pruned IVF ($tIvf%.2fs) must beat the exact scan ($tExact%.2fs)")
