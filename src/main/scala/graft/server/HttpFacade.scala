@@ -2,6 +2,8 @@ package graft.server
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.{ExecutorService, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
 import graft.store.VectorStore
@@ -37,9 +39,32 @@ import graft.store.VectorStore
   * concurrency battery and the reference comparison pin).
   *
   * The facade is a thin driver-side adapter: every request plans the
-  * same DataFrames the Scala API plans. Throughput shape is the
-  * reference's too: interactive single requests; bulk ingest/search
-  * should use the DataFrame API directly.
+  * same DataFrames the Scala API plans; bulk ingest/search should use
+  * the DataFrame API directly.
+  *
+  * Concurrency contract. Requests run on a fixed pool of daemon worker
+  * threads (`graft-http-N`), one per `defaultParallelism` core of the
+  * session, as the reference coordinator fans requests out on a thread
+  * pool (`coordinator/coordinator.py:159-175`):
+  *
+  *  - reads (`/search`, `/stats`, `/health`) overlap: each resolves its
+  *    own committed snapshot (snapshot isolation), and Spark schedules
+  *    their jobs side by side, so one request's jobs fill the cores
+  *    another's leave idle;
+  *  - writes (`/add_vectors`, `/load_npz`) serialize on one facade
+  *    lock, so the auto-id rule (`max(existing)+1…`) never hands the
+  *    same ids to two requests; reads never take that lock;
+  *  - a client that stalls mid-upload holds one worker, not the server.
+  *
+  * [[stop]] closes the listener, waits a bounded time for in-flight
+  * requests, then shuts the pool down.
+  *
+  * Kept-alive clients: the JDK server leaves `TCP_NODELAY` off unless
+  * the system property `sun.net.httpserver.nodelay` is `true`, and then
+  * every reply on a reused connection waits ~40 ms on Nagle's algorithm
+  * and the client's delayed ACK. The facade sets the property before it
+  * creates its first server, unless the user has set it; the JDK reads
+  * it once per JVM.
   */
 final class HttpFacade(spark: SparkSession, adapter: StoreAdapter,
                        port: Int) {
@@ -48,8 +73,24 @@ final class HttpFacade(spark: SparkSession, adapter: StoreAdapter,
   def this(spark: SparkSession, store: VectorStore, port: Int) =
     this(spark, new StoreAdapter.Lsh(spark, store), port)
 
-  private val server: HttpServer =
+  private val server: HttpServer = {
+    // TCP_NODELAY unless the user chose; read once, at the JVM's first server
+    System.getProperties.putIfAbsent("sun.net.httpserver.nodelay", "true")
     HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+  }
+
+  private val pool: ExecutorService = {
+    val n = new AtomicInteger(0)
+    Executors.newFixedThreadPool(spark.sparkContext.defaultParallelism,
+      (r: Runnable) => {
+        val t = new Thread(r, s"graft-http-${n.getAndIncrement()}")
+        t.setDaemon(true)
+        t
+      })
+  }
+
+  /** Held by the write routes for their whole read-ids-then-commit. */
+  private val writeLock = new Object
 
   /** Bound port (useful when constructed with port=0 for an ephemeral one). */
   def boundPort: Int = server.getAddress.getPort
@@ -57,16 +98,26 @@ final class HttpFacade(spark: SparkSession, adapter: StoreAdapter,
   def start(): HttpFacade = {
     server.createContext("/health", (ex: HttpExchange) =>
       respond(ex, 200, Map("status" -> "healthy")))
-    server.createContext("/add_vectors", handle(addVectors))
-    server.createContext("/load_npz", handle(loadNpz))
+    server.createContext("/add_vectors", handle(locked(addVectors)))
+    server.createContext("/load_npz", handle(locked(loadNpz)))
     server.createContext("/search", handle(search))
     server.createContext("/stats", handle(stats))
-    server.setExecutor(null) // serial: Spark driver-side actions anyway
+    // reads overlap on snapshot isolation; writes take `writeLock`
+    server.setExecutor(pool)
     server.start()
     this
   }
 
-  def stop(): Unit = server.stop(0)
+  /** Stop accepting, give in-flight requests up to 5 s to finish
+    * (`HttpServer.stop` returns as soon as none is left), close every
+    * connection, then shut the worker pool down.
+    */
+  def stop(): Unit = {
+    server.stop(HttpFacade.StopGraceSec)
+    pool.shutdown()
+    if (!pool.awaitTermination(HttpFacade.StopGraceSec, TimeUnit.SECONDS))
+      pool.shutdownNow()
+  }
 
   // ------------------------------------------------------------ routes
 
@@ -216,6 +267,10 @@ final class HttpFacade(spark: SparkSession, adapter: StoreAdapter,
 
   // ---------------------------------------------------------- plumbing
 
+  private def locked(route: Map[String, Any] => (Int, Any))(
+      body: Map[String, Any]): (Int, Any) =
+    writeLock.synchronized(route(body))
+
   private def handle(route: Map[String, Any] => (Int, Any))(
       ex: HttpExchange): Unit = {
     val (code, payload) =
@@ -238,4 +293,10 @@ final class HttpFacade(spark: SparkSession, adapter: StoreAdapter,
     ex.getResponseBody.write(bytes)
     ex.close()
   }
+}
+
+object HttpFacade {
+
+  /** Seconds `stop` waits for in-flight requests, then for the pool. */
+  private val StopGraceSec = 5
 }

@@ -54,7 +54,9 @@ final class QuantIndex(
     dropResident()
   }
 
-  @transient private var resident: Option[DataFrame] = None
+  // volatile: facade worker threads read it on every search while a
+  // commit's `dropResident` writes it
+  @transient @volatile private var resident: Option[DataFrame] = None
 
   /** The snapshot's live rows: the resident copy after [[cacheIndex]],
     * else the committed file list ([[IndexTable.indexDf]]).

@@ -57,10 +57,14 @@ object RecallCurves {
       (if (c.depths.isEmpty) "" else s""""depths":${c.depths.mkString("[", ",", "]")},""") +
       s""""recall":${c.recall.map(d => f"$d%.17e").mkString("[", ",", "]")}}"""
 
-  /** The curve persisted at `path`, if any. */
+  /** The curve persisted at `path`, if any. One read, no `exists`
+    * probe first: a commit deletes the curve concurrently with
+    * recall-targeted searches, and a file gone between the probe and
+    * the read must mean "no curve" (the exact fallback), not an error.
+    */
   private[graft] def read(path: String): Option[Curve] =
-    if (!FsIo.exists(path)) None
-    else Some(parse(FsIo.readString(path)))
+    try Some(parse(FsIo.readString(path)))
+    catch { case _: java.io.FileNotFoundException => None }
 
   private[graft] def parse(text: String): Curve = {
     val m = Json.parse(text).asInstanceOf[Map[String, Any]]

@@ -365,6 +365,136 @@ class HttpFacadeSpec extends AnyFunSuite {
     } finally f.stop()
   }
 
+  // ------------------------------------------------ worker-pool serving
+
+  private def poolThreads(): Int = {
+    import scala.jdk.CollectionConverters._
+    Thread.getAllStackTraces.keySet.asScala
+      .count(_.getName.startsWith("graft-http-"))
+  }
+
+  /** Run `body(t)` on `n` threads released together; their results. */
+  private def together[T](n: Int)(body: Int => T): Seq[T] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
+    val gate = new java.util.concurrent.CountDownLatch(1)
+    try {
+      val futures = (0 until n).map { t =>
+        pool.submit(new java.util.concurrent.Callable[T] {
+          def call(): T = { gate.await(); body(t) }
+        })
+      }
+      gate.countDown()
+      futures.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+    } finally pool.shutdown()
+  }
+
+  test("a stalled upload does not block other clients") {
+    val port = facade.boundPort
+    val stalled = new java.net.Socket("127.0.0.1", port)
+    try {
+      val out = stalled.getOutputStream
+      out.write(("POST /add_vectors HTTP/1.1\r\nHost: 127.0.0.1\r\n" +
+        "Content-Type: application/json\r\nContent-Length: 1000\r\n\r\n" +
+        "{\"vectors\"").getBytes(java.nio.charset.StandardCharsets.US_ASCII))
+      out.flush()
+      Thread.sleep(200) // let the server pick the stalled exchange up
+      val q = graft.queries.VectorQueries.qvec(spark, TestSpark.sf, 0)
+      val other = HttpClient.newHttpClient()
+      def timed(b: HttpRequest.Builder): Int = other.send(
+        b.timeout(java.time.Duration.ofSeconds(5)).build(),
+        HttpResponse.BodyHandlers.ofString()).statusCode()
+      val uri = (path: String) => URI.create(s"http://127.0.0.1:$port$path")
+      assert(timed(HttpRequest.newBuilder(uri("/health")).GET()) == 200)
+      assert(timed(HttpRequest.newBuilder(uri("/search")).POST(
+        HttpRequest.BodyPublishers.ofString(
+          s"""{"query_vector": ${q.mkString("[", ",", "]")}, "k": 3}"""))) == 200)
+    } finally stalled.close()
+  }
+
+  test("concurrent auto-id adds get distinct ids that fill max+1 .. max+40") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_http_ids").toString
+    val store = graft.store.VectorStore.build(spark,
+      Tables.embeddings(spark, TestSpark.sf)
+        .select(col("vec_id").as("id"), col("embedding")),
+      s"$dir/index", graft.lsh.LshConfig(dim = 64, seed = 11L))
+    val base = store.indexDf.count()
+    val maxId = store.indexDf.agg(max("id")).head.getLong(0)
+    val f = new HttpFacade(spark, store, port = 0).start()
+    try {
+      val vecs = (0L until 5L)
+        .map(i => graft.queries.VectorQueries.qvec(spark, TestSpark.sf, i)
+          .mkString("[", ",", "]"))
+        .mkString("[", ",", "]")
+      val codes = together(8)(_ =>
+        postTo(f, "/add_vectors", s"""{"vectors": $vecs}""")._1)
+      assert(codes.forall(_ == 200), codes)
+      assert(store.indexDf.count() == base + 40)
+      val ids = store.indexDf.where(col("id") > maxId)
+        .select("id").collect().map(_.getLong(0)).sorted.toSeq
+      assert(ids == (maxId + 1 to maxId + 40))
+    } finally f.stop()
+  }
+
+  test("concurrent /search requests overlap their Spark jobs; stop " +
+      "leaves no worker threads") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_http_overlap").toString
+    val idx = graft.store.QuantIndex.build(spark,
+      Tables.embeddings(spark, TestSpark.sf)
+        .select(col("vec_id").as("id"), col("embedding")),
+      s"$dir/index")
+    // built up front: reading a query vector is a Spark job of its own
+    val queries = (0L until 20L).map(i =>
+      graft.queries.VectorQueries.qvec(spark, TestSpark.sf, i)
+        .mkString("[", ",", "]"))
+    val threadsBefore = poolThreads()
+    val f = new HttpFacade(spark,
+      new graft.server.StoreAdapter.Quant(spark, idx), port = 0).start()
+    val active = new java.util.concurrent.atomic.AtomicInteger(0)
+    val peak = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        peak.accumulateAndGet(active.incrementAndGet(), (a, b) => math.max(a, b))
+      override def onJobEnd(
+          e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        active.decrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graft.ListenerBridge.waitUntilEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      val codes = together(4) { t =>
+        (0 until 5).map { i =>
+          postTo(f, "/search",
+            s"""{"query_vector": ${queries(t * 5 + i)}, "k": 10}""")._1
+        }
+      }.flatten
+      assert(codes.forall(_ == 200), codes)
+      org.apache.spark.graft.ListenerBridge.waitUntilEmpty(sc)
+      info(s"peak concurrently active jobs: ${peak.get}")
+      assert(peak.get >= 2, s"searches never overlapped: peak ${peak.get}")
+    } finally {
+      sc.removeSparkListener(listener)
+      f.stop()
+    }
+    assert(poolThreads() == threadsBefore, "stop leaked worker threads")
+  }
+
+  test("kept-alive clients are not slowed by Nagle's algorithm") {
+    val keepAlive = HttpClient.newBuilder()
+      .version(HttpClient.Version.HTTP_1_1).build()
+    val req = HttpRequest.newBuilder(
+      URI.create(s"http://127.0.0.1:${facade.boundPort}/health")).GET().build()
+    val ms = (0 until 50).map { _ =>
+      val t0 = System.nanoTime()
+      val r = keepAlive.send(req, HttpResponse.BodyHandlers.ofString())
+      assert(r.statusCode() == 200)
+      (System.nanoTime() - t0) / 1e6
+    }.sorted
+    info(f"kept-alive /health p50 ${ms(25)}%.1f ms")
+    assert(ms(25) < 20.0, s"kept-alive p50 ${ms(25)} ms")
+  }
+
   test("POST /load_npz ingests NPZ shards server-side") {
     val npzDir = java.nio.file.Files.createTempDirectory("graft_http_npz").toString
     Tables.embeddings(spark, TestSpark.sf).limit(5)

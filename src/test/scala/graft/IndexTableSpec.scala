@@ -100,6 +100,28 @@ class IndexTableSpec extends AnyFunSuite {
     assert(RecallCurves.read(path).contains(odd)) // %.17e is exact
   }
 
+  test("recall-curve sidecar: a curve deleted while it is read reads as " +
+      "None, never as an error") {
+    val path = graft.util.TempDirs.create("it_curve_race").toString +
+      "/_recall_curve.json"
+    val c = RecallCurves.Curve(10, 1, Nil, Seq(1.0))
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    // a commit's invalidation racing the audit that rewrites the curve
+    val churn = new Thread(() =>
+      while (!stop.get()) {
+        RecallCurves.write(path, c)
+        graft.util.FsIo.delete(path)
+      })
+    churn.start()
+    try {
+      val t0 = System.nanoTime()
+      var seen = Set.empty[Option[RecallCurves.Curve]]
+      while (System.nanoTime() - t0 < 1500000000L)
+        seen += RecallCurves.read(path)
+      assert(seen.subsetOf(Set(None, Some(c))))
+    } finally { stop.set(true); churn.join() }
+  }
+
   test("multi-table recall audit: one corpus scan, curve persisted and invalidated") {
     val st = multi("it_mt_audit")
     val panel = (0L until 4L).map(i =>
