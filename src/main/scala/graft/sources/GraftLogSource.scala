@@ -145,7 +145,7 @@ final class GraftLogFileIndex(spark: SparkSession, dir: String,
   override def refresh(): Unit = ()
 
   /** Stat a file list in PARALLEL on the driver — per-file metadata
-    * RPCs were the measured hot spot of the add path (statsOf), and a
+    * RPCs were the measured hot spot of the add path (the footer pass), and a
     * serial loop here would put the same tax on every query's
     * planning. A production-scale deployment would record file sizes
     * in the commit like rows/zones are (making both methods below

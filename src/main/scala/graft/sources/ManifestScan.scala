@@ -1,11 +1,6 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.column.statistics.{BinaryStatistics,
-  DoubleStatistics, FloatStatistics, IntStatistics, LongStatistics}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -36,11 +31,12 @@ import graft.store.{FileLog, SnapshotVacuumedException, Zone, ZoneRange}
   * relational manifest all four for free:
   *
   *  - commits are CAS-versioned `_files.v{N}.json` (two appenders both
-  *    land via [[FileLog.transact]]'s read-merge-retry; racing
+  *    land via [[FileLog.append]]'s read-merge-retry; racing
   *    rewrites merge past append-only interlopers via
-  *    [[FileLog.commitRewrite]] or fail loudly)
-  *  - [[compact]] writes through [[FileLog.stagedWrite]] (writer-
-  *    private staging, exact created list, no shared `_temporary`)
+  *    [[FileLog.rewrite]] or fail loudly)
+  *  - every write goes through [[FileLog.write]] (writer-private
+  *    staging, exact created list, no shared `_temporary`, one footer
+  *    pass), so each commit logs its new files' row counts and zones
   *  - [[vacuum]] honors the same grace window as the index stores, so
   *    an in-flight reader of a recently replaced snapshot finishes
   *  - time travel is [[FileLog.readVersion]] — any retained version's
@@ -51,7 +47,7 @@ import graft.store.{FileLog, SnapshotVacuumedException, Zone, ZoneRange}
   * round-11 "INT64 only" gap closed, so the classic 100 TB pruning
   * columns (`o_orderdate`, `l_shipdate`, `documents.lang`) prune at
   * planning time too. Stats come from parquet FOOTERS only
-  * (`ParquetFileReader` metadata reads — no data pages touched):
+  * ([[FileLog.footers]]: metadata reads, no data pages touched):
   * production writers get these for free at commit time, exactly how
   * Delta/Iceberg populate their manifests. Pruning is always
   * conservative: a file is skipped only when a queried range is
@@ -92,10 +88,10 @@ object ManifestScan {
     * writer collects the same stats at write time without any read.
     */
   def buildManifest(spark: SparkSession, dir: String, cols: Seq[String]): Int = {
-    val files = FileLog.listDataFiles(spark, dir)
-    val entries = statsOf(spark, files.map(new Path(_)), cols)
-    commitEntries(spark, dir, files, entries)
-    files.size
+    val w = FileLog.footers(spark, FileLog.listDataFiles(spark, dir), cols)
+    FileLog.commit(spark, dir, w.files, ddlOf(spark, w.files),
+      zones = w.zones, rows = w.rows)
+    w.files.size
   }
 
   /** Incremental manifest maintenance for APPEND-style writers
@@ -118,30 +114,30 @@ object ManifestScan {
       added = fresh.size
       if (fresh.isEmpty) None
       else {
-        val entries = statsOf(spark, fresh.map(new Path(_)), cols)
-        val files = known.toSeq ++ fresh
-        Some(FileLog.Commit(files,
+        val w = FileLog.footers(spark, fresh, cols)
+        Some(FileLog.Commit(known.toSeq ++ fresh,
           cur.map(_.schemaDdl).filter(_.nonEmpty)
             .getOrElse(ddlOf(spark, fresh)),
           batchId = cur.map(_.batchId).getOrElse(-1L),
-          zones = cur.map(_.zones).getOrElse(Map.empty) ++
-            entries.map(e => e.path -> e.zones),
-          rows = cur.map(_.rows).getOrElse(Map.empty) ++
-            entries.map(e => e.path -> e.rows)))
+          zones = cur.map(_.zones).getOrElse(Map.empty) ++ w.zones,
+          rows = cur.map(_.rows).getOrElse(Map.empty) ++ w.rows))
       }
     }
     added
   }
 
-  /** Exactly-once micro-batch append for streaming sinks: the batch's
-    * rows land through a writer-private staged write, their footer
-    * stats are collected, and ONE CAS commit publishes files + zones +
-    * the batch-id watermark — a foreachBatch REPLAY (crash between the
+  /** Exactly-once micro-batch append for streaming sinks
+    * ([[FileLog.append]]): the batch's rows land through a
+    * writer-private staged write, their footer stats are collected, and
+    * ONE CAS commit publishes files + counts + zones + the batch-id
+    * watermark — a foreachBatch REPLAY (crash between the
     * data write and the stream's checkpoint commit) is a no-op instead
     * of duplicate rows, exactly the index stores' `add(batchId)`
     * contract (the r11 verdict's "batchId exists only in FileLog"
     * divergence, closed by unification). `shape` lets the sink
-    * range-cluster the batch before writing. Returns the number of
+    * range-cluster the batch before writing. The batch may widen the
+    * schema ([[FileLog.evolveSchema]]); a narrowing or retyping batch
+    * is refused before any file is written. Returns the number of
     * files appended (0 = declined replay).
     *
     * Maintenance note for LONG-RUNNING sinks: every batch commits one
@@ -156,72 +152,13 @@ object ManifestScan {
       batch: org.apache.spark.sql.DataFrame, cols: Seq[String],
       batchId: Long,
       shape: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-        identity): Int = {
-    if (batchId >= 0 && FileLog.exists(dir) &&
-        FileLog.read(dir).batchId >= batchId)
-      return 0 // replayed batch: already committed
-    if (FileLog.exists(dir)) { // fail fast on a narrowing/retyping
-      val ddl = FileLog.read(dir).schemaDdl // batch BEFORE writing its
-      if (ddl.nonEmpty) { evolveSchema(ddl, batch.schema); () } // files
-    }
-    val created = FileLog.stagedWrite(spark, dir, stage =>
-      shape(batch).write.mode("overwrite").parquet(stage))
-    val entries = statsOf(spark, created.map(new Path(_)), cols)
-    FileLog.transact(spark, dir) { cur =>
-      val curBid = cur.map(_.batchId).getOrElse(-1L)
-      if (batchId >= 0 && curBid >= batchId) None // replay raced in
-      else Some(FileLog.Commit(
-        cur.map(_.files).getOrElse(
-          FileLog.listDataFiles(spark, dir).filterNot(created.toSet))
-          ++ created,
-        cur.map(_.schemaDdl).filter(_.nonEmpty)
-          .map(d => evolveSchema(d, batch.schema).toDDL)
-          .getOrElse(batch.schema.toDDL),
-        math.max(batchId, curBid),
-        cur.map(_.zones).getOrElse(Map.empty) ++
-          entries.map(e => e.path -> e.zones),
-        cur.map(_.rows).getOrElse(Map.empty) ++
-          entries.map(e => e.path -> e.rows)))
-    }
-    created.size
-  }
+        identity): Int =
+    FileLog.append(spark, dir, batch.schema, cols, batchId, evolve = true) {
+      stage => shape(batch).write.mode("overwrite").parquet(stage)
+    }.fold(0)(_.files.size)
 
   private def ddlOf(spark: SparkSession, files: Seq[String]): String =
     if (files.isEmpty) "" else spark.read.parquet(files.head).schema.toDDL
-
-  /** SCHEMA EVOLUTION rule (widening-only, the Delta/Iceberg
-    * `mergeSchema` contract): an appended batch must carry every
-    * existing column with its exact logged type and may ADD trailing
-    * columns; the table's logical schema widens to include them. Files
-    * written before the widening simply lack the new columns — every
-    * read path resolves files AGAINST THE LOGGED SCHEMA
-    * ([[tableRead]]), so parquet's missing-column rule fills them with
-    * nulls, no rewrite of historical terabytes. Narrowing or retyping
-    * is refused loudly: silently dropping or coercing a column is how
-    * long-running pipelines corrupt downstream state.
-    */
-  private[graft] def evolveSchema(curDdl: String,
-      batch: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType = {
-    val cur = org.apache.spark.sql.types.StructType.fromDDL(curDdl)
-    val byName = batch.fields.map(f => f.name -> f).toMap
-    cur.fields.foreach { f =>
-      byName.get(f.name) match {
-        case None => throw new IllegalArgumentException(
-          s"appended batch is missing existing column '${f.name}' — " +
-            "appends may widen the schema, never narrow it")
-        case Some(b) if b.dataType != f.dataType =>
-          throw new IllegalArgumentException(
-            s"appended batch retypes column '${f.name}' " +
-              s"(${f.dataType.simpleString} -> ${b.dataType.simpleString}) — " +
-              "appends may widen the schema, never retype columns")
-        case _ => ()
-      }
-    }
-    val known = cur.fieldNames.toSet
-    org.apache.spark.sql.types.StructType(
-      cur.fields ++ batch.fields.filterNot(f => known(f.name)))
-  }
 
   /** Read `files` AS the logged table schema: files predating a schema
     * widening lack the added columns and read as nulls (parquet's
@@ -239,104 +176,6 @@ object ManifestScan {
     else spark.read
       .schema(org.apache.spark.sql.types.StructType.fromDDL(schemaDdl))
       .parquet(files: _*)
-
-  private def commitEntries(spark: SparkSession, dir: String,
-      files: Seq[String], entries: Seq[FileZones]): Int =
-    FileLog.commit(spark, dir, files, ddlOf(spark, files),
-      zones = entries.map(e => e.path -> e.zones).toMap,
-      rows = entries.map(e => e.path -> e.rows).toMap)
-
-  /** Footer-only stats collection for a batch of parquet files:
-    * row counts + typed min/max zones for `cols`. Metadata I/O only —
-    * no data pages are read. `private[graft]`: [[graft.store.FileLog]]
-    * reuses it to record zones in index commits.
-    */
-  private[graft] def statsOf(spark: SparkSession, paths: Seq[Path],
-      cols: Seq[String]): Seq[FileZones] = {
-    val conf = spark.sessionState.newHadoopConf()
-    // footer reads are independent metadata ops: read them in PARALLEL
-    // on the driver — a wide append commits tasks × partitions files,
-    // and a serial loop made the footer pass the measured hot spot of
-    // the add path (≈5 ms/footer × hundreds of files per batch)
-    import scala.jdk.CollectionConverters._
-    paths.asJava.parallelStream().map[FileZones] { p =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
-      try {
-        var rows = 0L
-        var blocks = 0L
-        val acc = scala.collection.mutable.Map.empty[String, Zone]
-        val covered = scala.collection.mutable.Map.empty[String, Long]
-        reader.getFooter.getBlocks.forEach { b =>
-          rows += b.getRowCount
-          blocks += 1
-          b.getColumns.forEach { c =>
-            val name = c.getPath.toDotString
-            if (cols.contains(name)) blockZone(c).foreach { z =>
-              acc.updateWith(name) {
-                case None => Some(z)
-                case Some(prev) => widen(prev, z)
-              }
-              covered.update(name, covered.getOrElse(name, 0L) + 1)
-            }
-          }
-        }
-        // A zone is recorded only when EVERY block carries usable stats
-        // for the column: parquet can't distinguish "stats not written"
-        // from "all null", so a zone built from a subset of blocks
-        // would exclude the uncovered blocks' rows and let readPruned
-        // skip a file that actually matches — silent row loss (r10
-        // ADVICE fix). Unzoned columns keep the file unconditionally.
-        FileZones(p.toString, rows,
-          acc.keys.filter(k => covered(k) == blocks)
-            .map(k => k -> acc(k)).toMap)
-      } finally reader.close()
-    }.collect(java.util.stream.Collectors.toList[FileZones]).asScala.toSeq
-  }
-
-  /** One block-column-chunk's zone, or None when its stats are absent
-    * or untrustworthy. INT64 and INT32 (plain ints, epoch-day DATEs)
-    * both land as [[Zone.I64]]; DOUBLE/FLOAT as [[Zone.F64]] — except
-    * when a bound is NaN (the parquet spec declares float min/max
-    * unreliable around NaN, so such files stay unzoned; ±0.0 needs no
-    * special-casing because pruning compares with primitive `>=`/`<=`,
-    * under which -0.0 == 0.0); UTF8-annotated BINARY as [[Zone.Str]]
-    * (Spark writes these with parquet's UNSIGNED byte order, which
-    * [[ZoneRange.u8cmp]] mirrors exactly).
-    */
-  private def blockZone(
-      c: org.apache.parquet.hadoop.metadata.ColumnChunkMetaData): Option[Zone] =
-    c.getStatistics match {
-      case s: LongStatistics if s.hasNonNullValue =>
-        Some(Zone.I64(s.getMin, s.getMax))
-      case s: IntStatistics if s.hasNonNullValue =>
-        Some(Zone.I64(s.getMin.toLong, s.getMax.toLong))
-      case s: DoubleStatistics
-          if s.hasNonNullValue && !s.getMin.isNaN && !s.getMax.isNaN =>
-        Some(Zone.F64(s.getMin, s.getMax))
-      case s: FloatStatistics
-          if s.hasNonNullValue && !s.getMin.isNaN && !s.getMax.isNaN =>
-        Some(Zone.F64(s.getMin.toDouble, s.getMax.toDouble))
-      case s: BinaryStatistics if s.hasNonNullValue &&
-          c.getPrimitiveType.getLogicalTypeAnnotation
-            .isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation] =>
-        Some(Zone.Str(s.genericGetMin.toStringUsingUTF8,
-          s.genericGetMax.toStringUsingUTF8))
-      case _ => None
-    }
-
-  /** Widen `a` to cover `b` (same kind by parquet schema construction;
-    * a mismatch — impossible within one column — drops the zone).
-    */
-  private def widen(a: Zone, b: Zone): Option[Zone] = (a, b) match {
-    case (Zone.I64(l1, h1), Zone.I64(l2, h2)) =>
-      Some(Zone.I64(math.min(l1, l2), math.max(h1, h2)))
-    case (Zone.F64(l1, h1), Zone.F64(l2, h2)) =>
-      Some(Zone.F64(math.min(l1, l2), math.max(h1, h2)))
-    case (Zone.Str(l1, h1), Zone.Str(l2, h2)) =>
-      Some(Zone.Str(if (ZoneRange.u8cmp(l1, l2) <= 0) l1 else l2,
-        if (ZoneRange.u8cmp(h1, h2) >= 0) h1 else h2))
-    case _ => None
-  }
 
   /** Entries of a historical version's manifest ([[FileLog.readVersion]]). */
   def loadManifestVersion(dir: String, v: Int): Seq[FileZones] =
@@ -503,9 +342,9 @@ object ManifestScan {
     * million micro-batches later a selective read would open a
     * million footers without this). Old files stay on disk so retained
     * versions keep reading their exact snapshot; [[vacuum]] reclaims
-    * them. Writes through [[FileLog.stagedWrite]] (writer-private
+    * them. Writes through [[FileLog.write]] (writer-private
     * staging — concurrent writers can't share a `_temporary`), commits
-    * through [[FileLog.commitRewrite]]: an append racing the
+    * through [[FileLog.rewrite]]: an append racing the
     * compaction MERGES (both land, zero row loss), a conflicting
     * rewrite fails loudly. Returns (filesBefore, filesAfter).
     */
@@ -513,19 +352,15 @@ object ManifestScan {
       targetFiles: Int, cols: Seq[String]): (Int, Int) = {
     val base = FileLog.read(dir)
     if (base.files.isEmpty) return (0, 0) // empty table: nothing to do
-    val created = FileLog.stagedWrite(spark, dir, stage =>
+    val w = FileLog.write(spark, dir, cols) { stage =>
       tableRead(spark, base.files, base.schemaDdl)
         .repartitionByRange(targetFiles, col(clusterCol))
         .sortWithinPartitions(clusterCol)
-        .write.mode("overwrite").parquet(stage))
-    val entries = statsOf(spark, created.map(new Path(_)), cols)
-    FileLog.commitRewrite(spark, dir, base,
-      removed = base.files.toSet, added = created,
-      schemaDdl = base.schemaDdl,
-      addedZones = entries.map(e => e.path -> e.zones).toMap,
-      addedRows = entries.map(e => e.path -> e.rows).toMap,
+        .write.mode("overwrite").parquet(stage)
+    }
+    FileLog.rewrite(spark, dir, base, base.files.toSet, w, base.schemaDdl,
       dataChange = false) // same rows, new files: the feed skips it
-    (base.files.size, created.size)
+    (base.files.size, w.files.size)
   }
 
   /** Delete every row matching ALL `ranges` (a conjunction of typed
@@ -535,7 +370,7 @@ object ManifestScan {
     * id range schedules rewrite tasks for a handful of files, never
     * the table (the GDPR-delete shape every log-structured table
     * format optimizes for). Untouched files are carried forward by
-    * reference. Commits through [[FileLog.commitRewrite]] with the
+    * reference. Commits through [[FileLog.rewrite]] with the
     * touched files as the declared READ SET, so concurrent appends
     * AND concurrent file-local rewrites of disjoint files (a delete
     * in another partition, a scoped compaction) all merge — only a
@@ -560,21 +395,15 @@ object ManifestScan {
     // schema widening read evolved columns as NULL yet are
     // conservatively zone-matched (no zone recorded for that column).
     val remaining = in.where(!coalesce(pred, lit(false)))
-    val created = FileLog.stagedWrite(spark, dir, stage =>
-      remaining.write.mode("overwrite").parquet(stage))
-    val entries = statsOf(spark, created.map(new Path(_)), cols)
-    FileLog.commitRewrite(spark, dir, base,
-      removed = touched.toSet, added = created,
-      schemaDdl = base.schemaDdl,
-      addedZones = entries.map(e => e.path -> e.zones).toMap,
-      addedRows = entries.map(e => e.path -> e.rows).toMap,
+    val w = FileLog.write(spark, dir, cols) { stage =>
+      remaining.write.mode("overwrite").parquet(stage)
+    }
+    FileLog.rewrite(spark, dir, base, touched.toSet, w, base.schemaDdl,
       readSet = Some(touched.toSet))
-    // Deleted-row count from FOOTER metadata, not count() jobs: the
-    // pre-state is exactly the touched files, the post-state exactly
-    // the created ones (whose footers `entries` already read for the
-    // commit's zones) — two Spark count jobs replaced by one driver-
-    // side metadata read (per-commit job floor, FeedProbe r16).
-    FileLog.footerRows(spark, touched) - entries.map(_.rows).sum
+    // Deleted-row count from the log's row counts, not count() jobs:
+    // the pre-state is exactly the touched files, the post-state
+    // exactly the written ones (per-commit job floor, r16).
+    FileLog.fileRows(spark, base, touched).values.sum - w.totalRows
   }
 
   /** MERGE-style UPSERT by key: rows of `updates` REPLACE existing
@@ -594,11 +423,11 @@ object ManifestScan {
     * shuffled multi-partition batch's winner is partition-layout-
     * dependent, so callers with duplicate keys should pass `seqCol`.
     *
-    * Schema evolution applies ([[evolveSchema]]): an update batch may
+    * Schema evolution applies ([[FileLog.evolveSchema]]): an update batch may
     * widen the schema; rewritten files materialize the new columns,
     * untouched pre-evolution files keep reading them as null.
     *
-    * Commits through [[FileLog.commitRewrite]] with the touched files
+    * Commits through [[FileLog.rewrite]] with the touched files
     * as the declared read set (same snapshot semantics as [[delete]]:
     * concurrent disjoint file-local rewrites merge; overlapping ones
     * fail loudly). The change feed shows an upsert as the old images'
@@ -619,7 +448,8 @@ object ManifestScan {
         "buildManifest before upserting")
     val base = FileLog.read(dir)
     val ddl =
-      if (base.schemaDdl.nonEmpty) evolveSchema(base.schemaDdl, deduped.schema).toDDL
+      if (base.schemaDdl.nonEmpty)
+      FileLog.evolveSchema(base.schemaDdl, deduped.schema).toDDL
       else deduped.schema.toDDL
     val outCols = org.apache.spark.sql.types.StructType.fromDDL(ddl)
       .fieldNames.toSeq
@@ -646,22 +476,17 @@ object ManifestScan {
       .join(deduped.select(keyCol), Seq(keyCol), "left_anti")
     val merged = remaining.select(outCols.map(col): _*)
       .unionByName(deduped.select(outCols.map(col): _*))
-    val created = FileLog.stagedWrite(spark, dir, stage =>
-      merged.write.mode("overwrite").parquet(stage))
-    val entries = statsOf(spark, created.map(new Path(_)), cols)
-    FileLog.commitRewrite(spark, dir, base,
-      removed = touched.toSet, added = created,
-      schemaDdl = ddl,
-      addedZones = entries.map(e => e.path -> e.zones).toMap,
-      addedRows = entries.map(e => e.path -> e.rows).toMap,
+    val w = FileLog.write(spark, dir, cols) { stage =>
+      merged.write.mode("overwrite").parquet(stage)
+    }
+    FileLog.rewrite(spark, dir, base, touched.toSet, w, ddl,
       readSet = Some(touched.toSet))
-    // Replaced-row count from FOOTER metadata (see [[delete]]): the
-    // created files hold remaining ∪ deduped, so nRemaining =
-    // createdRows − nUpdates and nReplaced = touchedRows − nRemaining —
-    // two count() jobs (existing.count + remaining.count) replaced by
-    // metadata reads (`entries` was already collected for the commit).
-    val nRemaining = entries.map(_.rows).sum - nUpdates
-    val nReplaced = FileLog.footerRows(spark, touched) - nRemaining
+    // Replaced-row count from logged row counts (see [[delete]]): the
+    // written files hold remaining ∪ deduped, so nRemaining =
+    // writtenRows − nUpdates and nReplaced = touchedRows − nRemaining —
+    // two count() jobs (existing.count + remaining.count) replaced.
+    val nRemaining = w.totalRows - nUpdates
+    val nReplaced = FileLog.fileRows(spark, base, touched).values.sum - nRemaining
     (nReplaced, nUpdates - nReplaced)
   }
 
@@ -825,20 +650,16 @@ object ManifestScan {
       ranges.forall { case (c, r) => zs.get(c).forall(_.overlaps(r)) }
     }
     if (touched.size < 2) return (touched.size, touched.size)
-    val created = FileLog.stagedWrite(spark, dir, stage =>
+    val w = FileLog.write(spark, dir, cols) { stage =>
       tableRead(spark, touched, base.schemaDdl)
         .repartitionByRange(targetFiles, col(clusterCol))
         .sortWithinPartitions(clusterCol)
-        .write.mode("overwrite").parquet(stage))
-    val entries = statsOf(spark, created.map(new Path(_)), cols)
-    FileLog.commitRewrite(spark, dir, base,
-      removed = touched.toSet, added = created,
-      schemaDdl = base.schemaDdl,
-      addedZones = entries.map(e => e.path -> e.zones).toMap,
-      addedRows = entries.map(e => e.path -> e.rows).toMap,
+        .write.mode("overwrite").parquet(stage)
+    }
+    FileLog.rewrite(spark, dir, base, touched.toSet, w, base.schemaDdl,
       dataChange = false, // same rows, new files
       readSet = Some(touched.toSet))
-    (touched.size, created.size)
+    (touched.size, w.files.size)
   }
 
   /** Drop history ([[FileLog.vacuum]]): retain the newest `retainLast`

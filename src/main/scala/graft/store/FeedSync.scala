@@ -42,7 +42,7 @@ object FeedSync {
   /** [[net]] plus (insert count, delete count) from ONE aggregate job
     * over the checkpointed reduction — replaces the separate
     * `ups.count()` + `dels.isEmpty` probes every sync window paid
-    * (two jobs per window; the FeedProbe decomposition measured the
+    * (two jobs per window; the r16 feed decomposition measured the
     * sync loop's wall as almost entirely per-job floor at micro-batch
     * volumes). Counts are identical by construction: the reduction
     * assigns each id exactly one net action.

@@ -3,7 +3,14 @@ package graft.store
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.column.statistics.{BinaryStatistics,
+  DoubleStatistics, FloatStatistics, IntStatistics, LongStatistics}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ColumnChunkMetaData
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.StructType
 
 import graft.server.Json
 import graft.util.FsIo
@@ -37,8 +44,8 @@ final class SnapshotVacuumedException(msg: String, cause: Throwable)
   * closes that gap, and this is its minimal core, the same shape as
   * [[graft.sources.ManifestScan]]'s versioned sidecar: every commit
   * writes an IMMUTABLE `_files.v{N}.json` holding the live file SET
-  * (plus schema DDL, the streaming batch watermark, and optional
-  * per-file zone maps), and `_files.json` is a convenience pointer to
+  * (plus schema DDL, the streaming batch watermark, and per-file row
+  * counts and zone maps), and `_files.json` is a convenience pointer to
   * the newest one. Readers resolve the newest version file once per
   * scan and read an immutable list — they see the pre-commit or
   * post-commit table, never a torn one; replaced files stay on disk
@@ -50,6 +57,13 @@ final class SnapshotVacuumedException(msg: String, cause: Throwable)
   * a store created by a streaming sink before its first batch, or
   * fully deleted — reads back with its real schema instead of failing
   * parquet inference on a fileless directory.
+  *
+  * One write path: a writer stages its files and reads their footers
+  * once ([[write]], yielding each new file's row count and zones), then
+  * commits them as an [[append]] or a [[rewrite]]; every commit kind
+  * ([[commit]], [[transact]], [[commitRewrite]]) claims its version in
+  * ONE retry loop. So every commit records the row count of each file
+  * it adds, and the layout's zones next to it.
   *
   * Concurrency contract (mirrored in README "Concurrency contract"):
   * the version file is created with a compare-and-swap
@@ -135,10 +149,13 @@ object FileLog {
     *                  utf8), collected from parquet footers at commit
     *                  time; lets scans skip files at PLANNING time
     *                  (the ManifestScan idea unified into one log)
-    * @param rows      optional per-file row counts (footer metadata,
-    *                  collected with the zones) — lets planning-time
-    *                  consumers (compaction sizing, stats) avoid
-    *                  opening footers again
+    * @param rows      per-file row counts (footer metadata, collected
+    *                  with the zones): every commit records one for each
+    *                  file it adds, so planning-time consumers
+    *                  ([[fileRows]]: delete counts, compaction sizing)
+    *                  avoid opening footers again. Files adopted from an
+    *                  unlogged directory, and logs written before counts
+    *                  were recorded, lack them.
     * @param dataChange whether this version changed the table's ROWS
     *                  (Delta's `dataChange` bit). Appends, deletes and
     *                  upserts set it; COMPACTION rearranges the same
@@ -465,8 +482,8 @@ object FileLog {
     * smaller than a snapshot; a full CHECKPOINT otherwise (first
     * commit, adoption states with no known chain, every
     * [[checkpointInterval]]-th version, whole-table rewrites, tiny
-    * tables). Writers that never read their predecessor
-    * ([[commit]]/[[commitAt]]) always render checkpoints.
+    * tables). [[commit]], which never reads its predecessor, always
+    * renders checkpoints.
     */
   private def renderRecord(prev: Option[State], c: Commit,
       next: Int): String =
@@ -518,31 +535,59 @@ object FileLog {
     Some(Json.write(m))
   }
 
+  /** The one version-claiming loop under every commit kind: `attempt`
+    * reads whatever state it derives from and returns the version to
+    * claim and the record to write there (None = decline). The record
+    * is created exclusively ([[FsIo.writeStringExclusive]]); a lost race
+    * re-runs `attempt`, which re-reads and re-derives. Returns the
+    * committed version, or −1 if `attempt` declined.
+    */
+  private def claim(dir: String)(attempt: => Option[(Int, String)]): Int = {
+    var attempts = 0
+    while (true) {
+      attempt match {
+        case None => return -1
+        case Some((next, json)) =>
+          if (FsIo.writeStringExclusive(versionPath(dir, next), json)) {
+            FsIo.writeStringAtomic(currentPath(dir), json)
+            return next
+          }
+      }
+      attempts += 1
+      if (attempts > 1000) throw new ConcurrentCommitException(
+        s"gave up committing under $dir after $attempts lost version races")
+    }
+    -1 // unreachable
+  }
+
+  /** The version after `prev` and its record: CAS at EXACTLY
+    * prev.version + 1 — never a fresh listing's newest + 1: an
+    * interloper committing between the read and the CAS would
+    * otherwise be silently overwritten by a state derived from the
+    * stale `prev` (TOCTOU caught by the Round17 racing-refresh
+    * battery). Targeting prev + 1 turns that interleaving into a CAS
+    * loss → re-read and re-derive.
+    */
+  private def after(prev: Option[State], c: Commit): (Int, String) = {
+    val next = prev.map(_.version).getOrElse(0) + 1
+    next -> renderRecord(prev, c, next)
+  }
+
   /** Commit a new live file set, unconditionally (retries a lost CAS
     * with the same content — correct ONLY for writers whose content
     * does not depend on the state they read: initial builds and
     * full rewrites that own the directory). Mutation paths use
-    * [[transact]] (append-merge) or [[commitAt]] (fail-on-conflict).
-    * Returns the version number.
+    * [[append]]/[[transact]] (append-merge) or [[rewrite]]
+    * (merge-or-fail). Returns the version number.
     */
   def commit(spark: SparkSession, dir: String, files: Seq[String],
              schemaDdl: String, batchId: Long = -1L,
              zones: Map[String, Map[String, Zone]] = Map.empty,
-             rows: Map[String, Long] = Map.empty): Int = {
-    var attempts = 0
-    while (true) {
+             rows: Map[String, Long] = Map.empty): Int =
+    claim(dir) {
       val next = versions(dir).lastOption.getOrElse(0) + 1
-      val json = render(Commit(files, schemaDdl, batchId, zones, rows), next)
-      if (FsIo.writeStringExclusive(versionPath(dir, next), json)) {
-        FsIo.writeStringAtomic(currentPath(dir), json)
-        return next
-      }
-      attempts += 1
-      if (attempts > 1000) throw new ConcurrentCommitException(
-        s"gave up claiming a log version under $dir after $attempts attempts")
+      Some(next -> render(Commit(files, schemaDdl, batchId, zones, rows), next))
     }
-    -1 // unreachable
-  }
 
   /** Read-compute-CAS loop for APPEND-shaped writers: `f` receives the
     * current state (None = unlogged directory) and returns the next
@@ -552,54 +597,82 @@ object FileLog {
     * commit (returned None — the idempotent-replay no-op).
     */
   def transact(spark: SparkSession, dir: String)(
-      f: Option[State] => Option[Commit]): Int = {
-    var attempts = 0
-    while (true) {
+      f: Option[State] => Option[Commit]): Int =
+    claim(dir) {
       val cur = if (exists(dir)) Some(read(dir)) else None
-      f(cur) match {
-        case None => return -1
-        case Some(c) =>
-          // CAS at EXACTLY cur.version + 1 — never a fresh listing's
-          // newest + 1: an interloper committing between our read and
-          // our CAS would otherwise be silently overwritten by a state
-          // derived from the stale `cur` (TOCTOU caught by the
-          // Round17 racing-refresh battery). Targeting cur+1 turns
-          // that interleaving into a CAS loss → re-read and re-merge.
-          val next = cur.map(_.version).getOrElse(0) + 1
-          val json = renderRecord(cur, c, next)
-          if (FsIo.writeStringExclusive(versionPath(dir, next), json)) {
-            FsIo.writeStringAtomic(currentPath(dir), json)
-            return next
-          }
-      }
-      attempts += 1
-      if (attempts > 1000) throw new ConcurrentCommitException(
-        s"gave up committing under $dir after $attempts lost races")
+      f(cur).map(after(cur, _))
     }
-    -1 // unreachable
+
+  /** What one staged write produced: the created files, each one's row
+    * count, and its zones for the layout's zone columns (a file with no
+    * usable zone has no entry) — from ONE footer pass ([[footers]]).
+    */
+  final case class Written(files: Seq[String], rows: Map[String, Long],
+      zones: Map[String, Map[String, Zone]]) {
+    def totalRows: Long = rows.values.sum
   }
 
-  /** CAS commit pinned to a base snapshot: succeeds only as version
-    * `base + 1`. The strictest rewrite form — any concurrent commit at
-    * all fails it. Mutations whose read set is the WHOLE base snapshot
-    * and that can't merge even with appends use this; most rewrites
-    * should use [[commitRewrite]], which merges past append-only
-    * interlopers.
+  /** The write primitive: [[stagedWrite]] `body` into `dir`, then one
+    * footer pass over exactly the created files, whose counts and
+    * zones every commit records ([[append]], [[rewrite]]).
     */
-  def commitAt(spark: SparkSession, dir: String, base: Int,
-      files: Seq[String], schemaDdl: String, batchId: Long = -1L,
-      zones: Map[String, Map[String, Zone]] = Map.empty,
-      rows: Map[String, Long] = Map.empty): Int = {
-    val next = base + 1
-    val json = render(Commit(files, schemaDdl, batchId, zones, rows), next)
-    if (!FsIo.writeStringExclusive(versionPath(dir, next), json))
-      throw new ConcurrentCommitException(
-        s"version $next under $dir was claimed by a concurrent writer; " +
-          s"this rewrite was derived from version $base and cannot merge — " +
-          "re-read and retry the operation")
-    FsIo.writeStringAtomic(currentPath(dir), json)
-    next
+  def write(spark: SparkSession, dir: String, zoneCols: Seq[String])(
+      body: String => Unit): Written =
+    footers(spark, stagedWrite(spark, dir, body), zoneCols)
+
+  /** The append primitive: one commit that adds the files `body`
+    * writes, with their counts and zones, merged past concurrent
+    * appends ([[transact]]'s read-merge-retry).
+    *
+    *  - `batchId` ≥ 0 is the exactly-once handle of a streaming sink:
+    *    a batch at or below the log's watermark is a replay, declined
+    *    before writing (and again inside the loop, should a replay
+    *    race in); the commit carries the highest folded batch id.
+    *  - `evolve` = the table's schema widens to include `schema`'s new
+    *    trailing columns ([[evolveSchema]]), checked against the log
+    *    before writing, so a refused batch writes no file; otherwise
+    *    the commit carries `schema` as is.
+    *  - An unlogged directory with data is ADOPTED: its physical
+    *    listing (the staged files are outside it by construction)
+    *    becomes live next to the batch, so pre-existing rows survive.
+    *
+    * Returns the written files, None when the batch was declined.
+    */
+  def append(spark: SparkSession, dir: String, schema: StructType,
+      zoneCols: Seq[String], batchId: Long = -1L, evolve: Boolean = false)(
+      body: String => Unit): Option[Written] = {
+    def ddlOver(cur: Option[State]): String =
+      cur.map(_.schemaDdl).filter(_.nonEmpty && evolve)
+        .map(evolveSchema(_, schema)).getOrElse(schema).toDDL
+    if (batchId >= 0 || evolve) { // the only pre-write read, when consulted
+      val pre = if (exists(dir)) Some(read(dir)) else None
+      if (batchId >= 0 && pre.exists(_.batchId >= batchId))
+        return None // replayed batch: already committed
+      ddlOver(pre) // a refused schema change throws before any write
+    }
+    val w = write(spark, dir, zoneCols)(body)
+    val v = transact(spark, dir) { cur =>
+      val curBid = cur.map(_.batchId).getOrElse(-1L)
+      if (batchId >= 0 && curBid >= batchId) None // replay raced in
+      else Some(Commit(
+        cur.map(_.files).getOrElse(
+          listDataFiles(spark, dir).filterNot(w.files.toSet)) ++ w.files,
+        ddlOver(cur), math.max(batchId, curBid),
+        cur.map(_.zones).getOrElse(Map.empty) ++ w.zones,
+        cur.map(_.rows).getOrElse(Map.empty) ++ w.rows))
+    }
+    if (v < 0) None else Some(w)
   }
+
+  /** The rewrite primitive: [[commitRewrite]] of a [[write]]'s result,
+    * so the replacement files are logged with their counts and zones.
+    */
+  def rewrite(spark: SparkSession, dir: String, base: State,
+      removed: Set[String], written: Written, schemaDdl: String,
+      dataChange: Boolean = true,
+      readSet: Option[Set[String]] = None): Int =
+    commitRewrite(spark, dir, base, removed, written.files, schemaDdl,
+      written.zones, written.rows, dataChange, readSet)
 
   /** Optimistic REWRITE commit (Delta-style conflict detection): the
     * writer derived `added` from snapshot `base` by rewriting exactly
@@ -643,10 +716,9 @@ object FileLog {
     val readFiles = readSet.getOrElse(base.files.toSet)
     require(removed.subsetOf(readFiles),
       "a rewrite's removed files must be inside its declared read set")
-    var attempts = 0
-    while (true) {
+    claim(dir) {
       // unlogged dir (adopted base at version 0): the rewrite's commit
-      // seeds the log, exactly like commitAt did
+      // seeds the log as version 1
       val cur = if (exists(dir)) read(dir) else base
       val curSet = cur.files.toSet
       if (cur.version != base.version &&
@@ -672,34 +744,19 @@ object FileLog {
       // concurrent metadata change).
       if (cur.version != base.version && cur.schemaDdl.nonEmpty &&
           base.schemaDdl.nonEmpty && schemaDdl.nonEmpty) {
-        val curCols = org.apache.spark.sql.types.StructType
-          .fromDDL(cur.schemaDdl).fieldNames.toSet
-        val baseCols = org.apache.spark.sql.types.StructType
-          .fromDDL(base.schemaDdl).fieldNames.toSet
-        val callerCols = org.apache.spark.sql.types.StructType
-          .fromDDL(schemaDdl).fieldNames
-        val dropped = callerCols.filter(c => baseCols(c) && !curCols(c))
+        val curCols = StructType.fromDDL(cur.schemaDdl).fieldNames.toSet
+        val baseCols = StructType.fromDDL(base.schemaDdl).fieldNames.toSet
+        val dropped = StructType.fromDDL(schemaDdl).fieldNames
+          .filter(c => baseCols(c) && !curCols(c))
         if (dropped.nonEmpty) throw new ConcurrentCommitException(
           s"a concurrent commit under $dir dropped column(s) " +
             s"${dropped.mkString(", ")} this rewrite (derived from " +
             s"version ${base.version}) still carries — merging would " +
             "resurrect them; re-read and retry the operation")
       }
-      val mergedDdl = mergeSchemas(schemaDdl, cur.schemaDdl)
-      // CAS at exactly cur.version + 1 (see transact): an interloper
-      // landing after our read makes this CAS fail → re-examine
-      val next = cur.version + 1
-      val json = renderRecord(Some(cur),
-        Commit(files, mergedDdl, batchId, zones, rows, dataChange), next)
-      if (FsIo.writeStringExclusive(versionPath(dir, next), json)) {
-        FsIo.writeStringAtomic(currentPath(dir), json)
-        return next
-      }
-      attempts += 1 // lost the version race: re-examine and retry
-      if (attempts > 1000) throw new ConcurrentCommitException(
-        s"gave up rewriting under $dir after $attempts lost races")
+      Some(after(Some(cur), Commit(files, mergeSchemas(schemaDdl, cur.schemaDdl),
+        batchId, zones, rows, dataChange)))
     }
-    -1 // unreachable
   }
 
   /** Wider union of two schema DDLs — order-preserving (`a`'s columns
@@ -713,7 +770,6 @@ object FileLog {
   private def mergeSchemas(a: String, b: String): String = {
     if (a.isEmpty) return b
     if (b.isEmpty || a == b) return a
-    import org.apache.spark.sql.types.StructType
     val sa = StructType.fromDDL(a)
     val sb = StructType.fromDDL(b)
     val inB = sb.fields.map(f => f.name -> f).toMap
@@ -727,6 +783,38 @@ object FileLog {
     }
     val known = sa.fieldNames.toSet
     StructType(sa.fields ++ sb.fields.filterNot(f => known(f.name))).toDDL
+  }
+
+  /** SCHEMA EVOLUTION rule (widening-only, the Delta/Iceberg
+    * `mergeSchema` contract): an appended batch must carry every
+    * existing column with its exact logged type and may ADD trailing
+    * columns; the table's logical schema widens to include them. Files
+    * written before the widening simply lack the new columns — every
+    * read path resolves files AGAINST THE LOGGED SCHEMA, so parquet's
+    * missing-column rule fills them with nulls, no rewrite of
+    * historical terabytes. Narrowing or retyping is refused loudly:
+    * silently dropping or coercing a column is how long-running
+    * pipelines corrupt downstream state.
+    */
+  private[graft] def evolveSchema(curDdl: String,
+      batch: StructType): StructType = {
+    val cur = StructType.fromDDL(curDdl)
+    val byName = batch.fields.map(f => f.name -> f).toMap
+    cur.fields.foreach { f =>
+      byName.get(f.name) match {
+        case None => throw new IllegalArgumentException(
+          s"appended batch is missing existing column '${f.name}' — " +
+            "appends may widen the schema, never narrow it")
+        case Some(b) if b.dataType != f.dataType =>
+          throw new IllegalArgumentException(
+            s"appended batch retypes column '${f.name}' " +
+              s"(${f.dataType.simpleString} -> ${b.dataType.simpleString}) — " +
+              "appends may widen the schema, never retype columns")
+        case _ => ()
+      }
+    }
+    val known = cur.fieldNames.toSet
+    StructType(cur.fields ++ batch.fields.filterNot(f => known(f.name)))
   }
 
   /** Every parquet data file physically under `dir` (recursive —
@@ -753,52 +841,108 @@ object FileLog {
     out.result().sorted
   }
 
-  /** Per-file typed min/max zones for `cols`, collected from parquet
-    * FOOTERS (metadata-only I/O — no data pages), for recording in a
-    * commit: readers can then skip files at PLANNING time when a
-    * bounded-id scan (the quant re-rank) provably misses them. Reuses
-    * [[graft.sources.ManifestScan]]'s collector, including its
-    * all-blocks rule (a column partially covered by block stats stays
-    * unzoned — pruning must never lose rows).
+  /** The footer pass: each file's row count and typed min/max zones for
+    * `zoneCols`, from parquet FOOTERS only (metadata I/O, no data
+    * pages), read in parallel on the driver — no Spark job. A zone is
+    * recorded only when EVERY block carries usable stats for the
+    * column: parquet can't distinguish "stats not written" from "all
+    * null", so a zone built from a subset of blocks would exclude the
+    * uncovered blocks' rows and let a pruned read skip a file that
+    * actually matches — silent row loss (r10 ADVICE fix). Unzoned
+    * columns keep the file unconditionally.
     */
-  def collectZones(spark: SparkSession, files: Seq[String],
-      cols: Seq[String]): Map[String, Map[String, Zone]] =
-    graft.sources.ManifestScan
-      .statsOf(spark, files.map(new Path(_)), cols)
-      .map(z => z.path -> z.zones).toMap
+  def footers(spark: SparkSession, files: Seq[String],
+      zoneCols: Seq[String]): Written = {
+    val conf = spark.sessionState.newHadoopConf()
+    // a wide append commits tasks × partitions files, and a serial loop
+    // made the footer pass the measured hot spot of the add path
+    // (≈5 ms/footer × hundreds of files per batch)
+    val stats = files.asJava.parallelStream().map[(Long, Map[String, Zone])] { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
+      try {
+        var rows = 0L
+        var blocks = 0L
+        val acc = scala.collection.mutable.Map.empty[String, Zone]
+        val covered = scala.collection.mutable.Map.empty[String, Long]
+        reader.getFooter.getBlocks.forEach { b =>
+          rows += b.getRowCount
+          blocks += 1
+          b.getColumns.forEach { c =>
+            val name = c.getPath.toDotString
+            if (zoneCols.contains(name)) blockZone(c).foreach { z =>
+              acc.updateWith(name) {
+                case None => Some(z)
+                case Some(prev) => widen(prev, z)
+              }
+              covered.update(name, covered.getOrElse(name, 0L) + 1)
+            }
+          }
+        }
+        (rows, acc.filter { case (k, _) => covered(k) == blocks }.toMap)
+      } finally reader.close()
+    }.collect(java.util.stream.Collectors.toList[(Long, Map[String, Zone])])
+      .asScala.toSeq
+    Written(files, files.zip(stats.map(_._1)).toMap,
+      files.zip(stats.map(_._2)).filter(_._2.nonEmpty).toMap)
+  }
 
-  /** Total rows across `files` from parquet FOOTER metadata — driver-
-    * side parallel reads, metadata pages only, NO Spark job. The
-    * mutation paths' before/after row accounting uses this instead of
-    * `df.count()` actions: a streaming sync window's wall is almost
-    * entirely per-job scheduling floor (FeedProbe, r16), and a
-    * count's answer is already sitting in the footers of the exact
-    * files the mutation retired/created.
+  /** One block-column-chunk's zone, or None when its stats are absent
+    * or untrustworthy. INT64 and INT32 (plain ints, epoch-day DATEs)
+    * both land as [[Zone.I64]]; DOUBLE/FLOAT as [[Zone.F64]] — except
+    * when a bound is NaN (the parquet spec declares float min/max
+    * unreliable around NaN, so such files stay unzoned; ±0.0 needs no
+    * special-casing because pruning compares with primitive `>=`/`<=`,
+    * under which -0.0 == 0.0); UTF8-annotated BINARY as [[Zone.Str]]
+    * (Spark writes these with parquet's UNSIGNED byte order, which
+    * [[ZoneRange.u8cmp]] mirrors exactly).
     */
-  def footerRows(spark: SparkSession, files: Seq[String]): Long =
-    if (files.isEmpty) 0L
-    else graft.sources.ManifestScan
-      .statsOf(spark, files.map(new Path(_)), Nil).map(_.rows).sum
-
-  /** Max total rows held by any one partition-directory value of
-    * `files`, grouping by `groupOf(path)` (the layout's cell/bucket
-    * parser), from parquet FOOTER metadata — the compaction paths'
-    * sizing input, without the full `groupBy(part).count()` corpus
-    * scan they used to pay (exact by construction: footer row counts
-    * are exact and a snapshot's rows live exactly in its files).
-    * Returns None when any path does not parse (an adopted flat
-    * layout) — callers then fall back to the count scan.
-    */
-  def maxGroupRows[K](spark: SparkSession, files: Seq[String],
-      groupOf: String => Option[K]): Option[Long] =
-    if (files.isEmpty) Some(0L)
-    else {
-      val stats = graft.sources.ManifestScan
-        .statsOf(spark, files.map(new Path(_)), Nil)
-      val keyed = stats.map(s => groupOf(s.path) -> s.rows)
-      if (keyed.exists(_._1.isEmpty)) None
-      else Some(keyed.groupMapReduce(_._1)(_._2)(_ + _).values.max)
+  private def blockZone(c: ColumnChunkMetaData): Option[Zone] =
+    c.getStatistics match {
+      case s: LongStatistics if s.hasNonNullValue =>
+        Some(Zone.I64(s.getMin, s.getMax))
+      case s: IntStatistics if s.hasNonNullValue =>
+        Some(Zone.I64(s.getMin.toLong, s.getMax.toLong))
+      case s: DoubleStatistics
+          if s.hasNonNullValue && !s.getMin.isNaN && !s.getMax.isNaN =>
+        Some(Zone.F64(s.getMin, s.getMax))
+      case s: FloatStatistics
+          if s.hasNonNullValue && !s.getMin.isNaN && !s.getMax.isNaN =>
+        Some(Zone.F64(s.getMin.toDouble, s.getMax.toDouble))
+      case s: BinaryStatistics if s.hasNonNullValue &&
+          c.getPrimitiveType.getLogicalTypeAnnotation
+            .isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation] =>
+        Some(Zone.Str(s.genericGetMin.toStringUsingUTF8,
+          s.genericGetMax.toStringUsingUTF8))
+      case _ => None
     }
+
+  /** Widen `a` to cover `b` (same kind by parquet schema construction;
+    * a mismatch — impossible within one column — drops the zone).
+    */
+  private def widen(a: Zone, b: Zone): Option[Zone] = (a, b) match {
+    case (Zone.I64(l1, h1), Zone.I64(l2, h2)) =>
+      Some(Zone.I64(math.min(l1, l2), math.max(h1, h2)))
+    case (Zone.F64(l1, h1), Zone.F64(l2, h2)) =>
+      Some(Zone.F64(math.min(l1, l2), math.max(h1, h2)))
+    case (Zone.Str(l1, h1), Zone.Str(l2, h2)) =>
+      Some(Zone.Str(if (ZoneRange.u8cmp(l1, l2) <= 0) l1 else l2,
+        if (ZoneRange.u8cmp(h1, h2) >= 0) h1 else h2))
+    case _ => None
+  }
+
+  /** Row count of each of `files` (live in snapshot `st`), from the
+    * counts the log recorded at commit time; footers are opened only
+    * for files without one — an adopted unlogged directory's, or a log
+    * written before every commit recorded counts. The mutation paths'
+    * before/after row accounting and compaction sizing use this
+    * instead of count() jobs.
+    */
+  def fileRows(spark: SparkSession, st: State,
+      files: Seq[String]): Map[String, Long] = {
+    val (known, missing) = files.partition(st.rows.contains)
+    known.map(f => f -> st.rows(f)).toMap ++
+      (if (missing.isEmpty) Map.empty else footers(spark, missing, Nil).rows)
+  }
 
   /** Write `df` into `dir`'s partition tree through a writer-unique
     * staging directory and return EXACTLY the created file paths.

@@ -1,6 +1,5 @@
 package graft.store
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,8 +14,9 @@ import graft.util.FsIo
   *
   * @param copies   stored rows per logical vector (the ×L multi-table
   *   layout writes each vector once per table); delete counts divide by it.
-  * @param zoneCols columns whose per-file min/max is recorded in every
-  *   commit; empty means no footer pass at commit time.
+  * @param zoneCols columns whose per-file min/max every commit records,
+  *   next to each new file's row count (both from the one footer pass
+  *   after the write, [[FileLog.write]]).
   */
 private[store] final case class Layout(parts: Seq[(String, Int)],
     copies: Int = 1, zoneCols: Seq[String] = Nil) {
@@ -168,35 +168,18 @@ abstract class IndexTable(spark: SparkSession,
     * outside the log (never read, reclaimed by vacuum).
     *
     * Concurrent `add`s are safe: the commit is a read-merge-CAS loop
-    * ([[FileLog.transact]]), so two appends both land. A directory
+    * ([[FileLog.append]]), so two appends both land. A directory
     * with data but no log is adopted: the first `add` seeds the log
     * with the physical listing, so pre-existing rows stay live.
     */
   def add(df: DataFrame, idCol: String = "id", embCol: String = "embedding",
           batchId: Option[Long] = None): Unit = {
-    val bid = batchId.getOrElse(-1L)
-    if (bid >= 0 && FileLog.exists(tableDir) &&
-        FileLog.read(tableDir).batchId >= bid)
-      return // replayed batch: already committed
     val out = GridPart.exactRange(encode(df, idCol, embCol),
       layout.gridSize, layout.gridKey)
-    val created = FileLog.stagedWrite(spark, tableDir, stage =>
-      out.write.mode("overwrite").partitionBy(layout.partCols: _*).parquet(stage))
-    val zones = zonesOf(created)
-    FileLog.transact(spark, tableDir) { cur =>
-      val curBid = cur.map(_.batchId).getOrElse(-1L)
-      if (bid >= 0 && curBid >= bid) None // replay raced in: decline
-      else Some(FileLog.Commit(
-        // unlogged non-empty dir: adopt its physical listing (the
-        // staged files are outside it by construction)
-        cur.map(_.files).getOrElse(
-          FileLog.listDataFiles(spark, tableDir).filterNot(created.toSet))
-          ++ created,
-        out.schema.toDDL, math.max(bid, curBid),
-        cur.map(_.zones).getOrElse(Map.empty) ++ zones,
-        cur.map(_.rows).getOrElse(Map.empty)))
-    }
-    committed(dataChange = true)
+    FileLog.append(spark, tableDir, out.schema, layout.zoneCols,
+      batchId.getOrElse(-1L)) { stage =>
+      out.write.mode("overwrite").partitionBy(layout.partCols: _*).parquet(stage)
+    }.foreach(_ => committed(dataChange = true))
   }
 
   /** Delete vectors by id, rewriting ONLY the partitions that contain
@@ -240,19 +223,13 @@ abstract class IndexTable(spark: SparkSession,
     if (affected.isEmpty) return 0L
     val remaining = cur.where(layout.filter(affected))
       .join(ids, Seq("id"), "left_anti")
-    val created = rewrite(remaining, affected)
+    val written = rewrite(remaining, affected)
     val retired = retiredBy(log, affected)
-    // the created files' footers are opened ONCE: zones for the commit
-    // and the post-state row count — footer metadata replaces the
-    // before/remaining count() jobs
-    val stats = graft.sources.ManifestScan.statsOf(spark,
-      created.map(new Path(_)), layout.zoneCols)
-    FileLog.commitRewrite(spark, tableDir, log, retired.toSet, created,
-      log.schemaDdl, addedZones =
-        if (layout.zoneCols.isEmpty) Map.empty
-        else stats.map(e => e.path -> e.zones).toMap)
+    FileLog.rewrite(spark, tableDir, log, retired.toSet, written, log.schemaDdl)
     committed(dataChange = true)
-    (FileLog.footerRows(spark, retired) - stats.map(_.rows).sum) / layout.copies
+    // logged row counts replace the before/remaining count() jobs
+    (FileLog.fileRows(spark, log, retired).values.sum - written.totalRows) /
+      layout.copies
   }
 
   /** Upsert (id, embedding [, metadata…]) rows: replaces existing ids,
@@ -290,9 +267,8 @@ abstract class IndexTable(spark: SparkSession,
       .join(incoming.select("id"), Seq("id"), "left_anti")
     // a partition fully emptied by moved-away ids simply publishes no
     // files; appends racing the rewrite merge (see deleteUnique)
-    val created = rewrite(existing.unionByName(incoming), affected)
-    FileLog.commitRewrite(spark, tableDir, log, retiredBy(log, affected).toSet,
-      created, log.schemaDdl, addedZones = zonesOf(created))
+    FileLog.rewrite(spark, tableDir, log, retiredBy(log, affected).toSet,
+      rewrite(existing.unionByName(incoming), affected), log.schemaDdl)
     committed(dataChange = true)
   }
 
@@ -337,19 +313,26 @@ abstract class IndexTable(spark: SparkSession,
     * files. `cells` = None compacts the whole grid against the whole
     * snapshot; Some(cells) is a region-scoped pass whose declared read
     * set is exactly `files`, so a concurrent rewrite elsewhere merges.
-    * Sizing comes from parquet FOOTER row counts (driver-side, no Spark
-    * job); an adopted layout whose paths do not parse falls back to a
-    * count scan. One file per partition goes through [[GridPart]]'s
+    * Sizing comes from the row counts the log recorded
+    * ([[FileLog.fileRows]], no Spark job); an adopted layout whose
+    * paths do not parse falls back to a count scan. One file per
+    * partition goes through [[GridPart]]'s
     * exact partition→task mapping; more split by (partition, id) range.
     * Returns the number of files written, None when there were no rows.
     */
   protected def compactCells(log: FileLog.State, rows: DataFrame,
       files: Seq[String], cells: Option[Seq[Int]], targetRowsPerFile: Long,
       vacuumGraceMs: Long): Option[Long] = {
-    val maxRows = FileLog.maxGroupRows(spark, files, layout.cellOf).getOrElse {
-      val m = rows.groupBy(layout.gridKey).count().agg(max("count")).head
-      if (m.isNullAt(0)) 0L else m.getLong(0)
-    }
+    val perFile = FileLog.fileRows(spark, log, files).toSeq
+      .map { case (f, n) => layout.cellOf(f) -> n }
+    val maxRows =
+      if (perFile.isEmpty) 0L
+      else if (perFile.forall(_._1.nonEmpty))
+        perFile.groupMapReduce(_._1)(_._2)(_ + _).values.max
+      else {
+        val m = rows.groupBy(layout.gridKey).count().agg(max("count")).head
+        if (m.isNullAt(0)) 0L else m.getLong(0)
+      }
     // zero rows (incl. an empty log) — writing would replace the index
     // with an empty layout
     if (maxRows == 0L) return None
@@ -367,32 +350,29 @@ abstract class IndexTable(spark: SparkSession,
       else rows.repartitionByRange( // bounded Long math: no Int overflow
         math.min(cells.fold(layout.gridSize)(_.size) * perCell,
           Int.MaxValue.toLong).toInt, layout.sortCols: _*)
-    val created = sortedWrite(shaped)
-    FileLog.commitRewrite(spark, tableDir, log, files.toSet, created,
-      log.schemaDdl, addedZones = zonesOf(created),
+    val written = sortedWrite(shaped)
+    FileLog.rewrite(spark, tableDir, log, files.toSet, written, log.schemaDdl,
       dataChange = false, // same rows, new files
       readSet = cells.map(_ => files.toSet))
     FileLog.vacuum(spark, tableDir, retainLast = 1, graceMs = vacuumGraceMs)
     committed(dataChange = false)
-    Some(created.size.toLong)
+    Some(written.files.size.toLong)
   }
 
   /** Rewrite the given partitions' rows: one writer task per partition. */
-  private def rewrite(rows: DataFrame, cells: Seq[Int]): Seq[String] =
+  private def rewrite(rows: DataFrame, cells: Seq[Int]): FileLog.Written =
     sortedWrite(GridPart.exact(rows, cells, layout.gridKey))
 
-  private def sortedWrite(shaped: DataFrame): Seq[String] =
-    FileLog.stagedWrite(spark, tableDir, stage =>
+  private def sortedWrite(shaped: DataFrame): FileLog.Written =
+    FileLog.write(spark, tableDir, layout.zoneCols) { stage =>
       shaped.sortWithinPartitions(layout.sortCols: _*)
-        .write.mode("overwrite").partitionBy(layout.partCols: _*).parquet(stage))
+        .write.mode("overwrite").partitionBy(layout.partCols: _*).parquet(stage)
+    }
 
   private def retiredBy(log: FileLog.State, cells: Seq[Int]): Seq[String] = {
     val hit = cells.toSet
     log.files.filter(f => layout.cellOf(f).exists(hit))
   }
-
-  private def zonesOf(files: Seq[String]): Map[String, Map[String, Zone]] =
-    IndexTable.zonesOf(spark, files, layout)
 
   private def committed(dataChange: Boolean): Unit = {
     if (dataChange) FsIo.delete(recallCurvePath)
@@ -522,13 +502,9 @@ private[store] object IndexTable {
     // overwrite cleared the directory, so the physical listing IS the
     // new live set; v1 of the log publishes it with the schema, which
     // is what lets an EMPTY build read back correctly
-    val files = FileLog.listDataFiles(spark, dir)
-    FileLog.commit(spark, dir, files, rows.schema.toDDL,
-      zones = zonesOf(spark, files, layout))
+    val w = FileLog.footers(spark, FileLog.listDataFiles(spark, dir),
+      layout.zoneCols)
+    FileLog.commit(spark, dir, w.files, rows.schema.toDDL,
+      zones = w.zones, rows = w.rows)
   }
-
-  def zonesOf(spark: SparkSession, files: Seq[String],
-      layout: Layout): Map[String, Map[String, Zone]] =
-    if (layout.zoneCols.isEmpty) Map.empty
-    else FileLog.collectZones(spark, files, layout.zoneCols)
 }

@@ -100,7 +100,13 @@ class JobsPerOpSpec extends AnyFunSuite {
     ("quant", "auditRecallCurve") -> 4L,
     ("quant", "searchAtRecall") -> 1L,
     ("quant", "auditAdcRecallCurve") -> 4L,
-    ("quant", "searchAdcAtRecall") -> 2L)
+    ("quant", "searchAdcAtRecall") -> 2L,
+    ("manifest", "appendBatch") -> 1L,
+    ("manifest", "refreshManifest") -> 0L,
+    ("manifest", "delete") -> 1L,
+    ("manifest", "upsert") -> 8L,
+    ("manifest", "compact") -> 3L,
+    ("manifest", "compactWhere") -> 3L)
 
   /** The shared mutation script: every operation on one store, each
     * counted in isolation. `upsert` is None for a layout without it.
@@ -167,6 +173,34 @@ class JobsPerOpSpec extends AnyFunSuite {
     }
     info(f"quant  maintain               $n%2d jobs")
     check(Seq(("quant", "maintain") -> n))
+  }
+
+  test("jobs per mutation: ManifestScan table") {
+    import graft.sources.ManifestScan
+    import graft.store.ZoneRange
+    val dir = graft.util.TempDirs.create("jobs_manifest").toString + "/tbl"
+    val cols = Seq("id")
+    ManifestScan.appendBatch(spark, dir, rows(0, 2000), cols, 0L)
+    val out = Seq.newBuilder[((String, String), Long)]
+    def rec(op: String)(body: => Any): Unit = {
+      val n = counted(body)
+      info(f"manifest $op%-20s $n%2d jobs")
+      out += ("manifest", op) -> n
+    }
+    rec("appendBatch")(
+      ManifestScan.appendBatch(spark, dir, rows(2000, 2200), cols, 1L))
+    // files landed outside the log, for the refresh to index
+    rows(2200, 2300).write.mode("append").parquet(s"$dir/extra")
+    rec("refreshManifest")(ManifestScan.refreshManifest(spark, dir, cols))
+    rec("delete")(ManifestScan.delete(spark, dir,
+      Map("id" -> ZoneRange.I64R(100L, 149L)), cols))
+    rec("upsert")(ManifestScan.upsert(spark, dir,
+      rows(150, 250, shift = 0.5).unionByName(rows(2300, 2350)), "id", cols))
+    rec("compact")(ManifestScan.compact(spark, dir, "id", 4, cols))
+    ManifestScan.appendBatch(spark, dir, rows(2350, 2400), cols, 2L)
+    rec("compactWhere")(ManifestScan.compactWhere(spark, dir,
+      Map("id" -> ZoneRange.I64R(2000L, 2400L)), "id", 2, cols))
+    check(out.result())
   }
 
   /** Query vector of stored id `i`, read before any counting. */

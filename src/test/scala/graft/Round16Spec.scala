@@ -150,15 +150,21 @@ class Round16Spec extends AnyFunSuite {
     val dir = graft.util.TempDirs.create("graft_cas").toString + "/index"
     val store = VectorStore.build(spark, embRows(30), dir, LshConfig())
     val base = FileLog.read(dir)
-    // another writer lands a commit after our snapshot...
-    store.add(Seq((7777L, Seq.tabulate(64)(_.toDouble)))
-      .toDF("id", "embedding"))
-    // ...so a rewrite derived from the stale base must refuse
+    // another writer lands a REWRITE after our snapshot: the upsert
+    // moves id 0, so it retires the file of the base holding it...
+    store.upsert(Seq((0L, Seq.tabulate(64)(j => -j.toDouble)),
+      (7777L, Seq.tabulate(64)(_.toDouble))).toDF("id", "embedding"))
+    assert(!base.files.forall(FileLog.read(dir).files.contains))
+    // ...so a rewrite of the whole stale base must refuse to merge
     intercept[ConcurrentCommitException] {
-      FileLog.commitAt(spark, dir, base.version, base.files, base.schemaDdl)
+      FileLog.commitRewrite(spark, dir, base, base.files.toSet, base.files,
+        base.schemaDdl)
     }
-    // nothing was lost: the concurrent add's row is still live
+    // nothing was lost or resurrected: the interloper's rows are live,
+    // and id 0 is there once, in its new image
     assert(store.indexDf.where(col("id") === 7777L).count() == 1)
+    assert(store.indexDf.where(col("id") === 0L).count() == 1)
+    assert(store.indexDf.count() == 31)
   }
 
   // ------------------------------------- pointer atomicity + adoption
