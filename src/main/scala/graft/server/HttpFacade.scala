@@ -17,7 +17,8 @@ import graft.store.VectorStore
   *    missing vectors → 400 `{"error": "No vectors provided"}`; ids
   *    default to max(existing)+1… (the shard's FAISS sequential-add
   *    rule, `shard/shard_node.py:88-100`); responds with the post-add
-  *    total vector count (`:25-74`)
+  *    total vector count (`:25-74`), read from the log's per-file row
+  *    counts, not counted by a job ([[StoreAdapter.totalVectors]])
   *  - `POST /search`       → body `{"query_vector": […] | [[…]], "k": n}`;
   *    missing fields → 400; k ≤ 0 clamps to 1 (`:99-103`); a 1-D query
   *    is reshaped to one row (`:93-96`); empty index → empty arrays +
@@ -38,9 +39,17 @@ import graft.store.VectorStore
   * depth explicitly; neither → exact search (the default the
   * concurrency battery and the reference comparison pin).
   *
-  * The facade is a thin driver-side adapter: every request plans the
-  * same DataFrames the Scala API plans; bulk ingest/search should use
-  * the DataFrame API directly.
+  * How `/search` executes. Each query vector runs
+  * [[graft.store.IndexTable.topK]], the executed form of the table's
+  * DataFrame `search` (same ids, order and distance bits). The table
+  * plans each committed snapshot's scan with Catalyst once and keeps
+  * it with the snapshot; a search then runs one Spark job over only
+  * its probed cells, in at most min(probed cells, defaultParallelism)
+  * tasks, each keeping a bounded top-k heap that the driver merges.
+  * So a search pays no Catalyst pass and no SQL execution, and the
+  * first search after a commit plans the new snapshot once. The tier
+  * route and the other routes plan the same DataFrames the Scala API
+  * plans; bulk ingest/search should use the DataFrame API directly.
   *
   * Concurrency contract. Requests run on a fixed pool of daemon worker
   * threads (`graft-http-N`), one per `defaultParallelism` core of the
@@ -48,9 +57,9 @@ import graft.store.VectorStore
   * pool (`coordinator/coordinator.py:159-175`):
   *
   *  - reads (`/search`, `/stats`, `/health`) overlap: each resolves its
-  *    own committed snapshot (snapshot isolation), and Spark schedules
-  *    their jobs side by side, so one request's jobs fill the cores
-  *    another's leave idle;
+  *    own committed snapshot (snapshot isolation; concurrent searches
+  *    share its prepared scan), and Spark schedules their jobs side by
+  *    side, so one request's jobs fill the cores another's leave idle;
   *  - writes (`/add_vectors`, `/load_npz`) serialize on one facade
   *    lock, so the auto-id rule (`max(existing)+1…`) never hands the
   *    same ids to two requests; reads never take that lock;
@@ -198,12 +207,7 @@ final class HttpFacade(spark: SparkSession, adapter: StoreAdapter,
         case _ => adapter.maxProbes
       }
     }
-    val rows = queries.map { q =>
-      adapter.classified {
-        adapter.search(q, k, probes)
-          .collect().map(r => (r.getLong(0), r.getDouble(1)))
-      }
-    }
+    val rows = queries.map(q => adapter.classified(adapter.topK(q, k, probes)))
     if (rows.forall(_.isEmpty))
       (200, Map(
         "status" -> "success",

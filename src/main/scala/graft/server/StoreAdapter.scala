@@ -35,8 +35,10 @@ sealed trait StoreAdapter {
   /** One row per stored vector (a ×L layout reads one copy). */
   protected def vectors: DataFrame = table.indexDf
 
-  /** Distinct stored vectors. */
-  def totalVectors(): Long = vectors.count()
+  /** Distinct stored vectors, from the log's row counts
+    * ([[IndexTable.numVectors]]).
+    */
+  def totalVectors(): Long = table.numVectors()
 
   /** Current max id, −1 when empty (for sequential auto-ids). */
   def maxId(): Long =
@@ -57,6 +59,12 @@ sealed trait StoreAdapter {
   /** (id, dist) top-k frame at the given probe depth. */
   def search(q: Array[Double], k: Int, probes: Int): DataFrame =
     table.search(q, k, probes)
+
+  /** [[search]] executed on the table's prepared scan
+    * ([[IndexTable.topK]]): the rows `search(...).collect()` returns.
+    */
+  def topK(q: Array[Double], k: Int, probes: Int): Array[(Long, Double)] =
+    table.topK(q, k, probes)
 
   /** Recall-targeted ADC search over a named quant tier, when this
     * layout has one: (result frame, coarseN used — −1 for the exact

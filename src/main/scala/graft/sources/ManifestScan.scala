@@ -440,8 +440,12 @@ object ManifestScan {
     // shared last-wins dedup (graft.store.Dedup): `seqCol` highest
     // wins, ties and the no-seqCol fallback by positional order
     val deduped = graft.store.Dedup.lastWins(updates, keyCol, seqCol)
-      .localCheckpoint(true) // scanned thrice (range, anti-join, union)
-    val nUpdates = deduped.count()
+      .localCheckpoint(true) // scanned thrice (stats, anti-join, union)
+    // ONE aggregate: the batch's row count and its key envelope, typed
+    // like the zones it prunes against
+    val stats = deduped.agg(count(lit(1)), min(col(keyCol)),
+      max(col(keyCol))).head
+    val nUpdates = stats.getLong(0)
     if (nUpdates == 0) return (0L, 0L)
     require(FileLog.exists(dir),
       s"no manifest table under $dir — seed it with appendBatch/" +
@@ -453,16 +457,14 @@ object ManifestScan {
       else deduped.schema.toDDL
     val outCols = org.apache.spark.sql.types.StructType.fromDDL(ddl)
       .fieldNames.toSeq
-    // the batch's key envelope, typed like the zones it prunes against
-    val mm = deduped.agg(min(col(keyCol)), max(col(keyCol))).head
-    val range: ZoneRange = mm.get(0) match {
-      case i: java.lang.Long => ZoneRange.I64R(i, mm.getLong(1))
+    val range: ZoneRange = stats.get(1) match {
+      case i: java.lang.Long => ZoneRange.I64R(i, stats.getLong(2))
       case i: java.lang.Integer =>
-        ZoneRange.I64R(i.toLong, mm.getInt(1).toLong)
-      case s: String => ZoneRange.StrR(s, mm.getString(1))
+        ZoneRange.I64R(i.toLong, stats.getInt(2).toLong)
+      case s: String => ZoneRange.StrR(s, stats.getString(2))
       case d: java.sql.Date =>
-        ZoneRange.DateR(d.toLocalDate, mm.getDate(1).toLocalDate)
-      case d: java.lang.Double => ZoneRange.F64R(d, mm.getDouble(1))
+        ZoneRange.DateR(d.toLocalDate, stats.getDate(2).toLocalDate)
+      case d: java.lang.Double => ZoneRange.F64R(d, stats.getDouble(2))
       case other => throw new IllegalArgumentException(
         s"upsert key column '$keyCol' has unzonable type " +
           s"${if (other == null) "NULL" else other.getClass.getName}")

@@ -54,7 +54,14 @@ private[store] final case class Layout(parts: Seq[(String, Int)],
   * [[FileLog]], every read-modify-write mutation, compaction, and the
   * measured recall knob: the probe-depth audit, the depth certification
   * and the recall-targeted search. A store declares its [[Layout]], its
-  * `encode`, its probe ranking and its depth-probed `search`.
+  * `encode`, its probe ranking, its depth-probed `search` and the cells
+  * that search reads.
+  *
+  * Reads go through a memo of the newest committed snapshots, keyed on
+  * (schema, file list): each entry holds the snapshot's frame and,
+  * once searched, its prepared scan ([[PreparedScan]]), which
+  * [[topK]] executes without planning. A commit changes the file
+  * list, so the next read misses and the old entries age out.
   *
   * One write policy holds for every layout: appends do not sort;
   * builds and rewrites sort each file by (partition columns, id), so
@@ -86,44 +93,63 @@ abstract class IndexTable(spark: SparkSession,
     * pre-state to the post-state atomically, never a half-replaced
     * partition. An empty index reads back as an empty frame with its
     * recorded schema. A bare path with no log yet (a streaming sink
-    * before its first batch) falls back to the directory scan.
+    * before its first batch) falls back to the directory scan. A
+    * layout holding a resident copy ([[residentSnap]]) reads that.
     */
-  def indexDf: DataFrame = logDf
+  def indexDf: DataFrame = residentSnap.fold(logDf)(_.df)
 
-  protected def logDf: DataFrame =
-    if (!FileLog.exists(tableDir)) spark.read.parquet(tableDir)
-    else dfOf(FileLog.read(tableDir))
+  protected def logDf: DataFrame = logSnap.df
 
-  // Relation memo: resolving a snapshot's frame costs a fixed
+  private def logSnap: Snap =
+    if (!FileLog.exists(tableDir)) new Snap(spark.read.parquet(tableDir))
+    else snapOf(FileLog.read(tableDir))
+
+  /** A snapshot's frame and, planned on its first [[topK]], its
+    * prepared scan. The lazy val plans at most once per snapshot even
+    * when concurrent searches miss together.
+    */
+  protected final class Snap(val df: DataFrame) {
+    lazy val scan: PreparedScan = PreparedScan(df, layout)
+  }
+
+  /** The in-memory copy reads serve instead of the files, if any. */
+  protected def residentSnap: Option[Snap] = None
+
+  // Snapshot memo: resolving a snapshot's frame costs a fixed
   // file-stat pass (a Spark job once the snapshot holds >32 files)
-  // plus analysis, paid per READ even at a frozen version. Keyed on
-  // (schema, exact file list), so any commit misses and a re-read of
-  // the same immutable snapshot hits. Metadata-only — no rows are
-  // cached, every action still scans parquet.
-  private val relMemo =
-    new java.util.LinkedHashMap[(String, Seq[String]), DataFrame](
-      8, 0.75f, true) {
+  // plus analysis, and planning its top-k scan costs a Catalyst pass,
+  // both paid per READ even at a frozen version. Keyed on (schema,
+  // exact file list), so any commit misses and a re-read of the same
+  // immutable snapshot hits; the newest 8 snapshots stay. Metadata
+  // and plans only — no rows are cached, every search still scans.
+  private val snaps =
+    new java.util.LinkedHashMap[(String, Seq[String]), Snap](8, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Seq[String]), DataFrame]) =
+          e: java.util.Map.Entry[(String, Seq[String]), Snap]) =
         size > 8
     }
 
-  protected def dfOf(st: FileLog.State): DataFrame =
+  protected def dfOf(st: FileLog.State): DataFrame = snapOf(st).df
+
+  private def snapOf(st: FileLog.State): Snap =
     if (st.files.isEmpty)
-      spark.createDataFrame(
+      new Snap(spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(st.schemaDdl))
+        org.apache.spark.sql.types.StructType.fromDDL(st.schemaDdl)))
     // The log already knows the schema (captured from the writing
     // frame at commit time) — passing it skips the per-read parquet
     // schema-inference pass; a log without one still infers.
     else if (st.schemaDdl.isEmpty)
-      spark.read.option("basePath", tableDir).parquet(st.files: _*)
-    else relMemo.synchronized {
-      relMemo.computeIfAbsent((st.schemaDdl, st.files), _ =>
-        spark.read
+      new Snap(spark.read.option("basePath", tableDir).parquet(st.files: _*))
+    else snaps.synchronized {
+      snaps.computeIfAbsent((st.schemaDdl, st.files), _ =>
+        new Snap(spark.read
           .schema(org.apache.spark.sql.types.StructType.fromDDL(st.schemaDdl))
-          .option("basePath", tableDir).parquet(st.files: _*))
+          .option("basePath", tableDir).parquet(st.files: _*)))
     }
+
+  /** Snapshots whose frame (and prepared scan) the memo holds. */
+  private[graft] def cachedSnapshots: Int = snaps.synchronized(snaps.size)
 
   /** Pinned snapshot for a read-modify-write mutation: (state, frame
     * over exactly that state's files). A directory with data but no
@@ -413,6 +439,45 @@ abstract class IndexTable(spark: SparkSession,
     * `depth >= maxDepth`.
     */
   def search(q: Array[Double], k: Int, depth: Int): DataFrame
+
+  /** Grid codes the depth-`depth` [[search]] scans. */
+  protected def probedCells(q: Array[Double], depth: Int): Seq[Int]
+
+  /** [[search]] executed: the same (id, dist) rows in the same order,
+    * with bit-identical distances, as `search(q, k, depth).collect()`.
+    *
+    * The scan of each committed snapshot is planned once and kept with
+    * the snapshot in the memo ([[PreparedScan]]); a search then runs
+    * one Spark job over only its probed cells — no Catalyst pass, no
+    * SQL execution. Any commit changes the file list, so the next
+    * search reads the new log, misses the memo and plans the new
+    * snapshot once; a stale plan is never served. A ×L layout keeps
+    * one row per id unless the search reads one copy.
+    */
+  def topK(q: Array[Double], k: Int, depth: Int): Array[(Long, Double)] =
+    topKIn(residentSnap.getOrElse(logSnap), q, k, depth)
+
+  /** [[topK]] over a pinned snapshot (a reader that resolved `st` and
+    * scans it later, e.g. to race a vacuum).
+    */
+  private[graft] def topKAt(st: FileLog.State, q: Array[Double], k: Int,
+      depth: Int): Array[(Long, Double)] = topKIn(snapOf(st), q, k, depth)
+
+  private def topKIn(snap: Snap, q: Array[Double], k: Int,
+      depth: Int): Array[(Long, Double)] =
+    snap.scan.topK(q, math.max(1, k), probedCells(q, depth),
+      dedup = layout.copies > 1 && depth < maxDepth)
+
+  /** Distinct stored vectors: the snapshot's logged row counts over the
+    * layout's copies, read from the log without a Spark job. A
+    * directory with no log is counted by a job.
+    */
+  def numVectors(): Long =
+    if (!FileLog.exists(tableDir)) logDf.count() / layout.copies
+    else {
+      val st = FileLog.read(tableDir)
+      FileLog.fileRows(spark, st, st.files).values.sum / layout.copies
+    }
 
   /** Measure the recall-vs-depth curve over a query panel and persist
     * it next to the snapshot (`_recall_curve.json`): curve(p) = mean

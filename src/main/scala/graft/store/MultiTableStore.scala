@@ -71,6 +71,14 @@ final class MultiTableStore(
       .map { case (t, b) => col("table") === t && col("bucket") === b }
       .reduce(_ || _)
 
+  /** Probed (table, bucket) codes; table 0's buckets (one full copy)
+    * at `depth >= maxDepth`.
+    */
+  protected def probedCells(q: Array[Double], depth: Int): Seq[Int] =
+    if (depth >= maxDepth) 0 until model.bucketsPerTable
+    else model.tableCandidates(q, depth)
+      .map { case (t, b) => t * model.bucketsPerTable + b }
+
   /** Pruned kNN: probed partitions → id-dedup → exact top-k; [[exact]]
     * at `probes >= maxDepth`.
     */

@@ -56,12 +56,10 @@ final class QuantIndex(
 
   // volatile: facade worker threads read it on every search while a
   // commit's `dropResident` writes it
-  @transient @volatile private var resident: Option[DataFrame] = None
+  @transient @volatile private var resident: Option[Snap] = None
 
-  /** The snapshot's live rows: the resident copy after [[cacheIndex]],
-    * else the committed file list ([[IndexTable.indexDf]]).
-    */
-  override def indexDf: DataFrame = resident.getOrElse(logDf)
+  /** After [[cacheIndex]], reads and [[topK]] scan the resident copy. */
+  override protected def residentSnap: Option[Snap] = resident
 
   /** Pin the index in executor memory for interactive serving (the
     * analogue of the reference's always-resident FAISS index): all
@@ -72,7 +70,7 @@ final class QuantIndex(
   def cacheIndex(): this.type = {
     val df = logDf.cache()
     df.count()
-    resident = Some(df)
+    resident = Some(new Snap(df))
     this
   }
 
@@ -236,7 +234,7 @@ final class QuantIndex(
     * sized centroid table).
     */
   def searchIvf(q: Array[Double], k: Int, nprobe: Int = 2): DataFrame = {
-    val cells = model.ivfNearestCells(q, nprobe).map(Int.box)
+    val cells = probedCells(q, nprobe).map(Int.box)
     indexDf.where(col("cell").isin(cells: _*))
       .select(col("id"), VF.l2sqLit(col("embedding"), q).as("dist"))
       .orderBy(col("dist"), col("id")).limit(math.max(1, k))
@@ -249,6 +247,9 @@ final class QuantIndex(
     */
   protected def probeOrder(q: Array[Double]): Seq[Int] =
     model.ivfNearestCells(q, model.cfg.ivfCells)
+
+  protected def probedCells(q: Array[Double], depth: Int): Seq[Int] =
+    model.ivfNearestCells(q, depth)
 
   /** [[searchIvf]]: the recall knob's depth is nprobe. */
   def search(q: Array[Double], k: Int, depth: Int): DataFrame =
@@ -480,7 +481,7 @@ final class QuantIndex(
   }
 
   private def dropResident(): Unit = {
-    resident.foreach(_.unpersist())
+    resident.foreach(_.df.unpersist())
     resident = None
   }
 }

@@ -57,7 +57,11 @@ final class VectorStore(
 
   def pruneFilter(q: Array[Double], probes: Int): Column =
     if (probes >= model.numBuckets) lit(true)
-    else col("bucket").isin(model.candidates(q, probes).map(Int.box): _*)
+    else col("bucket").isin(probedCells(q, probes).map(Int.box): _*)
+
+  protected def probedCells(q: Array[Double], depth: Int): Seq[Int] =
+    if (depth >= model.numBuckets) 0 until model.numBuckets
+    else model.candidates(q, depth)
 
   /** Per-bucket stats (reference `/stats` fan-out + shard-distribution
     * analysis, SURVEY §2.6 A3–A5).

@@ -2,14 +2,17 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart, SparkListenerTaskStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.lsh.LshConfig
+import graft.server.StoreAdapter
 import graft.store.{IndexTable, MaintenancePolicy, MultiTableStore,
-  QuantConfig, QuantIndex, QuantTier, VectorStore}
+  PreparedScan, QuantConfig, QuantIndex, QuantTier, VectorStore}
 
 /** Spark jobs per store operation, on all three index layouts. At
   * micro-batch volumes every job costs its scheduling floor, so the
@@ -47,23 +50,34 @@ class JobsPerOpSpec extends AnyFunSuite {
   }
 
   private val jobs = new AtomicLong(0L)
+  private val tasks = new AtomicLong(0L)
+  private val sqlRuns = new AtomicLong(0L)
   private lazy val listener = {
     val l = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
+      override def onTaskStart(t: SparkListenerTaskStart): Unit =
+        tasks.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => sqlRuns.incrementAndGet()
+        case _ => ()
+      }
     }
     org.apache.spark.graft.ListenerBridge.waitUntilEmpty(spark.sparkContext)
     spark.sparkContext.addSparkListener(l)
     l
   }
 
-  private def counted(body: => Any): Long = {
+  private def counted(body: => Any): Long = countedAll(body)._1
+
+  /** (jobs, tasks, SQL executions) that `body` started. */
+  private def countedAll(body: => Any): (Long, Long, Long) = {
     listener
     org.apache.spark.graft.ListenerBridge.waitUntilEmpty(spark.sparkContext)
-    val j0 = jobs.get()
+    val (j0, t0, s0) = (jobs.get(), tasks.get(), sqlRuns.get())
     body
     org.apache.spark.graft.ListenerBridge.waitUntilEmpty(spark.sparkContext)
-    jobs.get() - j0
+    (jobs.get() - j0, tasks.get() - t0, sqlRuns.get() - s0)
   }
 
   /** (layout, operation) → the most jobs it may take. */
@@ -101,10 +115,19 @@ class JobsPerOpSpec extends AnyFunSuite {
     ("quant", "searchAtRecall") -> 1L,
     ("quant", "auditAdcRecallCurve") -> 4L,
     ("quant", "searchAdcAtRecall") -> 2L,
+    ("lsh", "facade search probed") -> 1L,
+    ("lsh", "facade search exact") -> 1L,
+    ("lsh", "add + totalVectors") -> 2L,
+    ("multi", "facade search probed") -> 1L,
+    ("multi", "facade search exact") -> 1L,
+    ("multi", "add + totalVectors") -> 2L,
+    ("quant", "facade search probed") -> 1L,
+    ("quant", "facade search exact") -> 1L,
+    ("quant", "add + totalVectors") -> 2L,
     ("manifest", "appendBatch") -> 1L,
     ("manifest", "refreshManifest") -> 0L,
     ("manifest", "delete") -> 1L,
-    ("manifest", "upsert") -> 8L,
+    ("manifest", "upsert") -> 6L,
     ("manifest", "compact") -> 3L,
     ("manifest", "compactWhere") -> 3L)
 
@@ -244,5 +267,56 @@ class JobsPerOpSpec extends AnyFunSuite {
           qi.auditAdcRecallCurve(panel, 10, QuantTier.Pq)),
         "searchAdcAtRecall" -> (() =>
           qi.searchAdcAtRecall(q, 10, 0.5, QuantTier.Pq)._1.collect()))))
+  }
+
+  /** The facade's read path on one layout: `/search` is
+    * `classified(topK)` and `/add_vectors` is `add` then
+    * `totalVectors`. `cells(p)` is the number of grid cells a depth-p
+    * search reads.
+    */
+  private def facadeScript(layout: String, a: StoreAdapter,
+      cells: Int => Int, from: Long): Seq[((String, String), Long)] = {
+    val q = vec(7L)
+    val par = spark.sparkContext.defaultParallelism
+    val added = counted {
+      a.add(rows(from, from + 20))
+      assert(a.totalVectors() == 2020L)
+    }
+    info(f"$layout%-6s add + totalVectors       $added%2d jobs")
+    // the first search after a commit plans the new snapshot once
+    val p0 = PreparedScan.planned.get()
+    a.classified(a.topK(q, 10, a.maxProbes))
+    val plans = PreparedScan.planned.get() - p0
+    assert(plans <= 1L, s"$layout: first search after a commit planned $plans scans")
+    ((layout, "add + totalVectors") -> added) +:
+      Seq("facade search probed" -> 2, "facade search exact" -> a.maxProbes)
+        .map { case (op, probes) =>
+          val p1 = PreparedScan.planned.get()
+          val (j, t, sql) = countedAll(a.classified(a.topK(q, 10, probes)))
+          info(f"$layout%-6s $op%-22s $j%2d jobs, $t%2d tasks, $sql SQL runs")
+          assert(PreparedScan.planned.get() == p1, s"$layout $op re-planned")
+          assert(sql == 0L, s"$layout $op ran $sql SQL executions")
+          assert(t <= math.min(cells(probes), par).toLong,
+            s"$layout $op ran $t tasks over ${cells(probes)} cells")
+          (layout, op) -> j
+        }
+  }
+
+  test("jobs per facade search and add: all three layouts") {
+    val dir = graft.util.TempDirs.create("jobs_facade").toString
+    val lsh = VectorStore.build(spark, rows(0, 2000), s"$dir/lsh",
+      LshConfig(numHashTables = 6, dim = Dim, seed = 7L))
+    val mt = MultiTableStore.build(spark, rows(0, 2000), s"$dir/multi",
+      LshConfig(numHashFunctions = 2, numHashTables = 3, dim = Dim,
+        seed = 7L, multiTable = true))
+    val qi = QuantIndex.build(spark, rows(0, 2000), s"$dir/quant",
+      QuantConfig(ivfCells = 8))
+    def upTo(n: Int)(p: Int): Int = math.min(p, n)
+    check(
+      facadeScript("lsh", new StoreAdapter.Lsh(spark, lsh), upTo(6), 5000) ++
+      // the exact multi-table search reads table 0's 4 buckets
+      facadeScript("multi", new StoreAdapter.Multi(spark, mt),
+        p => if (p >= mt.maxDepth) 4 else p, 5000) ++
+      facadeScript("quant", new StoreAdapter.Quant(spark, qi), upTo(8), 5000))
   }
 }
