@@ -1,18 +1,22 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{SparkSession, SQLContext}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{DataFrame, Row, SparkSession, SQLContext}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{
-  And, AttributeReference, EqualTo, Expression, GreaterThan,
-  GreaterThanOrEqual, In, InSet, LessThan, LessThanOrEqual, Literal}
+  And, AttributeReference, BoundReference, Cast, EqualTo, Expression,
+  GreaterThan, GreaterThanOrEqual, In, InSet, LessThan, LessThanOrEqual,
+  Literal, Predicate}
 import org.apache.spark.sql.execution.datasources.{
-  FileIndex, HadoopFsRelation, PartitionDirectory}
+  FileIndex, HadoopFsRelation, PartitionDirectory, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister,
   RelationProvider}
-import org.apache.spark.sql.types.{ByteType, DateType, DoubleType,
-  FloatType, IntegerType, LongType, ShortType, StringType, StructType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DateType,
+  DoubleType, FloatType, IntegerType, LongType, MapType, ShortType,
+  StringType, StructType}
 
 import graft.store.{FileLog, ZoneRange}
 
@@ -32,7 +36,13 @@ import graft.store.{FileLog, ZoneRange}
   *    the scan — at 100 TB a point/range query schedules tasks for a
   *    handful of files no matter the table size,
   *  - schema-evolution reads (files predating a widening read the
-  *    added columns as null, resolved against the LOGGED schema).
+  *    added columns as null, resolved against the LOGGED schema),
+  *  - partition columns from the files' `col=value` directories (an
+  *    index store's `bucket`/`table`/`cell`), so a partitioned table
+  *    reads the same values as the store's own frame,
+  *  - no file stat and no listing job: the scan is planned from the
+  *    log's file list and logged sizes ([[GraftLogFileIndex]], the same
+  *    index every logged snapshot read goes through).
   *
   * The r14 verdict's task #2: [[ManifestScan]] exposed all of this
   * programmatically only, so SQL users couldn't reach time travel or
@@ -41,7 +51,7 @@ import graft.store.{FileLog, ZoneRange}
   * [[HadoopFsRelation]] with the stock [[ParquetFileFormat]] — so
   * Spark's vectorized parquet reader, whole-stage codegen, row-group
   * pruning and filter pushdown all stay native; the log contributes
-  * ONLY the planned file list. (A DSv2 `PartitionReader` would have
+  * ONLY the planned files: paths, sizes, partition values. (A DSv2 `PartitionReader` would have
   * meant re-implementing the parquet decode path row-by-row — slower
   * and wronger than delegating to the planner's own scan.)
   *
@@ -53,18 +63,6 @@ import graft.store.{FileLog, ZoneRange}
 class GraftLogSource extends RelationProvider with DataSourceRegister {
 
   override def shortName(): String = "graftlog"
-
-  private def asNullable(
-      dt: org.apache.spark.sql.types.DataType): org.apache.spark.sql.types.DataType =
-    dt match {
-      case s: StructType => StructType(s.fields.map(f =>
-        f.copy(dataType = asNullable(f.dataType), nullable = true)))
-      case a: org.apache.spark.sql.types.ArrayType =>
-        a.copy(elementType = asNullable(a.elementType), containsNull = true)
-      case m: org.apache.spark.sql.types.MapType =>
-        m.copy(valueType = asNullable(m.valueType), valueContainsNull = true)
-      case other => other
-    }
 
   override def createRelation(ctx: SQLContext,
       parameters: Map[String, String]): BaseRelation = {
@@ -99,86 +97,195 @@ class GraftLogSource extends RelationProvider with DataSourceRegister {
       .getOrElse(FileLog.read(dir))
     require(st.schemaDdl.nonEmpty,
       s"the log under $dir carries no schema (pre-schema legacy log)")
-    val spark = ctx.sparkSession
-    // Nullable like `spark.read.schema(...)` forces: the logged DDL can
-    // carry NOT NULL from a batch's primitive columns, and a file
-    // predating a widening then fails the vectorized reader's
-    // required-column check instead of reading the column as null.
-    val schema = asNullable(StructType.fromDDL(st.schemaDdl))
-      .asInstanceOf[StructType]
-    HadoopFsRelation(
-      new GraftLogFileIndex(spark, dir, st),
-      partitionSchema = StructType(Nil),
-      dataSchema = schema,
-      bucketSpec = None,
-      fileFormat = new ParquetFileFormat,
-      options = parameters)(spark)
+    new GraftLogFileIndex(ctx.sparkSession, dir, st).relation(parameters)
   }
 }
 
 object GraftLogSource {
-  /** (filesPlanned, filesTotal) of the most recent graftlog scan
-    * planning in this JVM — pruning telemetry for specs and the x37
-    * oracle pin, same spirit as [[FileLog.listings]].
+  /** (filesPlanned, filesTotal) of the most recent log-backed scan
+    * planning in this JVM ([[GraftLogFileIndex.listFiles]]) — pruning
+    * telemetry for specs and the x37 oracle pin, same spirit as
+    * [[FileLog.listings]].
     */
   private[graft] val lastPlanned =
     new java.util.concurrent.atomic.AtomicReference[(Int, Int)]((0, 0))
 }
 
-/** Planning-time file index over one committed log snapshot: the file
-  * list is the version's (immutable), and `listFiles` intersects the
-  * query's pushed data filters with the log's typed zones — the same
-  * conservative contract as [[ManifestScan.readPrunedRanges]] (files
-  * without a zone for a queried column are kept; only provable
-  * disjointness skips; Spark re-applies the full predicate to
-  * survivors).
+/** The one file index over a committed log snapshot, behind every read
+  * of a logged table: the `graftlog` reader, the index stores' snapshots
+  * ([[graft.store.IndexTable]]) and [[ManifestScan]]'s reads. Everything
+  * it plans with comes from the log (the Delta Lake read path: a custom
+  * [[FileIndex]] under a [[HadoopFsRelation]] with the stock parquet
+  * format):
+  *
+  *  - the file list is the version's (immutable) — no directory
+  *    listing, so no parallel-listing job however many files it holds;
+  *  - each file's byte size is the logged one ([[FileLog.fileSizes]]);
+  *    only files the log has no size for (older logs, adopted
+  *    directories) are stat'ed, once each, in parallel;
+  *  - partition columns are the logged schema's columns that every
+  *    file's path names as `col=value`, outermost first, typed from the
+  *    logged schema; `listFiles` evaluates the scan's partition filters
+  *    on those values;
+  *  - `listFiles` intersects the scan's data filters with the log's
+  *    typed zones — the same conservative contract as
+  *    [[ManifestScan.readPrunedRanges]] (files without a zone for a
+  *    queried column are kept; only provable disjointness skips; Spark
+  *    re-applies the full predicate to survivors).
+  *
+  * The frame equals a directory read of the same files under the logged
+  * schema: data columns, then partition columns, all nullable (a file
+  * predating a schema widening reads the added columns as null).
   */
 final class GraftLogFileIndex(spark: SparkSession, dir: String,
     state: FileLog.State) extends FileIndex {
 
-  override def rootPaths: Seq[Path] = Seq(new Path(dir))
+  private val root = new Path(dir)
+  private val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  override def partitionSchema: StructType = StructType(Nil)
+  /** Logged path, qualified like a listing's, and `col=value` segments. */
+  private val paths: Seq[(String, Path, Map[String, String])] =
+    state.files.map { f =>
+      val p = fs.makeQualified(new Path(f))
+      (f, p, GraftLogFileIndex.segments(root, p))
+    }
 
-  override def inputFiles: Array[String] = state.files.toArray
+  private val logged = GraftLogFileIndex.asNullable(
+    StructType.fromDDL(state.schemaDdl)).asInstanceOf[StructType]
+
+  override val partitionSchema: StructType = StructType(
+    paths.headOption.fold(Seq.empty[String])(_._3.keys.toSeq)
+      .filter(c => paths.forall(_._3.contains(c)))
+      .flatMap(c => logged.find(_.name == c))
+      .sortBy(f => GraftLogFileIndex.depth(paths.head._2, f.name)))
+
+  val dataSchema: StructType = StructType(
+    logged.filterNot(f => partitionSchema.fieldNames.contains(f.name)))
+
+  private lazy val entries: Seq[GraftLogFileIndex.Entry] = {
+    val sizes = FileLog.fileSizes(spark, state, state.files)
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    paths.map { case (f, p, segs) =>
+      GraftLogFileIndex.Entry(f, new FileStatus(sizes(f), false, 0, 0L, 0L, p),
+        InternalRow.fromSeq(partitionSchema.map { c =>
+          val raw = segs(c.name)
+          if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
+          else Cast(Literal(ExternalCatalogUtils.unescapePathName(raw)),
+            c.dataType, tz).eval()
+        }))
+    }
+  }
+
+  override def rootPaths: Seq[Path] = Seq(root)
+
+  override def inputFiles: Array[String] =
+    paths.map(_._2.toUri.toString).toArray
 
   override def refresh(): Unit = ()
 
-  /** Stat a file list in PARALLEL on the driver — per-file metadata
-    * RPCs were the measured hot spot of the add path (the footer pass), and a
-    * serial loop here would put the same tax on every query's
-    * planning. A production-scale deployment would record file sizes
-    * in the commit like rows/zones are (making both methods below
-    * metadata-free); parallel stats keep the wall bounded until then.
-    */
-  private def statFiles(files: Seq[String]): Seq[org.apache.hadoop.fs.FileStatus] = {
-    val fs = new Path(dir).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    import scala.jdk.CollectionConverters._
-    files.asJava.parallelStream()
-      .map[org.apache.hadoop.fs.FileStatus](f => fs.getFileStatus(new Path(f)))
-      .collect(java.util.stream.Collectors
-        .toList[org.apache.hadoop.fs.FileStatus]).asScala.toSeq
-  }
-
-  /** Total bytes of the snapshot's files, stat'ed lazily once (the
-    * planner reads this for join-size estimates).
-    */
-  override lazy val sizeInBytes: Long = statFiles(state.files).map(_.getLen).sum
+  override lazy val sizeInBytes: Long = entries.map(_.status.getLen).sum
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+    val inPartition = partitionMatch(partitionFilters)
     val ranges = GraftLogFileIndex.rangesOf(dataFilters)
-    val kept = state.files.filter { f =>
-      val zs = state.zones.getOrElse(f, Map.empty)
-      ranges.forall { case (c, r) => zs.get(c).forall(_.overlaps(r)) }
+    val kept = entries.filter { e =>
+      val zs = state.zones.getOrElse(e.logged, Map.empty)
+      inPartition(e.values) &&
+        ranges.forall { case (c, r) => zs.get(c).forall(_.overlaps(r)) }
     }
     GraftLogSource.lastPlanned.set((kept.size, state.files.size))
-    Seq(PartitionDirectory(InternalRow.empty, statFiles(kept).toArray))
+    kept.groupBy(_.status.getPath.getParent.toString).toSeq.sortBy(_._1)
+      .map { case (_, es) =>
+        PartitionDirectory(es.head.values, es.map(_.status).toArray)
+      }
   }
+
+  /** The partition filters as one predicate over a file's values. */
+  private def partitionMatch(filters: Seq[Expression]): InternalRow => Boolean = {
+    val resolver = spark.sessionState.conf.resolver
+    val names = partitionSchema.fieldNames
+    val usable = filters.filter(f => f.references.nonEmpty &&
+      f.references.forall(a => names.exists(resolver(_, a.name))))
+    if (usable.isEmpty) _ => true
+    else Predicate.createInterpreted(usable.reduce(And).transform {
+      case a: AttributeReference =>
+        val i = names.indexWhere(resolver(_, a.name))
+        BoundReference(i, partitionSchema(i).dataType, nullable = true)
+    }).eval
+  }
+
+  /** Every live file as one whole-file split with its partition values,
+    * for a parquet reader planned over a snapshot of the same schema.
+    */
+  def partitionedFiles: Seq[PartitionedFile] = entries.map { e =>
+    PartitionedFile(e.values, SparkPath.fromPath(e.status.getPath), 0L,
+      e.status.getLen, fileSize = e.status.getLen)
+  }
+
+  /** The relation over this snapshot, read with the stock parquet format. */
+  def relation(options: Map[String, String] = Map.empty): HadoopFsRelation =
+    HadoopFsRelation(this, partitionSchema, dataSchema, bucketSpec = None,
+      fileFormat = new ParquetFileFormat, options = options)(spark)
 }
 
 object GraftLogFileIndex {
+
+  /** Snapshot `st` of the table under `dir` as a frame, with its index:
+    * an empty snapshot reads as an empty frame of the logged schema, a
+    * legacy log with no schema reads its files with inference, and any
+    * other snapshot reads through one [[GraftLogFileIndex]].
+    */
+  def snapshot(spark: SparkSession, dir: String,
+      st: FileLog.State): (DataFrame, Option[GraftLogFileIndex]) =
+    if (st.files.isEmpty)
+      (spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        StructType.fromDDL(st.schemaDdl)), None)
+    else if (st.schemaDdl.isEmpty)
+      (spark.read.option("basePath", dir).parquet(st.files: _*), None)
+    else {
+      val ix = new GraftLogFileIndex(spark, dir, st)
+      (spark.baseRelationToDataFrame(ix.relation()), Some(ix))
+    }
+
+  /** One live file: its logged path, status (logged size) and values. */
+  private final case class Entry(logged: String, status: FileStatus,
+      values: InternalRow)
+
+  /** The frame of [[snapshot]]. */
+  def read(spark: SparkSession, dir: String, st: FileLog.State): DataFrame =
+    snapshot(spark, dir, st)._1
+
+  /** The `col=value` directory segments of `file` below `root`. */
+  private def segments(root: Path, file: Path): Map[String, String] = {
+    val base = root.toUri.getPath.stripSuffix("/") + "/"
+    val path = file.toUri.getPath
+    if (!path.startsWith(base)) Map.empty
+    else path.stripPrefix(base).split('/').dropRight(1).toSeq.flatMap { s =>
+      val i = s.indexOf('=')
+      if (i > 0) Some(s.take(i) -> s.drop(i + 1)) else None
+    }.toMap
+  }
+
+  /** Position of column `c`'s segment in `file`'s path (outermost first). */
+  private def depth(file: Path, c: String): Int =
+    file.toUri.getPath.indexOf(s"/$c=")
+
+  /** `dt` with every field, element and value nullable — the schema a
+    * parquet read under a user schema declares: the logged DDL can
+    * carry NOT NULL from a batch's primitive columns, and a file
+    * predating a widening would then fail the vectorized reader's
+    * required-column check instead of reading the column as null.
+    */
+  private def asNullable(dt: DataType): DataType = dt match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = asNullable(f.dataType), nullable = true)))
+    case a: ArrayType =>
+      a.copy(elementType = asNullable(a.elementType), containsNull = true)
+    case m: MapType =>
+      m.copy(valueType = asNullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
 
   /** Translate a scan's data filters (a conjunction) into per-column
     * [[ZoneRange]]s, CONSERVATIVELY: only shapes whose zone semantics

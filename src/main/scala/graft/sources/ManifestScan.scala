@@ -88,9 +88,9 @@ object ManifestScan {
     * writer collects the same stats at write time without any read.
     */
   def buildManifest(spark: SparkSession, dir: String, cols: Seq[String]): Int = {
-    val w = FileLog.footers(spark, FileLog.listDataFiles(spark, dir), cols)
+    val w = FileLog.listed(spark, FileLog.dataFiles(spark, dir), cols)
     FileLog.commit(spark, dir, w.files, ddlOf(spark, w.files),
-      zones = w.zones, rows = w.rows)
+      zones = w.zones, rows = w.rows, sizes = w.sizes)
     w.files.size
   }
 
@@ -110,17 +110,18 @@ object ManifestScan {
     var added = 0
     FileLog.transact(spark, dir) { cur =>
       val known = cur.map(_.files.toSet).getOrElse(Set.empty)
-      val fresh = FileLog.listDataFiles(spark, dir).filterNot(known)
+      val fresh = FileLog.dataFiles(spark, dir).filterNot(f => known(f._1))
       added = fresh.size
       if (fresh.isEmpty) None
       else {
-        val w = FileLog.footers(spark, fresh, cols)
-        Some(FileLog.Commit(known.toSeq ++ fresh,
+        val w = FileLog.listed(spark, fresh, cols)
+        Some(FileLog.Commit(known.toSeq ++ w.files,
           cur.map(_.schemaDdl).filter(_.nonEmpty)
-            .getOrElse(ddlOf(spark, fresh)),
+            .getOrElse(ddlOf(spark, w.files)),
           batchId = cur.map(_.batchId).getOrElse(-1L),
           zones = cur.map(_.zones).getOrElse(Map.empty) ++ w.zones,
-          rows = cur.map(_.rows).getOrElse(Map.empty) ++ w.rows))
+          rows = cur.map(_.rows).getOrElse(Map.empty) ++ w.rows,
+          sizes = cur.map(_.sizes).getOrElse(Map.empty) ++ w.sizes))
       }
     }
     added
@@ -160,22 +161,17 @@ object ManifestScan {
   private def ddlOf(spark: SparkSession, files: Seq[String]): String =
     if (files.isEmpty) "" else spark.read.parquet(files.head).schema.toDDL
 
-  /** Read `files` AS the logged table schema: files predating a schema
-    * widening lack the added columns and read as nulls (parquet's
-    * missing-column rule under an explicit schema) — the reason
-    * evolution never rewrites history. Empty file list ⇒ empty frame
-    * with the right schema.
+  /** Read `files` of snapshot `st` AS the table schema `schemaDdl`
+    * through the log-backed index ([[GraftLogFileIndex.read]]: logged
+    * sizes, no stat or listing): files predating a schema widening lack
+    * the added columns and read as nulls (parquet's missing-column rule
+    * under an explicit schema) — the reason evolution never rewrites
+    * history. Empty file list ⇒ empty frame with the right schema.
     */
-  private def tableRead(spark: SparkSession, files: Seq[String],
-      schemaDdl: String): DataFrame =
-    if (files.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(schemaDdl))
-    else if (schemaDdl.isEmpty) spark.read.parquet(files: _*)
-    else spark.read
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(schemaDdl))
-      .parquet(files: _*)
+  private def tableRead(spark: SparkSession, dir: String, st: FileLog.State,
+      files: Seq[String], schemaDdl: String): DataFrame =
+    GraftLogFileIndex.read(spark, dir,
+      st.copy(files = files, schemaDdl = schemaDdl))
 
   /** Entries of a historical version's manifest ([[FileLog.readVersion]]). */
   def loadManifestVersion(dir: String, v: Int): Seq[FileZones] =
@@ -206,7 +202,7 @@ object ManifestScan {
     */
   def readPrunedRanges(spark: SparkSession, dir: String,
       ranges: Map[String, ZoneRange]): (DataFrame, Int, Int) =
-    readEntries(spark, FileLog.read(dir), ranges)
+    readEntries(spark, dir, FileLog.read(dir), ranges)
 
   /** Time-travel read: the same pruned scan against a RETAINED
     * historical version's file set — after later appends and
@@ -215,7 +211,7 @@ object ManifestScan {
     */
   def readPrunedAsOf(spark: SparkSession, dir: String, v: Int,
       ranges: Map[String, (Long, Long)]): (DataFrame, Int, Int) =
-    readEntries(spark, FileLog.readVersion(dir, v),
+    readEntries(spark, dir, FileLog.readVersion(dir, v),
       ranges.map { case (c, (lo, hi)) => c -> ZoneRange.I64R(lo, hi) })
 
   private def residual(c: String, r: ZoneRange): Column = r match {
@@ -263,7 +259,7 @@ object ManifestScan {
       normPath(f) -> math.max(64L, st.rows.getOrElse(f, 100000L))
     }.toMap
     val rowsB = spark.sparkContext.broadcast(rowsOf)
-    val pairs = tableRead(spark, missing, st.schemaDdl)
+    val pairs = tableRead(spark, dir, st, missing, st.schemaDdl)
       .select(input_file_name().as("__f"),
         col(column).cast("long").as("__v"))
     // (bloom, min, max) per file, built partition-local then merged —
@@ -304,7 +300,8 @@ object ManifestScan {
             .getOrElse(zs)
         }.filter(_._2.nonEmpty).toMap
         FileLog.Commit(c.files, c.schemaDdl, c.batchId, zones, c.rows,
-          dataChange = false) // same rows: the change feed skips it
+          dataChange = false, // same rows: the change feed skips it
+          sizes = c.sizes)
       }
     }
     byFile.size
@@ -319,7 +316,8 @@ object ManifestScan {
   private[sources] def normPathStatic(f: String): String =
     new Path(f).toUri.getPath
 
-  private def readEntries(spark: SparkSession, st: FileLog.State,
+  private def readEntries(spark: SparkSession, dir: String,
+      st: FileLog.State,
       ranges: Map[String, ZoneRange]): (DataFrame, Int, Int) = {
     val kept = st.files.filter { f =>
       val zs = st.zones.getOrElse(f, Map.empty)
@@ -328,7 +326,7 @@ object ManifestScan {
     // resolve against the LOGGED schema: pre-evolution files read
     // their missing columns as nulls, and an empty survivor list
     // still yields the right shape
-    val base = tableRead(spark, kept, st.schemaDdl)
+    val base = tableRead(spark, dir, st, kept, st.schemaDdl)
     val filtered = ranges.foldLeft(base) { case (df, (c, r)) =>
       df.where(residual(c, r))
     }
@@ -353,7 +351,7 @@ object ManifestScan {
     val base = FileLog.read(dir)
     if (base.files.isEmpty) return (0, 0) // empty table: nothing to do
     val w = FileLog.write(spark, dir, cols) { stage =>
-      tableRead(spark, base.files, base.schemaDdl)
+      tableRead(spark, dir, base, base.files, base.schemaDdl)
         .repartitionByRange(targetFiles, col(clusterCol))
         .sortWithinPartitions(clusterCol)
         .write.mode("overwrite").parquet(stage)
@@ -388,7 +386,7 @@ object ManifestScan {
     }
     if (touched.isEmpty) return 0L // provably no file holds a match
     val pred = ranges.map { case (c, r) => residual(c, r) }.reduce(_ && _)
-    val in = tableRead(spark, touched, base.schemaDdl)
+    val in = tableRead(spark, dir, base, touched, base.schemaDdl)
     // SQL DELETE semantics: a NULL predicate RETAINS the row (it did
     // not match). Without the coalesce, !NULL = NULL and the row is
     // silently dropped — reachable here because files predating a
@@ -473,7 +471,7 @@ object ManifestScan {
       base.zones.getOrElse(f, Map.empty).get(keyCol)
         .forall(_.overlaps(range)) // unzoned files may hold any key
     }
-    val existing = tableRead(spark, touched, ddl)
+    val existing = tableRead(spark, dir, base, touched, ddl)
     val remaining = existing
       .join(deduped.select(keyCol), Seq(keyCol), "left_anti")
     val merged = remaining.select(outCols.map(col): _*)
@@ -569,8 +567,8 @@ object ManifestScan {
     // schema: pre-evolution inserts read added columns as null, and a
     // rewrite-diff whose files straddle a widening compares both
     // sides in one shape
-    def readFiles(files: Seq[String]): DataFrame =
-      tableRead(spark, files, toState.schemaDdl)
+    def readFiles(st: FileLog.State, files: Seq[String]): DataFrame =
+      tableRead(spark, dir, st, files, toState.schemaDdl)
     def tag(df: DataFrame, tpe: String, v: Int): DataFrame =
       df.withColumn("_change_type", lit(tpe))
         .withColumn("_commit_version", lit(v.toLong))
@@ -585,7 +583,7 @@ object ManifestScan {
         val added = st.files.filterNot(prevSet.contains)
         val removed = prev.files.filterNot(stSet.contains)
         if (removed.isEmpty) {
-          if (added.nonEmpty) parts += tag(readFiles(added), "insert", v)
+          if (added.nonEmpty) parts += tag(readFiles(st, added), "insert", v)
         } else {
           // row-level diff over ONLY the touched files, as ONE signed
           // bag-difference: +1 per new-side row, −1 per old-side row,
@@ -594,8 +592,8 @@ object ManifestScan {
           // semantics in a single shuffle instead of the two separate
           // exceptAll passes that would each re-scan both sides
           // (measured 1.5× on the 16M-row smoke's rewrite diff).
-          val neu = readFiles(added).withColumn("__sgn", lit(1L))
-          val old = readFiles(removed).withColumn("__sgn", lit(-1L))
+          val neu = readFiles(st, added).withColumn("__sgn", lit(1L))
+          val old = readFiles(prev, removed).withColumn("__sgn", lit(-1L))
           val dataCols = neu.columns.filter(_ != "__sgn").toSeq
           val net = neu.unionByName(old)
             .groupBy(dataCols.map(col): _*)
@@ -625,7 +623,7 @@ object ManifestScan {
           lit("insert").as("_change_type"),
           lit(0L).as("_commit_version"))
       case Seq() => // empty feed, but with the full feed schema
-        tag(readFiles(Seq.empty), "insert", 0).limit(0)
+        tag(readFiles(toState, Seq.empty), "insert", 0).limit(0)
       case ps => ps.reduce(_.unionByName(_))
     }
   }
@@ -653,7 +651,7 @@ object ManifestScan {
     }
     if (touched.size < 2) return (touched.size, touched.size)
     val w = FileLog.write(spark, dir, cols) { stage =>
-      tableRead(spark, touched, base.schemaDdl)
+      tableRead(spark, dir, base, touched, base.schemaDdl)
         .repartitionByRange(targetFiles, col(clusterCol))
         .sortWithinPartitions(clusterCol)
         .write.mode("overwrite").parquet(stage)

@@ -45,7 +45,7 @@ final class SnapshotVacuumedException(msg: String, cause: Throwable)
   * [[graft.sources.ManifestScan]]'s versioned sidecar: every commit
   * writes an IMMUTABLE `_files.v{N}.json` holding the live file SET
   * (plus schema DDL, the streaming batch watermark, and per-file row
-  * counts and zone maps), and `_files.json` is a convenience pointer to
+  * counts, byte sizes and zone maps), and `_files.json` is a convenience pointer to
   * the newest one. Readers resolve the newest version file once per
   * scan and read an immutable list — they see the pre-commit or
   * post-commit table, never a torn one; replaced files stay on disk
@@ -59,11 +59,14 @@ final class SnapshotVacuumedException(msg: String, cause: Throwable)
   * parquet inference on a fileless directory.
   *
   * One write path: a writer stages its files and reads their footers
-  * once ([[write]], yielding each new file's row count and zones), then
-  * commits them as an [[append]] or a [[rewrite]]; every commit kind
-  * ([[commit]], [[transact]], [[commitRewrite]]) claims its version in
-  * ONE retry loop. So every commit records the row count of each file
-  * it adds, and the layout's zones next to it.
+  * once ([[write]], yielding each new file's row count, byte size and
+  * zones), then commits them as an [[append]] or a [[rewrite]]; every
+  * commit kind ([[commit]], [[transact]], [[commitRewrite]]) claims its
+  * version in ONE retry loop. So every commit records the row count and
+  * the byte size of each file it adds, and the layout's zones next to
+  * it — enough for a reader to plan a scan of the snapshot from the
+  * log alone ([[graft.sources.GraftLogFileIndex]]: no file stat, no
+  * directory listing).
   *
   * Concurrency contract (mirrored in README "Concurrency contract"):
   * the version file is created with a compare-and-swap
@@ -94,13 +97,19 @@ final class SnapshotVacuumedException(msg: String, cause: Throwable)
   *
   * A version file is one of two record shapes:
   *
-  *  - a CHECKPOINT: the full snapshot (`files` + per-file zones/rows),
-  *    exactly the pre-round-21 shape — every legacy log reads
-  *    unchanged, and every legacy version file IS a checkpoint;
+  *  - a CHECKPOINT: the full snapshot (`files` + per-file `zones`,
+  *    `rows` and `sizes`), exactly the pre-round-21 shape — every
+  *    legacy log reads unchanged, and every legacy version file IS a
+  *    checkpoint;
   *  - a DELTA: only the commit's CHANGES against its predecessor
-  *    (`add`/`remove` file lists, changed zone/row entries, the new
-  *    schema/watermark) plus the version of the checkpoint its chain
-  *    starts at.
+  *    (`add`/`remove` file lists, changed zone/row/size entries and
+  *    their `*_drop` lists, the new schema/watermark) plus the version
+  *    of the checkpoint its chain starts at.
+  *
+  * `sizes` (file → bytes) sits next to `rows` (file → row count) and
+  * is optional the same way: a record without it (logs written before
+  * sizes were recorded) reads fine, and its files are stat'ed once
+  * when a snapshot is planned ([[fileSizes]]).
   *
   * Why: with full snapshots, every commit — including every streaming
   * micro-batch — wrote O(table-files) metadata bytes, so a long-running
@@ -172,13 +181,21 @@ object FileLog {
     *                  commit then writes a checkpoint). Lets a
     *                  committer decide delta-vs-checkpoint without
     *                  re-reading the log.
+    * @param sizes     per-file byte sizes, recorded with the row counts
+    *                  (from the staged write's own listing, or the
+    *                  listing that adopted or built the files): a
+    *                  reader plans its scan from them without a stat
+    *                  per file ([[fileSizes]]). Absent for the same
+    *                  files as `rows`, and in logs written before sizes
+    *                  were recorded.
     */
   final case class State(files: Seq[String], schemaDdl: String,
       version: Int = 0, batchId: Long = -1L,
       zones: Map[String, Map[String, Zone]] = Map.empty,
       rows: Map[String, Long] = Map.empty,
       dataChange: Boolean = true,
-      checkpoint: Int = 0)
+      checkpoint: Int = 0,
+      sizes: Map[String, Long] = Map.empty)
 
   /** What a writer asks to commit — the payload half of [[State]]
     * (version is assigned by the CAS loop).
@@ -187,7 +204,8 @@ object FileLog {
       batchId: Long = -1L,
       zones: Map[String, Map[String, Zone]] = Map.empty,
       rows: Map[String, Long] = Map.empty,
-      dataChange: Boolean = true)
+      dataChange: Boolean = true,
+      sizes: Map[String, Long] = Map.empty)
 
   def currentPath(dir: String): String = s"$dir/_files.json"
   private def versionPath(dir: String, v: Int): String = s"$dir/_files.v$v.json"
@@ -276,20 +294,41 @@ object FileLog {
   }
 
   private def readOnce(dir: String): State = {
-    val ptr =
-      try Some(parseRecord(FsIo.readString(currentPath(dir))))
-      catch { case _: java.io.IOException => None }
+    val ptr = pointer(dir)
+    newestFrom(dir, ptr) match {
+      // pointer IS the newest record and a full snapshot: zero IO
+      case Some(v) => ptr match {
+        case Some(Snap(st)) if v == st.version =>
+          st.copy(checkpoint = st.version)
+        case _ => readVersion(dir, v)
+      }
+      case None => readByListing(dir, ptr)
+    }
+  }
+
+  private def pointer(dir: String): Option[Record] =
+    try Some(parseRecord(FsIo.readString(currentPath(dir))))
+    catch { case _: java.io.IOException => None }
+
+  /** The newest version, probed forward from the pointer's; None when
+    * the pointer is missing, legacy or names a vacuumed version.
+    */
+  private def newestFrom(dir: String, ptr: Option[Record]): Option[Int] = {
     val ptrV = ptr.map(recordVersion).getOrElse(0)
     if (ptrV > 0 && FsIo.exists(versionPath(dir, ptrV))) {
       var v = ptrV
       while (FsIo.exists(versionPath(dir, v + 1))) v += 1
-      ptr match {
-        // pointer IS the newest record and a full snapshot: zero IO
-        case Some(Snap(st)) if v == ptrV =>
-          st.copy(checkpoint = st.version)
-        case _ => readVersion(dir, v)
-      }
-    } else readByListing(dir, ptr)
+      Some(v)
+    } else None
+  }
+
+  /** The current version number, resolved like [[read]] (the pointer
+    * and a forward probe, a listing only off the fast path) without
+    * materializing the state.
+    */
+  private def currentVersion(dir: String): Int = {
+    val ptr = pointer(dir)
+    newestFrom(dir, ptr).getOrElse(versions(dir).lastOption.getOrElse(0))
   }
 
   private def readByListing(dir: String, ptr: Option[Record]): State =
@@ -379,7 +418,8 @@ object FileLog {
       add: Seq[String], remove: Seq[String], schemaDdl: String,
       batchId: Long, zones: Map[String, Map[String, Zone]],
       rows: Map[String, Long], zoneDrop: Seq[String],
-      rowDrop: Seq[String], dataChange: Boolean) extends Record
+      rowDrop: Seq[String], dataChange: Boolean,
+      sizes: Map[String, Long], sizeDrop: Seq[String]) extends Record
 
   private def recordVersion(r: Record): Int = r match {
     case Snap(st) => st.version
@@ -403,7 +443,8 @@ object FileLog {
       zones = prev.zones -- rm -- d.zoneDrop ++ d.zones,
       rows = prev.rows -- rm -- d.rowDrop ++ d.rows,
       dataChange = d.dataChange,
-      checkpoint = d.checkpoint)
+      checkpoint = d.checkpoint,
+      sizes = prev.sizes -- rm -- d.sizeDrop ++ d.sizes)
   }
 
   private def parseRecord(text: String): Record = {
@@ -423,10 +464,12 @@ object FileLog {
         schemaDdl = m.getOrElse("schema", "").asInstanceOf[String],
         batchId = longOf("batch_id", -1L),
         zones = parseZones(m),
-        rows = parseRows(m),
+        rows = parseCounts(m, "rows"),
         zoneDrop = strs("zones_drop"),
         rowDrop = strs("rows_drop"),
-        dataChange = m.get("data_change").forall(_.asInstanceOf[Boolean]))
+        dataChange = m.get("data_change").forall(_.asInstanceOf[Boolean]),
+        sizes = parseCounts(m, "sizes"),
+        sizeDrop = strs("sizes_drop"))
     }
   }
 
@@ -437,8 +480,9 @@ object FileLog {
       }
     }).getOrElse(Map.empty[String, Map[String, Zone]])
 
-  private def parseRows(m: Map[String, Any]): Map[String, Long] =
-    m.get("rows").map(_.asInstanceOf[Map[String, Any]].map {
+  /** A per-file number map: `rows` (row counts) or `sizes` (bytes). */
+  private def parseCounts(m: Map[String, Any], key: String): Map[String, Long] =
+    m.get(key).map(_.asInstanceOf[Map[String, Any]].map {
       case (f, n) => f -> Json.asLong(n)
     }).getOrElse(Map.empty[String, Long])
 
@@ -451,10 +495,11 @@ object FileLog {
       version = version,
       batchId = longOf("batch_id", -1L),
       zones = parseZones(m),
-      rows = parseRows(m),
+      rows = parseCounts(m, "rows"),
       dataChange = m.get("data_change")
         .forall(_.asInstanceOf[Boolean]), // absent (pre-r18 log) = true
-      checkpoint = version) // a full snapshot is its own checkpoint
+      checkpoint = version, // a full snapshot is its own checkpoint
+      sizes = parseCounts(m, "sizes"))
   }
 
   private def render(c: Commit, version: Int): String = {
@@ -471,9 +516,12 @@ object FileLog {
     val withRows =
       if (c.rows.isEmpty) withZones
       else withZones + ("rows" -> c.rows)
+    val withSizes =
+      if (c.sizes.isEmpty) withRows
+      else withRows + ("sizes" -> c.sizes)
     val withChange = // written only when cleared: pre-r18 readers and
-      if (c.dataChange) withRows // logs agree that absent means true
-      else withRows + ("data_change" -> false)
+      if (c.dataChange) withSizes // logs agree that absent means true
+      else withSizes + ("data_change" -> false)
     Json.write(withChange)
   }
 
@@ -519,6 +567,10 @@ object FileLog {
       !prev.rows.get(f).contains(n) }
     val rDrop = prev.rows.keysIterator
       .filter(f => !removeSet(f) && !c.rows.contains(f)).toVector.sorted
+    val sAdd = c.sizes.filter { case (f, n) =>
+      !prev.sizes.get(f).contains(n) }
+    val sDrop = prev.sizes.keysIterator
+      .filter(f => !removeSet(f) && !c.sizes.contains(f)).toVector.sorted
     var m = scala.collection.immutable.ListMap[String, Any](
       "version" -> next.toLong,
       "checkpoint" -> prev.checkpoint.toLong,
@@ -531,6 +583,8 @@ object FileLog {
     if (zDrop.nonEmpty) m += ("zones_drop" -> zDrop)
     if (rAdd.nonEmpty) m += ("rows" -> rAdd)
     if (rDrop.nonEmpty) m += ("rows_drop" -> rDrop)
+    if (sAdd.nonEmpty) m += ("sizes" -> sAdd)
+    if (sDrop.nonEmpty) m += ("sizes_drop" -> sDrop)
     if (!c.dataChange) m += ("data_change" -> false)
     Some(Json.write(m))
   }
@@ -583,10 +637,12 @@ object FileLog {
   def commit(spark: SparkSession, dir: String, files: Seq[String],
              schemaDdl: String, batchId: Long = -1L,
              zones: Map[String, Map[String, Zone]] = Map.empty,
-             rows: Map[String, Long] = Map.empty): Int =
+             rows: Map[String, Long] = Map.empty,
+             sizes: Map[String, Long] = Map.empty): Int =
     claim(dir) {
       val next = versions(dir).lastOption.getOrElse(0) + 1
-      Some(next -> render(Commit(files, schemaDdl, batchId, zones, rows), next))
+      Some(next -> render(Commit(files, schemaDdl, batchId, zones, rows,
+        sizes = sizes), next))
     }
 
   /** Read-compute-CAS loop for APPEND-shaped writers: `f` receives the
@@ -605,20 +661,29 @@ object FileLog {
 
   /** What one staged write produced: the created files, each one's row
     * count, and its zones for the layout's zone columns (a file with no
-    * usable zone has no entry) — from ONE footer pass ([[footers]]).
+    * usable zone has no entry) — from ONE footer pass ([[footers]]) —
+    * and each one's byte size, from the write's own listing.
     */
   final case class Written(files: Seq[String], rows: Map[String, Long],
-      zones: Map[String, Map[String, Zone]]) {
+      zones: Map[String, Map[String, Zone]],
+      sizes: Map[String, Long] = Map.empty) {
     def totalRows: Long = rows.values.sum
   }
 
   /** The write primitive: [[stagedWrite]] `body` into `dir`, then one
-    * footer pass over exactly the created files, whose counts and
-    * zones every commit records ([[append]], [[rewrite]]).
+    * footer pass over exactly the created files, whose counts, sizes
+    * and zones every commit records ([[append]], [[rewrite]]).
     */
   def write(spark: SparkSession, dir: String, zoneCols: Seq[String])(
-      body: String => Unit): Written =
-    footers(spark, stagedWrite(spark, dir, body), zoneCols)
+      body: String => Unit): Written = {
+    val staged = stage(spark, dir, body)
+    footers(spark, staged.map(_._1), zoneCols).copy(sizes = staged.toMap)
+  }
+
+  /** [[footers]] of files found by a listing, with the listed sizes. */
+  def listed(spark: SparkSession, files: Seq[(String, Long)],
+      zoneCols: Seq[String]): Written =
+    footers(spark, files.map(_._1), zoneCols).copy(sizes = files.toMap)
 
   /** The append primitive: one commit that adds the files `body`
     * writes, with their counts and zones, merged past concurrent
@@ -651,15 +716,18 @@ object FileLog {
       ddlOver(pre) // a refused schema change throws before any write
     }
     val w = write(spark, dir, zoneCols)(body)
+    val own = w.files.toSet
     val v = transact(spark, dir) { cur =>
       val curBid = cur.map(_.batchId).getOrElse(-1L)
+      // an unlogged directory's listing, with its sizes, is adopted
+      lazy val adopted = dataFiles(spark, dir).filterNot(f => own(f._1))
       if (batchId >= 0 && curBid >= batchId) None // replay raced in
       else Some(Commit(
-        cur.map(_.files).getOrElse(
-          listDataFiles(spark, dir).filterNot(w.files.toSet)) ++ w.files,
+        cur.map(_.files).getOrElse(adopted.map(_._1)) ++ w.files,
         ddlOver(cur), math.max(batchId, curBid),
         cur.map(_.zones).getOrElse(Map.empty) ++ w.zones,
-        cur.map(_.rows).getOrElse(Map.empty) ++ w.rows))
+        cur.map(_.rows).getOrElse(Map.empty) ++ w.rows,
+        sizes = cur.map(_.sizes).getOrElse(adopted.toMap) ++ w.sizes))
     }
     if (v < 0) None else Some(w)
   }
@@ -672,7 +740,7 @@ object FileLog {
       dataChange: Boolean = true,
       readSet: Option[Set[String]] = None): Int =
     commitRewrite(spark, dir, base, removed, written.files, schemaDdl,
-      written.zones, written.rows, dataChange, readSet)
+      written.zones, written.rows, dataChange, readSet, written.sizes)
 
   /** Optimistic REWRITE commit (Delta-style conflict detection): the
     * writer derived `added` from snapshot `base` by rewriting exactly
@@ -712,7 +780,8 @@ object FileLog {
       addedZones: Map[String, Map[String, Zone]] = Map.empty,
       addedRows: Map[String, Long] = Map.empty,
       dataChange: Boolean = true,
-      readSet: Option[Set[String]] = None): Int = {
+      readSet: Option[Set[String]] = None,
+      addedSizes: Map[String, Long] = Map.empty): Int = {
     val readFiles = readSet.getOrElse(base.files.toSet)
     require(removed.subsetOf(readFiles),
       "a rewrite's removed files must be inside its declared read set")
@@ -730,6 +799,7 @@ object FileLog {
       val files = (curSet -- removed).toSeq ++ added
       val zones = (cur.zones -- removed) ++ addedZones
       val rows = (cur.rows -- removed) ++ addedRows
+      val sizes = (cur.sizes -- removed) ++ addedSizes
       val batchId = math.max(base.batchId, cur.batchId)
       // The caller's schemaDdl was derived from the STALE base: if an
       // interloping append widened the schema since (evolveSchema),
@@ -755,7 +825,7 @@ object FileLog {
             "resurrect them; re-read and retry the operation")
       }
       Some(after(Some(cur), Commit(files, mergeSchemas(schemaDdl, cur.schemaDdl),
-        batchId, zones, rows, dataChange)))
+        batchId, zones, rows, dataChange, sizes)))
     }
   }
 
@@ -824,21 +894,26 @@ object FileLog {
     * NOT data files of this table: a crashed [[stagedWrite]] must not
     * be adopted as live data.
     */
-  def listDataFiles(spark: SparkSession, dir: String): Seq[String] = {
+  def listDataFiles(spark: SparkSession, dir: String): Seq[String] =
+    dataFiles(spark, dir).map(_._1)
+
+  /** [[listDataFiles]] with each file's byte size from the same listing. */
+  def dataFiles(spark: SparkSession, dir: String): Seq[(String, Long)] = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p)) return Seq.empty
     val base = p.toUri.getPath
-    val out = Seq.newBuilder[String]
+    val out = Seq.newBuilder[(String, Long)]
     val it = fs.listFiles(p, true)
     while (it.hasNext) {
-      val f = it.next().getPath
+      val st = it.next()
+      val f = st.getPath
       val rel = f.toUri.getPath.stripPrefix(base)
       if (f.getName.endsWith(".parquet") && !f.getName.startsWith("_") &&
           !rel.split('/').exists(_.startsWith("_")))
-        out += f.toString
+        out += f.toString -> st.getLen
     }
-    out.result().sorted
+    out.result().sortBy(_._1)
   }
 
   /** The footer pass: each file's row count and typed min/max zones for
@@ -944,6 +1019,32 @@ object FileLog {
       (if (missing.isEmpty) Map.empty else footers(spark, missing, Nil).rows)
   }
 
+  /** Byte size of each of `files` (live in snapshot `st`), from the
+    * sizes the log recorded at commit time; only files without one (an
+    * adopted directory's, or a log written before sizes were recorded)
+    * are stat'ed, once each, in parallel on the driver — never a
+    * listing, never a Spark job.
+    */
+  def fileSizes(spark: SparkSession, st: State,
+      files: Seq[String]): Map[String, Long] = {
+    val (known, missing) = files.partition(st.sizes.contains)
+    known.map(f => f -> st.sizes(f)).toMap ++ (if (missing.isEmpty) Map.empty
+    else {
+      stats.addAndGet(missing.size.toLong)
+      val fs = new Path(missing.head).getFileSystem(
+        spark.sessionState.newHadoopConf())
+      missing.zip(missing.asJava.parallelStream()
+        .map[java.lang.Long](f => fs.getFileStatus(new Path(f)).getLen)
+        .collect(java.util.stream.Collectors.toList[java.lang.Long])
+        .asScala.map(_.longValue)).toMap
+    })
+  }
+
+  /** Files [[fileSizes]] had to stat — test telemetry, like [[listings]]:
+    * a snapshot whose log records every size resolves with none.
+    */
+  private[graft] val stats = new java.util.concurrent.atomic.AtomicLong(0L)
+
   /** Write `df` into `dir`'s partition tree through a writer-unique
     * staging directory and return EXACTLY the created file paths.
     *
@@ -962,23 +1063,31 @@ object FileLog {
     * the staging dir itself, swept by age).
     */
   def stagedWrite(spark: SparkSession, dir: String,
-      write: String => Unit): Seq[String] = {
-    val stage = s"$dir/_staging/${java.util.UUID.randomUUID()}"
-    write(stage)
+      write: String => Unit): Seq[String] =
+    stage(spark, dir, write).map(_._1)
+
+  /** [[stagedWrite]], returning each created file with its byte size
+    * from the staging listing (a rename keeps the length).
+    */
+  private def stage(spark: SparkSession, dir: String,
+      write: String => Unit): Seq[(String, Long)] = {
+    val stageDir = s"$dir/_staging/${java.util.UUID.randomUUID()}"
+    write(stageDir)
     val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    val stagePath = new Path(stage)
+    val stagePath = new Path(stageDir)
     if (!fs.exists(stagePath)) return Seq.empty
-    val staged = Seq.newBuilder[(Path, Path)]
+    val staged = Seq.newBuilder[(Path, Path, Long)]
     val it = fs.listFiles(stagePath, true)
     val stageBase = stagePath.toUri.getPath
     while (it.hasNext) {
-      val f = it.next().getPath
+      val st = it.next()
+      val f = st.getPath
       if (f.getName.endsWith(".parquet") && !f.getName.startsWith("_")) {
         val rel = f.toUri.getPath.stripPrefix(stageBase)
         // makeQualified: the logged path must be scheme-identical to
         // listDataFiles output, or vacuum's referenced-set arithmetic
         // would treat the just-committed files as orphans
-        staged += (f -> fs.makeQualified(new Path(dir + rel)))
+        staged += ((f, fs.makeQualified(new Path(dir + rel)), st.getLen))
       }
     }
     val moves = staged.result()
@@ -989,7 +1098,7 @@ object FileLog {
     // streaming ingest rows
     moves.map(_._2.getParent).distinct.foreach(fs.mkdirs)
     val failed = new java.util.concurrent.atomic.AtomicReference[String](null)
-    moves.asJava.parallelStream().forEach { case (f, dest) =>
+    moves.asJava.parallelStream().forEach { case (f, dest, _) =>
       if (!fs.rename(f, dest)) failed.compareAndSet(null, s"$f -> $dest")
       else {
         // Stamp MOVE time: rename preserves the staging-write mtime, so
@@ -1005,7 +1114,7 @@ object FileLog {
     if (failed.get() != null)
       throw new java.io.IOException(s"staging move ${failed.get()} failed")
     fs.delete(stagePath, true)
-    moves.map(_._2.toString).sorted
+    moves.map(m => m._2.toString -> m._3).sortBy(_._1)
   }
 
   /** Run an EAGER read action (a collect/count over a frame resolved
@@ -1020,7 +1129,7 @@ object FileLog {
     * (`store.classified { df.collect() }`).
     */
   def classified[T](dir: String)(body: => T): T = {
-    val pin = versions(dir).lastOption.getOrElse(0)
+    val pin = currentVersion(dir) // no listing on the fast path
     try body
     catch { case e: Throwable => throw classifyReadFailure(dir, pin, e) }
   }

@@ -2,6 +2,7 @@ package graft.store
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.util.FsIo
 
@@ -57,11 +58,17 @@ private[store] final case class Layout(parts: Seq[(String, Int)],
   * `encode`, its probe ranking, its depth-probed `search` and the cells
   * that search reads.
   *
-  * Reads go through a memo of the newest committed snapshots, keyed on
-  * (schema, file list): each entry holds the snapshot's frame and,
-  * once searched, its prepared scan ([[PreparedScan]]), which
-  * [[topK]] executes without planning. A commit changes the file
-  * list, so the next read misses and the old entries age out.
+  * Every committed snapshot reads through one log-backed file index
+  * ([[graft.sources.GraftLogFileIndex]]): file list, sizes and
+  * partition values come from the log, so resolving a snapshot stats
+  * no file and starts no listing job. Reads go through a memo of the
+  * newest committed snapshots, keyed on (schema, file list): each entry
+  * holds the snapshot's frame and, once searched, its prepared scan
+  * ([[PreparedScan]]), which [[topK]] executes without planning. The
+  * scan's parquet reader is planned once per table schema and reused by
+  * every later snapshot, which only groups its logged files by cell. A
+  * commit changes the file list, so the next read misses and the old
+  * entries age out.
   *
   * One write policy holds for every layout: appends do not sort;
   * builds and rewrites sort each file by (partition columns, id), so
@@ -104,21 +111,45 @@ abstract class IndexTable(spark: SparkSession,
     if (!FileLog.exists(tableDir)) new Snap(spark.read.parquet(tableDir))
     else snapOf(FileLog.read(tableDir))
 
-  /** A snapshot's frame and, planned on its first [[topK]], its
-    * prepared scan. The lazy val plans at most once per snapshot even
-    * when concurrent searches miss together.
+  /** A snapshot's frame and, built on its first [[topK]], its prepared
+    * scan: a logged snapshot's files through the table's reader
+    * ([[readerFor]]), anything else planned on its own. The lazy val
+    * builds at most once per snapshot even when concurrent searches
+    * miss together.
     */
-  protected final class Snap(val df: DataFrame) {
-    lazy val scan: PreparedScan = PreparedScan(df, layout)
+  protected final class Snap(val df: DataFrame,
+      index: Option[graft.sources.GraftLogFileIndex] = None) {
+    lazy val scan: PreparedScan = index
+      .flatMap(ix => readerFor(ix, df)
+        .flatMap(PreparedScan.over(_, ix.partitionedFiles, layout)))
+      .getOrElse(PreparedScan(df, layout))
+  }
+
+  // The parquet reader planned for the table's schema (the nullable
+  // logged schema and the partition columns), with that key: planned on
+  // the first search of a snapshot and reused until a commit changes
+  // the schema. Cells are parsed with the current layout.
+  private var reader: Option[((StructType, StructType),
+    Option[PreparedScan.Reader])] = None
+
+  private def readerFor(ix: graft.sources.GraftLogFileIndex,
+      df: DataFrame): Option[PreparedScan.Reader] = synchronized {
+    val key = (ix.dataSchema, ix.partitionSchema)
+    reader match {
+      case Some((k, r)) if k == key => r
+      case _ =>
+        val r = PreparedScan.reader(df, layout)
+        reader = Some(key -> r)
+        r
+    }
   }
 
   /** The in-memory copy reads serve instead of the files, if any. */
   protected def residentSnap: Option[Snap] = None
 
-  // Snapshot memo: resolving a snapshot's frame costs a fixed
-  // file-stat pass (a Spark job once the snapshot holds >32 files)
-  // plus analysis, and planning its top-k scan costs a Catalyst pass,
-  // both paid per READ even at a frozen version. Keyed on (schema,
+  // Snapshot memo: a snapshot's frame is resolved from the log alone
+  // (no file stat, no listing job), but building it and its cell map
+  // still costs per READ even at a frozen version. Keyed on (schema,
   // exact file list), so any commit misses and a re-read of the same
   // immutable snapshot hits; the newest 8 snapshots stay. Metadata
   // and plans only — no rows are cached, every search still scans.
@@ -131,22 +162,16 @@ abstract class IndexTable(spark: SparkSession,
 
   protected def dfOf(st: FileLog.State): DataFrame = snapOf(st).df
 
-  private def snapOf(st: FileLog.State): Snap =
-    if (st.files.isEmpty)
-      new Snap(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(st.schemaDdl)))
-    // The log already knows the schema (captured from the writing
-    // frame at commit time) — passing it skips the per-read parquet
-    // schema-inference pass; a log without one still infers.
-    else if (st.schemaDdl.isEmpty)
-      new Snap(spark.read.option("basePath", tableDir).parquet(st.files: _*))
-    else snaps.synchronized {
-      snaps.computeIfAbsent((st.schemaDdl, st.files), _ =>
-        new Snap(spark.read
-          .schema(org.apache.spark.sql.types.StructType.fromDDL(st.schemaDdl))
-          .option("basePath", tableDir).parquet(st.files: _*)))
+  private def snapOf(st: FileLog.State): Snap = {
+    def resolve(): Snap = {
+      val (df, index) = graft.sources.GraftLogFileIndex.snapshot(spark, tableDir, st)
+      new Snap(df, index)
     }
+    if (st.files.isEmpty || st.schemaDdl.isEmpty) resolve()
+    else snaps.synchronized {
+      snaps.computeIfAbsent((st.schemaDdl, st.files), _ => resolve())
+    }
+  }
 
   /** Snapshots whose frame (and prepared scan) the memo holds. */
   private[graft] def cachedSnapshots: Int = snaps.synchronized(snaps.size)
@@ -567,9 +592,9 @@ private[store] object IndexTable {
     // overwrite cleared the directory, so the physical listing IS the
     // new live set; v1 of the log publishes it with the schema, which
     // is what lets an EMPTY build read back correctly
-    val w = FileLog.footers(spark, FileLog.listDataFiles(spark, dir),
+    val w = FileLog.listed(spark, FileLog.dataFiles(spark, dir),
       layout.zoneCols)
     FileLog.commit(spark, dir, w.files, rows.schema.toDDL,
-      zones = w.zones, rows = w.rows)
+      zones = w.zones, rows = w.rows, sizes = w.sizes)
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.{Partition, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
 import org.apache.spark.sql.execution.datasources.{FilePartition, FileScanRDD,
   PartitionedFile}
 import org.apache.spark.sql.functions.col
@@ -13,19 +13,23 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
 
 import graft.expressions.VecEval
 
-/** One snapshot's (id, embedding) scan, planned by Catalyst ONCE and
-  * then executed by every top-k search over that snapshot
-  * ([[IndexTable.topK]]). Planning keeps what the DataFrame search gets
-  * from Catalyst: column pruning, the vectorized parquet reader, and an
-  * in-memory relation in place of the files when the frame is cached.
-  * A search then costs one `runJob` and no query planning:
+/** One snapshot's (id, embedding) scan, executed by every top-k search
+  * over that snapshot ([[IndexTable.topK]]) without query planning. What
+  * the DataFrame search gets from Catalyst — column pruning, the
+  * vectorized parquet reader, an in-memory relation in place of the
+  * files when the frame is cached — comes from one Catalyst plan, and a
+  * search then costs one `runJob`:
   *
   *  - a parquet file scan is regrouped by grid cell, so a search reads
   *    only its probed cells' files, packed by size into
-  *    ≤ min(probed cells, defaultParallelism) tasks;
+  *    ≤ min(probed cells, defaultParallelism) tasks. The planned reader
+  *    ([[PreparedScan.Reader]]) reads any whole-file split of its
+  *    schema, so a logged snapshot needs no plan of its own: it takes
+  *    the reader planned for an earlier snapshot of the same schema and
+  *    its files from the log ([[PreparedScan.over]]);
   *  - any other scan (a resident copy, a directory whose paths name no
-  *    cell) runs its partitions in as many tasks and keeps only rows
-  *    whose grid code is probed.
+  *    cell) is planned per snapshot, runs its partitions in as many
+  *    tasks and keeps only rows whose grid code is probed.
   *
   * Each task keeps a bounded (dist, id) heap ([[TopKHeap]]); the
   * driver merges the ≤ k rows of each task. Distances are the same
@@ -74,8 +78,22 @@ private[graft] object PreparedScan {
   /** Scans planned since start-up: a cost counter for the specs. */
   private[graft] val planned = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Plan `df`'s scan once, with the grid code of every row. */
-  def apply(df: DataFrame, layout: Layout): PreparedScan = {
+  /** A planned parquet scan's reader: it reads any split of files with
+    * the schema it was planned for, emitting requiredSchema ++
+    * partitionSchema per row.
+    */
+  final class Reader private[PreparedScan] (val rdd: FileScanRDD,
+      val floatEmb: Boolean) {
+    val idOrd: Int = rdd.readSchema.fieldIndex("id")
+    val embOrd: Int = rdd.readSchema.fieldIndex("embedding")
+  }
+
+  /** Plan `df`'s scan once, with the grid code of every row: the
+    * planned query, whether embeddings are floats, and the parquet
+    * reader when the plan is one file scan.
+    */
+  private def plan(df: DataFrame,
+      layout: Layout): (QueryExecution, Boolean, Option[Reader]) = {
     planned.incrementAndGet()
     val sel = df.select(col("id"), col("embedding"), layout.gridKey.as("_g"))
     val floatEmb = sel.schema("embedding").dataType match {
@@ -83,26 +101,43 @@ private[graft] object PreparedScan {
       case _ => false
     }
     val qe = sel.queryExecution
-    val fileScan = qe.executedPlan.collect {
+    val reader = qe.executedPlan.collect {
       case s: FileSourceScanExec => s.inputRDD
     } match {
-      case Seq(rdd: FileScanRDD) =>
-        val files = rdd.filePartitions.flatMap(_.files)
-        val cells = files.map(f => layout.cellOf(f.filePath.toString))
-        if (cells.forall(_.nonEmpty))
-          Some((rdd, files.zip(cells.flatten).groupMap(_._2)(_._1)))
-        else None
+      case Seq(rdd: FileScanRDD) => Some(new Reader(rdd, floatEmb))
       case _ => None
     }
-    fileScan match {
-      case Some((rdd, byCell)) =>
-        // the reader emits requiredSchema ++ partitionSchema per row
-        new PreparedScan(rdd, Some(byCell), rdd.readSchema.fieldIndex("id"),
-          rdd.readSchema.fieldIndex("embedding"), -1, floatEmb,
-          layout.gridSize)
-      case None =>
-        new PreparedScan(qe.toRdd, None, 0, 1, 2, floatEmb, layout.gridSize)
-    }
+    (qe, floatEmb, reader)
+  }
+
+  /** Plan `df`'s scan: its files grouped by cell when every path names
+    * one, else the whole scan filtered by grid code.
+    */
+  def apply(df: DataFrame, layout: Layout): PreparedScan = {
+    val (qe, floatEmb, reader) = plan(df, layout)
+    reader.flatMap(r => over(r, r.rdd.filePartitions.flatMap(_.files), layout))
+      .getOrElse(new PreparedScan(qe.toRdd, None, 0, 1, 2, floatEmb,
+        layout.gridSize))
+  }
+
+  /** Plan `df`'s parquet reader alone, to scan later snapshots of the
+    * same schema through [[over]]; None when `df` is not a file scan.
+    */
+  def reader(df: DataFrame, layout: Layout): Option[Reader] =
+    plan(df, layout)._3
+
+  /** `files` through a reader planned earlier, grouped by the grid cell
+    * the current `layout` parses from each path; None when a path names
+    * no cell.
+    */
+  def over(r: Reader, files: Seq[PartitionedFile],
+      layout: Layout): Option[PreparedScan] = {
+    val cells = files.map(f => layout.cellOf(f.filePath.toString))
+    if (cells.forall(_.nonEmpty))
+      Some(new PreparedScan(r.rdd,
+        Some(files.zip(cells.flatten).groupMap(_._2)(_._1)), r.idOrd,
+        r.embOrd, -1, r.floatEmb, layout.gridSize))
+    else None
   }
 
   /** Files into ≤ `n` groups, largest first onto the lightest group. */

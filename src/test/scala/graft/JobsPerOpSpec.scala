@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.lsh.LshConfig
 import graft.server.StoreAdapter
-import graft.store.{IndexTable, MaintenancePolicy, MultiTableStore,
+import graft.store.{FileLog, IndexTable, MaintenancePolicy, MultiTableStore,
   PreparedScan, QuantConfig, QuantIndex, QuantTier, VectorStore}
 
 /** Spark jobs per store operation, on all three index layouts. At
@@ -124,6 +124,9 @@ class JobsPerOpSpec extends AnyFunSuite {
     ("quant", "facade search probed") -> 1L,
     ("quant", "facade search exact") -> 1L,
     ("quant", "add + totalVectors") -> 2L,
+    ("lsh", "resolve 40-file snapshot") -> 0L,
+    ("lsh", "delete >32 files") -> 8L,
+    ("lsh", "upsert >32 files") -> 8L,
     ("manifest", "appendBatch") -> 1L,
     ("manifest", "refreshManifest") -> 0L,
     ("manifest", "delete") -> 1L,
@@ -283,18 +286,25 @@ class JobsPerOpSpec extends AnyFunSuite {
       assert(a.totalVectors() == 2020L)
     }
     info(f"$layout%-6s add + totalVectors       $added%2d jobs")
-    // the first search after a commit plans the new snapshot once
+    // the table's reader was planned before the add: the first search
+    // after a commit plans nothing, and neither do 10 more commits
     val p0 = PreparedScan.planned.get()
     a.classified(a.topK(q, 10, a.maxProbes))
+    (0 until 10).foreach { i =>
+      a.add(rows(from + 100 + i * 5, from + 105 + i * 5))
+      a.classified(a.topK(q, 10, a.maxProbes))
+    }
     val plans = PreparedScan.planned.get() - p0
-    assert(plans <= 1L, s"$layout: first search after a commit planned $plans scans")
+    assert(plans == 0L, s"$layout: searches after 11 commits planned $plans scans")
     ((layout, "add + totalVectors") -> added) +:
       Seq("facade search probed" -> 2, "facade search exact" -> a.maxProbes)
         .map { case (op, probes) =>
           val p1 = PreparedScan.planned.get()
+          val l1 = FileLog.listings.get()
           val (j, t, sql) = countedAll(a.classified(a.topK(q, 10, probes)))
           info(f"$layout%-6s $op%-22s $j%2d jobs, $t%2d tasks, $sql SQL runs")
           assert(PreparedScan.planned.get() == p1, s"$layout $op re-planned")
+          assert(FileLog.listings.get() == l1, s"$layout $op listed the table")
           assert(sql == 0L, s"$layout $op ran $sql SQL executions")
           assert(t <= math.min(cells(probes), par).toLong,
             s"$layout $op ran $t tasks over ${cells(probes)} cells")
@@ -312,11 +322,41 @@ class JobsPerOpSpec extends AnyFunSuite {
     val qi = QuantIndex.build(spark, rows(0, 2000), s"$dir/quant",
       QuantConfig(ivfCells = 8))
     def upTo(n: Int)(p: Int): Int = math.min(p, n)
+    // plan each table's reader, as the facade's warm-up search does
+    val q = vec(7L)
+    Seq[IndexTable](lsh, mt, qi).foreach(_.topK(q, 10, 1))
     check(
       facadeScript("lsh", new StoreAdapter.Lsh(spark, lsh), upTo(6), 5000) ++
       // the exact multi-table search reads table 0's 4 buckets
       facadeScript("multi", new StoreAdapter.Multi(spark, mt),
         p => if (p >= mt.maxDepth) 4 else p, 5000) ++
       facadeScript("quant", new StoreAdapter.Quant(spark, qi), upTo(8), 5000))
+  }
+
+  test("snapshots resolve from the log: no job or file stat at 40 files; " +
+      "delete and upsert past the 32-file listing threshold") {
+    val dir = graft.util.TempDirs.create("jobs_snap").toString + "/lsh"
+    val st = VectorStore.build(spark, rows(0, 2000), dir,
+      LshConfig(numHashTables = 8, dim = Dim, seed = 7L))
+    var next = 2000L
+    while (FileLog.read(dir).files.size < 40) {
+      st.add(rows(next, next + 100)); next += 100
+    }
+    val files = FileLog.read(dir).files
+    val stats0 = FileLog.stats.get()
+    val resolve = counted(st.indexDf.queryExecution.executedPlan)
+    info(f"lsh    resolve ${files.size}-file snapshot $resolve%2d jobs, " +
+      s"${FileLog.stats.get() - stats0} file stats")
+    assert(FileLog.stats.get() == stats0, "resolving the snapshot stat'ed files")
+    // the directory read it replaces lists > 32 paths with a Spark job
+    val listing = counted(spark.read.parquet(files: _*))
+    info(f"lsh    directory read of ${files.size} files $listing%2d jobs")
+    assert(listing >= 1L)
+    val del = counted(st.delete(0L until 50L))
+    info(f"lsh    delete >32 files           $del%2d jobs")
+    val ups = counted(st.upsert(rows(50, 150, shift = 0.5)))
+    info(f"lsh    upsert >32 files           $ups%2d jobs")
+    check(Seq(("lsh", "resolve 40-file snapshot") -> resolve,
+      ("lsh", "delete >32 files") -> del, ("lsh", "upsert >32 files") -> ups))
   }
 }
