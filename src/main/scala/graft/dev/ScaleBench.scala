@@ -159,7 +159,7 @@ object ScaleBench {
         .orderBy(col("dist"), col("id")).limit(10).collect()
     }
     rows += "scale_knn_ivf2_10m" -> med3(
-      idx.searchIvf(q, 10, nprobe = 2).collect())
+      idx.search(q, 10, 2).collect())
     rows += "scale_knn_ivfpq2_10m" -> med3(
       idx.searchTwoStage(graft.store.QuantTier.Pq, q, 10, nprobe = 2).collect())
     (0 until 10).foreach(i =>

@@ -189,7 +189,7 @@ object EmbeddingQueries {
       (s, d) => {
         val idx = QuantCache.forDir(s, d)
         val q = VectorQueries.qvec(s, d, 0)
-        idx.searchIvf(q, 10, nprobe = 2)
+        idx.search(q, 10, 2)
           .select(col("id").as("vec_id"), round(col("dist"), 6).as("dist"))
       },
       // late oracle: the trained coarse centroids are injected as

@@ -96,8 +96,9 @@ object QuantCache {
        |  FROM asg a, q WHERE a.cid IN (SELECT cid FROM qc))
        |ORDER BY dd, vec_id LIMIT 10""".stripMargin
 
-  /** DuckDB twin of [[graft.store.QuantIndex.searchIvf]] at an
-    * arbitrary `nprobe`, the chosen depth echoed as a column — e19's
+  /** DuckDB twin of the [[graft.store.QuantIndex]] `search` at an
+    * arbitrary depth `nprobe` (exact within the `nprobe` nearest IVF
+    * cells), the chosen depth echoed as a column — e19's
     * recall-targeted replay: injected LATE, after the measured curve
     * picks nprobe, so the curve-driven choice itself is hash-checked
     * (a wrong choice probes different cells and the rows diverge).

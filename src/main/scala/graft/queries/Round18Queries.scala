@@ -69,7 +69,7 @@ object Round18Queries {
     // schedules a task per checkpoint partition with all but one
     // producing nothing — 34 jobs × ~31 empty tasks of pure scheduling.
     // Same rows, same 33-file layout (the x34_files gauges pin it);
-    // X34Probe warm pass 4.49 → 4.08 s.
+    // warm pass 4.49 → 4.08 s.
     (0 until 32).foreach { i => // v1..v32: id-range-clustered batches
       ManifestScan.appendBatch(s, dir,
         docs.where(col("doc_id") >= i * w && col("doc_id") < (i + 1) * w),

@@ -211,7 +211,7 @@ object Round5bQueries {
           path, graft.lsh.LshConfig(dim = 64, seed = 42L))
         val store = graft.store.VectorStore.open(s, path)
         store.search(VectorQueries.qvec(s, d, 0), 10,
-            probes = store.model.numBuckets)
+            store.model.numBuckets)
           .select(col("id").as("vec_id"), round(col("dist"), 6).as("dist"))
       },
       Some(VectorQueries.knnOracle(10))),

@@ -165,7 +165,7 @@ object Round6cQueries {
         // the win here is structural, not reuse: the r15 shape
         // (checkpoint→repartition) paid an extra planned repartition
         // pass over the checkpointed edges. Quiet median-of-3 warm
-        // (dev/PageRankProbe): repart→ckpt 4.74 s vs ckpt→repart
+        // (r16): repart→ckpt 4.74 s vs ckpt→repart
         // 5.41 s vs plain ckpt 5.17 s. This is the documented 100 TB
         // shape ("pre-partitioned by node, shuffle reused across
         // iterations"): the per-iteration shuffle left is the
@@ -484,8 +484,8 @@ object Round6cQueries {
           .start()
         q.processAllAvailable()
         q.stop()
-        idx.searchIvf(VectorQueries.qvec(s, d, 0), 10,
-            nprobe = idx.model.cfg.ivfCells)
+        idx.search(VectorQueries.qvec(s, d, 0), 10,
+            idx.model.cfg.ivfCells)
           .select(col("id").as("vec_id"), round(col("dist"), 6).as("dist"))
       },
       Some(s"""WITH q AS (SELECT embedding AS qe FROM embeddings

@@ -154,7 +154,7 @@ object Round7Queries {
           .start()
         q.processAllAvailable()
         q.stop()
-        st.exact(VectorQueries.qvec(s, d, 0), 10)
+        st.search(VectorQueries.qvec(s, d, 0), 10, st.maxDepth)
           .select(col("id").as("vec_id"), round(col("dist"), 6).as("dist"))
       },
       Some(s"""WITH q AS (SELECT embedding AS qe FROM embeddings

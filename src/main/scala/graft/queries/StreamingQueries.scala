@@ -638,7 +638,7 @@ object StreamingQueries {
         q.stop()
         model.save(s"$path/_lsh_model.json")
         store.search(VectorQueries.qvec(s, d, 0), 10,
-            probes = model.numBuckets)
+            model.numBuckets)
           .select(col("id").as("vec_id"), round(col("dist"), 6).as("dist"))
       },
       Some(s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)

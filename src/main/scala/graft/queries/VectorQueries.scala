@@ -189,7 +189,7 @@ object VectorQueries {
             .select(col("vec_id").as("id"), col("embedding")),
           path, graft.lsh.LshConfig(dim = 64, seed = 42L))
         val store = VectorStore.open(s, path)
-        store.search(qvec(s, d, 0), 10, probes = store.model.numBuckets)
+        store.search(qvec(s, d, 0), 10, store.model.numBuckets)
           .select(col("id").as("vec_id"), round(col("dist"), 6).as("dist"))
       },
       Some(knnOracle(10))),
@@ -207,7 +207,7 @@ object VectorQueries {
             .select(col("vec_id").as("id"), col("embedding")),
           path, graft.lsh.LshConfig(dim = 64, seed = 42L))
         store.delete(Seq(0L, 1L, 2L, 3L, 4L))
-        store.search(qvec(s, d, 0), 10, probes = store.model.numBuckets)
+        store.search(qvec(s, d, 0), 10, store.model.numBuckets)
           .select(col("id").as("vec_id"), round(col("dist"), 6).as("dist"))
       },
       Some(knnOracle(10, where = "e.vec_id >= 5"))),
@@ -373,7 +373,7 @@ object VectorQueries {
           knnOracle(10, where = cands.map { case (t, b) =>
             s"${mt.model.tableBucketSql("e.embedding", t)} = $b"
           }.mkString("(", " OR ", ")")))
-        mt.search(q, 10, probes = 6)
+        mt.search(q, 10, 6)
           .select(col("id").as("vec_id"), round(col("dist"), 6).as("dist"))
       },
       None,

@@ -41,7 +41,10 @@ import graft.store.VectorStore
   *
   * How `/search` executes. Each query vector runs
   * [[graft.store.IndexTable.topK]], the executed form of the table's
-  * DataFrame `search` (same ids, order and distance bits). The table
+  * DataFrame `search` (same ids, order and distance bits; both probe
+  * the cells of the layout's one probe ranking). `topK` reads the
+  * log's `_files.json` pointer once and types a scan that loses its
+  * files to a vacuum as `SnapshotVacuumedException` itself. The table
   * plans each committed snapshot's scan with Catalyst once and keeps
   * it with the snapshot; a search then runs one Spark job over only
   * its probed cells, in at most min(probed cells, defaultParallelism)
@@ -207,7 +210,7 @@ final class HttpFacade(spark: SparkSession, adapter: StoreAdapter,
         case _ => adapter.maxProbes
       }
     }
-    val rows = queries.map(q => adapter.classified(adapter.topK(q, k, probes)))
+    val rows = queries.map(q => adapter.topK(q, k, probes))
     if (rows.forall(_.isEmpty))
       (200, Map(
         "status" -> "success",
@@ -264,7 +267,7 @@ final class HttpFacade(spark: SparkSession, adapter: StoreAdapter,
 
   private def stats(body: Map[String, Any]): (Int, Any) =
     (200, Map(
-      "total_nodes" -> adapter.totalNodes,
+      "total_nodes" -> adapter.maxProbes, // one node per grid cell
       "sharding_strategy" -> adapter.strategy,
       "replication_factor" -> 1,
       "nodes" -> adapter.nodes()))

@@ -20,10 +20,11 @@ import graft.store.{IndexTable, MultiTableStore, QuantIndex, VectorStore}
   *
   * Shared reference semantics live in the facade (k-clamp, 1-D
   * reshape, auto-ids, empty-index warning); search, the probe budget
-  * and `min_recall` (the table's measured curve,
+  * (`maxProbes` = the table's grid size; `/stats` reports one node per
+  * grid cell) and `min_recall` (the table's measured curve,
   * [[IndexTable.depthForRecall]]) are answered here over the hosted
-  * [[IndexTable]], and each adapter answers only `/stats` and its
-  * ADC tiers.
+  * [[IndexTable]], whose one search rule reads the layout's probe
+  * ranking; each adapter answers only `/stats` and its ADC tiers.
   */
 sealed trait StoreAdapter {
   /** The hosted index. */
@@ -62,6 +63,8 @@ sealed trait StoreAdapter {
 
   /** [[search]] executed on the table's prepared scan
     * ([[IndexTable.topK]]): the rows `search(...).collect()` returns.
+    * It resolves the log once and types a vacuumed snapshot's failure
+    * itself, so callers need no [[classified]] wrapper.
     */
   def topK(q: Array[Double], k: Int, probes: Int): Array[(Long, Double)] =
     table.topK(q, k, probes)
@@ -78,9 +81,6 @@ sealed trait StoreAdapter {
 
   /** Per-"node" stats payload (`/stats` `nodes` map). */
   def nodes(): Map[String, Any]
-
-  /** Number of nodes reported by `/stats` (`total_nodes`). */
-  def totalNodes: Int
 
   /** Typed vacuum-race classification for eager actions. */
   def classified[T](body: => T): T = table.classified(body)
@@ -100,7 +100,6 @@ object StoreAdapter {
         "memory_mb" -> r.getAs[Double]("memory_mb"),
         "imbalance" -> r.getAs[Double]("imbalance"))
     }.toMap
-    def totalNodes: Int = store.model.numBuckets
   }
 
   final class Quant(spark: SparkSession, val idx: QuantIndex)
@@ -120,7 +119,6 @@ object StoreAdapter {
             "memory_mb" -> cnt * (dim * 4L + 8L) / 1e6)
         }.toMap
     }
-    def totalNodes: Int = idx.model.cfg.ivfCells
   }
 
   final class Multi(spark: SparkSession, val store: MultiTableStore)
@@ -142,6 +140,5 @@ object StoreAdapter {
             "memory_mb" -> cnt * (dim * 4L + 8L) / 1e6)
         }.toMap
     }
-    def totalNodes: Int = maxProbes
   }
 }

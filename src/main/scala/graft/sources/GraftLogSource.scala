@@ -189,11 +189,8 @@ final class GraftLogFileIndex(spark: SparkSession, dir: String,
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
     val inPartition = partitionMatch(partitionFilters)
     val ranges = GraftLogFileIndex.rangesOf(dataFilters)
-    val kept = entries.filter { e =>
-      val zs = state.zones.getOrElse(e.logged, Map.empty)
-      inPartition(e.values) &&
-        ranges.forall { case (c, r) => zs.get(c).forall(_.overlaps(r)) }
-    }
+    val kept = entries.filter(e =>
+      inPartition(e.values) && state.mayMatch(e.logged, ranges))
     GraftLogSource.lastPlanned.set((kept.size, state.files.size))
     kept.groupBy(_.status.getPath.getParent.toString).toSeq.sortBy(_._1)
       .map { case (_, es) =>

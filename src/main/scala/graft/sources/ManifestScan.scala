@@ -142,12 +142,14 @@ object ManifestScan {
     * files appended (0 = declined replay).
     *
     * Maintenance note for LONG-RUNNING sinks: every batch commits one
-    * immutable `_files.v{N}.json`, and [[FileLog.read]] resolves the
-    * newest by listing — after millions of micro-batches the listing
-    * itself becomes the cost. Schedule periodic [[compact]] (heals the
-    * small-files debt) and [[vacuum]] with a grace window (prunes old
-    * version logs and retired files); both are safe against concurrent
-    * appends (the rewrite merges, the vacuum is grace-protected).
+    * immutable `_files.v{N}.json` and at least one data file.
+    * [[FileLog.read]] resolves the newest version from the
+    * `_files.json` pointer in O(1), so reads do not slow as versions
+    * accumulate, but the version records and the small files do pile
+    * up on disk. Schedule periodic [[compact]] (heals the small-files
+    * debt) and [[vacuum]] with a grace window (prunes old version logs
+    * and retired files); both are safe against concurrent appends (the
+    * rewrite merges, the vacuum is grace-protected).
     */
   def appendBatch(spark: SparkSession, dir: String,
       batch: org.apache.spark.sql.DataFrame, cols: Seq[String],
@@ -319,10 +321,7 @@ object ManifestScan {
   private def readEntries(spark: SparkSession, dir: String,
       st: FileLog.State,
       ranges: Map[String, ZoneRange]): (DataFrame, Int, Int) = {
-    val kept = st.files.filter { f =>
-      val zs = st.zones.getOrElse(f, Map.empty)
-      ranges.forall { case (c, r) => zs.get(c).forall(_.overlaps(r)) }
-    }
+    val kept = st.files.filter(st.mayMatch(_, ranges))
     // resolve against the LOGGED schema: pre-evolution files read
     // their missing columns as nulls, and an empty survivor list
     // still yields the right shape
@@ -380,10 +379,7 @@ object ManifestScan {
     require(ranges.nonEmpty, "delete needs at least one range predicate")
     val base = FileLog.read(dir)
     if (base.files.isEmpty) return 0L
-    val touched = base.files.filter { f =>
-      val zs = base.zones.getOrElse(f, Map.empty)
-      ranges.forall { case (c, r) => zs.get(c).forall(_.overlaps(r)) }
-    }
+    val touched = base.files.filter(base.mayMatch(_, ranges))
     if (touched.isEmpty) return 0L // provably no file holds a match
     val pred = ranges.map { case (c, r) => residual(c, r) }.reduce(_ && _)
     val in = tableRead(spark, dir, base, touched, base.schemaDdl)
@@ -467,10 +463,8 @@ object ManifestScan {
         s"upsert key column '$keyCol' has unzonable type " +
           s"${if (other == null) "NULL" else other.getClass.getName}")
     }
-    val touched = base.files.filter { f =>
-      base.zones.getOrElse(f, Map.empty).get(keyCol)
-        .forall(_.overlaps(range)) // unzoned files may hold any key
-    }
+    // unzoned files may hold any key
+    val touched = base.files.filter(base.mayMatch(_, Map(keyCol -> range)))
     val existing = tableRead(spark, dir, base, touched, ddl)
     val remaining = existing
       .join(deduped.select(keyCol), Seq(keyCol), "left_anti")
@@ -645,10 +639,7 @@ object ManifestScan {
       ranges: Map[String, ZoneRange], clusterCol: String,
       targetFiles: Int, cols: Seq[String]): (Int, Int) = {
     val base = FileLog.read(dir)
-    val touched = base.files.filter { f =>
-      val zs = base.zones.getOrElse(f, Map.empty)
-      ranges.forall { case (c, r) => zs.get(c).forall(_.overlaps(r)) }
-    }
+    val touched = base.files.filter(base.mayMatch(_, ranges))
     if (touched.size < 2) return (touched.size, touched.size)
     val w = FileLog.write(spark, dir, cols) { stage =>
       tableRead(spark, dir, base, touched, base.schemaDdl)

@@ -195,7 +195,19 @@ object FileLog {
       rows: Map[String, Long] = Map.empty,
       dataChange: Boolean = true,
       checkpoint: Int = 0,
-      sizes: Map[String, Long] = Map.empty)
+      sizes: Map[String, Long] = Map.empty) {
+
+    /** Zone skipping, the one rule every pruned read and rewrite
+      * applies: keep `file` unless some queried column range is
+      * provably disjoint from the file's recorded zone for that
+      * column. A file with no zone for a column may hold any value
+      * there, so it is kept.
+      */
+    def mayMatch(file: String, ranges: Map[String, ZoneRange]): Boolean = {
+      val zs = zones.getOrElse(file, Map.empty)
+      ranges.forall { case (c, r) => zs.get(c).forall(_.overlaps(r)) }
+    }
+  }
 
   /** What a writer asks to commit — the payload half of [[State]]
     * (version is assigned by the CAS loop).

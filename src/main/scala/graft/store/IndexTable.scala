@@ -52,11 +52,19 @@ private[store] final case class Layout(parts: Seq[(String, Int)],
 
 /** The versioned index table under every store layout ([[VectorStore]],
   * [[MultiTableStore]], [[QuantIndex]]): snapshot reads through the
-  * [[FileLog]], every read-modify-write mutation, compaction, and the
-  * measured recall knob: the probe-depth audit, the depth certification
-  * and the recall-targeted search. A store declares its [[Layout]], its
-  * `encode`, its probe ranking, its depth-probed `search` and the cells
-  * that search reads.
+  * [[FileLog]], every read-modify-write mutation, compaction, the one
+  * search definition, and the measured recall knob: the probe-depth
+  * audit, the depth certification and the recall-targeted search.
+  *
+  * The store contract is three members: a store declares its
+  * [[Layout]], its `encode` (input rows to stored rows) and its full
+  * probe ranking `probeOrder(q)` (grid codes, best first). The search
+  * rule is defined here once from them: a depth-p search reads the
+  * first p codes of the ranking, or one full copy at `maxDepth`
+  * (`probedCells`), and takes an exact top-k over those cells' rows.
+  * The DataFrame [[search]], its partition filter [[pruneFilter]], the
+  * executed [[topK]] and the recall audit ([[auditFrame]]) all read
+  * that one probe set. A ×L layout may also override `auditDepth`.
   *
   * Every committed snapshot reads through one log-backed file index
   * ([[graft.sources.GraftLogFileIndex]]): file list, sizes and
@@ -445,28 +453,60 @@ abstract class IndexTable(spark: SparkSession,
   def recallCurve(): Option[(Int, Seq[Double])] =
     RecallCurves.read(recallCurvePath).map(c => (c.k, c.recall))
 
-  // ------------------------------------------ recall-targeted search
+  // ------------------------------------------------------ search
 
-  /** Probe depth that makes [[search]] exact: every partition. */
-  def maxDepth: Int
-
-  /** The query's full probe ranking (grid codes, best first): the
-    * depth-p search probes exactly its first p codes.
+  /** The query's full probe ranking (grid codes, best first). Every
+    * search reads a prefix of it ([[probedCells]]), so it must be
+    * prefix-stable: the ranking cut at p equals the first p codes of
+    * the full one.
     */
   protected def probeOrder(q: Array[Double]): Seq[Int]
+
+  /** Probe depth that makes [[search]] exact: every grid cell. */
+  def maxDepth: Int = layout.gridSize
 
   /** Depths the recall audit measures, 1..auditDepth. A layout whose
     * informed ranking never reaches every partition audits a prefix.
     */
   protected def auditDepth: Int = maxDepth
 
-  /** kNN probing the first `depth` codes of [[probeOrder]]; exact at
-    * `depth >= maxDepth`.
+  /** Grid codes a depth-`depth` search reads: the first max(1, depth)
+    * codes of [[probeOrder]]; at `depth >= maxDepth` one full copy of
+    * the corpus (every cell, or table 0 on the ×L layout).
     */
-  def search(q: Array[Double], k: Int, depth: Int): DataFrame
+  private def probedCells(q: Array[Double], depth: Int): Seq[Int] =
+    if (depth >= maxDepth) 0 until layout.gridSize / layout.copies
+    else probeOrder(q).take(math.max(1, depth))
 
-  /** Grid codes the depth-`depth` [[search]] scans. */
-  protected def probedCells(q: Array[Double], depth: Int): Seq[Int]
+  /** A depth-probed search's candidates probe more than one copy of a
+    * ×L vector, so they keep one row per id.
+    */
+  private def dedup(depth: Int): Boolean =
+    layout.copies > 1 && depth < maxDepth
+
+  /** Partition filter selecting the cells a depth-`depth` search reads
+    * ([[probedCells]]), so the scan prunes every other partition at
+    * planning time; no filter when every cell is read.
+    */
+  def pruneFilter(q: Array[Double], depth: Int): Column = {
+    val cells = probedCells(q, depth)
+    if (cells.size == layout.gridSize) lit(true) else layout.filter(cells)
+  }
+
+  /** kNN over the cells of [[probedCells]]: the `(id, dist)` top-k by
+    * squared L2, ties by id; exact at `depth >= maxDepth`. `filter`
+    * restricts the search to matching rows (metadata-filtered vector
+    * search); it lands in the scan next to the partition pruning and
+    * applies before the ×L id dedup, so it narrows IO, not post-hoc
+    * results.
+    */
+  def search(q: Array[Double], k: Int, depth: Int,
+      filter: Column = lit(true)): DataFrame = {
+    val rows = indexDf.where(pruneFilter(q, depth)).where(filter)
+    VectorStore.searchIn(
+      if (dedup(depth)) rows.select("id", "embedding").dropDuplicates("id")
+      else rows, q, k)
+  }
 
   /** [[search]] executed: the same (id, dist) rows in the same order,
     * with bit-identical distances, as `search(q, k, depth).collect()`.
@@ -476,22 +516,31 @@ abstract class IndexTable(spark: SparkSession,
     * one Spark job over only its probed cells — no Catalyst pass, no
     * SQL execution. Any commit changes the file list, so the next
     * search reads the new log, misses the memo and plans the new
-    * snapshot once; a stale plan is never served. A ×L layout keeps
-    * one row per id unless the search reads one copy.
+    * snapshot once; a stale plan is never served. The log is resolved
+    * once per call, and a scan that loses its files to a vacuum
+    * surfaces as [[SnapshotVacuumedException]] ([[topKAt]]).
     */
   def topK(q: Array[Double], k: Int, depth: Int): Array[(Long, Double)] =
-    topKIn(residentSnap.getOrElse(logSnap), q, k, depth)
+    residentSnap match {
+      case Some(snap) => classified(topKIn(snap, q, k, depth))
+      case None if FileLog.exists(tableDir) =>
+        topKAt(FileLog.read(tableDir), q, k, depth)
+      case None => topKIn(logSnap, q, k, depth)
+    }
 
   /** [[topK]] over a pinned snapshot (a reader that resolved `st` and
-    * scans it later, e.g. to race a vacuum).
+    * scans it later, e.g. to race a vacuum), its failures classified
+    * against `st`'s version ([[FileLog.classifyReadFailure]]).
     */
   private[graft] def topKAt(st: FileLog.State, q: Array[Double], k: Int,
-      depth: Int): Array[(Long, Double)] = topKIn(snapOf(st), q, k, depth)
+      depth: Int): Array[(Long, Double)] =
+    try topKIn(snapOf(st), q, k, depth)
+    catch { case e: Throwable =>
+      throw FileLog.classifyReadFailure(tableDir, st.version, e) }
 
   private def topKIn(snap: Snap, q: Array[Double], k: Int,
       depth: Int): Array[(Long, Double)] =
-    snap.scan.topK(q, math.max(1, k), probedCells(q, depth),
-      dedup = layout.copies > 1 && depth < maxDepth)
+    snap.scan.topK(q, math.max(1, k), probedCells(q, depth), dedup(depth))
 
   /** Distinct stored vectors: the snapshot's logged row counts over the
     * layout's copies, read from the log without a Spark job. A
@@ -503,6 +552,8 @@ abstract class IndexTable(spark: SparkSession,
       val st = FileLog.read(tableDir)
       FileLog.fileRows(spark, st, st.files).values.sum / layout.copies
     }
+
+  // ------------------------------------------ recall-targeted search
 
   /** Measure the recall-vs-depth curve over a query panel and persist
     * it next to the snapshot (`_recall_curve.json`): curve(p) = mean

@@ -1,6 +1,6 @@
 package graft.store
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.lsh.{LshConfig, LshModel}
 
@@ -48,55 +48,25 @@ final class MultiTableStore(
   protected def encode(df: DataFrame, idCol: String, embCol: String): DataFrame =
     MultiTableStore.encode(df, model, idCol, embCol)
 
-  /** Every (table, bucket) pair: the depth at which [[search]] is exact. */
-  def maxDepth: Int = model.cfg.numHashTables * model.bucketsPerTable
-
+  /** (table, bucket) pairs by multi-probe rank, as grid codes: every
+    * table's own bucket, then single- and pair-flips across tables
+    * ([[LshModel.tableCandidates]]).
+    */
   protected def probeOrder(q: Array[Double]): Seq[Int] =
-    model.tableCandidates(q, auditDepth)
+    model.tableCandidates(q, maxDepth)
       .map { case (t, b) => t * model.bucketsPerTable + b }
 
   /** Informed probing never reaches every pair, so the recall audit
     * measures L·k depths and its curve may top out below 1.0 — a
-    * target above it then certifies nothing and runs [[exact]].
+    * target above it then certifies nothing and runs exact.
     */
   override protected def auditDepth: Int =
     model.cfg.numHashTables * model.cfg.numHashFunctions
-
-  /** Predicate selecting the probed (table, bucket) partitions —
-    * OR-of-ANDs over the two partition columns, so the scan prunes to
-    * exactly the probed directories.
-    */
-  def pruneFilter(q: Array[Double], probes: Int): Column =
-    model.tableCandidates(q, probes)
-      .map { case (t, b) => col("table") === t && col("bucket") === b }
-      .reduce(_ || _)
-
-  /** Probed (table, bucket) codes; table 0's buckets (one full copy)
-    * at `depth >= maxDepth`.
-    */
-  protected def probedCells(q: Array[Double], depth: Int): Seq[Int] =
-    if (depth >= maxDepth) 0 until model.bucketsPerTable
-    else model.tableCandidates(q, depth)
-      .map { case (t, b) => t * model.bucketsPerTable + b }
-
-  /** Pruned kNN: probed partitions → id-dedup → exact top-k; [[exact]]
-    * at `probes >= maxDepth`.
-    */
-  def search(q: Array[Double], k: Int, probes: Int): DataFrame =
-    if (probes >= maxDepth) exact(q, k)
-    else searchIn(indexDf.where(pruneFilter(q, probes)), q, k)
-
-  /** Exact kNN over one full copy of the corpus (table 0). */
-  def exact(q: Array[Double], k: Int): DataFrame =
-    VectorStore.searchIn(indexDf.where(col("table") === 0), q, k)
-
-  private def searchIn(df: DataFrame, q: Array[Double], k: Int): DataFrame =
-    VectorStore.searchIn(df.select("id", "embedding").dropDuplicates("id"), q, k)
 }
 
 object MultiTableStore {
 
-  /** Dev-probe hook for [[encode]]. */
+  /** Test hook for [[encode]]. */
   private[graft] def testEncode(df: DataFrame, model: LshModel): DataFrame =
     encode(df, model, "id", "embedding")
 

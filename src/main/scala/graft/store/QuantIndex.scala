@@ -88,11 +88,8 @@ final class QuantIndex(
   def coarse(tier: String, q: Array[Double], n: Int,
       nprobe: Int = model.cfg.ivfCells): DataFrame = {
     val t = model.adcTier(tier)
-    val probed =
-      if (nprobe >= model.cfg.ivfCells) indexDf
-      else indexDf.where(
-        col("cell").isin(model.ivfNearestCells(q, nprobe).map(Int.box): _*))
-    probed.select(col("id"), col("cell"), t.distanceTo(q).as("adc"))
+    indexDf.where(pruneFilter(q, nprobe))
+      .select(col("id"), col("cell"), t.distanceTo(q).as("adc"))
       .orderBy(col("adc"), col("id")).limit(n)
   }
 
@@ -229,31 +226,12 @@ final class QuantIndex(
                           coarseN: Int = 100): DataFrame =
     rerank(coarseIvfPqResidual(q, nprobe, coarseN), q, k)
 
-  /** IVF search: partition-pruned exact top-k over the `nprobe` cells
-    * nearest the query (cell choice is driver math over the broadcast-
-    * sized centroid table).
-    */
-  def searchIvf(q: Array[Double], k: Int, nprobe: Int = 2): DataFrame = {
-    val cells = probedCells(q, nprobe).map(Int.box)
-    indexDf.where(col("cell").isin(cells: _*))
-      .select(col("id"), VF.l2sqLit(col("embedding"), q).as("dist"))
-      .orderBy(col("dist"), col("id")).limit(math.max(1, k))
-  }
-
-  def maxDepth: Int = model.cfg.ivfCells
-
-  /** The query's cells by centroid distance; every nprobe list is a
-    * prefix ([[QuantModel.ivfNearestCells]] sorts once and takes).
+  /** IVF cells by centroid distance: the depth-p [[search]] is the
+    * FAISS IVF nprobe = p search, exact within the probed cells
+    * ([[QuantModel.ivfNearestCells]] sorts once and takes).
     */
   protected def probeOrder(q: Array[Double]): Seq[Int] =
     model.ivfNearestCells(q, model.cfg.ivfCells)
-
-  protected def probedCells(q: Array[Double], depth: Int): Seq[Int] =
-    model.ivfNearestCells(q, depth)
-
-  /** [[searchIvf]]: the recall knob's depth is nprobe. */
-  def search(q: Array[Double], k: Int, depth: Int): DataFrame =
-    searchIvf(q, k, depth)
 
   /** Re-train every quantizer on the CURRENT corpus and re-encode —
     * FAISS's retrain path, closing the audit→action loop: `add` after
@@ -474,9 +452,7 @@ final class QuantIndex(
     val kk = math.max(1, k)
     coarseNForRecall(minRecall, kk, tier).map(math.max(_, kk)) match {
       case Some(n) => (searchTwoStage(tier, q, kk, coarseN = n), n)
-      case None =>
-        (indexDf.select(col("id"), VF.l2sqLit(col("embedding"), q).as("dist"))
-          .orderBy(col("dist"), col("id")).limit(kk), -1)
+      case None => (search(q, kk, maxDepth), -1)
     }
   }
 
@@ -487,10 +463,6 @@ final class QuantIndex(
 }
 
 object QuantIndex {
-
-  /** Dev-probe hook for [[encode]] (build-phase decomposition). */
-  private[graft] def testEncode(df: DataFrame, model: QuantModel): DataFrame =
-    encode(df, model, "id", "embedding")
 
   /** (id, embedding, sq8, i4, pq, sig, pqr, cell) from raw
     * (id, embedding) rows. `sig` is the 1-bit sign signature (binary

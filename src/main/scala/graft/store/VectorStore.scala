@@ -1,13 +1,17 @@
 package graft.store
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{VectorFunctions => VF}
 import graft.lsh.{LshConfig, LshModel}
 
 /** Spark-native facade over the reference's coordinator+shard API
   * (SURVEY §2.7): `add` (ingest + LSH bucketing), `search` (pruned or
-  * exact kNN), `stats` (per-bucket statistics).
+  * exact kNN over the probed buckets, with an optional metadata
+  * filter — the reference lists filtered search as future work,
+  * `generate_report.py:298`), `stats` (per-bucket statistics). The
+  * search and mutation rules are the [[IndexTable]] kernel's; this
+  * layout declares the bucket partitioning and its probe ranking.
   *
   * The "index" is a bucket-partitioned parquet table plus the persisted
   * seeded projection matrix: index build = normalize-free LSH bucket
@@ -35,33 +39,11 @@ final class VectorStore(
   protected def encode(df: DataFrame, idCol: String, embCol: String): DataFrame =
     VectorStore.bucketize(df, model, idCol, embCol)
 
-  def maxDepth: Int = model.numBuckets
-
+  /** LSH buckets by multi-probe rank: the query's own bucket, then
+    * its boundary-bit flips ([[LshModel.candidates]]).
+    */
   protected def probeOrder(q: Array[Double]): Seq[Int] =
     model.candidates(q, model.numBuckets)
-
-  def search(q: Array[Double], k: Int, depth: Int): DataFrame =
-    search(q, k, depth, lit(true))
-
-  /** kNN over the persisted index. `probes >= numBuckets` = exact.
-    * `filter` restricts the search to matching rows (metadata-filtered
-    * vector search — the reference lists this as future work,
-    * `generate_report.py:298`); the predicate lands in the parquet scan
-    * next to the bucket pruning, so filtering narrows IO, not post-hoc
-    * results.
-    */
-  def search(q: Array[Double], k: Int, probes: Int = 2,
-             filter: Column = lit(true)): DataFrame =
-    VectorStore.searchIn(
-      indexDf.where(pruneFilter(q, probes)).where(filter), q, k)
-
-  def pruneFilter(q: Array[Double], probes: Int): Column =
-    if (probes >= model.numBuckets) lit(true)
-    else col("bucket").isin(probedCells(q, probes).map(Int.box): _*)
-
-  protected def probedCells(q: Array[Double], depth: Int): Seq[Int] =
-    if (depth >= model.numBuckets) 0 until model.numBuckets
-    else model.candidates(q, depth)
 
   /** Per-bucket stats (reference `/stats` fan-out + shard-distribution
     * analysis, SURVEY §2.6 A3–A5).

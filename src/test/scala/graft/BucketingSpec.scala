@@ -92,7 +92,7 @@ class PartitionPruningSpec extends org.scalatest.funsuite.AnyFunSuite {
         .select(col("vec_id").as("id"), col("embedding")),
       s"$dir/index", graft.lsh.LshConfig(dim = 64, seed = 42L))
     val q = graft.queries.VectorQueries.qvec(spark, TestSpark.sf, 0)
-    val pruned = store.search(q, 10, probes = 2)
+    val pruned = store.search(q, 10, 2)
     val plan = pruned.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("bucket"),
       plan)
@@ -123,7 +123,7 @@ class PartitionPruningSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(nParts > 4, s"16-bucket build produced only $nParts partitions")
     val q = graft.queries.VectorQueries.qvec(spark, TestSpark.sf, 0)
     for (p <- Seq(2, 4)) {
-      val pruned = store.search(q, 10, probes = p)
+      val pruned = store.search(q, 10, p)
       val scannedParts = pruned.queryExecution.executedPlan.collectLeaves()
         .collect { case f: org.apache.spark.sql.execution.FileSourceScanExec =>
           f.relation.location.listFiles(f.partitionFilters, f.dataFilters).size }
@@ -134,10 +134,10 @@ class PartitionPruningSpec extends org.scalatest.funsuite.AnyFunSuite {
     // recall curve is monotone in probes, and probes=16 degenerates to exact
     val exact = graft.store.VectorStore.searchIn(emb, q, 10)
       .collect().map(_.getLong(0)).toSeq
-    val full = store.search(q, 10, probes = 16)
+    val full = store.search(q, 10, 16)
       .collect().map(_.getLong(0)).toSeq
     assert(full == exact, "probes >= numBuckets must equal exact search")
-    def recall(p: Int): Int = store.search(q, 10, probes = p)
+    def recall(p: Int): Int = store.search(q, 10, p)
       .collect().map(_.getLong(0)).toSet.intersect(exact.toSet).size
     val r = Seq(1, 2, 4).map(recall)
     assert(r == r.sorted, s"recall should not decrease with probes: $r")

@@ -352,7 +352,7 @@ class HttpFacadeSpec extends AnyFunSuite {
         s"""{"query_vector": $qj, "k": 5, "probes": 2}""")
       assert(c1 == 200 && Json.asLong(obj(b1)("probes")).toInt == 2)
       // the HTTP result equals the Scala API at the same nprobe
-      val want = idx.searchIvf(q, 5, nprobe = 2)
+      val want = idx.search(q, 5, 2)
         .collect().map(_.getLong(0)).toVector
       val got = obj(b1)("indices").asInstanceOf[Vector[Vector[Any]]]
         .head.map(Json.asLong)

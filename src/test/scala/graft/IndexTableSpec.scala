@@ -63,7 +63,7 @@ class IndexTableSpec extends AnyFunSuite {
     // the stored embedding is the new one in every copy
     val q = rows(moved, moved + 1, shift = 0.7).head.getSeq[Float](1)
       .map(_.toDouble).toArray
-    assert(st.exact(q, 1).head.getLong(0) == moved)
+    assert(st.search(q, 1, st.maxDepth).head.getLong(0) == moved)
   }
 
   test("MultiTableStore.applyChanges: an insert-only window is one commit") {

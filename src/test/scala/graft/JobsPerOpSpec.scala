@@ -13,6 +13,7 @@ import graft.lsh.LshConfig
 import graft.server.StoreAdapter
 import graft.store.{FileLog, IndexTable, MaintenancePolicy, MultiTableStore,
   PreparedScan, QuantConfig, QuantIndex, QuantTier, VectorStore}
+import graft.util.FsIo
 
 /** Spark jobs per store operation, on all three index layouts. At
   * micro-batch volumes every job costs its scheduling floor, so the
@@ -272,13 +273,13 @@ class JobsPerOpSpec extends AnyFunSuite {
           qi.searchAdcAtRecall(q, 10, 0.5, QuantTier.Pq)._1.collect()))))
   }
 
-  /** The facade's read path on one layout: `/search` is
-    * `classified(topK)` and `/add_vectors` is `add` then
-    * `totalVectors`. `cells(p)` is the number of grid cells a depth-p
-    * search reads.
+  /** The facade's read path on one layout: `/search` is `topK`
+    * (which types its own vacuum failures) and `/add_vectors` is `add`
+    * then `totalVectors`. `cells(p)` is the number of grid cells a
+    * depth-p search reads; `t` is the hosted table, at `dir`.
     */
-  private def facadeScript(layout: String, a: StoreAdapter,
-      cells: Int => Int, from: Long): Seq[((String, String), Long)] = {
+  private def facadeScript(layout: String, a: StoreAdapter, t: IndexTable,
+      dir: String, cells: Int => Int, from: Long): Seq[((String, String), Long)] = {
     val q = vec(7L)
     val par = spark.sparkContext.defaultParallelism
     val added = counted {
@@ -289,27 +290,49 @@ class JobsPerOpSpec extends AnyFunSuite {
     // the table's reader was planned before the add: the first search
     // after a commit plans nothing, and neither do 10 more commits
     val p0 = PreparedScan.planned.get()
-    a.classified(a.topK(q, 10, a.maxProbes))
+    a.topK(q, 10, a.maxProbes)
     (0 until 10).foreach { i =>
       a.add(rows(from + 100 + i * 5, from + 105 + i * 5))
-      a.classified(a.topK(q, 10, a.maxProbes))
+      a.topK(q, 10, a.maxProbes)
     }
     val plans = PreparedScan.planned.get() - p0
     assert(plans == 0L, s"$layout: searches after 11 commits planned $plans scans")
-    ((layout, "add + totalVectors") -> added) +:
+    val searches =
       Seq("facade search probed" -> 2, "facade search exact" -> a.maxProbes)
         .map { case (op, probes) =>
           val p1 = PreparedScan.planned.get()
           val l1 = FileLog.listings.get()
-          val (j, t, sql) = countedAll(a.classified(a.topK(q, 10, probes)))
-          info(f"$layout%-6s $op%-22s $j%2d jobs, $t%2d tasks, $sql SQL runs")
+          val logRead = reads(FileLog.read(dir))
+          val r1 = FsIo.reads.get()
+          val (j, tasks, sql) = countedAll(a.topK(q, 10, probes))
+          val searchReads = FsIo.reads.get() - r1
+          info(f"$layout%-6s $op%-22s $j%2d jobs, $tasks%2d tasks, $sql SQL runs, " +
+            s"$searchReads log reads")
           assert(PreparedScan.planned.get() == p1, s"$layout $op re-planned")
           assert(FileLog.listings.get() == l1, s"$layout $op listed the table")
+          // the log is resolved once: the pointer and its delta chain
+          assert(searchReads == logRead,
+            s"$layout $op read $searchReads log files, one FileLog.read $logRead")
           assert(sql == 0L, s"$layout $op ran $sql SQL executions")
-          assert(t <= math.min(cells(probes), par).toLong,
-            s"$layout $op ran $t tasks over ${cells(probes)} cells")
+          assert(tasks <= math.min(cells(probes), par).toLong,
+            s"$layout $op ran $tasks tasks over ${cells(probes)} cells")
           (layout, op) -> j
         }
+    // a whole-table compaction commits a checkpoint record, so the
+    // pointer alone resolves the snapshot: 1 read per search (the
+    // `classified` pin around the search used to add a second)
+    t.compact()
+    val atCheckpoint = reads(a.topK(q, 10, a.maxProbes))
+    info(f"$layout%-6s facade search at a checkpoint: $atCheckpoint log reads")
+    assert(atCheckpoint == 1L, s"$layout read $atCheckpoint log files")
+    ((layout, "add + totalVectors") -> added) +: searches
+  }
+
+  /** `FsIo.reads` (log and sidecar files parsed) that `body` made. */
+  private def reads(body: => Any): Long = {
+    val r0 = FsIo.reads.get()
+    body
+    FsIo.reads.get() - r0
   }
 
   test("jobs per facade search and add: all three layouts") {
@@ -326,11 +349,13 @@ class JobsPerOpSpec extends AnyFunSuite {
     val q = vec(7L)
     Seq[IndexTable](lsh, mt, qi).foreach(_.topK(q, 10, 1))
     check(
-      facadeScript("lsh", new StoreAdapter.Lsh(spark, lsh), upTo(6), 5000) ++
+      facadeScript("lsh", new StoreAdapter.Lsh(spark, lsh), lsh, lsh.path,
+        upTo(6), 5000) ++
       // the exact multi-table search reads table 0's 4 buckets
-      facadeScript("multi", new StoreAdapter.Multi(spark, mt),
+      facadeScript("multi", new StoreAdapter.Multi(spark, mt), mt, mt.path,
         p => if (p >= mt.maxDepth) 4 else p, 5000) ++
-      facadeScript("quant", new StoreAdapter.Quant(spark, qi), upTo(8), 5000))
+      facadeScript("quant", new StoreAdapter.Quant(spark, qi), qi, qi.dataDir,
+        upTo(8), 5000))
   }
 
   test("snapshots resolve from the log: no job or file stat at 40 files; " +

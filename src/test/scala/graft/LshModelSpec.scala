@@ -57,6 +57,27 @@ class LshModelSpec extends AnyFunSuite {
     }
   }
 
+  test("probe rankings are prefix-stable: depth p probes the first p " +
+      "codes of the full ranking") {
+    val single = Seq(model,
+      LshModel(LshConfig(numHashFunctions = 4, numHashTables = 16, dim = 8,
+        seed = 3L)))
+    val multi = LshModel(LshConfig(numHashFunctions = 3, numHashTables = 4,
+      dim = 8, seed = 5L, multiTable = true))
+    val grid = multi.cfg.numHashTables * multi.bucketsPerTable
+    forRandomVecs(50) { v =>
+      single.foreach { m =>
+        val full = m.candidates(v, m.numBuckets)
+        (1 to m.numBuckets).foreach(p =>
+          assert(m.candidates(v, p) == full.take(p), s"candidates p=$p"))
+      }
+      val full = multi.tableCandidates(v, grid)
+      (1 to grid).foreach(p =>
+        assert(multi.tableCandidates(v, p) == full.take(p),
+          s"tableCandidates p=$p"))
+    }
+  }
+
   test("save/load roundtrip") {
     val p = java.nio.file.Files.createTempFile("lsh", ".json").toString
     model.save(p)

@@ -151,7 +151,7 @@ class MillionRowSmokeSpec extends AnyFunSuite {
     // pure layout win) and the two-job IVFPQ search (smaller reads
     // minus one extra job of fixed cost) must both beat the exact scan.
     val tExact = median3(exact())
-    val tIvf = median3(idx.searchIvf(q, 10, nprobe = 2).collect())
+    val tIvf = median3(idx.search(q, 10, 2).collect())
     val tIvfpq = median3(ivfpq())
     info(f"wall: exact=$tExact%.3fs ivf=$tIvf%.3fs ivfpq=$tIvfpq%.3fs")
     assert(tIvf < tExact,
@@ -201,7 +201,7 @@ class MillionRowSmokeSpec extends AnyFunSuite {
     // nothing changed semantically: count, and an added id is found
     assert(idx.indexDf.count() == base + 10000)
     val qa = gen(base, base + 1).head.getSeq[Float](1).map(_.toDouble).toArray
-    assert(idx.searchIvf(qa, 1, nprobe = idx.model.cfg.ivfCells)
+    assert(idx.search(qa, 1, idx.model.cfg.ivfCells)
       .head.getLong(0) == base)
   }
 

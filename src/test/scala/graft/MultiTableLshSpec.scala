@@ -53,7 +53,8 @@ class MultiTableLshSpec extends AnyFunSuite {
 
   private def recallMt(probes: Int): Double = {
     val rs = queries.map { q =>
-      val exact = mtStore.exact(q, 10).collect().map(_.getLong(0)).toSet
+      val exact = mtStore.search(q, 10, mtStore.maxDepth).collect()
+        .map(_.getLong(0)).toSet
       val pruned = mtStore.search(q, 10, probes)
         .collect().map(_.getLong(0)).toSet
       (exact intersect pruned).size.toDouble / exact.size
@@ -105,7 +106,8 @@ class MultiTableLshSpec extends AnyFunSuite {
 
   test("exact search equals the single-table exact result (dedup correct)") {
     queries.take(5).foreach { q =>
-      val a = mtStore.exact(q, 10).collect().map(r => (r.getLong(0), r.getDouble(1)))
+      val a = mtStore.search(q, 10, mtStore.maxDepth).collect()
+        .map(r => (r.getLong(0), r.getDouble(1)))
       val b = VectorStore.searchIn(modStore.indexDf, q, 10)
         .collect().map(r => (r.getLong(0), r.getDouble(1)))
       assert(a.sameElements(b))
@@ -116,7 +118,7 @@ class MultiTableLshSpec extends AnyFunSuite {
     val all = mtStore.model.cfg.numHashTables * mtStore.model.bucketsPerTable
     queries.take(5).foreach { q =>
       val a = mtStore.search(q, 10, all).collect().map(_.getLong(0))
-      val b = mtStore.exact(q, 10).collect().map(_.getLong(0))
+      val b = mtStore.search(q, 10, mtStore.maxDepth).collect().map(_.getLong(0))
       assert(a.sameElements(b))
     }
   }
@@ -135,7 +137,7 @@ class MultiTableLshSpec extends AnyFunSuite {
     val full = VectorStore.searchIn(
       emb.select(col("id"), col("embedding")), q, 10)
       .collect().map(_.getLong(0)).toSeq
-    assert(st.exact(q, 10).collect().map(_.getLong(0)).toSeq == full)
+    assert(st.search(q, 10, st.maxDepth).collect().map(_.getLong(0)).toSeq == full)
 
     // delete: ids vanish from EVERY table; only hit partitions rewritten
     val removed = st.delete(Seq(0L, 1L, 2L))
@@ -152,7 +154,7 @@ class MultiTableLshSpec extends AnyFunSuite {
     val expect = VectorStore.searchIn(
       emb.where(col("id") >= 3).select(col("id"), col("embedding")), q, 10)
       .collect().map(_.getLong(0)).toSeq
-    assert(st.exact(q, 10).collect().map(_.getLong(0)).toSeq == expect)
+    assert(st.search(q, 10, st.maxDepth).collect().map(_.getLong(0)).toSeq == expect)
   }
 
   test("model save/load roundtrip keeps the multiTable flag") {

@@ -87,7 +87,7 @@ class QuantIndexSpec extends AnyFunSuite {
   }
 
   test("ivf search prunes to nprobe cell partitions") {
-    val s = idx.searchIvf(q, 10, nprobe = 2)
+    val s = idx.search(q, 10, 2)
     val plan = s.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("cell"), plan)
     val scannedParts = s.queryExecution.executedPlan.collectLeaves()
@@ -95,6 +95,19 @@ class QuantIndexSpec extends AnyFunSuite {
         f.relation.location.listFiles(f.partitionFilters, f.dataFilters).size }
       .sum
     assert(scannedParts == 2, s"expected 2 probed cells, scanned $scannedParts")
+  }
+
+  test("the IVF probe ranking is prefix-stable: nprobe p probes the " +
+      "first p cells of the full ranking") {
+    val m = idx.model
+    val n = m.cfg.ivfCells
+    val rnd = new scala.util.Random(17L)
+    (q +: Seq.fill(20)(Array.fill(m.dim)(rnd.nextGaussian()))).foreach { v =>
+      val full = m.ivfNearestCells(v, n)
+      assert(full.sorted == (0 until n))
+      (1 to n).foreach(p =>
+        assert(m.ivfNearestCells(v, p) == full.take(p), s"nprobe=$p"))
+    }
   }
 
   test("ivfpq coarse pass prunes partitions AND reads only code columns") {
@@ -128,7 +141,7 @@ class QuantIndexSpec extends AnyFunSuite {
     q2.add(probe)
     for ((name, df) <- Seq("sq8" -> q2.searchTwoStage(QuantTier.Sq8, q, 2),
                            "pq" -> q2.searchTwoStage(QuantTier.Pq, q, 2),
-                           "ivf" -> q2.searchIvf(q, 2))) {
+                           "ivf" -> q2.search(q, 2, 2))) {
       val got = df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(got.map(_._1).toSet == Set(0L, 99999L) &&
         got.forall(_._2 == 0.0),
@@ -147,7 +160,7 @@ class QuantIndexSpec extends AnyFunSuite {
     assert(qd.delete(Seq(0L)) == 0L, "idempotent")
     for ((name, df) <- Seq("sq8" -> qd.searchTwoStage(QuantTier.Sq8, q, 10),
                            "pq" -> qd.searchTwoStage(QuantTier.Pq, q, 10),
-                           "ivf" -> qd.searchIvf(q, 10),
+                           "ivf" -> qd.search(q, 10, 2),
                            "ivfpq" -> qd.searchTwoStage(QuantTier.Pq, q, 10, nprobe = 2))) {
       val got = df.collect().map(_.getLong(0)).toSet
       assert(!got.exists(Set(0L, 1L, 2L)), s"$name returned a deleted id: $got")
@@ -213,19 +226,19 @@ class QuantIndexSpec extends AnyFunSuite {
     assert(q512.model.dim == dim && q512.model.sub == 64)
     val hits = q512.searchTwoStage(QuantTier.Pq, qv, 5, coarseN = 32).collect().map(_.getLong(0))
     assert(hits.head == 0L, s"512-D PQ search should find the query first: ${hits.toSeq}")
-    assert(q512.searchIvf(qv, 5, nprobe = 2).collect().map(_.getLong(0)).head == 0L)
+    assert(q512.search(qv, 5, 2).collect().map(_.getLong(0)).head == 0L)
 
     val sdir = java.nio.file.Files.createTempDirectory("graft_s512").toString
     val store = VectorStore.build(spark, df, s"$sdir/index",
       LshConfig(dim = dim, seed = 42L))
-    assert(store.search(qv, 3, probes = 3).collect().map(_.getLong(0)).head == 0L)
+    assert(store.search(qv, 3, 3).collect().map(_.getLong(0)).head == 0L)
     assert(store.delete(Seq(1L, 2L)) == 2L)
     assert(store.indexDf.count() == 62)
     // upsert: replace id 3 with a copy of the query vector, add id 100
     val up = Seq((3L, rows.head._2), (100L, rows.head._2)).toDF("id", "embedding")
     store.upsert(up)
     assert(store.indexDf.count() == 63)
-    val top = store.search(qv, 3, probes = store.model.numBuckets)
+    val top = store.search(qv, 3, store.model.numBuckets)
       .collect().map(_.getLong(0)).toSet
     assert(top.contains(3L) && top.contains(100L),
       s"upserted 512-D duplicates of the query should lead: $top")

@@ -142,7 +142,7 @@ class Round11Spec extends AnyFunSuite {
     // with no persisted audit does too (never under-deliver)
     assert(reopened.depthForRecall(1.1, 10).getOrElse(reopened.maxDepth) == 16)
     val q0 = panel.head
-    val exact = store.search(q0, 10, probes = 16)
+    val exact = store.search(q0, 10, 16)
       .collect().map(_.getLong(0)).toSeq
     assert(reopened.searchAtRecall(q0, 10, 1.0)
       .collect().map(_.getLong(0)).toSeq == exact)

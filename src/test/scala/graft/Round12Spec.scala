@@ -85,7 +85,7 @@ class Round12Spec extends AnyFunSuite {
     def ids(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.getLong(0)).toSeq
     assert(ids(retrained.searchTwoStage(graft.store.QuantTier.Sq8, q, 10)) == ids(fresh.searchTwoStage(graft.store.QuantTier.Sq8, q, 10)))
-    assert(ids(retrained.searchIvf(q, 10)) == ids(fresh.searchIvf(q, 10)))
+    assert(ids(retrained.search(q, 10, 2)) == ids(fresh.search(q, 10, 2)))
     assert(ids(retrained.searchIvfPqResidual(q, 10)) ==
       ids(fresh.searchIvfPqResidual(q, 10)))
   }
@@ -124,7 +124,8 @@ class Round12Spec extends AnyFunSuite {
     // unreachable target (or no curve) degenerates to EXACT, because
     // informed probing cannot promise full coverage on this layout
     val q = panel.head
-    val exactIds = store.exact(q, 10).collect().map(_.getLong(0)).toSeq
+    val exactIds = store.search(q, 10, store.maxDepth).collect()
+      .map(_.getLong(0)).toSeq
     assert(store.searchAtRecall(q, 10, 1.01)
       .collect().map(_.getLong(0)).toSeq == exactIds)
     // mutation invalidates the persisted curve
@@ -208,7 +209,7 @@ class Round12Spec extends AnyFunSuite {
         if (base != 200) Some(s"base rows lost: $base != 200 (torn rewrite)")
         else {
           // search stays well-formed mid-mutation: k rows, distinct ids
-          val ids = store.search(qv, 5, probes = 3)
+          val ids = store.search(qv, 5, 3)
             .collect().map(_.getLong(0)).toSeq
           if (ids.distinct.size != ids.size) Some(s"dup ids in search: $ids")
           else None
@@ -252,7 +253,7 @@ class Round12Spec extends AnyFunSuite {
         val base = store.indexDf.where(col("id") < 200).count()
         if (base != 200 * L) Some(s"base copies lost: $base != ${200 * L}")
         else {
-          val ids = store.search(qv, 5, probes = 4)
+          val ids = store.search(qv, 5, 4)
             .collect().map(_.getLong(0)).toSeq
           if (ids.distinct.size != ids.size) Some(s"dup ids in search: $ids")
           else None

@@ -76,7 +76,7 @@ class Round20Spec extends AnyFunSuite {
       pqOnly.searchIvfPqResidual(q, 10))
     assert(e3.getMessage.contains("pqr"))
     // IVF search needs no code column — always available
-    assert(pqOnly.searchIvf(q, 10).count() == 10)
+    assert(pqOnly.search(q, 10, 2).count() == 10)
   }
 
   test("i4-only build derives nibble codes without storing sq8; " +

@@ -497,7 +497,7 @@ class Round21Spec extends AnyFunSuite {
     // the flat exact scan over the raw source
     val q = graft.queries.VectorQueries.qvec(spark, TestSpark.sf, 0L)
     val viaFresh = freshIdx
-      .searchIvf(q, 10, nprobe = freshIdx.model.cfg.ivfCells)
+      .search(q, 10, freshIdx.model.cfg.ivfCells)
       .collect().map(_.getLong(0)).toSeq
     val flat = VectorStore.searchIn(embRows(302), q, 10)
       .collect().map(_.getLong(0)).toSeq

@@ -38,7 +38,7 @@ class ScaleSmokeSpec extends AnyFunSuite {
 
     val q = corpus.where(col("id") === 12345)
       .head.getSeq[Float](1).map(_.toDouble).toArray
-    val viaStore = store.search(q, 10, probes = store.model.numBuckets)
+    val viaStore = store.search(q, 10, store.model.numBuckets)
       .select(col("id"), round(col("dist"), 6).as("dist"))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val brute = corpus
@@ -51,7 +51,7 @@ class ScaleSmokeSpec extends AnyFunSuite {
 
     // pruned search keeps its contracts: k rows, ascending distances,
     // and the query's own vector surfaces from its primary bucket
-    val pruned = store.search(q, 10, probes = 2)
+    val pruned = store.search(q, 10, 2)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(pruned.size == 10)
     assert(pruned.map(_._2) == pruned.map(_._2).sorted)

@@ -183,13 +183,11 @@ class SnapshotReadSpec extends AnyFunSuite {
     st.add(frame(vecs(200, 220, 4L)))
     val q = vecs(0, 1, 3L).head._2.map(_.toDouble)
     st.topK(q, 3, st.maxDepth) // the reader is planned
-    intercept[SnapshotVacuumedException] {
-      st.classified {
-        val pinned = FileLog.read(d)
-        st.compact(vacuumGraceMs = 0L)
-        // a snapshot the memo never held: built from the log now
-        st.topKAt(pinned.copy(files = pinned.files.reverse), q, 3, st.maxDepth)
-      }
-    }
+    val pinned = FileLog.read(d)
+    st.compact(vacuumGraceMs = 0L)
+    // a snapshot the memo never held, built from the log now; the
+    // search types the failure against the version it pinned
+    intercept[SnapshotVacuumedException](
+      st.topKAt(pinned.copy(files = pinned.files.reverse), q, 3, st.maxDepth))
   }
 }

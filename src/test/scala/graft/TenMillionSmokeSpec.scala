@@ -81,7 +81,7 @@ class TenMillionSmokeSpec extends AnyFunSuite {
           VF.l2sqLit(col("embedding"), q).as("dist"))
         .orderBy(col("dist"), col("id")).limit(10).collect()
     }
-    val tIvf = med3(idx.searchIvf(q, 10, nprobe = 2).collect())
+    val tIvf = med3(idx.search(q, 10, 2).collect())
     val tIvfpq = med3(idx.searchTwoStage(graft.store.QuantTier.Pq, q, 10, nprobe = 2).collect())
     info(f"wall: exact=$tExact%.2fs ivf(2/16)=$tIvf%.2fs ivfpq=$tIvfpq%.2fs")
     assert(tIvf < tExact,
@@ -112,7 +112,7 @@ class TenMillionSmokeSpec extends AnyFunSuite {
     assert(idx.indexDf.count() == N + 10000)
     assert(graft.store.FileLog.read(s"$dir/index").zones.nonEmpty)
     // an added id is findable post-compact through the full probe path
-    assert(idx.searchIvf(qvec(N), 1, nprobe = idx.model.cfg.ivfCells)
+    assert(idx.search(qvec(N), 1, idx.model.cfg.ivfCells)
       .head.getLong(0) == N)
   }
 
@@ -124,9 +124,9 @@ class TenMillionSmokeSpec extends AnyFunSuite {
     assert(store.indexDf.count() == N)
 
     val q = qvec(777L)
-    val exact = store.search(q, 10, probes = store.model.numBuckets)
+    val exact = store.search(q, 10, store.model.numBuckets)
       .collect().map(_.getLong(0)).toSeq
-    val pruned = store.search(q, 10, probes = 1).collect().map(_.getLong(0)).toSeq
+    val pruned = store.search(q, 10, 1).collect().map(_.getLong(0)).toSeq
     assert(exact.size == 10 && pruned.size == 10)
     // 1-probe candidates are a subset of the corpus: its top-10 can
     // only contain exact top-10 members or farther rows — never a
@@ -155,11 +155,11 @@ class TenMillionSmokeSpec extends AnyFunSuite {
     val flat = VectorStore.searchIn(
       gen(0, N).select(col("id"), col("embedding")), q, 10)
       .collect().map(_.getLong(0)).toSeq
-    val viaMt = store.exact(q, 10).collect().map(_.getLong(0)).toSeq
+    val viaMt = store.search(q, 10, store.maxDepth).collect().map(_.getLong(0)).toSeq
     assert(viaMt == flat, "table-0 exact must equal the flat corpus exact")
 
     val (hits, tProbe) = timed(
-      store.search(q, 10, probes = cfg.numHashTables).collect())
+      store.search(q, 10, cfg.numHashTables).collect())
     info(f"2-probe OR-union search: ${hits.length} rows in $tProbe%.2fs")
     assert(hits.length == 10)
     assert(hits.map(_.getLong(0)).distinct.length == 10, "dup ids in OR-union")

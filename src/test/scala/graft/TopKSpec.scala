@@ -2,17 +2,19 @@ package graft
 
 import java.lang.Double.doubleToRawLongBits
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.lsh.LshConfig
 import graft.store.{FileLog, IndexTable, MultiTableStore, QuantConfig,
   QuantIndex, QuantTier, SnapshotVacuumedException, VectorStore}
 
-/** The executed search kernel ([[IndexTable.topK]]) against the
-  * DataFrame search it executes: on every layout, after every kind of
-  * mutation, the same ids in the same order with the same distance
-  * bits; and, under concurrent writers, only committed snapshots.
+/** The kernel's one search rule on every layout, after every kind of
+  * mutation: the executed search ([[IndexTable.topK]]) and the
+  * DataFrame search both return what a brute-force oracle over the
+  * model's own probe ranking returns — the same ids in the same order
+  * with the same distance bits; and, under concurrent writers, only
+  * committed snapshots.
   */
 class TopKSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -46,22 +48,58 @@ class TopKSpec extends AnyFunSuite {
       Seq.fill(6)(Array.fill(Dim)(rnd.nextGaussian()))
   }
 
-  /** `topK` equals `search(...).collect()` for seeded (query, k, depth)
-    * draws, k in 1..120 plus one k beyond every row.
+  private def cellOf(r: Row, c: String): Int = r.getAs[Number](c).intValue()
+
+  /** Which stored rows a depth-`depth` search may return, from the
+    * layout's model alone (no kernel code): rows whose partition
+    * columns lie in the model's own probe ranking (the LSH model's
+    * `candidates` or `tableCandidates`, the IVF model's
+    * `ivfNearestCells`); at `maxDepth`
+    * every row, or table 0 (one full copy) on the ×L layout.
+    */
+  private def probed(t: IndexTable, q: Array[Double],
+      depth: Int): Row => Boolean = {
+    val all = depth >= t.maxDepth
+    t match {
+      case s: VectorStore =>
+        val cells = s.model.candidates(q, depth).toSet
+        r => all || cells(cellOf(r, "bucket"))
+      case s: MultiTableStore =>
+        val pairs = s.model.tableCandidates(q, depth).toSet
+        r => if (all) cellOf(r, "table") == 0
+          else pairs((cellOf(r, "table"), cellOf(r, "bucket")))
+      case s: QuantIndex =>
+        val cells = s.model.ivfNearestCells(q, depth).toSet
+        r => all || cells(cellOf(r, "cell"))
+    }
+  }
+
+  /** `topK` and `search(...).collect()` both equal an oracle outside
+    * the kernel — the brute-force top-k over the live rows the model's
+    * probe ranking selects ([[probed]]), one row per id — for seeded
+    * (query, k, depth) draws, k in 1..120 plus one k beyond every row:
+    * the same ids in the same order with the same distance bits.
     */
   private def agree(t: IndexTable, qs: Seq[Array[Double]], seed: Long,
       label: String): Unit = {
     val rnd = new scala.util.Random(seed)
     val draws = Seq.fill(8)((qs(rnd.nextInt(qs.size)), 1 + rnd.nextInt(120),
       1 + rnd.nextInt(t.maxDepth))) :+ ((qs.head, 100000, t.maxDepth))
+    val stored = t.indexDf.collect()
     draws.foreach { case (q, k, depth) =>
-      val want = t.search(q, k, depth).collect()
+      val keep = probed(t, q, depth)
+      val want = brute(stored.filter(keep).map(r =>
+        r.getAs[Long]("id") -> r.getAs[Seq[Float]]("embedding").toArray).toMap,
+        q, k)
+      val viaSearch = t.search(q, k, depth).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      val got = t.topK(q, k, depth).toSeq
-      val ctx = s"$label k=$k depth=$depth"
-      assert(got.map(_._1) == want.map(_._1), ctx)
-      assert(got.map(x => doubleToRawLongBits(x._2)) ==
-        want.map(x => doubleToRawLongBits(x._2)), ctx)
+      val viaTopK = t.topK(q, k, depth).toSeq
+      Seq("search" -> viaSearch, "topK" -> viaTopK).foreach { case (how, got) =>
+        val ctx = s"$label $how k=$k depth=$depth"
+        assert(got.map(_._1) == want.map(_._1), ctx)
+        assert(got.map(x => doubleToRawLongBits(x._2)) ==
+          want.map(x => doubleToRawLongBits(x._2)), ctx)
+      }
     }
   }
 
@@ -187,7 +225,7 @@ class TopKSpec extends AnyFunSuite {
           val seen = Seq.newBuilder[(Int, Seq[(Long, Double)], Int)]
           while (!done.get()) {
             val lo = committed.get()
-            val got = st.classified(st.topK(q, 10, st.maxDepth)).toSeq
+            val got = st.topK(q, 10, st.maxDepth).toSeq
             seen += ((lo, got, committed.get()))
           }
           seen.result()
@@ -233,12 +271,9 @@ class TopKSpec extends AnyFunSuite {
     // a reader that resolved and planned its snapshot before a rewrite
     // and an ungraced vacuum removed the files
     st.topK(q, 3, st.maxDepth)
-    intercept[SnapshotVacuumedException] {
-      st.classified {
-        val pinned = FileLog.read(d)
-        st.compact(vacuumGraceMs = 0L)
-        st.topKAt(pinned, q, 3, st.maxDepth)
-      }
-    }
+    // typed by the search itself, no `classified` wrapper
+    val pinned = FileLog.read(d)
+    st.compact(vacuumGraceMs = 0L)
+    intercept[SnapshotVacuumedException](st.topKAt(pinned, q, 3, st.maxDepth))
   }
 }

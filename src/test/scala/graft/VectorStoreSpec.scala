@@ -28,7 +28,7 @@ class VectorStoreSpec extends AnyFunSuite {
   }
 
   test("exact search returns k ascending, ties by id, self first") {
-    val r = store.search(q, 10, probes = 3).collect()
+    val r = store.search(q, 10, 3).collect()
     assert(r.length == 10)
     assert(r.head.getLong(0) == 0L && r.head.getDouble(1) == 0.0)
     val dists = r.map(_.getDouble(1)).toSeq
@@ -36,12 +36,12 @@ class VectorStoreSpec extends AnyFunSuite {
   }
 
   test("k-clamp: k<=0 behaves as k=1 (coordinator.py:144-147)") {
-    assert(store.search(q, 0, probes = 3).count() == 1)
-    assert(store.search(q, -5, probes = 3).count() == 1)
+    assert(store.search(q, 0, 3).count() == 1)
+    assert(store.search(q, -5, 3).count() == 1)
   }
 
   test("k > ntotal returns all rows (shard_node.py:118-120)") {
-    assert(store.search(q, 10000, probes = 3).count() == 500)
+    assert(store.search(q, 10000, 3).count() == 500)
   }
 
   test("empty index returns empty, no error (shard_node.py:122-124)") {
@@ -51,21 +51,21 @@ class VectorStoreSpec extends AnyFunSuite {
   }
 
   test("pruned results are a subset of exact; probes=all equals exact") {
-    val exact = store.search(q, 20, probes = 3).collect()
+    val exact = store.search(q, 20, 3).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val full = store.search(q, 500, probes = 3).collect()
+    val full = store.search(q, 500, 3).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSet
-    val pruned = store.search(q, 20, probes = 2).collect()
+    val pruned = store.search(q, 20, 2).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(pruned.toSet.subsetOf(full))
-    val exactAgain = store.search(q, 20, probes = 3).collect()
+    val exactAgain = store.search(q, 20, 3).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(exact == exactAgain)
   }
 
   test("kNN(k) is a prefix of kNN(k+5)") {
-    val k10 = store.search(q, 10, probes = 3).collect().map(_.getLong(0)).toSeq
-    val k15 = store.search(q, 15, probes = 3).collect().map(_.getLong(0)).toSeq
+    val k10 = store.search(q, 10, 3).collect().map(_.getLong(0)).toSeq
+    val k15 = store.search(q, 15, 3).collect().map(_.getLong(0)).toSeq
     assert(k15.take(10) == k10)
   }
 
@@ -89,7 +89,7 @@ class FilteredSearchSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(store.indexDf.columns.toSet ==
       Set("id", "embedding", "label", "bucket"))
     val q = graft.queries.VectorQueries.qvec(spark, TestSpark.sf, 0)
-    val viaStore = store.search(q, 10, probes = 3, filter = col("label") === 3)
+    val viaStore = store.search(q, 10, 3, filter = col("label") === 3)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val viaQuery = SparkEntry.queries("v11_filtered_knn")(spark, TestSpark.sf)
       .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
@@ -115,7 +115,7 @@ class MutationSpec extends org.scalatest.funsuite.AnyFunSuite {
     val before = store.indexDf.count()
     val victims = store.search(
       graft.queries.VectorQueries.qvec(TestSpark.spark, TestSpark.sf, 0),
-      5, probes = 3).collect().map(_.getLong(0)).toSeq
+      5, 3).collect().map(_.getLong(0)).toSeq
     val removed = store.delete(victims)
     assert(removed == victims.length)
     assert(store.indexDf.count() == before - victims.length)
@@ -174,10 +174,10 @@ class MutationSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(store.indexDf.where(col("id") === 7L).count() == 1)
     // searching with id 3's embedding must now find id 7 at distance 0
     val q3 = emb(3L).map(_.toDouble)
-    val top = store.search(q3, 3, probes = 3).collect()
+    val top = store.search(q3, 3, 3).collect()
     assert(top.exists(r => r.getLong(0) == 7L && r.getDouble(1) == 0.0))
     val q5 = emb(5L).map(_.toDouble)
-    val top5 = store.search(q5, 3, probes = 3).collect()
+    val top5 = store.search(q5, 3, 3).collect()
     assert(top5.exists(r => r.getLong(0) == 100000L && r.getDouble(1) == 0.0))
   }
 
@@ -223,14 +223,14 @@ class MutationSpec extends org.scalatest.funsuite.AnyFunSuite {
     (1 to 4).foreach { b =>
       s2.add(emb.where(col("id") >= b * 100 && col("id") < (b + 1) * 100))
     }
-    val exactBefore = s2.search(q, 20, probes = s2.model.numBuckets)
+    val exactBefore = s2.search(q, 20, s2.model.numBuckets)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val (before, after) = s2.compact()
     assert(before >= 5, s"expected >=5 small files, saw $before")
     assert(after < before, s"compaction did not reduce files: $before -> $after")
     assert(after <= s2.model.numBuckets,
       s"expected <= one file per bucket at this size, saw $after")
-    val exactAfter = s2.search(q, 20, probes = s2.model.numBuckets)
+    val exactAfter = s2.search(q, 20, s2.model.numBuckets)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(exactAfter == exactBefore)
     assert(s2.indexDf.count() == 500)
@@ -246,7 +246,7 @@ class MutationSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(wide.model.numBuckets == 16)
     assert(wide.indexDf.count() == store.indexDf.count())
     def exact(s: graft.store.VectorStore) =
-      s.search(q, 10, probes = s.model.numBuckets)
+      s.search(q, 10, s.model.numBuckets)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(exact(wide) == exact(store),
       "exact search must be invariant under resharding")
