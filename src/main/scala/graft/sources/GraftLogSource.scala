@@ -212,12 +212,13 @@ final class GraftLogFileIndex(spark: SparkSession, dir: String,
     }).eval
   }
 
-  /** Every live file as one whole-file split with its partition values,
-    * for a parquet reader planned over a snapshot of the same schema.
+  /** Every live file as (logged path, one whole-file split with its
+    * partition values), for a parquet reader planned over a snapshot of
+    * the same schema.
     */
-  def partitionedFiles: Seq[PartitionedFile] = entries.map { e =>
-    PartitionedFile(e.values, SparkPath.fromPath(e.status.getPath), 0L,
-      e.status.getLen, fileSize = e.status.getLen)
+  def partitionedFiles: Seq[(String, PartitionedFile)] = entries.map { e =>
+    e.logged -> PartitionedFile(e.values, SparkPath.fromPath(e.status.getPath),
+      0L, e.status.getLen, fileSize = e.status.getLen)
   }
 
   /** The relation over this snapshot, read with the stock parquet format. */

@@ -44,8 +44,9 @@ final class SnapshotVacuumedException(msg: String, cause: Throwable)
   * closes that gap, and this is its minimal core, the same shape as
   * [[graft.sources.ManifestScan]]'s versioned sidecar: every commit
   * writes an IMMUTABLE `_files.v{N}.json` holding the live file SET
-  * (plus schema DDL, the streaming batch watermark, and per-file row
-  * counts, byte sizes and zone maps), and `_files.json` is a convenience pointer to
+  * (plus schema DDL, the streaming batch watermark, per-file row
+  * counts, byte sizes and zone maps, and which live files were
+  * appended rather than sealed), and `_files.json` is a convenience pointer to
   * the newest one. Readers resolve the newest version file once per
   * scan and read an immutable list — they see the pre-commit or
   * post-commit table, never a torn one; replaced files stay on disk
@@ -98,13 +99,13 @@ final class SnapshotVacuumedException(msg: String, cause: Throwable)
   * A version file is one of two record shapes:
   *
   *  - a CHECKPOINT: the full snapshot (`files` + per-file `zones`,
-  *    `rows` and `sizes`), exactly the pre-round-21 shape — every
-  *    legacy log reads unchanged, and every legacy version file IS a
-  *    checkpoint;
+  *    `rows` and `sizes`, and the `appended` files), exactly the
+  *    pre-round-21 shape — every legacy log reads unchanged, and every
+  *    legacy version file IS a checkpoint;
   *  - a DELTA: only the commit's CHANGES against its predecessor
-  *    (`add`/`remove` file lists, changed zone/row/size entries and
-  *    their `*_drop` lists, the new schema/watermark) plus the version
-  *    of the checkpoint its chain starts at.
+  *    (`add`/`remove` file lists, changed zone/row/size/appended
+  *    entries and their `*_drop` lists, the new schema/watermark) plus
+  *    the version of the checkpoint its chain starts at.
   *
   * `sizes` (file → bytes) sits next to `rows` (file → row count) and
   * is optional the same way: a record without it (logs written before
@@ -188,6 +189,13 @@ object FileLog {
     *                  per file ([[fileSizes]]). Absent for the same
     *                  files as `rows`, and in logs written before sizes
     *                  were recorded.
+    * @param appended  the live files [[append]] added. Every other commit
+    *                  kind (a build, a rewrite, a compaction) adds SEALED
+    *                  files, which [[IndexTable]] keeps decoded in memory
+    *                  once searched; appended files are small and many,
+    *                  stay on disk, and leave the set when a compaction
+    *                  or rewrite retires them. A log written before the
+    *                  set was recorded has none appended.
     */
   final case class State(files: Seq[String], schemaDdl: String,
       version: Int = 0, batchId: Long = -1L,
@@ -195,7 +203,8 @@ object FileLog {
       rows: Map[String, Long] = Map.empty,
       dataChange: Boolean = true,
       checkpoint: Int = 0,
-      sizes: Map[String, Long] = Map.empty) {
+      sizes: Map[String, Long] = Map.empty,
+      appended: Set[String] = Set.empty) {
 
     /** Zone skipping, the one rule every pruned read and rewrite
       * applies: keep `file` unless some queried column range is
@@ -217,7 +226,8 @@ object FileLog {
       zones: Map[String, Map[String, Zone]] = Map.empty,
       rows: Map[String, Long] = Map.empty,
       dataChange: Boolean = true,
-      sizes: Map[String, Long] = Map.empty)
+      sizes: Map[String, Long] = Map.empty,
+      appended: Set[String] = Set.empty)
 
   def currentPath(dir: String): String = s"$dir/_files.json"
   private def versionPath(dir: String, v: Int): String = s"$dir/_files.v$v.json"
@@ -308,10 +318,12 @@ object FileLog {
   private def readOnce(dir: String): State = {
     val ptr = pointer(dir)
     newestFrom(dir, ptr) match {
-      // pointer IS the newest record and a full snapshot: zero IO
+      // the pointer is a copy of the newest record: a full snapshot
+      // needs no further IO, a delta is its own chain's last link
       case Some(v) => ptr match {
         case Some(Snap(st)) if v == st.version =>
           st.copy(checkpoint = st.version)
+        case Some(d: Delta) if v == d.version => materialize(dir, d)
         case _ => readVersion(dir, v)
       }
       case None => readByListing(dir, ptr)
@@ -379,25 +391,31 @@ object FileLog {
   def readVersion(dir: String, v: Int): State =
     parseRecord(FsIo.readString(versionPath(dir, v))) match {
       case Snap(st) => st.copy(version = v, checkpoint = v)
-      case d: Delta =>
-        var st = parseRecord(FsIo.readString(versionPath(dir, d.checkpoint))) match {
-          case Snap(s) =>
-            s.copy(version = d.checkpoint, checkpoint = d.checkpoint)
-          case _: Delta => throw new IllegalStateException(
-            s"version ${d.checkpoint} of $dir is named as a checkpoint " +
-              s"by the delta at version $v but is itself a delta record — " +
-              "corrupt log")
-        }
-        var i = d.checkpoint + 1
-        while (i <= v) {
-          st = parseRecord(FsIo.readString(versionPath(dir, i))) match {
-            case Snap(s) => s.copy(version = i, checkpoint = i)
-            case dd: Delta => applyDelta(st, dd)
-          }
-          i += 1
-        }
-        st
+      case d: Delta => materialize(dir, d)
     }
+
+  /** The state a delta record describes: its chain's checkpoint, every
+    * record after it, then `d` itself — one read per link before `d`.
+    */
+  private def materialize(dir: String, d: Delta): State = {
+    var st = parseRecord(FsIo.readString(versionPath(dir, d.checkpoint))) match {
+      case Snap(s) =>
+        s.copy(version = d.checkpoint, checkpoint = d.checkpoint)
+      case _: Delta => throw new IllegalStateException(
+        s"version ${d.checkpoint} of $dir is named as a checkpoint " +
+          s"by the delta at version ${d.version} but is itself a delta " +
+          "record — corrupt log")
+    }
+    var i = d.checkpoint + 1
+    while (i < d.version) {
+      st = parseRecord(FsIo.readString(versionPath(dir, i))) match {
+        case Snap(s) => s.copy(version = i, checkpoint = i)
+        case dd: Delta => applyDelta(st, dd)
+      }
+      i += 1
+    }
+    applyDelta(st, d)
+  }
 
   /** Newest retained version whose exactly-once batch watermark is
     * ≤ `batchId` — the "as of streaming batch B" resolve behind the
@@ -431,7 +449,8 @@ object FileLog {
       batchId: Long, zones: Map[String, Map[String, Zone]],
       rows: Map[String, Long], zoneDrop: Seq[String],
       rowDrop: Seq[String], dataChange: Boolean,
-      sizes: Map[String, Long], sizeDrop: Seq[String]) extends Record
+      sizes: Map[String, Long], sizeDrop: Seq[String],
+      appended: Seq[String], appendedDrop: Seq[String]) extends Record
 
   private def recordVersion(r: Record): Int = r match {
     case Snap(st) => st.version
@@ -456,7 +475,8 @@ object FileLog {
       rows = prev.rows -- rm -- d.rowDrop ++ d.rows,
       dataChange = d.dataChange,
       checkpoint = d.checkpoint,
-      sizes = prev.sizes -- rm -- d.sizeDrop ++ d.sizes)
+      sizes = prev.sizes -- rm -- d.sizeDrop ++ d.sizes,
+      appended = prev.appended -- rm -- d.appendedDrop ++ d.appended)
   }
 
   private def parseRecord(text: String): Record = {
@@ -481,7 +501,9 @@ object FileLog {
         rowDrop = strs("rows_drop"),
         dataChange = m.get("data_change").forall(_.asInstanceOf[Boolean]),
         sizes = parseCounts(m, "sizes"),
-        sizeDrop = strs("sizes_drop"))
+        sizeDrop = strs("sizes_drop"),
+        appended = strs("appended"),
+        appendedDrop = strs("appended_drop"))
     }
   }
 
@@ -511,7 +533,10 @@ object FileLog {
       dataChange = m.get("data_change")
         .forall(_.asInstanceOf[Boolean]), // absent (pre-r18 log) = true
       checkpoint = version, // a full snapshot is its own checkpoint
-      sizes = parseCounts(m, "sizes"))
+      sizes = parseCounts(m, "sizes"),
+      appended = m.get("appended") // absent (older log) = none appended
+        .fold(Set.empty[String])(_.asInstanceOf[Vector[Any]]
+          .map(_.asInstanceOf[String]).toSet))
   }
 
   private def render(c: Commit, version: Int): String = {
@@ -531,9 +556,12 @@ object FileLog {
     val withSizes =
       if (c.sizes.isEmpty) withRows
       else withRows + ("sizes" -> c.sizes)
+    val withAppended =
+      if (c.appended.isEmpty) withSizes
+      else withSizes + ("appended" -> c.appended.toVector.sorted)
     val withChange = // written only when cleared: pre-r18 readers and
-      if (c.dataChange) withSizes // logs agree that absent means true
-      else withSizes + ("data_change" -> false)
+      if (c.dataChange) withAppended // logs agree that absent means true
+      else withAppended + ("data_change" -> false)
     Json.write(withChange)
   }
 
@@ -583,6 +611,9 @@ object FileLog {
       !prev.sizes.get(f).contains(n) }
     val sDrop = prev.sizes.keysIterator
       .filter(f => !removeSet(f) && !c.sizes.contains(f)).toVector.sorted
+    val aAdd = c.appended.filterNot(prev.appended).toVector.sorted
+    val aDrop = prev.appended
+      .filter(f => !removeSet(f) && !c.appended(f)).toVector.sorted
     var m = scala.collection.immutable.ListMap[String, Any](
       "version" -> next.toLong,
       "checkpoint" -> prev.checkpoint.toLong,
@@ -597,6 +628,8 @@ object FileLog {
     if (rDrop.nonEmpty) m += ("rows_drop" -> rDrop)
     if (sAdd.nonEmpty) m += ("sizes" -> sAdd)
     if (sDrop.nonEmpty) m += ("sizes_drop" -> sDrop)
+    if (aAdd.nonEmpty) m += ("appended" -> aAdd)
+    if (aDrop.nonEmpty) m += ("appended_drop" -> aDrop)
     if (!c.dataChange) m += ("data_change" -> false)
     Some(Json.write(m))
   }
@@ -712,6 +745,7 @@ object FileLog {
     *  - An unlogged directory with data is ADOPTED: its physical
     *    listing (the staged files are outside it by construction)
     *    becomes live next to the batch, so pre-existing rows survive.
+    *  - The batch's files are logged as appended ([[State.appended]]).
     *
     * Returns the written files, None when the batch was declined.
     */
@@ -739,7 +773,8 @@ object FileLog {
         ddlOver(cur), math.max(batchId, curBid),
         cur.map(_.zones).getOrElse(Map.empty) ++ w.zones,
         cur.map(_.rows).getOrElse(Map.empty) ++ w.rows,
-        sizes = cur.map(_.sizes).getOrElse(adopted.toMap) ++ w.sizes))
+        sizes = cur.map(_.sizes).getOrElse(adopted.toMap) ++ w.sizes,
+        appended = cur.map(_.appended).getOrElse(Set.empty) ++ w.files))
     }
     if (v < 0) None else Some(w)
   }
@@ -812,6 +847,9 @@ object FileLog {
       val zones = (cur.zones -- removed) ++ addedZones
       val rows = (cur.rows -- removed) ++ addedRows
       val sizes = (cur.sizes -- removed) ++ addedSizes
+      // the rewrite's own files are sealed; appends that raced in stay
+      // appended
+      val appended = cur.appended -- removed
       val batchId = math.max(base.batchId, cur.batchId)
       // The caller's schemaDdl was derived from the STALE base: if an
       // interloping append widened the schema since (evolveSchema),
@@ -837,7 +875,7 @@ object FileLog {
             "resurrect them; re-read and retry the operation")
       }
       Some(after(Some(cur), Commit(files, mergeSchemas(schemaDdl, cur.schemaDdl),
-        batchId, zones, rows, dataChange, sizes)))
+        batchId, zones, rows, dataChange, sizes, appended)))
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.store
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -78,6 +79,16 @@ private[store] final case class Layout(parts: Seq[(String, Int)],
   * commit changes the file list, so the next read misses and the old
   * entries age out.
   *
+  * Sealed files — the ones a build or a rewrite committed, not
+  * [[add]]'s ([[FileLog.State.appended]]) — are kept resident: the
+  * first search that probes one decodes it into Spark's block manager
+  * ([[PreparedScan.block]]), and every later search of any snapshot
+  * holding it scores the decoded arrays instead of reading parquet. A
+  * file is resident only while it is live in the newest snapshot this
+  * table has read and no rewrite of this table has retired it; a
+  * retired file's block is unpersisted, so a search of an older
+  * snapshot reads that file from parquet and still meets a vacuum.
+  *
   * One write policy holds for every layout: appends do not sort;
   * builds and rewrites sort each file by (partition columns, id), so
   * id pushdown can skip row groups; compaction that needs several
@@ -121,22 +132,24 @@ abstract class IndexTable(spark: SparkSession,
 
   /** A snapshot's frame and, built on its first [[topK]], its prepared
     * scan: a logged snapshot's files through the table's reader
-    * ([[readerFor]]), anything else planned on its own. The lazy val
-    * builds at most once per snapshot even when concurrent searches
+    * ([[readerFor]]), its sealed files from their resident blocks
+    * ([[residentBlock]]), anything else planned on its own. The lazy
+    * val builds at most once per snapshot even when concurrent searches
     * miss together.
     */
   protected final class Snap(val df: DataFrame,
       index: Option[graft.sources.GraftLogFileIndex] = None) {
     lazy val scan: PreparedScan = index
-      .flatMap(ix => readerFor(ix, df)
-        .flatMap(PreparedScan.over(_, ix.partitionedFiles, layout)))
+      .flatMap(ix => readerFor(ix, df).flatMap(
+        PreparedScan.over(_, ix.partitionedFiles, layout, residentBlock)))
       .getOrElse(PreparedScan(df, layout))
   }
 
   // The parquet reader planned for the table's schema (the nullable
   // logged schema and the partition columns), with that key: planned on
   // the first search of a snapshot and reused until a commit changes
-  // the schema. Cells are parsed with the current layout.
+  // the schema. Cells are parsed with the current layout. Resident
+  // blocks decode through it, so a new reader drops them all.
   private var reader: Option[((StructType, StructType),
     Option[PreparedScan.Reader])] = None
 
@@ -148,9 +161,60 @@ abstract class IndexTable(spark: SparkSession,
       case _ =>
         val r = PreparedScan.reader(df, layout)
         reader = Some(key -> r)
+        unpersist(blocks.keys.toSeq)
         r
     }
   }
+
+  // Resident blocks (guarded by this table's lock): the sealed files of
+  // the newest snapshot read (version `newest`), less those this
+  // table's rewrites retired since, and the blocks made for them.
+  private var newest = -1
+  private var sealedLive = Set.empty[String]
+  private val blocks =
+    scala.collection.mutable.Map.empty[String, PreparedScan.BlockRDD]
+
+  /** Note a snapshot read: a newer one than any before replaces the
+    * sealed live set, and files it no longer holds lose their blocks.
+    */
+  private def observe(st: FileLog.State): Unit = synchronized {
+    if (st.version > newest) {
+      newest = st.version
+      sealedLive = st.files.toSet -- st.appended
+      unpersist(blocks.keys.filterNot(sealedLive).toSeq)
+    }
+  }
+
+  /** `files` were retired by this table's own commit. */
+  private def retire(files: Set[String]): Unit = synchronized {
+    sealedLive --= files
+    unpersist(files.toSeq)
+  }
+
+  /** This table's snapshot was superseded by another table (a
+    * retrain): keep none of its files resident any more.
+    */
+  protected def releaseBlocks(): Unit = synchronized {
+    sealedLive = Set.empty
+    unpersist(blocks.keys.toSeq)
+  }
+
+  private def unpersist(files: Seq[String]): Unit =
+    files.foreach(f => blocks.remove(f).foreach(_.unpersist(blocking = false)))
+
+  /** The resident block of logged file `f`, made on first use; None
+    * when `f` is appended, retired or not of the newest snapshot.
+    */
+  private def residentBlock(f: String,
+      split: PartitionedFile): Option[PreparedScan.BlockRDD] =
+    synchronized {
+      if (!sealedLive(f)) None
+      else reader.flatMap(_._2)
+        .map(r => blocks.getOrElseUpdate(f, PreparedScan.block(r, split, f)))
+    }
+
+  /** Files with a resident block (made, not necessarily decoded yet). */
+  private[graft] def residentFiles: Set[String] = synchronized(blocks.keySet.toSet)
 
   /** The in-memory copy reads serve instead of the files, if any. */
   protected def residentSnap: Option[Snap] = None
@@ -160,7 +224,8 @@ abstract class IndexTable(spark: SparkSession,
   // still costs per READ even at a frozen version. Keyed on (schema,
   // exact file list), so any commit misses and a re-read of the same
   // immutable snapshot hits; the newest 8 snapshots stay. Metadata
-  // and plans only — no rows are cached, every search still scans.
+  // and plans only: rows live in the resident blocks, which belong to
+  // files, not snapshots, and so outlive a memo entry.
   private val snaps =
     new java.util.LinkedHashMap[(String, Seq[String]), Snap](8, 0.75f, true) {
       override def removeEldestEntry(
@@ -171,6 +236,7 @@ abstract class IndexTable(spark: SparkSession,
   protected def dfOf(st: FileLog.State): DataFrame = snapOf(st).df
 
   private def snapOf(st: FileLog.State): Snap = {
+    observe(st)
     def resolve(): Snap = {
       val (df, index) = graft.sources.GraftLogFileIndex.snapshot(spark, tableDir, st)
       new Snap(df, index)
@@ -285,6 +351,7 @@ abstract class IndexTable(spark: SparkSession,
     val written = rewrite(remaining, affected)
     val retired = retiredBy(log, affected)
     FileLog.rewrite(spark, tableDir, log, retired.toSet, written, log.schemaDdl)
+    retire(retired.toSet)
     committed(dataChange = true)
     // logged row counts replace the before/remaining count() jobs
     (FileLog.fileRows(spark, log, retired).values.sum - written.totalRows) /
@@ -326,8 +393,10 @@ abstract class IndexTable(spark: SparkSession,
       .join(incoming.select("id"), Seq("id"), "left_anti")
     // a partition fully emptied by moved-away ids simply publishes no
     // files; appends racing the rewrite merge (see deleteUnique)
-    FileLog.rewrite(spark, tableDir, log, retiredBy(log, affected).toSet,
+    val retired = retiredBy(log, affected).toSet
+    FileLog.rewrite(spark, tableDir, log, retired,
       rewrite(existing.unionByName(incoming), affected), log.schemaDdl)
+    retire(retired)
     committed(dataChange = true)
   }
 
@@ -413,6 +482,7 @@ abstract class IndexTable(spark: SparkSession,
     FileLog.rewrite(spark, tableDir, log, files.toSet, written, log.schemaDdl,
       dataChange = false, // same rows, new files
       readSet = cells.map(_ => files.toSet))
+    retire(files.toSet)
     FileLog.vacuum(spark, tableDir, retainLast = 1, graceMs = vacuumGraceMs)
     committed(dataChange = false)
     Some(written.files.size.toLong)

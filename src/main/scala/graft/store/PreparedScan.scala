@@ -1,7 +1,9 @@
 package graft.store
 
-import org.apache.spark.{Partition, TaskContext}
+import org.apache.spark.{NarrowDependency, Partition, TaskContext}
+import org.apache.spark.graft.CacheBridge
 import org.apache.spark.rdd.RDD
+import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
@@ -26,19 +28,26 @@ import graft.expressions.VecEval
   *    ([[PreparedScan.Reader]]) reads any whole-file split of its
   *    schema, so a logged snapshot needs no plan of its own: it takes
   *    the reader planned for an earlier snapshot of the same schema and
-  *    its files from the log ([[PreparedScan.over]]);
+  *    its files from the log ([[PreparedScan.over]]). A file the table
+  *    keeps resident (`resident`: a sealed file, see [[IndexTable]]) is
+  *    read as its decoded [[PreparedScan.Block]] instead: the first
+  *    search that touches it decodes the parquet once, inside its own
+  *    task, into Spark's block manager, and every later search scores
+  *    the block's flat arrays;
   *  - any other scan (a resident copy, a directory whose paths name no
   *    cell) is planned per snapshot, runs its partitions in as many
   *    tasks and keeps only rows whose grid code is probed.
   *
   * Each task keeps a bounded (dist, id) heap ([[TopKHeap]]); the
   * driver merges the ≤ k rows of each task. Distances are the same
-  * left-to-right float→double fold as `vec_l2sq`, so a reply is
-  * bit-identical to the DataFrame search's.
+  * left-to-right float→double fold as `vec_l2sq`, in row order, on
+  * rows and blocks alike, so a reply is bit-identical to the DataFrame
+  * search's.
   */
 private[graft] final class PreparedScan private (
     parent: RDD[InternalRow],
-    byCell: Option[Map[Int, Seq[PartitionedFile]]],
+    byCell: Option[Map[Int, Seq[(String, PartitionedFile)]]],
+    resident: PreparedScan.Resident,
     idOrd: Int, embOrd: Int, gridOrd: Int, floatEmb: Boolean,
     gridSize: Int) {
 
@@ -51,10 +60,12 @@ private[graft] final class PreparedScan private (
     val probed = cells.distinct
     val sc = parent.sparkContext
     val tasks = math.min(probed.size, sc.defaultParallelism)
-    val (groups, keep) = byCell match {
+    val (groups, blocks, keep) = byCell match {
       case Some(files) =>
-        (PreparedScan.pack(probed.flatMap(files.getOrElse(_, Nil)), tasks),
-          null)
+        val (groups, blocks) = PreparedScan.pack(
+          probed.flatMap(files.getOrElse(_, Nil))
+            .map { case (name, f) => (f, resident(name, f)) }, tasks)
+        (groups, blocks, null)
       case None =>
         val keep =
           if (probed.size >= gridSize) null
@@ -63,12 +74,14 @@ private[graft] final class PreparedScan private (
             probed.foreach(c => if (c >= 0 && c < gridSize) b(c) = true)
             b
           }
-        (PreparedScan.chunk(parent.partitions, tasks), keep)
+        (PreparedScan.chunk(parent.partitions, tasks),
+          Array.empty[PreparedScan.BlockRDD], keep)
     }
     if (groups.isEmpty) return Array.empty
     val task = TopKTask(q, k, dedup, idOrd, embOrd, floatEmb, gridOrd, keep)
     TopKTask.merge(
-      sc.runJob(new PreparedScan.ProbeRDD(parent, groups), TopKTask.job(task)),
+      sc.runJob(new PreparedScan.ProbeRDD(parent, blocks, groups),
+        TopKTask.job(task)),
       k, dedup)
   }
 }
@@ -77,6 +90,16 @@ private[graft] object PreparedScan {
 
   /** Scans planned since start-up: a cost counter for the specs. */
   private[graft] val planned = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Files decoded into resident blocks since start-up: a cost counter
+    * for the specs (a warm search decodes none).
+    */
+  private[graft] val decoded = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Probed files that by-cell searches read row by row from parquet
+    * (not resident) since start-up: a cost counter for the specs.
+    */
+  private[graft] val scanned = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** A planned parquet scan's reader: it reads any split of files with
     * the schema it was planned for, emitting requiredSchema ++
@@ -87,6 +110,110 @@ private[graft] object PreparedScan {
     val idOrd: Int = rdd.readSchema.fieldIndex("id")
     val embOrd: Int = rdd.readSchema.fieldIndex("embedding")
   }
+
+  /** A logged file's resident block, when its table keeps one: (logged
+    * path, split) → the block's RDD ([[block]]), or None to read the
+    * file from parquet.
+    */
+  type Resident = (String, PartitionedFile) => Option[BlockRDD]
+
+  private val NoneResident: Resident = (_, _) => None
+
+  /** One file's (id, embedding) rows, decoded once: the ids and the
+    * embeddings as ONE flat row-major n×dim array (`floats`, or
+    * `doubles` for double embeddings; the other is null) — no per-row
+    * objects. Decoding stops at the first row the distance fold cannot
+    * score, a null embedding or a length other than the first row's,
+    * and keeps it as (`badId`, `badLen`; −1 = null), so every search of
+    * the block fails on that row as the row path does.
+    */
+  final class Block private[PreparedScan] (val ids: Array[Long],
+      val floats: Array[Float], val doubles: Array[Double], val dim: Int,
+      val badId: Long, val badLen: Int) extends Serializable
+
+  private val Clean = -2
+
+  /** The block of `rows` (a reader's output: vectorized batches or rows). */
+  private def decode(rows: Iterator[InternalRow], idOrd: Int, embOrd: Int,
+      floatEmb: Boolean): Block = {
+    var n = 0
+    var dim = -1
+    var ids = new Array[Long](1024)
+    var fs = if (floatEmb) new Array[Float](0) else null
+    var ds = if (floatEmb) null else new Array[Double](0)
+    var badId = 0L
+    var badLen = Clean
+    def add(r: InternalRow): Unit =
+      if (r.isNullAt(embOrd)) { badId = r.getLong(idOrd); badLen = -1 }
+      else {
+        val e = r.getArray(embOrd)
+        val len = e.numElements()
+        if (dim < 0) dim = len
+        if (len != dim) { badId = r.getLong(idOrd); badLen = len }
+        else {
+          if (n == ids.length) ids = java.util.Arrays.copyOf(ids, n * 2)
+          ids(n) = r.getLong(idOrd)
+          val o = n * dim
+          var j = 0
+          if (floatEmb) {
+            if (o + dim > fs.length)
+              fs = java.util.Arrays.copyOf(fs, math.max(o + dim, fs.length * 2))
+            while (j < dim) { fs(o + j) = e.getFloat(j); j += 1 }
+          } else {
+            if (o + dim > ds.length)
+              ds = java.util.Arrays.copyOf(ds, math.max(o + dim, ds.length * 2))
+            while (j < dim) { ds(o + j) = e.getDouble(j); j += 1 }
+          }
+          n += 1
+        }
+      }
+    while (badLen == Clean && rows.hasNext) (rows.next(): Any) match {
+      case b: ColumnarBatch =>
+        val it = b.rowIterator()
+        while (badLen == Clean && it.hasNext) add(it.next())
+      case r: InternalRow => add(r)
+    }
+    val d = math.max(dim, 0)
+    new Block(java.util.Arrays.copyOf(ids, n),
+      if (floatEmb) java.util.Arrays.copyOf(fs, n * d) else null,
+      if (floatEmb) null else java.util.Arrays.copyOf(ds, n * d),
+      d, badId, badLen)
+  }
+
+  /** `file`'s block: a one-partition RDD over `r`, persisted
+    * MEMORY_ONLY, named by `name`. Its partition decodes the file
+    * when a task first asks for it ([[ProbeRDD]]); Spark's memory
+    * manager accounts for the block and may evict it, and the next
+    * search then decodes it again.
+    */
+  def block(r: Reader, file: PartitionedFile, name: String): BlockRDD = {
+    val b = new BlockRDD(r.rdd, file, r.idOrd, r.embOrd, r.floatEmb)
+    b.setName(name).persist(StorageLevel.MEMORY_ONLY)
+    b
+  }
+
+  final class BlockRDD private[PreparedScan] (reader: FileScanRDD,
+      file: PartitionedFile, idOrd: Int, embOrd: Int, floatEmb: Boolean)
+      extends RDD[Block](reader.sparkContext, Nil) {
+    @transient private var used = false
+
+    /** True the first time a search asks: see [[ProbeRDD]]. */
+    private[PreparedScan] def firstUse(): Boolean = synchronized {
+      val first = !used
+      used = true
+      first
+    }
+
+    override protected def getPartitions: Array[Partition] = Array(Whole)
+    override def compute(split: Partition, ctx: TaskContext): Iterator[Block] = {
+      decoded.incrementAndGet()
+      Iterator.single(decode(reader.iterator(FilePartition(0, Array(file)), ctx),
+        idOrd, embOrd, floatEmb))
+    }
+  }
+
+  /** The one partition of a [[BlockRDD]]. */
+  private object Whole extends Partition { override def index: Int = 0 }
 
   /** Plan `df`'s scan once, with the grid code of every row: the
     * planned query, whether embeddings are floats, and the parquet
@@ -111,13 +238,16 @@ private[graft] object PreparedScan {
   }
 
   /** Plan `df`'s scan: its files grouped by cell when every path names
-    * one, else the whole scan filtered by grid code.
+    * one, else the whole scan filtered by grid code. Nothing is
+    * resident.
     */
   def apply(df: DataFrame, layout: Layout): PreparedScan = {
     val (qe, floatEmb, reader) = plan(df, layout)
-    reader.flatMap(r => over(r, r.rdd.filePartitions.flatMap(_.files), layout))
-      .getOrElse(new PreparedScan(qe.toRdd, None, 0, 1, 2, floatEmb,
-        layout.gridSize))
+    reader.flatMap(r => over(r,
+        r.rdd.filePartitions.flatMap(_.files).map(f => f.filePath.toString -> f),
+        layout, NoneResident))
+      .getOrElse(new PreparedScan(qe.toRdd, None, NoneResident, 0, 1, 2,
+        floatEmb, layout.gridSize))
   }
 
   /** Plan `df`'s parquet reader alone, to scan later snapshots of the
@@ -126,81 +256,115 @@ private[graft] object PreparedScan {
   def reader(df: DataFrame, layout: Layout): Option[Reader] =
     plan(df, layout)._3
 
-  /** `files` through a reader planned earlier, grouped by the grid cell
-    * the current `layout` parses from each path; None when a path names
-    * no cell.
+  /** `files` (logged path, split) through a reader planned earlier,
+    * grouped by the grid cell the current `layout` parses from each
+    * path, each read from its `resident` block when there is one; None
+    * when a path names no cell.
     */
-  def over(r: Reader, files: Seq[PartitionedFile],
-      layout: Layout): Option[PreparedScan] = {
-    val cells = files.map(f => layout.cellOf(f.filePath.toString))
+  def over(r: Reader, files: Seq[(String, PartitionedFile)], layout: Layout,
+      resident: Resident): Option[PreparedScan] = {
+    val cells = files.map(f => layout.cellOf(f._2.filePath.toString))
     if (cells.forall(_.nonEmpty))
       Some(new PreparedScan(r.rdd,
-        Some(files.zip(cells.flatten).groupMap(_._2)(_._1)), r.idOrd,
-        r.embOrd, -1, r.floatEmb, layout.gridSize))
+        Some(files.zip(cells.flatten).groupMap(_._2)(_._1)), resident,
+        r.idOrd, r.embOrd, -1, r.floatEmb, layout.gridSize))
     else None
   }
 
-  /** Files into ≤ `n` groups, largest first onto the lightest group. */
-  private def pack(files: Seq[PartitionedFile],
-      n: Int): Array[Array[Partition]] = {
-    if (files.isEmpty) return Array.empty
+  /** Files into ≤ `n` groups, largest first onto the lightest group,
+    * and the blocks the groups name: a file with a block is read from
+    * it, any other from parquet.
+    */
+  private def pack(files: Seq[(PartitionedFile, Option[BlockRDD])],
+      n: Int): (Array[Group], Array[BlockRDD]) = {
+    if (files.isEmpty) return (Array.empty, Array.empty)
+    val blocks = Array.newBuilder[BlockRDD]
+    var nb = 0
     val bins = Array.fill(math.min(n, files.size))(
-      Vector.newBuilder[PartitionedFile])
+      (Vector.newBuilder[PartitionedFile], Array.newBuilder[Int]))
     val load = new Array[Long](bins.length)
-    files.sortBy(-_.length).foreach { f =>
+    files.sortBy(-_._1.length).foreach { case (f, b) =>
       val i = load.indices.minBy(load(_))
-      bins(i) += f
+      b match {
+        case Some(rdd) => blocks += rdd; bins(i)._2 += nb; nb += 1
+        case None => bins(i)._1 += f
+      }
       load(i) += f.length
     }
-    bins.zipWithIndex.map { case (b, i) =>
-      Array[Partition](FilePartition(i, b.result().toArray))
+    scanned.addAndGet(files.size - nb)
+    val groups = bins.zipWithIndex.map { case ((fs, bs), i) =>
+      val rows = fs.result()
+      Group(i,
+        if (rows.isEmpty) Array.empty
+        else Array[Partition](FilePartition(i, rows.toArray)),
+        bs.result())
     }
+    (groups, blocks.result())
   }
 
   /** Partitions into ≤ `n` contiguous groups. */
-  private def chunk(parts: Array[Partition],
-      n: Int): Array[Array[Partition]] =
+  private def chunk(parts: Array[Partition], n: Int): Array[Group] =
     if (parts.isEmpty || n < 1) Array.empty
-    else parts.grouped((parts.length + n - 1) / n).toArray
+    else parts.grouped((parts.length + n - 1) / n).zipWithIndex
+      .map { case (g, i) => Group(i, g, Array.empty) }.toArray
 
-  /** The search's tasks: task i reads `groups(i)` of the planned scan,
-    * in order. Split lists differ per search, so they are this RDD's
-    * partitions rather than the parent's; the parent is a scan with no
-    * shuffle below it, which the task reads directly.
+  /** The search's tasks: task i scores the blocks `groups(i)` names
+    * (one of `blocks` each, read through the block manager: cached, or
+    * decoded here and cached) and then reads its splits of the planned
+    * scan, in order. Split lists differ per search, so they are this
+    * RDD's partitions rather than the parent's; the parent is a scan
+    * with no shuffle below it, which the task reads directly. A task
+    * prefers the executors caching its blocks. The first search that
+    * reads a block also declares it a narrow dependency, which is how
+    * Spark's storage status learns of it (`sc.getRDDStorageInfo`); a
+    * dependency costs the scheduler and the status listener work on
+    * every job, so later searches name the block only here.
     */
   private final class ProbeRDD(parent: RDD[InternalRow],
-      @transient groups: Array[Array[Partition]])
-      extends RDD[InternalRow](parent.sparkContext, Nil) {
+      blocks: Array[BlockRDD], @transient groups: Array[Group])
+      extends RDD[Any](parent.sparkContext, groups.toSeq.flatMap(g =>
+        g.blocks.filter(blocks(_).firstUse())
+          .map(b => new BlockDep(blocks(b), g.index)))) {
     override protected def getPartitions: Array[Partition] =
-      groups.zipWithIndex.map { case (g, i) => Group(i, g): Partition }
-    override def compute(split: Partition,
-        ctx: TaskContext): Iterator[InternalRow] =
-      split.asInstanceOf[Group].parts.iterator
-        .flatMap(parent.iterator(_, ctx))
+      groups.map(g => g: Partition)
+    override protected def getPreferredLocations(split: Partition): Seq[String] =
+      split.asInstanceOf[Group].blocks.toSeq
+        .flatMap(i => CacheBridge.cachedAt(blocks(i))).distinct
+    override def compute(split: Partition, ctx: TaskContext): Iterator[Any] = {
+      val g = split.asInstanceOf[Group]
+      g.blocks.iterator.flatMap(blocks(_).iterator(Whole, ctx)) ++
+        g.parts.iterator.flatMap(parent.iterator(_, ctx))
+    }
   }
 
-  private final case class Group(index: Int, parts: Array[Partition])
-      extends Partition
+  private final case class Group(index: Int, parts: Array[Partition],
+      blocks: Array[Int]) extends Partition
+
+  /** A block read by the task of partition `task` alone. */
+  private final class BlockDep(rdd: BlockRDD, task: Int)
+      extends NarrowDependency[Block](rdd) {
+    override def getParents(partitionId: Int): Seq[Int] =
+      if (partitionId == task) Seq(0) else Nil
+  }
 }
 
 /** One search task: score every row of a scan against `q` and keep
-  * the k nearest. Rows come as vectorized batches or as rows; `keep`,
-  * when set, admits only rows whose grid code (column `gridOrd`) it
-  * marks.
+  * the k nearest. Rows come as resident blocks, vectorized batches or
+  * rows; `keep`, when set, admits only rows whose grid code (column
+  * `gridOrd`) it marks.
   */
 private[store] final case class TopKTask(q: Array[Double], k: Int,
     dedup: Boolean, idOrd: Int, embOrd: Int, floatEmb: Boolean,
     gridOrd: Int, keep: Array[Boolean]) {
 
-  def run(it: Iterator[InternalRow]): (Array[Long], Array[Double]) = {
+  def run(it: Iterator[Any]): (Array[Long], Array[Double]) = {
     val heap = new TopKHeap(k, dedup)
-    it.foreach { (x: Any) =>
-      x match {
-        case b: ColumnarBatch =>
-          val rows = b.rowIterator()
-          while (rows.hasNext) score(rows.next(), heap)
-        case r: InternalRow => score(r, heap)
-      }
+    it.foreach {
+      case b: PreparedScan.Block => scoreBlock(b, heap)
+      case b: ColumnarBatch =>
+        val rows = b.rowIterator()
+        while (rows.hasNext) score(rows.next(), heap)
+      case r: InternalRow => score(r, heap)
     }
     heap.entries
   }
@@ -210,11 +374,7 @@ private[store] final case class TopKTask(q: Array[Double], k: Int,
       val g = r.getInt(gridOrd)
       g >= 0 && g < keep.length && keep(g)
     })) {
-      // the DataFrame search would rank this row first with a null
-      // distance, which no (id, dist) reply can carry
-      if (r.isNullAt(embOrd))
-        throw new IllegalStateException(
-          s"row id ${r.getLong(idOrd)} has a null embedding")
+      if (r.isNullAt(embOrd)) TopKTask.nullEmbedding(r.getLong(idOrd))
       val e = r.getArray(embOrd)
       val n = e.numElements()
       if (n != q.length) VecEval.foldLenMismatch("vec_l2sq", n, q.length)
@@ -228,6 +388,37 @@ private[store] final case class TopKTask(q: Array[Double], k: Int,
       }
       heap.offer(acc, r.getLong(idOrd))
     }
+
+  /** [[score]] over a block's rows, in row order, then its bad row. */
+  private def scoreBlock(b: PreparedScan.Block, heap: TopKHeap): Unit = {
+    val n = b.ids.length
+    val d = b.dim
+    if (n > 0 && d != q.length) VecEval.foldLenMismatch("vec_l2sq", d, q.length)
+    var i = 0
+    if (b.floats != null) {
+      val v = b.floats
+      while (i < n) {
+        val o = i * d
+        var acc = 0.0
+        var j = 0
+        while (j < d) { val x = v(o + j).toDouble - q(j); acc += x * x; j += 1 }
+        heap.offer(acc, b.ids(i))
+        i += 1
+      }
+    } else {
+      val v = b.doubles
+      while (i < n) {
+        val o = i * d
+        var acc = 0.0
+        var j = 0
+        while (j < d) { val x = v(o + j) - q(j); acc += x * x; j += 1 }
+        heap.offer(acc, b.ids(i))
+        i += 1
+      }
+    }
+    if (b.badLen == -1) TopKTask.nullEmbedding(b.badId)
+    if (b.badLen >= 0) VecEval.foldLenMismatch("vec_l2sq", b.badLen, q.length)
+  }
 }
 
 private[store] object TopKTask {
@@ -236,8 +427,13 @@ private[store] object TopKTask {
     * `runJob` cleans its function, which reads the bytecode of the
     * class that wrote it.
     */
-  def job(t: TopKTask): (TaskContext, Iterator[InternalRow]) =>
+  def job(t: TopKTask): (TaskContext, Iterator[Any]) =>
       (Array[Long], Array[Double]) = (_, it) => t.run(it)
+
+  // the DataFrame search would rank this row first with a null
+  // distance, which no (id, dist) reply can carry
+  def nullEmbedding(id: Long): Nothing =
+    throw new IllegalStateException(s"row id $id has a null embedding")
 
   /** Merge the tasks' heaps: the k nearest overall, ascending. */
   def merge(parts: Array[(Array[Long], Array[Double])], k: Int,

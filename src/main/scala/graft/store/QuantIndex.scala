@@ -64,8 +64,10 @@ final class QuantIndex(
   /** Pin the index in executor memory for interactive serving (the
     * analogue of the reference's always-resident FAISS index): all
     * searches then scan the in-memory columnar form — column pruning
-    * and the bounded re-rank shape are unchanged. Without this, every
-    * search plans a fresh parquet scan (the right default for batch).
+    * and the bounded re-rank shape are unchanged. Without this, the
+    * DataFrame searches plan a fresh parquet scan (the right default
+    * for batch), and [[topK]] reads the sealed files' resident blocks
+    * and the appended files' parquet ([[IndexTable]]).
     */
   def cacheIndex(): this.type = {
     val df = logDf.cache()
@@ -279,6 +281,7 @@ final class QuantIndex(
     // in-flight readers; older leftovers (prior retrains) get reclaimed
     QuantIndex.sweepSupersededSnapshots(spark, path, next, vacuumGraceMs)
     dropResident()
+    releaseBlocks()
     new QuantIndex(spark, path, newModel)
   }
 

@@ -291,6 +291,7 @@ class JobsPerOpSpec extends AnyFunSuite {
     // after a commit plans nothing, and neither do 10 more commits
     val p0 = PreparedScan.planned.get()
     a.topK(q, 10, a.maxProbes)
+    a.topK(q, 10, 2) // the ×L layout probes cells outside table 0
     (0 until 10).foreach { i =>
       a.add(rows(from + 100 + i * 5, from + 105 + i * 5))
       a.topK(q, 10, a.maxProbes)
@@ -302,15 +303,25 @@ class JobsPerOpSpec extends AnyFunSuite {
         .map { case (op, probes) =>
           val p1 = PreparedScan.planned.get()
           val l1 = FileLog.listings.get()
+          val st = FileLog.read(dir)
           val logRead = reads(FileLog.read(dir))
           val r1 = FsIo.reads.get()
+          val d1 = PreparedScan.decoded.get()
           val (j, tasks, sql) = countedAll(a.topK(q, 10, probes))
           val searchReads = FsIo.reads.get() - r1
           info(f"$layout%-6s $op%-22s $j%2d jobs, $tasks%2d tasks, $sql SQL runs, " +
             s"$searchReads log reads")
           assert(PreparedScan.planned.get() == p1, s"$layout $op re-planned")
           assert(FileLog.listings.get() == l1, s"$layout $op listed the table")
-          // the log is resolved once: the pointer and its delta chain
+          // the sealed files were decoded by the searches above
+          assert(PreparedScan.decoded.get() == d1, s"$layout $op decoded files")
+          // the log is resolved once: the pointer, which is a copy of the
+          // newest record, then the checkpoint and each delta before the
+          // newest (11 commits past the checkpoint: 12 reads, where
+          // reading the newest record again took 14)
+          assert(st.version - st.checkpoint == 11)
+          assert(logRead == 1L + st.version - st.checkpoint,
+            s"$layout one FileLog.read made $logRead log reads")
           assert(searchReads == logRead,
             s"$layout $op read $searchReads log files, one FileLog.read $logRead")
           assert(sql == 0L, s"$layout $op ran $sql SQL executions")

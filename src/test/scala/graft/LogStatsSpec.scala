@@ -58,8 +58,8 @@ class LogStatsSpec extends AnyFunSuite {
   }
 
   /** Every live file has a logged count, the counts sum to `expected`
-    * stored rows (and to a full count), and the logged zones equal a
-    * fresh footer read of the live files.
+    * stored rows (and to a full count), the logged zones equal a fresh
+    * footer read of the live files, and the appended files are live.
     */
   private def checkLog(dir: String, df: DataFrame, zoneCols: Seq[String],
       expected: Long, step: String): Unit = {
@@ -71,6 +71,7 @@ class LogStatsSpec extends AnyFunSuite {
     assert(st.rows == fresh.rows, s"$step: logged counts differ from footers")
     assert(st.zones == fresh.zones, s"$step: logged zones differ from footers")
     assert(st.rows.values.sum == expected, s"$step: logged rows")
+    assert(st.appended.subsetOf(st.files.toSet), s"$step: appended files not live")
     assert(df.count() == expected, s"$step: count()")
   }
 
@@ -113,7 +114,11 @@ class LogStatsSpec extends AnyFunSuite {
       val fresh = (next until next + n).toSeq
       name match {
         case "add" =>
+          val before = FileLog.read(dataDir).files.toSet
           t.add(rows(fresh))
+          val after = FileLog.read(dataDir)
+          assert((after.files.toSet -- before).subsetOf(after.appended),
+            s"$layout seed $seed step $i: an add's files are appended")
           live ++= fresh; next += n
         case "delete" => // plus ids that were never stored
           val removed = t.delete(old ++ Seq(-1L, -2L))
@@ -128,7 +133,10 @@ class LogStatsSpec extends AnyFunSuite {
             ((ups.size + fresh.size).toLong, dels.size.toLong),
             s"$layout seed $seed step $i: applyChanges counts")
           live = live -- dels ++ fresh; next += n
-        case "compact" => t.compact(50L, vacuumGraceMs = 0L)
+        case "compact" =>
+          t.compact(50L, vacuumGraceMs = 0L)
+          assert(FileLog.read(dataDir).appended.isEmpty,
+            s"$layout seed $seed step $i: compaction seals every file")
       }
       check(s"step $i ($name)")
     }

@@ -6,8 +6,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.lsh.LshConfig
-import graft.store.{FileLog, IndexTable, MultiTableStore, QuantConfig,
-  QuantIndex, QuantTier, SnapshotVacuumedException, VectorStore}
+import graft.store.{FileLog, IndexTable, MultiTableStore, PreparedScan,
+  QuantConfig, QuantIndex, QuantTier, SnapshotVacuumedException, VectorStore}
 
 /** The kernel's one search rule on every layout, after every kind of
   * mutation: the executed search ([[IndexTable.topK]]) and the
@@ -273,7 +273,93 @@ class TopKSpec extends AnyFunSuite {
     st.topK(q, 3, st.maxDepth)
     // typed by the search itself, no `classified` wrapper
     val pinned = FileLog.read(d)
+    // the build's sealed files were resident: the cache must not hide
+    // the vacuum
+    assert((pinned.files.toSet -- pinned.appended).nonEmpty &&
+      (pinned.files.toSet -- pinned.appended) == st.residentFiles)
     st.compact(vacuumGraceMs = 0L)
     intercept[SnapshotVacuumedException](st.topKAt(pinned, q, 3, st.maxDepth))
+  }
+
+  // ------------------------------------------------- stored-data faults
+
+  /** The innermost cause of `e`. */
+  private def root(e: Throwable): Throwable =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq.last
+
+  /** `body` fails; returns the failure's root cause and the number of
+    * files the search decoded into resident blocks.
+    */
+  private def failing(body: => Any): (Throwable, Long) = {
+    val d0 = PreparedScan.decoded.get()
+    val e = intercept[Exception](body)
+    (root(e), PreparedScan.decoded.get() - d0)
+  }
+
+  test("a stored null embedding fails topK as on the row path, on the " +
+      "search that decodes its file and on every later one") {
+    val d = dir("topk_null")
+    val base = vecs(0, 200, 41L)
+    val st = VectorStore.build(spark, frame(base), d,
+      LshConfig(numHashFunctions = 3, numHashTables = 3, dim = Dim, seed = 5L))
+    val q = asQuery(base.head._2)
+    st.topK(q, 5, st.maxDepth) // the build's files are resident
+    // one more file in the query's own bucket, holding a null embedding
+    // between two good rows
+    val sess = spark
+    import sess.implicits._
+    val staged = graft.util.TempDirs.create("topk_null_rows").toString + "/rows"
+    Seq((9001L, Some(base(1)._2)), (9002L, None), (9003L, Some(base(2)._2)))
+      .toDF("id", "embedding").coalesce(1).write.parquet(staged)
+    val src = new java.io.File(staged).listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    val bucket = st.model.candidates(q, 1).head
+    val dest = new java.io.File(s"$d/bucket=$bucket/part-null.parquet")
+    assert(src.renameTo(dest))
+    val file = new org.apache.hadoop.fs.Path(dest.toURI).toString
+    val before = FileLog.read(d)
+    def commit(appended: Set[String]): Unit =
+      FileLog.transact(spark, d) { cur =>
+        Some(FileLog.Commit(before.files :+ file, before.schemaDdl,
+          rows = before.rows + (file -> 3L),
+          sizes = before.sizes + (file -> dest.length()),
+          appended = appended))
+      }
+    // logged as appended: the row path reads it
+    commit(Set(file))
+    val (rowPath, rowDecoded) = failing(st.topK(q, 5, 1))
+    assert(rowDecoded == 0L)
+    assert(rowPath.isInstanceOf[IllegalStateException], rowPath)
+    assert(rowPath.getMessage == "row id 9002 has a null embedding")
+    // sealed: the first search decodes it, later ones read its block
+    commit(Set.empty)
+    val (first, decoded) = failing(st.topK(q, 5, 1))
+    assert(decoded >= 1L)
+    val (again, decodedAgain) = failing(st.topK(q, 5, 1))
+    assert(decodedAgain == 0L)
+    Seq(first, again).foreach { e =>
+      assert(e.getClass == rowPath.getClass && e.getMessage == rowPath.getMessage, e)
+    }
+  }
+
+  test("stored rows of another length fail topK and search(...).collect() " +
+      "with 'vector dimensions differ', on the decoding search and after") {
+    val d = dir("topk_len")
+    val base = vecs(0, 300, 51L)
+    val st = VectorStore.build(spark, frame(base), d,
+      LshConfig(numHashFunctions = 3, numHashTables = 3, dim = Dim, seed = 5L))
+    // the upsert's rewrite seals files mixing both lengths
+    st.upsert(frame(vecs(10, 40, 52L).map { case (id, v) => (id, v ++ v.take(2)) }))
+    val q = asQuery(base.head._2)
+    def differ(e: Throwable): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage).contains("vector dimensions differ"))
+    val (first, decoded) = failing(st.topK(q, 5, st.maxDepth))
+    assert(decoded >= 1L)
+    val (again, decodedAgain) = failing(st.topK(q, 5, st.maxDepth))
+    assert(decodedAgain == 0L)
+    val viaSearch = intercept[Exception](st.search(q, 5, st.maxDepth).collect())
+    Seq(first, again, viaSearch).foreach(e => assert(differ(e), e))
+    assert(first.getClass == again.getClass && first.getMessage == again.getMessage)
   }
 }
